@@ -4557,6 +4557,7 @@ def _text_base_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     rep_labels = cc_labels(nodes, und)
+    ckpts.append(rep_labels)
     gsz = m.groupBy("rep").agg(F.count(F.lit(1)).alias("g"))
     labels = (
         m.join(gsz, "rep")

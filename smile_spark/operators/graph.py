@@ -226,18 +226,19 @@ def bfs_frontier(
         [(int(s),) for s in sources], "source bigint"
     ).select("source", F.col("source").alias("id"), F.lit(0).alias("dist"))
 
-    from smile_spark.session import unpersist_checkpoint
+    from smile_spark.session import checkpoint_observed, unpersist_checkpoint
 
     visited = src_df.localCheckpoint()
     frontier = visited
     for it in range(1, max_iter + 1):
-        nxt = (
+        nxt, seen = checkpoint_observed(
             frontier.join(e, frontier.id == e.src)
             .select("source", F.col("dst").alias("id"))
             .distinct()
             .join(visited.select("source", "id"), ["source", "id"], "left_anti")
-            .withColumn("dist", F.lit(it))
-        ).localCheckpoint()
+            .withColumn("dist", F.lit(it)),
+            n=F.count(F.lit(1)),
+        )
         # the previous frontier was fully consumed building nxt (and
         # its rows were already folded into visited last round) —
         # release its blocks instead of leaking one frame per hop
@@ -246,7 +247,7 @@ def bfs_frontier(
         if frontier is not visited:
             unpersist_checkpoint(frontier)
         frontier = nxt
-        if nxt.isEmpty():
+        if seen["n"] == 0:
             break
         new_visited = visited.union(nxt).localCheckpoint()
         unpersist_checkpoint(visited)
@@ -706,7 +707,7 @@ def cc_labels(
     shortcut is pure acceleration and is label-stable at that
     fixpoint.
     """
-    from smile_spark.session import unpersist_checkpoint
+    from smile_spark.session import checkpoint_observed, unpersist_checkpoint
 
     labels = nodes.select("id", F.col("id").alias("component")).localCheckpoint()
     # Each round's localCheckpoint supersedes the previous one: eager
@@ -715,7 +716,6 @@ def cc_labels(
     # instead of leaking O(rounds) label tables per invocation into
     # executor storage for the life of the application.  Only the
     # FINAL labels frame stays persisted — callers consume it freely.
-    prev = labels
     for r in range(max_iter):
         nbr_min = (
             labels.join(e, labels.id == e.src)
@@ -723,8 +723,8 @@ def cc_labels(
             .agg(F.min("component").alias("nbr_component"))
         )
         # Carry the changed flag through the same pass so convergence is
-        # a filter over the checkpointed result, not a second join.
-        propagated = (
+        # counted by the checkpoint job itself, not by a second job.
+        propagated, seen = checkpoint_observed(
             labels.join(nbr_min, "id", "left")
             .select(
                 "id",
@@ -734,16 +734,16 @@ def cc_labels(
                 (
                     F.coalesce("nbr_component", "component") < F.col("component")
                 ).alias("changed"),
-            )
-        ).localCheckpoint()
-        unpersist_checkpoint(prev)
-        prev = propagated
-        converged = propagated.filter("changed").isEmpty()
-        labels = propagated.select("id", "component")
-        if converged:
+            ),
+            keep=("id", "component"),
+            n_changed=F.count_if("changed"),
+        )
+        unpersist_checkpoint(labels)
+        labels = propagated
+        if seen["n_changed"] == 0:
             break
         if r % 2 == 1:
-            labels = (
+            jumped = (
                 labels.alias("x")
                 .join(
                     labels.select(
@@ -761,8 +761,8 @@ def cc_labels(
                     ).alias("component"),
                 )
             ).localCheckpoint()
-            unpersist_checkpoint(prev)
-            prev = labels
+            unpersist_checkpoint(labels)
+            labels = jumped
     return labels
 
 
@@ -1203,7 +1203,7 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage exactly like bfs/pagerank; rounds are bounded by the
     budget, not the graph.
     """
-    from smile_spark.session import unpersist_checkpoint
+    from smile_spark.session import checkpoint_observed, unpersist_checkpoint
 
     und = _copurchase_edges_cached(spark, sf_dir)
     edges = (
@@ -1211,13 +1211,13 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(und.select(F.col("p2").alias("u"), F.col("p1").alias("v")))
         .localCheckpoint()
     )
-    deg = (
+    deg, seen = checkpoint_observed(
         edges.groupBy("u")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .select(F.col("u").alias("id"), "deg")
-        .localCheckpoint()
+        .select(F.col("u").alias("id"), "deg"),
+        n=F.count(F.lit(1)),
     )
-    n_prev = deg.count()  # control-only driver action (checkpointed)
+    n_prev = seen["n"]
     rows: list[tuple[int, int, int]] = []
     for r in range(1, KCORE_ROUNDS + 1):
         # the dropped set is derived INLINE from the checkpointed
@@ -1242,19 +1242,19 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
             .select(F.col("u").alias("id"), "d")
         )
-        new_deg = (
+        # ONE job per round: the checkpoint materialization counts the
+        # survivors as it goes (new_deg excludes the dropped set by
+        # construction)
+        new_deg, seen = checkpoint_observed(
             deg.join(dropped, "id", "left_anti")
             .join(dec, "id", "left")
             .select(
                 "id",
                 (F.col("deg") - F.coalesce("d", F.lit(0))).alias("deg"),
-            )
-            .localCheckpoint()
+            ),
+            n=F.count(F.lit(1)),
         )
-        # ONE driver action per round: the checkpoint materialization
-        # doubles as the survivor count (new_deg excludes the dropped
-        # set by construction)
-        n_now = new_deg.count()
+        n_now = seen["n"]
         n_drop = n_prev - n_now
         rows.append((r, n_drop, n_now))
         # superseded state is consumed (cc_labels precedent)

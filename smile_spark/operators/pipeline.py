@@ -54,6 +54,8 @@ def min_label_components(
     round is a single-task job instead of shuffle-partition-many tiny
     tasks.  If a pathological input ever produced a huge pair graph,
     drop the coalesce — the loop is partitioning-agnostic."""
+    from smile_spark.session import checkpoint_observed, unpersist_checkpoint
+
     pairs = pairs.select("a", "b").coalesce(1).localCheckpoint()
     und = pairs.union(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -92,7 +94,7 @@ def min_label_components(
         # (measured 4 rounds / ~3s).  Convergence detection stays on
         # the propagation phase: its fixpoint is the answer, the
         # shortcut is pure acceleration.
-        new_labels = (
+        new_labels, seen = checkpoint_observed(
             propagated.alias("x")
             .join(
                 propagated.select(
@@ -110,13 +112,19 @@ def min_label_components(
                 ).alias("component"),
                 F.col("x.changed").alias("changed"),
             )
-            .coalesce(1)
-            .localCheckpoint()
+            .coalesce(1),
+            keep=("id", "component"),
+            n_changed=F.count_if("changed"),
         )
-        converged = new_labels.filter("changed").isEmpty()
-        labels = new_labels.select("id", "component")
-        if converged:
+        # the new round supersedes the previous one, which is released
+        # at once (cc_labels precedent)
+        unpersist_checkpoint(labels)
+        labels = new_labels
+        if seen["n_changed"] == 0:
             break
+    # the labels are their own checkpoint: the pair materialization is
+    # unreachable from them (bfs_frontier precedent)
+    unpersist_checkpoint(pairs)
     return labels
 
 
@@ -465,7 +473,7 @@ def _manifest_tagged(frames: dict[str, DataFrame]) -> DataFrame:
     tagged = None
     for _, reason in _INC_MANIFEST_RUNGS:
         part = frames[reason].select(
-            "a",
+            F.col("a").cast("bigint").alias("a"),
             F.col("b").cast("bigint").alias("b"),
             F.lit(reason).alias("reason"),
         )

@@ -43,6 +43,18 @@ _DEFAULT_CONFS: dict[str, str] = {
     # Don't let tiny test files produce one-partition plans that would
     # hide scale bugs; on a cluster this is the default 128MB anyway.
     "spark.sql.files.maxPartitionBytes": "128m",
+    # Generated-class cache, sized to the working set.  Spark's default
+    # of 100 entries thrashes: a pass of the perfbench workloads
+    # compiles 126 (olap_scan_agg) or 191 (dedup_nightly_daily)
+    # distinct classes, and the whole test suite at most 4807, so every
+    # pass recompiled them all with Janino at 12-16 ms each.  The bound
+    # is about twice the suite's count.  Static: it only applies when
+    # this dict configures the JVM's first session.
+    "spark.sql.codegen.cache.maxEntries": "10000",
+    # AQE numbers whole-stage codegen stages in the order its query
+    # stages finish, so with the id in the class name one pipeline got
+    # a new source text, and a recompile, whenever that order changed.
+    "spark.sql.codegen.useIdInClassName": "false",
     "spark.ui.enabled": "false",
 }
 
@@ -132,6 +144,29 @@ def unpersist_checkpoint(df) -> None:
 
 
 _UNPERSIST_WARNED = False
+
+
+def checkpoint_observed(df, keep=None, **aggs):
+    """``localCheckpoint`` ``df`` and compute the aggregates ``aggs``
+    (name -> aggregate Column) over its rows in the SAME job.
+
+    Returns ``(checkpointed frame, {name: value})``.  This is the one
+    halting idiom of the iterative loops: a round's convergence count
+    rides along on the checkpoint that materializes the round (the
+    Pregelix superstep aggregate) instead of costing a second
+    ``count()``/``isEmpty()`` job over the checkpointed result.
+    ``keep`` (column names) narrows what is stored, after the
+    aggregates have seen every column: a flag that only feeds the
+    count is never checkpointed, and the result stays a bare
+    checkpoint that :func:`unpersist_checkpoint` can release.
+    """
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df = df.observe(obs, *(agg.alias(name) for name, agg in aggs.items()))
+    if keep is not None:
+        df = df.select(*keep)
+    return df.localCheckpoint(), obs.get
 
 
 def _release_checkpoint_group(group: list) -> None:
