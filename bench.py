@@ -504,202 +504,92 @@ def main() -> None:
                 round(time.perf_counter() - t0, 4)
             )
 
-    # Cold builds of the persisted base cluster labels (VERDICT r13
-    # #4): the *_clusters_incremental entries fold daily pairs into
-    # these tables — price the base pairs + cc + bucketed write here,
-    # leave the tables warm so the registered entries time the fold.
-    for bname, clear_fn, build_fn in (
-        (
-            "image_label_build",
-            _mm.clear_image_label_cache,
-            _mm.image_label_index_build,
-        ),
-        (
-            "audio_label_build",
-            _mm.clear_audio_label_cache,
-            _mm.audio_label_index_build,
-        ),
-        (
-            "video_label_build",
-            _mm.clear_video_label_cache,
-            _mm.video_label_index_build,
-        ),
-    ):
-        for _ in range(_build_passes if _build_wanted(bname) else 0):
-            clear_fn()
-            t0 = time.perf_counter()
-            try:
-                build_fn(spark, sf_dir)
-            except Exception as exc:  # noqa: BLE001 — must survive
-                errors[bname] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            samples.setdefault(bname, []).append(
-                round(time.perf_counter() - t0, 4)
-            )
+    # The cluster-label lifecycle (operators/labels.py), priced per
+    # LabelRung in three cold entries named after the rung, each a
+    # restore-then-time pass:
+    # - {name}_label_build: the read-only base labels (base pairs +
+    #   cc + bucketed write), left warm so the registered live-fold
+    #   entries (*_clusters_incremental) time the fold alone;
+    # - {name}_labelroll: restore the roll's base state untimed, then
+    #   time the collapse + cc + delta append *_labels_rolled reads;
+    # - {name}_compact: restore and fold untimed, then time the
+    #   amortized corpus-linear rewrite labels.compact_if_needed
+    #   triggers once the delta grows past policy.
+    # The roll clears are ROLL-ONLY: wiping the read-only base memo
+    # would force the live-fold entries to rebuild it inside their
+    # timed pass.  The semantic verdict roll is not a LabelRung and
+    # keeps its own restore and fold.  Entries run phase by phase
+    # (every build, then every fold, then every compaction), so each
+    # compaction still runs after all folds have warmed the session.
+    from smile_spark.operators import labels as _labels
 
-    # The LABEL-table folds (delta-log update pattern): restore the
-    # base label state untimed, then time the collapse + cc + delta
-    # append — the increment-linear nightly cluster maintenance the
-    # *_labels_rolled entries read.
-    for bname, clear_fn, modality in (
-        ("image_labelroll", _mm.clear_image_labelroll_cache, "image"),
-        ("audio_labelroll", _mm.clear_audio_labelroll_cache, "audio"),
-        ("video_labelroll", _mm.clear_video_labelroll_cache, "video"),
-    ):
-        for _ in range(_build_passes if _build_wanted(bname) else 0):
-            try:
-                clear_fn()
-                _mm.labelroll_restore_base(spark, sf_dir, modality)
-            except Exception as exc:  # noqa: BLE001 — must survive
-                errors[bname] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            t0 = time.perf_counter()
-            try:
-                _mm.label_rollforward(spark, sf_dir, modality)
-            except Exception as exc:  # noqa: BLE001 — must survive
-                errors[bname] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            samples.setdefault(bname, []).append(
-                round(time.perf_counter() - t0, 4)
-            )
+    def _rung_entries(rung) -> tuple:
+        def restore() -> None:
+            _labels.clear_label_state(rung, which="roll")
+            _labels.roll_restore_base(spark, sf_dir, rung)
 
-    # Cold builds of the r15 generic-label-rung base tables (the
-    # image_label_build treatment): text = setsim ∪ MinHash base pairs
-    # + cc + bucketed write; crossmodal = the joint visual pair union's
-    # base slice + cc + write.  Leaves the read-only tables warm so
-    # the registered live-fold entries time the fold alone.
-    for bname, clear_fn, build_fn in (
-        (
-            "text_label_build",
-            _dedup.clear_text_label_cache,
-            _dedup.text_label_index_build,
-        ),
-        (
-            "crossmodal_label_build",
-            _mm.clear_crossmodal_label_cache,
-            _mm.crossmodal_label_index_build,
-        ),
-    ):
-        for _ in range(_build_passes if _build_wanted(bname) else 0):
-            clear_fn()
-            t0 = time.perf_counter()
-            try:
-                build_fn(spark, sf_dir)
-            except Exception as exc:  # noqa: BLE001 — must survive
-                errors[bname] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            samples.setdefault(bname, []).append(
-                round(time.perf_counter() - t0, 4)
-            )
+        def restore_and_fold() -> None:
+            restore()
+            _labels.label_rollforward(spark, sf_dir, rung)
 
-    # The r15 label-table FOLDS (restore-then-time, the
-    # image_labelroll shape).  The clears are ROLL-ONLY for the
-    # generic rungs: wiping the read-only base memo here would force
-    # the registered live-fold entries to rebuild it inside their
-    # timed pass.
-    for bname, clear_fn, restore_fn, roll_fn in (
-        (
-            "text_labelroll",
-            _dedup.clear_text_labelroll_cache,
-            _dedup.text_labelroll_restore_base,
-            _dedup.text_label_rollforward,
-        ),
-        (
-            "crossmodal_labelroll",
-            _mm.clear_crossmodal_labelroll_cache,
-            _mm.crossmodal_labelroll_restore_base,
-            _mm.crossmodal_label_rollforward,
-        ),
+        return (
+            (
+                f"{rung.name}_label_build",
+                lambda: _labels.clear_label_state(rung, which="ro"),
+                lambda: _labels.label_index_build(spark, sf_dir, rung),
+            ),
+            (
+                f"{rung.name}_labelroll",
+                restore,
+                lambda: _labels.label_rollforward(spark, sf_dir, rung),
+            ),
+            (
+                f"{rung.name}_compact",
+                restore_and_fold,
+                lambda: _labels.label_compact(spark, sf_dir, rung),
+            ),
+        )
+
+    def _semantic_restore() -> None:
+        _dedup.clear_semantic_label_cache()
+        _dedup.semantic_label_restore_base(spark, sf_dir)
+
+    builds, rolls, compacts = zip(
+        *(
+            _rung_entries(rung)
+            for rung in (
+                *_mm.LABEL_RUNGS.values(),
+                _dedup.TEXT_LABEL_RUNG,
+                _mm.CROSSMODAL_LABEL_RUNG,
+            )
+        )
+    )
+    label_entries = [
+        *builds,
+        *rolls,
         (
             "semantic_labelroll",
-            _dedup.clear_semantic_label_cache,
-            _dedup.semantic_label_restore_base,
-            _dedup.semantic_label_rollforward,
+            _semantic_restore,
+            lambda: _dedup.semantic_label_rollforward(spark, sf_dir),
         ),
-    ):
+        *compacts,
+    ]
+    for bname, prep_fn, timed_fn in label_entries:
         for _ in range(_build_passes if _build_wanted(bname) else 0):
             try:
-                clear_fn()
-                restore_fn(spark, sf_dir)
+                prep_fn()
             except Exception as exc:  # noqa: BLE001 — must survive
                 errors[bname] = f"{type(exc).__name__}: {exc}"[:500]
                 break
             t0 = time.perf_counter()
             try:
-                roll_fn(spark, sf_dir)
+                timed_fn()
             except Exception as exc:  # noqa: BLE001 — must survive
                 errors[bname] = f"{type(exc).__name__}: {exc}"[:500]
                 break
             samples.setdefault(bname, []).append(
                 round(time.perf_counter() - t0, 4)
             )
-
-    # Cold COMPACTION pricing (VERDICT r14 next-round #5, the
-    # lpa_build treatment): each pass restores the base state and
-    # folds UNTIMED (costs priced by the loops above), then times the
-    # amortized corpus-linear compact alone — the "when the delta
-    # grows past policy" rewrite label_compact_if_needed /
-    # labels.compact_if_needed trigger.
-    def _compact_pass(
-        bname: str, restore_fn, roll_fn, compact_fn
-    ) -> None:
-        for _ in range(_build_passes if _build_wanted(bname) else 0):
-            try:
-                restore_fn(spark, sf_dir)
-                roll_fn(spark, sf_dir)
-            except Exception as exc:  # noqa: BLE001 — must survive
-                errors[bname] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            t0 = time.perf_counter()
-            try:
-                compact_fn(spark, sf_dir)
-            except Exception as exc:  # noqa: BLE001 — must survive
-                errors[bname] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            samples.setdefault(bname, []).append(
-                round(time.perf_counter() - t0, 4)
-            )
-
-    _lroll_clears = {
-        "image": _mm.clear_image_labelroll_cache,
-        "audio": _mm.clear_audio_labelroll_cache,
-        "video": _mm.clear_video_labelroll_cache,
-    }
-    for modality in ("image", "audio", "video"):
-
-        def _restore(spark_, sf, m=modality):
-            _lroll_clears[m]()
-            _mm.labelroll_restore_base(spark_, sf, m)
-
-        def _roll(spark_, sf, m=modality):
-            _mm.label_rollforward(spark_, sf, m)
-
-        def _compact(spark_, sf, m=modality):
-            _mm.label_compact(spark_, sf, m)
-
-        _compact_pass(f"{modality}_compact", _restore, _roll, _compact)
-
-    def _text_restore(spark_, sf):
-        _dedup.clear_text_labelroll_cache()
-        _dedup.text_labelroll_restore_base(spark_, sf)
-
-    _compact_pass(
-        "text_compact",
-        _text_restore,
-        _dedup.text_label_rollforward,
-        _dedup.text_label_compact,
-    )
-
-    def _cm_restore(spark_, sf):
-        _mm.clear_crossmodal_labelroll_cache()
-        _mm.crossmodal_labelroll_restore_base(spark_, sf)
-
-    _compact_pass(
-        "crossmodal_compact",
-        _cm_restore,
-        _mm.crossmodal_label_rollforward,
-        _mm.crossmodal_label_compact,
-    )
 
     # Two passes, min per query: the first pass doubles as per-query
     # warmup (code cache, shuffle-file reuse is disabled by noop's

@@ -66,6 +66,7 @@ def main() -> None:
     queries = entry_mod.queries()
 
     from smile_spark.operators import dedup as D
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
 
     def cap(name: str, thunk, lazy_frame_fn=None) -> None:
@@ -106,30 +107,39 @@ def main() -> None:
     builds = [
         (
             "text_label_build",
-            lambda: (D.clear_text_label_cache(), D.text_label_index_build(spark, SF_DIR)),
+            lambda: (
+                L.clear_label_state(D.TEXT_LABEL_RUNG, which="ro"),
+                L.label_index_build(spark, SF_DIR, D.TEXT_LABEL_RUNG),
+            ),
         ),
         (
             "crossmodal_label_build",
-            lambda: (M.clear_crossmodal_label_cache(), M.crossmodal_label_index_build(spark, SF_DIR)),
+            lambda: (
+                L.clear_label_state(M.CROSSMODAL_LABEL_RUNG, which="ro"),
+                L.label_index_build(spark, SF_DIR, M.CROSSMODAL_LABEL_RUNG),
+            ),
         ),
         (
             "image_label_build",
-            lambda: (M.clear_image_label_cache(), M.image_label_index_build(spark, SF_DIR)),
+            lambda: (
+                L.clear_label_state(M.LABEL_RUNGS["image"], which="ro"),
+                L.label_index_build(spark, SF_DIR, M.LABEL_RUNGS["image"]),
+            ),
         ),
         (
             "text_labelroll",
             lambda: (
-                D.clear_text_labelroll_cache(),
-                D.text_labelroll_restore_base(spark, SF_DIR),
-                D.text_label_rollforward(spark, SF_DIR),
+                L.clear_label_state(D.TEXT_LABEL_RUNG, which="roll"),
+                L.roll_restore_base(spark, SF_DIR, D.TEXT_LABEL_RUNG),
+                L.label_rollforward(spark, SF_DIR, D.TEXT_LABEL_RUNG),
             ),
         ),
         (
             "image_labelroll",
             lambda: (
-                M.clear_image_labelroll_cache(),
-                M.labelroll_restore_base(spark, SF_DIR, "image"),
-                M.label_rollforward(spark, SF_DIR, "image"),
+                L.clear_label_state(M.LABEL_RUNGS["image"], which="roll"),
+                L.roll_restore_base(spark, SF_DIR, M.LABEL_RUNGS["image"]),
+                L.label_rollforward(spark, SF_DIR, M.LABEL_RUNGS["image"]),
             ),
         ),
     ]

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smile_spark.operators import labels as L
 from smile_spark.tables import fan_out, table
 
 SHINGLE_K = 12          # character shingle width
@@ -4591,9 +4592,7 @@ def _text_inc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_alive(out, sp, mh)
 
 
-def _text_rung() -> "object":
-    from smile_spark.operators.labels import LabelRung
-
+def _text_rung() -> L.LabelRung:
     def universe(spark: SparkSession, sf_dir: str) -> DataFrame:
         return table(spark, sf_dir, "documents").select("doc_id")
 
@@ -4627,7 +4626,7 @@ def _text_rung() -> "object":
             .count()
         )
 
-    return LabelRung(
+    return L.LabelRung(
         name="text",
         table_base="text_labelroll",
         universe=universe,
@@ -4644,57 +4643,7 @@ def _text_rung() -> "object":
     )
 
 
-TEXT_LABEL_RUNG = None  # built lazily (labels.py import stays off the hot path)
-
-
-def _text_label_rung():
-    global TEXT_LABEL_RUNG
-    if TEXT_LABEL_RUNG is None:
-        TEXT_LABEL_RUNG = _text_rung()
-    return TEXT_LABEL_RUNG
-
-
-def clear_text_label_cache() -> None:
-    """Forget the text label-state memos AND drop this process'
-    adoption sidecars, restoring the cold build/fold paths (bench
-    entries ``text_label_build`` / ``text_labelroll``)."""
-    from smile_spark.operators import labels as L
-
-    L.clear_label_state(_text_label_rung())
-
-
-def text_label_index_build(spark: SparkSession, sf_dir: str) -> str:
-    """The text read-only base label table (bench cold entry
-    ``text_label_build``)."""
-    from smile_spark.operators import labels as L
-
-    return L.label_index_build(spark, sf_dir, _text_label_rung())
-
-
-def text_labelroll_restore_base(
-    spark: SparkSession, sf_dir: str
-) -> None:
-    """Bench/test device: roll tables back to the pre-fold BASE state
-    so the next roll-forward performs the fold alone."""
-    from smile_spark.operators import labels as L
-
-    L.roll_restore_base(spark, sf_dir, _text_label_rung())
-
-
-def text_label_rollforward(spark: SparkSession, sf_dir: str) -> dict:
-    """The text label-table roll-forward (bench fold entry
-    ``text_labelroll``)."""
-    from smile_spark.operators import labels as L
-
-    return L.label_rollforward(spark, sf_dir, _text_label_rung())
-
-
-def text_label_compact(spark: SparkSession, sf_dir: str) -> dict:
-    """LSM compaction of the text label roll (bench cold entry
-    ``text_compact``)."""
-    from smile_spark.operators import labels as L
-
-    return L.label_compact(spark, sf_dir, _text_label_rung())
+TEXT_LABEL_RUNG = _text_rung()
 
 
 def text_clusters_incremental(
@@ -4714,9 +4663,7 @@ def text_clusters_incremental(
     oracle replays the identical joint clustering as a recursive
     min-reachability CTE over the closed-form base ∪ increment pair
     union."""
-    from smile_spark.operators import labels as L
-
-    return L.clusters_incremental(spark, sf_dir, _text_label_rung())
+    return L.clusters_incremental(spark, sf_dir, TEXT_LABEL_RUNG)
 
 
 def text_labels_rolled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4725,9 +4672,7 @@ def text_labels_rolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`text_clusters_incremental` by construction; a divergence
     means the persisted state is unfaithful.  Shares that entry's
     oracle (the ann_ivf_indexed shared-oracle contract)."""
-    from smile_spark.operators import labels as L
-
-    return L.labels_rolled(spark, sf_dir, _text_label_rung())
+    return L.labels_rolled(spark, sf_dir, TEXT_LABEL_RUNG)
 
 
 def _minhash_block_pairs_sql(where: str) -> str:
@@ -4779,9 +4724,7 @@ def _text_joint_pairs_sql() -> str:
 
 
 def text_clusters_incremental_sql() -> str:
-    from smile_spark.operators.labels import keep_list_sql
-
-    return keep_list_sql(
+    return L.keep_list_sql(
         _text_joint_pairs_sql(), "SELECT doc_id FROM documents"
     )
 
@@ -5088,12 +5031,3 @@ def semantic_labels_rolled_sql() -> str:
         " pfd.xid IS NULL AS keep, CAST(pfd.dup_of AS BIGINT) AS dup_of"
         " FROM p LEFT JOIN pfd ON pfd.xid = p.vec_id"
     )
-
-
-def clear_text_labelroll_cache() -> None:
-    """Roll-state-only clear (bench fold/compact loops): leaves the
-    read-only base label memo warm so the registered live-fold entry
-    never rebuilds it inside a timed pass."""
-    from smile_spark.operators import labels as L
-
-    L.clear_label_state(_text_label_rung(), which="roll")

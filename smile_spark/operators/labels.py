@@ -1,14 +1,12 @@
 """Generic persisted cluster-label state for pair-graph dedup rungs.
 
-The r14 label machinery (operators/multimodal.py — `_label_index_build`,
-`_clusters_incremental`, `label_rollforward`, `_rolled_label_state`,
-`label_compact`) gave the image/audio/video rungs the full production
-lifecycle: nightly base-cluster labels, an increment-linear fold, an
-LSM-style delta-log roll, and amortized compaction.  This module is
-that core made RUNG-GENERIC (VERDICT r14 next-round #2/#4), so the
-text rung (setsim ∪ MinHash pair graphs, operators/dedup.py) and the
-cross-modal rung (joint image+video graph, operators/multimodal.py)
-run the identical lifecycle without duplicating the machinery.
+The one label lifecycle every cluster-label rung runs: nightly
+base-cluster labels, an increment-linear live fold, an LSM-style
+delta-log roll, and amortized compaction.  Its rungs are the
+perceptual image/audio/video rungs (banded fingerprint pair graphs,
+operators/multimodal.py), the text rung (setsim ∪ MinHash pair
+graphs, operators/dedup.py) and the cross-modal rung (joint
+image+video graph, operators/multimodal.py).
 
 A rung is described by a :class:`LabelRung`: where its document
 universe comes from, how to produce its BASE↔BASE pair set (the
@@ -21,15 +19,15 @@ sidecar adoption contract, and the ADVICE-r14 crash ordering (remove
 the sidecar BEFORE the first append, write the rolled state LAST) —
 is shared code below.
 
-Collapse-correctness argument (the multimodal r14 proof, unchanged):
-a stored base label IS the min doc_id of its base component, so
-min-label cc over the COLLAPSED graph — increment docs plus touched
-base supernodes — yields exactly the labels of cc over the full joint
-pair graph.  Unlike the oriented multimodal fold (probe ids always on
-the `a` side), this core classifies EACH endpoint independently by
-the rung's increment predicate, so rungs whose incident pair set also
-contains increment↔increment edges (the cross-modal rung, whose
-rolled state must equal the full joint clustering) fold exactly too.
+Collapse-correctness argument: a stored base label IS the min doc_id
+of its base component, so min-label cc over the COLLAPSED graph —
+increment docs plus touched base supernodes — yields exactly the
+labels of cc over the full joint pair graph.  The fold classifies
+EACH endpoint independently by the rung's increment predicate, so it
+needs no pair orientation: probe-shaped pair sets (increment doc on
+`a`, base doc on `b` — the perceptual rungs) and pair sets that also
+contain increment↔increment edges (the cross-modal rung, whose rolled
+state must equal the full joint clustering) fold exactly alike.
 
 Scale: the base build is the once-per-snapshot corpus-linear job
 (priced cold in bench.py per rung); every fold is increment-sized
@@ -197,10 +195,10 @@ def _with_base_labels(
 ) -> None:
     """Compute the rung's BASE-block cc labels (id, component) and
     hand them to ``sink`` while the pair checkpoint backing the plan
-    is still alive (the multimodal `_with_base_labels` contract).  The
-    pair frame's own upstream checkpoints (setsim/LSH builders tie
-    theirs to the frame's gc) stay referenced until the local
-    checkpoint below has materialized."""
+    is still alive (the cc output's plan references the pair table
+    until the sink materializes it).  The pair frame's own upstream
+    checkpoints (builders tie theirs to the frame's gc) stay
+    referenced until the local checkpoint below has materialized."""
     from smile_spark.operators.graph import cc_labels
     from smile_spark.session import unpersist_checkpoint
 
@@ -608,9 +606,12 @@ def label_compact(
     """LSM-style compaction: rewrite the base label table as the
     EFFECTIVE rolled state and truncate the delta — amortized
     corpus-linear.  Readers see an identical state before and after.
-    Crash contract: sidecar removed FIRST, rewritten LAST (the
-    multimodal label_compact ordering), so a crash anywhere inside
-    leaves no adoptable state."""
+    Crash contract: sidecar removed FIRST, rewritten LAST, so a crash
+    anywhere inside leaves no adoptable state and the next session
+    falls into the full-rebuild arm.  The rewrite goes through a temp
+    table + catalog RENAME (a filesystem move for managed parquet
+    tables; on an object store a transactional table format would
+    replace this device)."""
     from smile_spark.sources.bucketed import (
         drop_bucketed_table,
         read_bucketed,
@@ -646,8 +647,8 @@ def label_compact(
 def keep_list_sql(pairs_sql: str, universe_sql: str) -> str:
     """DuckDB twin of :func:`_keep_list`: the clustering replayed as a
     recursive min-reachability CTE over the same closed-form pair set
-    (the multimodal `_keep_list_sql` device, re-exported here so text
-    and cross-modal rung oracles need no multimodal import)."""
+    — the oracle of every cluster keep list, label-rung or full
+    rebuild."""
     return (
         "WITH RECURSIVE pairs AS ("
         f" SELECT a, b FROM ({pairs_sql}) p),"

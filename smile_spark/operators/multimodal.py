@@ -25,12 +25,13 @@ H.264) still need external libs and slot into the same signatures.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smile_spark.operators import labels as L
 from smile_spark.tables import table
 
 # --- real numpy codecs ----------------------------------------------------
@@ -1624,32 +1625,6 @@ def _perceptual_keep_list(pairs: DataFrame, universe: DataFrame) -> DataFrame:
     )
 
 
-def _keep_list_sql(pairs_sql: str, universe_sql: str) -> str:
-    """DuckDB twin of :func:`_perceptual_keep_list`: the clustering is
-    replayed as a recursive min-reachability CTE over the same
-    closed-form pair set."""
-    return (
-        "WITH RECURSIVE pairs AS ("
-        f" SELECT a, b FROM ({pairs_sql}) p),"
-        " und AS (SELECT a, b FROM pairs"
-        "  UNION ALL SELECT b AS a, a AS b FROM pairs),"
-        " nodes AS (SELECT DISTINCT a AS id FROM und),"
-        " reach(id, r) AS ("
-        "  SELECT id, id FROM nodes"
-        "  UNION"
-        "  SELECT rr.id, u.b FROM reach rr JOIN und u ON u.a = rr.r),"
-        " comp AS (SELECT id, MIN(r) AS c FROM reach GROUP BY id),"
-        " sizes AS (SELECT c, COUNT(*) AS cluster_size FROM comp"
-        "  GROUP BY c),"
-        f" uni AS ({universe_sql})"
-        " SELECT uni.doc_id,"
-        "  CAST(COALESCE(s.cluster_size, 1) AS BIGINT) AS cluster_size,"
-        "  (c.c IS NULL OR c.c = uni.doc_id) AS keep"
-        " FROM uni LEFT JOIN comp c ON c.id = uni.doc_id"
-        " LEFT JOIN sizes s ON s.c = c.c"
-    )
-
-
 def image_dhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-image dedup DECISION over the perceptual near-dup graph:
     connected components of the :func:`image_dhash_dedup` pair set
@@ -1701,13 +1676,13 @@ def audio_fingerprint_clusters(
     return keep_alive(out, base)
 
 
-AUDIO_FINGERPRINT_CLUSTERS_SQL = _keep_list_sql(
+AUDIO_FINGERPRINT_CLUSTERS_SQL = L.keep_list_sql(
     AUDIO_FINGERPRINT_DEDUP_SQL,
     "SELECT doc_id FROM documents WHERE doc_id % 3 = 1",
 )
 
 
-IMAGE_DHASH_CLUSTERS_SQL = _keep_list_sql(
+IMAGE_DHASH_CLUSTERS_SQL = L.keep_list_sql(
     IMAGE_DHASH_DEDUP_SQL,
     "SELECT doc_id FROM documents WHERE doc_id % 3 = 0",
 )
@@ -2282,33 +2257,19 @@ def image_dhash_rolled_probe(
 # Incremental cluster maintenance (VERDICT r13 What's-missing #2)
 # ---------------------------------------------------------------------------
 
-# The incremental rungs emit probe↔base PAIRS; the cluster/keep
-# artifacts stayed full-rebuild.  The fold below completes the
-# daily-ingest decision path — pairs → updated clusters → updated keep
-# list — WITHOUT touching the corpus: the nightly job persists the
-# base block's cc labels once, and the increment's pairs are folded
-# through a COLLAPSED graph whose nodes are increment docs plus the
-# touched base CLUSTER LABELS (each base component is one supernode —
-# exact, because no base-base path exists outside the stored
-# components and increment-internal pairs are by contract the next
-# nightly rebuild's input).  Min-label cc over the collapsed graph
-# yields the same labels as cc over the full joint pair graph: a base
-# label IS the min doc_id of its base component, so the min over a
-# merged component of {increment ids, base labels} is the global min.
+# The incremental rungs emit probe↔base PAIRS; the shared label
+# lifecycle (operators/labels.py) turns them into updated clusters and
+# keep lists without touching the corpus: the nightly job persists the
+# base block's cc labels once, the day's increment-incident pairs fold
+# through a COLLAPSED graph of increment docs plus touched base
+# cluster labels, and the LSM delta-log roll persists that fold.  Each
+# perceptual modality is one LabelRung over its banded pairs: the base
+# pairs are the base block's banded self-join, the increment pairs the
+# persisted-index probe (a from the increment, b from the base, so the
+# core's per-endpoint increment classification sees exactly the
+# probe's orientation).  Increment-internal pairs are by contract the
+# next nightly rebuild's input.
 
-LABEL_INDEX_BUCKETS = 16
-# modality -> (memo of ready keys, sidecar paths, table base name)
-_LABEL_READY: set[tuple[str, str, str]] = set()
-_LABEL_SIDECARS: dict[str, set[str]] = {
-    "image": set(),
-    "audio": set(),
-    "video": set(),
-}
-_LABEL_TABLE_BASE = {
-    "image": "dhash_labels",
-    "audio": "audio_labels",
-    "video": "video_labels",
-}
 # label grids: the banding parameters that invalidate a label table
 _LABEL_GRIDS = {
     "image": [DHASH_GW, DHASH_GH],
@@ -2337,258 +2298,118 @@ def _doc_pair_edges(pairs: DataFrame, modality: str) -> DataFrame:
     )
 
 
-def _label_table(sf_dir: str, modality: str) -> str:
-    from smile_spark.sources.bucketed import bucket_table_name
+def _visual_rung(
+    name: str,
+    table_base: str,
+    universe: Callable[[SparkSession, str], DataFrame],
+    base_pairs: Callable[[SparkSession, str], DataFrame],
+    inc_pairs: Callable[[SparkSession, str], DataFrame],
+    params: Callable[[SparkSession, str], dict],
+) -> L.LabelRung:
+    """A label rung whose increment is the visual family's block
+    (doc_id % DHASH_INC_MOD == 0); the sidecars' covered-block counts
+    split ``universe`` by that predicate."""
 
-    return bucket_table_name(_LABEL_TABLE_BASE[modality], sf_dir)
+    def is_increment(c: F.Column) -> F.Column:
+        return c % DHASH_INC_MOD == 0
 
+    def base_count(spark: SparkSession, sf_dir: str) -> int:
+        return (
+            universe(spark, sf_dir)
+            .filter(~is_increment(F.col("doc_id")))
+            .count()
+        )
 
-def _clear_label_cache(modality: str) -> None:
-    from smile_spark.sources.bucketed import remove_sidecar_file
+    def fold_count(spark: SparkSession, sf_dir: str) -> int:
+        return (
+            universe(spark, sf_dir)
+            .filter(is_increment(F.col("doc_id")))
+            .count()
+        )
 
-    for key in [k for k in _LABEL_READY if k[2] == modality]:
-        _LABEL_READY.discard(key)
-    sidecars = _LABEL_SIDECARS[modality]
-    for path in list(sidecars):
-        remove_sidecar_file(path)
-        sidecars.discard(path)
-
-
-def clear_image_label_cache() -> None:
-    """Forget the IMAGE base-label memo AND drop this process'
-    adoption sidecars (built or adopted), so the next call reruns the
-    full base-pairs + cc + write path (bench cold pricing,
-    ``image_label_build``)."""
-    _clear_label_cache("image")
-
-
-def clear_audio_label_cache() -> None:
-    """The AUDIO twin of :func:`clear_image_label_cache` (bench cold
-    entry ``audio_label_build``)."""
-    _clear_label_cache("audio")
-
-
-def clear_video_label_cache() -> None:
-    """The VIDEO twin of :func:`clear_image_label_cache` (bench cold
-    entry ``video_label_build``)."""
-    _clear_label_cache("video")
-
-
-def _label_index_build(
-    spark: SparkSession, sf_dir: str, modality: str
-) -> str:
-    """Persist one modality's BASE-block connected-component labels
-    (id, component) bucketed by id — the nightly clustering job the
-    incremental fold reads.  Only PAIRED docs appear (singletons
-    label themselves implicitly, the `_perceptual_keep_list`
-    convention).  Standard sidecar-adoption contract; the base pair
-    set is computed from base-filtered fingerprints (decode restricted
-    BEFORE the hash pass), banded + salted + verified through the
-    shared `_dhash_pairs_from_hashes` core (the audio rung shares the
-    image rung's banded core, so one build serves both)."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
+    return L.LabelRung(
+        name=name,
+        table_base=table_base,
+        universe=universe,
+        base_pairs=base_pairs,
+        inc_pairs=inc_pairs,
+        is_increment=is_increment,
+        params=params,
+        base_count=base_count,
+        fold_count=fold_count,
     )
-    from smile_spark.tables import table as _table
 
+
+def _band_label_rung(modality: str, table_base: str) -> L.LabelRung:
+    """One perceptual modality's label rung: its subset of
+    ``documents``, document-level banded pairs, and the shared
+    increment block (doc_id % DHASH_INC_MOD == 0).  ``table_base``
+    keeps each modality's established roll-table name, so rolled
+    state already in the warehouse adopts."""
     sub_mod, sub_res, _ = _BAND_MODALITY[modality]
-    tbl = _label_table(sf_dir, modality)
-    key = (spark.sparkContext.applicationId, sf_dir, modality)
-    if key in _LABEL_READY:
-        return tbl
-    base_pred = F.col("doc_id") % DHASH_INC_MOD != 0
-    n_base = (
-        _table(spark, sf_dir, "documents")
-        .filter((F.col("doc_id") % sub_mod == sub_res) & base_pred)
-        .count()
-    )
-    grids = _LABEL_GRIDS
-    expected = {
-        "base_rows": n_base,
-        "op": f"{modality}_labels",
-        "inc_mod": DHASH_INC_MOD,
-        "max_distance": DHASH_MAX_DISTANCE,
-        "grid": grids[modality],
-        "n_buckets": LABEL_INDEX_BUCKETS,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    if sidecar_adoptable(spark, tbl, expected, [tbl]):
-        _LABEL_SIDECARS[modality].add(sidecar_path(spark, tbl))
-        _LABEL_READY.add(key)
-        return tbl
 
-    def sink(labels: DataFrame) -> None:
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(labels, tbl, "id", n_buckets=LABEL_INDEX_BUCKETS)
-        _LABEL_SIDECARS[modality].add(write_sidecar(spark, tbl, expected))
+    def universe(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return (
+            table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % sub_mod == sub_res)
+            .select("doc_id")
+        )
 
-    _with_base_labels(spark, sf_dir, modality, sink)
-    _LABEL_READY.add(key)
-    return tbl
+    def base_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+        # decode restricted to the base block BEFORE the hash pass; the
+        # hashes checkpoint keeps the banded join from re-decoding and
+        # is released with the returned frame
+        from smile_spark.session import release_checkpoints_on_gc
 
-
-def _with_base_labels(
-    spark: SparkSession, sf_dir: str, modality: str, sink
-) -> None:
-    """Compute the BASE block's cc labels (id, component) for one
-    modality and hand the frame to ``sink`` while the pair checkpoint
-    backing it is still alive (the cc output's plan references the
-    pair table until the sink materializes it) — the shared core of
-    :func:`_label_index_build` and the label roll-forward's base
-    restore path."""
-    from smile_spark.operators.graph import cc_labels
-    from smile_spark.session import unpersist_checkpoint
-
-    base_pred = F.col("doc_id") % DHASH_INC_MOD != 0
-    hashes = _band_frame(
-        spark, sf_dir, modality, base_pred
-    ).localCheckpoint()
-    try:
-        pairs = _doc_pair_edges(
-            _dhash_pairs_from_hashes(hashes), modality
+        hashes = _band_frame(
+            spark, sf_dir, modality, F.col("doc_id") % DHASH_INC_MOD != 0
         ).localCheckpoint()
-    finally:
-        unpersist_checkpoint(hashes)
-    try:
-        p = pairs.select("a", "b")
-        und = p.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).union(
-            p.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+        out = _doc_pair_edges(_dhash_pairs_from_hashes(hashes), modality)
+        release_checkpoints_on_gc(out, [hashes])
+        return out
+
+    def inc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _doc_pair_edges(
+            _band_incremental(spark, sf_dir, modality), modality
         )
-        nodes = und.select(F.col("src").alias("id")).distinct()
-        sink(cc_labels(nodes, und))
-    finally:
-        unpersist_checkpoint(pairs)
 
+    def params(spark: SparkSession, sf_dir: str) -> dict:
+        return {
+            "inc_mod": DHASH_INC_MOD,
+            "max_distance": DHASH_MAX_DISTANCE,
+            "grid": _LABEL_GRIDS[modality],
+        }
 
-def image_label_index_build(spark: SparkSession, sf_dir: str) -> str:
-    """The IMAGE base label table (see :func:`_label_index_build`);
-    cold-priced by the bench as ``image_label_build``."""
-    return _label_index_build(spark, sf_dir, "image")
-
-
-def audio_label_index_build(spark: SparkSession, sf_dir: str) -> str:
-    """The AUDIO base label table (see :func:`_label_index_build`);
-    cold-priced by the bench as ``audio_label_build``."""
-    return _label_index_build(spark, sf_dir, "audio")
-
-
-def video_label_index_build(spark: SparkSession, sf_dir: str) -> str:
-    """The VIDEO base label table — cluster labels over VIDEO-level
-    pair edges (per-frame banded pairs collapsed by
-    :func:`_doc_pair_edges`, the video_dhash_tolerant device);
-    cold-priced by the bench as ``video_label_build``."""
-    return _label_index_build(spark, sf_dir, "video")
-
-
-def _clusters_incremental(
-    spark: SparkSession, sf_dir: str, modality: str
-) -> DataFrame:
-    """Shared incremental cluster-maintenance fold (VERDICT r13
-    next-round #4): fold one modality's incremental pair output into
-    its PERSISTED base cluster labels — updated clusters and keep
-    list for the whole modality without re-clustering the corpus.
-
-    Plan: (1) collapse each incremental pair's base endpoint to its
-    stored label (unpaired base docs label themselves) — one id-keyed
-    left join against the bucketed label table; (2) min-label cc over
-    the COLLAPSED graph (increment docs + touched labels only —
-    increment-sized, so the pointer-jumping rounds cost nothing at any
-    corpus size); (3) one relabel join per universe doc: old label →
-    merged label where touched, else unchanged; (4) sizes + min-id
-    survivorship over the final labels.
-
-    Emits (doc_id, cluster_size, keep) for EVERY modality doc — the
-    `_perceptual_keep_list` schema and semantics, pinned by an
-    agreement test against the full rebuild over the joint
-    (base ∪ probe↔base) pair set and by the recursive
-    min-reachability oracle over the identical closed-form pairs.
-    """
-    from smile_spark.operators.graph import cc_labels
-    from smile_spark.session import release_checkpoints_on_gc
-    from smile_spark.sources.bucketed import read_bucketed
-    from smile_spark.tables import table as _table
-
-    sub_mod, sub_res, _ = _BAND_MODALITY[modality]
-    tbl = _label_index_build(spark, sf_dir, modality)
-    labels = read_bucketed(spark, tbl)
-    inc = _doc_pair_edges(
-        _band_incremental(spark, sf_dir, modality), modality
+    return _visual_rung(
+        modality, table_base, universe, base_pairs, inc_pairs, params
     )
-    # collapse: (increment doc, base endpoint's stored label); the
-    # checkpoint stops the probe decode from re-running every cc round
-    e = (
-        inc.join(
-            labels.select(F.col("id").alias("b"), "component"),
-            "b",
-            "left",
-        )
-        .select(
-            "a", F.coalesce("component", F.col("b")).alias("s")
-        )
-        .distinct()
-        .localCheckpoint()
+
+
+LABEL_RUNGS = {
+    modality: _band_label_rung(modality, table_base)
+    for modality, table_base in (
+        ("image", "dhash_labelroll"),
+        ("audio", "audio_labelroll"),
+        ("video", "video_labelroll"),
     )
-    nodes = (
-        e.select(F.col("a").alias("id"))
-        .union(e.select(F.col("s").alias("id")))
-        .distinct()
-    )
-    und = e.select(
-        F.col("a").alias("src"), F.col("s").alias("dst")
-    ).union(e.select(F.col("s").alias("src"), F.col("a").alias("dst")))
-    relabel = cc_labels(nodes, und).select(
-        F.col("id").alias("lbl0"), F.col("component").alias("c2")
-    )
-    universe = (
-        _table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % sub_mod == sub_res)
-        .select("doc_id")
-    )
-    lbl0 = universe.join(
-        labels.select(F.col("id").alias("doc_id"), "component"),
-        "doc_id",
-        "left",
-    ).select(
-        "doc_id",
-        F.coalesce("component", F.col("doc_id")).alias("lbl0"),
-    )
-    final = lbl0.join(F.broadcast(relabel), "lbl0", "left").select(
-        "doc_id", F.coalesce("c2", F.col("lbl0")).alias("lbl")
-    )
-    sizes = final.groupBy("lbl").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cluster_size")
-    )
-    out = final.join(sizes, "lbl").select(
-        "doc_id",
-        "cluster_size",
-        (F.col("doc_id") == F.col("lbl")).alias("keep"),
-    )
-    release_checkpoints_on_gc(out, [e])
-    return out
+}
 
 
 def image_clusters_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The IMAGE instance of the shared incremental cluster fold
-    (see :func:`_clusters_incremental`)."""
-    return _clusters_incremental(spark, sf_dir, "image")
+    """The IMAGE keep list maintained increment-linearly: today's
+    image_dhash_incremental pairs folded through the persisted base
+    labels (:func:`labels.clusters_incremental`)."""
+    return L.clusters_incremental(spark, sf_dir, LABEL_RUNGS["image"])
 
 
 def audio_clusters_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The AUDIO instance of the shared incremental cluster fold —
-    the audio_fingerprint_clusters keep list maintained
-    increment-linearly (see :func:`_clusters_incremental`)."""
-    return _clusters_incremental(spark, sf_dir, "audio")
+    """The audio_fingerprint_clusters keep list maintained
+    increment-linearly (:func:`labels.clusters_incremental`)."""
+    return L.clusters_incremental(spark, sf_dir, LABEL_RUNGS["audio"])
 
 
 def video_dhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2619,436 +2440,30 @@ def video_dhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def video_clusters_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The VIDEO instance of the shared incremental cluster fold —
-    the :func:`video_dhash_clusters` keep list maintained
+    """The :func:`video_dhash_clusters` keep list maintained
     increment-linearly over VIDEO-level pair edges (see
-    :func:`_clusters_incremental` and :func:`_doc_pair_edges`)."""
-    return _clusters_incremental(spark, sf_dir, "video")
-
-
-# ---------------------------------------------------------------------------
-# Label-table roll-forward (the delta-log update pattern)
-# ---------------------------------------------------------------------------
-
-# _clusters_incremental reads the persisted base labels but leaves
-# them untouched — the nightly label REBUILD stayed corpus-linear
-# (SCALING.md r14 "Future").  Folding the day's merged labels back
-# needs row UPDATES (merges relabel existing base rows), which plain
-# parquet cannot do in place; the roll below uses the LSM/Delta-Lake
-# answer instead: the base label table stays IMMUTABLE, the fold
-# APPENDS an increment-sized DELTA of relabel rows, and every reader
-# applies the delta as a broadcast remap.  A periodic label_compact
-# rewrites base+delta into a fresh base (amortized corpus-linear,
-# exactly like LSM compaction); the daily fold itself never touches a
-# base row.  Delta row kinds: 0 = increment doc's new assignment,
-# 1 = remap of an existing base cluster LABEL, 2 = a previously
-# UNPAIRED base doc now pulled into a cluster (it has no base row, so
-# the reader must emit it, not just remap it).
-
-_LROLL_READY: set[tuple[str, str, str]] = set()
-_LROLL_SIDECARS: dict[str, set[str]] = {
-    "image": set(),
-    "audio": set(),
-    "video": set(),
-}
-_LROLL_TABLE_BASE = {
-    "image": "dhash_labelroll",
-    "audio": "audio_labelroll",
-    "video": "video_labelroll",
-}
-
-
-def _labelroll_tables(sf_dir: str, modality: str) -> dict[str, str]:
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    base = _LROLL_TABLE_BASE[modality]
-    return {
-        "labels": bucket_table_name(f"{base}_labels", sf_dir),
-        "delta": bucket_table_name(f"{base}_delta", sf_dir),
-    }
-
-
-def _labelroll_sidecar_name(sf_dir: str, modality: str) -> str:
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    return bucket_table_name(_LROLL_TABLE_BASE[modality], sf_dir)
-
-
-def _labelroll_payloads(
-    spark: SparkSession, sf_dir: str, modality: str, tables: dict[str, str]
-) -> tuple[dict, dict]:
-    """(base-state, rolled-state) sidecar payloads — every build
-    parameter plus covered-block row counts, so parameter AND
-    snapshot changes force the full rebuild (the roll-forward family
-    contract)."""
-    from smile_spark.tables import table as _table
-
-    sub_mod, sub_res, _ = _BAND_MODALITY[modality]
-    docs = _table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % sub_mod == sub_res
-    )
-    grids = _LABEL_GRIDS
-    base = {
-        "state": "base",
-        "base_rows": docs.filter(
-            F.col("doc_id") % DHASH_INC_MOD != 0
-        ).count(),
-        "op": f"{modality}_labelroll",
-        "inc_mod": DHASH_INC_MOD,
-        "max_distance": DHASH_MAX_DISTANCE,
-        "grid": grids[modality],
-        "n_buckets": LABEL_INDEX_BUCKETS,
-        "sf_dir": sf_dir,
-        "tables": sorted(tables.values()),
-    }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = docs.filter(
-        F.col("doc_id") % DHASH_INC_MOD == 0
-    ).count()
-    return base, rolled
-
-
-def _clear_labelroll(modality: str) -> None:
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    for key in [k for k in _LROLL_READY if k[2] == modality]:
-        _LROLL_READY.discard(key)
-    sidecars = _LROLL_SIDECARS[modality]
-    for path in list(sidecars):
-        remove_sidecar_file(path)
-        sidecars.discard(path)
-
-
-def clear_image_labelroll_cache() -> None:
-    """Forget the IMAGE label-roll memo AND drop this process'
-    adoption sidecars, so the next call runs the full base-rebuild +
-    fold path (bench cold pricing, ``image_labelroll``)."""
-    _clear_labelroll("image")
-
-
-def clear_audio_labelroll_cache() -> None:
-    """The AUDIO twin of :func:`clear_image_labelroll_cache`."""
-    _clear_labelroll("audio")
-
-
-def clear_video_labelroll_cache() -> None:
-    """The VIDEO twin of :func:`clear_image_labelroll_cache`."""
-    _clear_labelroll("video")
-
-
-def _labelroll_base_write(
-    spark: SparkSession, sf_dir: str, modality: str, tables: dict[str, str]
-) -> None:
-    """Corpus-linear base build: cc labels over the base pair set into
-    the roll's label table, plus an EMPTY delta (same schema the fold
-    appends)."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-    )
-
-    def sink(labels: DataFrame) -> None:
-        for t in tables.values():
-            drop_bucketed_table(spark, t)
-        write_bucketed(
-            labels, tables["labels"], "id", n_buckets=LABEL_INDEX_BUCKETS
-        )
-        write_bucketed(
-            labels.select(
-                "id", "component", F.lit(0).cast("int").alias("kind")
-            ).limit(0),
-            tables["delta"],
-            "id",
-            n_buckets=LABEL_INDEX_BUCKETS,
-        )
-
-    _with_base_labels(spark, sf_dir, modality, sink)
-
-
-def labelroll_restore_base(
-    spark: SparkSession, sf_dir: str, modality: str
-) -> None:
-    """Force the roll tables back to the pre-fold BASE state (drop +
-    corpus-linear rebuild + base sidecar) — the bench/test device for
-    pricing the FOLD alone (a fold is a one-way append).  Production
-    never calls this."""
-    from smile_spark.sources.bucketed import write_sidecar
-
-    tables = _labelroll_tables(sf_dir, modality)
-    key = (spark.sparkContext.applicationId, sf_dir, modality)
-    _LROLL_READY.discard(key)
-    _labelroll_base_write(spark, sf_dir, modality, tables)
-    pb, _ = _labelroll_payloads(spark, sf_dir, modality, tables)
-    _LROLL_SIDECARS[modality].add(
-        write_sidecar(spark, _labelroll_sidecar_name(sf_dir, modality), pb)
-    )
-
-
-def _labelroll_fold(
-    spark: SparkSession, sf_dir: str, modality: str, tables: dict[str, str]
-) -> None:
-    """Append the day's merged labels as DELTA rows — the
-    increment-linear nightly step.  Collapse each incremental pair's
-    base endpoint to its stored label (one id-keyed left join against
-    the frozen base label table), run min-label cc over the COLLAPSED
-    graph (increment docs + touched supernodes only — increment-sized
-    at any corpus size; a base label already IS its component's min
-    doc_id, so the collapsed min equals the joint-graph min), and
-    append one (id, component, kind) row per collapsed node.  On ANY
-    append failure the tables and sidecar are dropped, so a
-    half-appended delta is never adoptable."""
-    from smile_spark.operators.graph import cc_labels
-    from smile_spark.session import unpersist_checkpoint
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        read_bucketed,
-        remove_sidecar_file,
-        sidecar_path,
-    )
-
-    inc = _doc_pair_edges(
-        _band_incremental(spark, sf_dir, modality), modality
-    )
-    labels = read_bucketed(spark, tables["labels"])
-    # (a, s, unp): s = base endpoint's stored label, or the endpoint
-    # itself when it was unpaired in the base state (unp marks that —
-    # the reader must EMIT such docs, not merely remap their label)
-    e = (
-        inc.join(
-            labels.select(F.col("id").alias("b"), "component"),
-            "b",
-            "left",
-        )
-        .select(
-            "a",
-            F.coalesce("component", F.col("b")).alias("s"),
-            F.col("component").isNull().alias("unp"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    try:
-        sup = e.groupBy("s").agg(F.max("unp").alias("unp"))
-        nodes = (
-            e.select(F.col("a").alias("id"))
-            .union(e.select(F.col("s").alias("id")))
-            .distinct()
-        )
-        und = e.select(
-            F.col("a").alias("src"), F.col("s").alias("dst")
-        ).union(
-            e.select(F.col("s").alias("src"), F.col("a").alias("dst"))
-        )
-        delta = (
-            cc_labels(nodes, und)
-            .join(sup.select(F.col("s").alias("id"), "unp"), "id", "left")
-            .select(
-                "id",
-                "component",
-                F.when(F.col("unp").isNull(), F.lit(0))
-                .when(F.col("unp"), F.lit(2))
-                .otherwise(F.lit(1))
-                .cast("int")
-                .alias("kind"),
-            )
-        )
-        try:
-            append_bucketed(
-                delta, tables["delta"], "id", n_buckets=LABEL_INDEX_BUCKETS
-            )
-        except Exception:
-            for t in tables.values():
-                drop_bucketed_table(spark, t)
-            scpath = sidecar_path(
-                spark, _labelroll_sidecar_name(sf_dir, modality)
-            )
-            remove_sidecar_file(scpath)
-            _LROLL_SIDECARS[modality].discard(scpath)
-            raise
-    finally:
-        unpersist_checkpoint(e)
-
-
-def label_rollforward(
-    spark: SparkSession, sf_dir: str, modality: str
-) -> dict[str, str]:
-    """Advance the persisted LABEL state from covering the BASE block
-    to covering base ∪ increment by appending a delta of merged
-    labels — the nightly cluster-maintenance job in increment-linear
-    form, completing the chain `_clusters_incremental` left open (its
-    label table was read-only; the nightly rebuild stayed
-    corpus-linear).  The setsim_index_rollforward three-state
-    contract: adopt rolled → fold over base → full rebuild then fold;
-    every parameter lives in both sidecar payloads, so parameter
-    changes always land in the rebuild arm."""
-    from smile_spark.sources.bucketed import (
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_sidecar,
-    )
-
-    tables = _labelroll_tables(sf_dir, modality)
-    key = (spark.sparkContext.applicationId, sf_dir, modality)
-    if key in _LROLL_READY:
-        return tables
-    name = _labelroll_sidecar_name(sf_dir, modality)
-    pb, pr = _labelroll_payloads(spark, sf_dir, modality, tables)
-    if sidecar_adoptable(spark, name, pr, list(tables.values())):
-        _LROLL_SIDECARS[modality].add(sidecar_path(spark, name))
-        _LROLL_READY.add(key)
-        return tables
-    if not sidecar_adoptable(spark, name, pb, list(tables.values())):
-        _labelroll_base_write(spark, sf_dir, modality, tables)
-        _LROLL_SIDECARS[modality].add(write_sidecar(spark, name, pb))
-    # crash contract (ADVICE r14): no adoptable sidecar while the
-    # delta append runs — a crash between the append and the rolled
-    # write would otherwise leave the BASE sidecar adoptable over
-    # already-appended delta rows, and the next session would fold
-    # AGAIN (doubled delta rows through the broadcast remap).  Remove
-    # first, write the rolled state last.
-    scpath = sidecar_path(spark, name)
-    remove_sidecar_file(scpath)
-    _LROLL_SIDECARS[modality].discard(scpath)
-    _labelroll_fold(spark, sf_dir, modality, tables)
-    _LROLL_SIDECARS[modality].add(write_sidecar(spark, name, pr))
-    _LROLL_READY.add(key)
-    return tables
-
-
-def _rolled_label_state(
-    spark: SparkSession, sf_dir: str, modality: str
-) -> DataFrame:
-    """The EFFECTIVE rolled label state (id, component): base labels
-    with the delta's remap applied (broadcast — the delta is
-    increment-sized), plus the delta's new rows (increment docs and
-    previously-unpaired base docs).  The corpus-sized base table is
-    scanned once with no exchange; everything else is delta-sized."""
-    from smile_spark.sources.bucketed import read_bucketed
-
-    tables = label_rollforward(spark, sf_dir, modality)
-    base = read_bucketed(spark, tables["labels"])
-    delta = read_bucketed(spark, tables["delta"])
-    remap = delta.filter(F.col("kind") >= 1).select(
-        F.col("id").alias("lbl0"), F.col("component").alias("c2")
-    )
-    eff_base = base.join(
-        F.broadcast(remap), base["component"] == F.col("lbl0"), "left"
-    ).select(
-        base["id"].alias("id"),
-        F.coalesce("c2", base["component"]).alias("component"),
-    )
-    extra = delta.filter(
-        (F.col("kind") == 0) | (F.col("kind") == 2)
-    ).select("id", "component")
-    return eff_base.unionByName(extra)
-
-
-def _labels_rolled(
-    spark: SparkSession, sf_dir: str, modality: str
-) -> DataFrame:
-    """Keep-list view over the ROLLED label state — (doc_id,
-    cluster_size, keep) for every modality doc, byte-identical to the
-    corresponding `*_clusters_incremental` output (same joint pair
-    graph, same survivorship rule), but served from the persisted
-    base + delta instead of a live fold: the proof that the rolled
-    state is a faithful substitute for tomorrow's nightly input."""
-    from smile_spark.tables import table as _table
-
-    eff = _rolled_label_state(spark, sf_dir, modality)
-    sub_mod, sub_res, _ = _BAND_MODALITY[modality]
-    universe = (
-        _table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % sub_mod == sub_res)
-        .select("doc_id")
-    )
-    lbl = universe.join(
-        eff.select(F.col("id").alias("doc_id"), "component"),
-        "doc_id",
-        "left",
-    ).select(
-        "doc_id", F.coalesce("component", F.col("doc_id")).alias("lbl")
-    )
-    sizes = lbl.groupBy("lbl").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cluster_size")
-    )
-    return lbl.join(sizes, "lbl").select(
-        "doc_id",
-        "cluster_size",
-        (F.col("doc_id") == F.col("lbl")).alias("keep"),
-    )
+    :func:`_doc_pair_edges`)."""
+    return L.clusters_incremental(spark, sf_dir, LABEL_RUNGS["video"])
 
 
 def image_labels_rolled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IMAGE keep list served from the ROLLED label state (see
-    :func:`_labels_rolled` and :func:`label_rollforward`).  Oracle:
-    the same recursive min-reachability CTE as
-    image_clusters_incremental — the two queries are different
-    physical paths to the identical joint clustering."""
-    return _labels_rolled(spark, sf_dir, "image")
+    """The IMAGE keep list served from the ROLLED delta-log label state
+    (:func:`labels.labels_rolled`).  Oracle: the same recursive
+    min-reachability CTE as image_clusters_incremental — the two
+    queries are different physical paths to the identical joint
+    clustering."""
+    return L.labels_rolled(spark, sf_dir, LABEL_RUNGS["image"])
 
 
 def audio_labels_rolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The AUDIO twin of :func:`image_labels_rolled`."""
-    return _labels_rolled(spark, sf_dir, "audio")
+    return L.labels_rolled(spark, sf_dir, LABEL_RUNGS["audio"])
 
 
 def video_labels_rolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The VIDEO twin of :func:`image_labels_rolled` — the rolled
     delta-log label state over VIDEO-level pair edges."""
-    return _labels_rolled(spark, sf_dir, "video")
-
-
-def label_compact(
-    spark: SparkSession, sf_dir: str, modality: str
-) -> dict[str, str]:
-    """LSM-style compaction of the label roll: rewrite the base table
-    as the EFFECTIVE rolled state and truncate the delta — amortized
-    corpus-linear, run when the delta grows past policy (at the
-    fixture the test runs it unconditionally).  Readers see an
-    identical state before and after (agreement-tested).
-
-    Crash contract: the sidecar is removed FIRST and rewritten LAST,
-    so a crash anywhere inside leaves no adoptable state and the next
-    session falls into the full-rebuild arm — the same
-    no-half-applied-index guarantee the fold gives.  The rewrite goes
-    through a temp table + catalog RENAME (a filesystem move for
-    managed parquet tables — metadata-cheap locally; on an object
-    store a transactional table format would replace this whole
-    device)."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        read_bucketed,
-        remove_sidecar_file,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tables = label_rollforward(spark, sf_dir, modality)
-    name = _labelroll_sidecar_name(sf_dir, modality)
-    _, pr = _labelroll_payloads(spark, sf_dir, modality, tables)
-    eff = _rolled_label_state(spark, sf_dir, modality)
-    # schema-only: an overwrite whose plan READS the target table is
-    # rejected by Spark, so the empty delta is built from the schema
-    empty_delta = spark.createDataFrame(
-        [], read_bucketed(spark, tables["delta"]).schema
-    )
-    scpath = sidecar_path(spark, name)
-    remove_sidecar_file(scpath)
-    _LROLL_SIDECARS[modality].discard(scpath)
-    tmp = f"{tables['labels']}_cmp"
-    drop_bucketed_table(spark, tmp)
-    write_bucketed(eff, tmp, "id", n_buckets=LABEL_INDEX_BUCKETS)
-    drop_bucketed_table(spark, tables["labels"])
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {tables['labels']}")
-    write_bucketed(
-        empty_delta, tables["delta"], "id", n_buckets=LABEL_INDEX_BUCKETS
-    )
-    _LROLL_SIDECARS[modality].add(write_sidecar(spark, name, pr))
-    return tables
+    return L.labels_rolled(spark, sf_dir, LABEL_RUNGS["video"])
 
 
 def _img_hash_ctes(p: str, where: str) -> str:
@@ -3155,8 +2570,8 @@ _IMG_JOINT_PAIRS_SQL = (
 
 # oracle: recursive min-reachability clustering over the identical
 # closed-form joint pair set, sizes + min-id survivorship over the
-# full image universe — the _keep_list_sql device
-IMAGE_CLUSTERS_INCREMENTAL_SQL = _keep_list_sql(
+# full image universe — the labels.keep_list_sql device
+IMAGE_CLUSTERS_INCREMENTAL_SQL = L.keep_list_sql(
     _IMG_JOINT_PAIRS_SQL,
     "SELECT doc_id FROM documents WHERE doc_id % 3 = 0",
 )
@@ -3239,7 +2654,7 @@ _VID_ALL_PAIRS_SQL = (
     f" WHERE {_DUCK_HAMMING} <= {DHASH_MAX_DISTANCE}"
 )
 
-VIDEO_DHASH_CLUSTERS_SQL = _keep_list_sql(
+VIDEO_DHASH_CLUSTERS_SQL = L.keep_list_sql(
     _VID_ALL_PAIRS_SQL,
     f"SELECT doc_id FROM documents WHERE doc_id % {HIRES_MOD} = 2",
 )
@@ -3267,7 +2682,7 @@ _VID_JOINT_PAIRS_SQL = (
     f" WHERE {_DUCK_HAMMING} <= {DHASH_MAX_DISTANCE}"
 )
 
-VIDEO_CLUSTERS_INCREMENTAL_SQL = _keep_list_sql(
+VIDEO_CLUSTERS_INCREMENTAL_SQL = L.keep_list_sql(
     _VID_JOINT_PAIRS_SQL,
     f"SELECT doc_id FROM documents WHERE doc_id % {HIRES_MOD} = 2",
 )
@@ -3554,7 +2969,7 @@ _AUD_JOINT_PAIRS_SQL = (
     f" WHERE {_DUCK_HAMMING} <= {DHASH_MAX_DISTANCE}"
 )
 
-AUDIO_CLUSTERS_INCREMENTAL_SQL = _keep_list_sql(
+AUDIO_CLUSTERS_INCREMENTAL_SQL = L.keep_list_sql(
     _AUD_JOINT_PAIRS_SQL,
     "SELECT doc_id FROM documents WHERE doc_id % 3 = 1",
 )
@@ -3613,7 +3028,7 @@ def crossmodal_dedup_clusters(
     return keep_alive(out, ip, vp, cp)
 
 
-CROSSMODAL_DEDUP_CLUSTERS_SQL = _keep_list_sql(
+CROSSMODAL_DEDUP_CLUSTERS_SQL = L.keep_list_sql(
     f"SELECT a, b FROM ({IMAGE_DHASH_DEDUP_SQL}) ip"
     f" UNION ALL SELECT a, b FROM ({VIDEO_FRAME_DEDUP_SQL}) vp"
     f" UNION ALL SELECT a, b FROM ({CROSSMODAL_IMAGE_VIDEO_SQL}) cp",
@@ -3671,14 +3086,12 @@ def _crossmodal_joint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_alive(out, ip, vp, cp)
 
 
-def _crossmodal_rung_build() -> "object":
-    from smile_spark.operators.labels import LabelRung
+def _crossmodal_rung() -> L.LabelRung:
     from smile_spark.session import keep_alive
-    from smile_spark.tables import table as _table
 
     def universe(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
-            _table(spark, sf_dir, "documents")
+            table(spark, sf_dir, "documents")
             .filter(
                 (F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 3 == 2)
             )
@@ -3709,88 +3122,17 @@ def _crossmodal_rung_build() -> "object":
             "grid": [DHASH_GW, DHASH_GH, VID_FRAMES],
         }
 
-    def base_count(spark: SparkSession, sf_dir: str) -> int:
-        return (
-            universe(spark, sf_dir)
-            .filter(F.col("doc_id") % DHASH_INC_MOD != 0)
-            .count()
-        )
-
-    def fold_count(spark: SparkSession, sf_dir: str) -> int:
-        return (
-            universe(spark, sf_dir)
-            .filter(F.col("doc_id") % DHASH_INC_MOD == 0)
-            .count()
-        )
-
-    return LabelRung(
-        name="crossmodal",
-        table_base="crossmodal_labelroll",
-        universe=universe,
-        base_pairs=base_pairs,
-        inc_pairs=inc_pairs,
-        is_increment=lambda c: c % DHASH_INC_MOD == 0,
-        params=params,
-        base_count=base_count,
-        fold_count=fold_count,
+    return _visual_rung(
+        "crossmodal",
+        "crossmodal_labelroll",
+        universe,
+        base_pairs,
+        inc_pairs,
+        params,
     )
 
 
-CROSSMODAL_LABEL_RUNG = None
-
-
-def _crossmodal_rung():
-    global CROSSMODAL_LABEL_RUNG
-    if CROSSMODAL_LABEL_RUNG is None:
-        CROSSMODAL_LABEL_RUNG = _crossmodal_rung_build()
-    return CROSSMODAL_LABEL_RUNG
-
-
-def clear_crossmodal_label_cache() -> None:
-    """Forget the cross-modal label-state memos AND drop this process'
-    adoption sidecars (bench entries ``crossmodal_label_build`` /
-    ``crossmodal_labelroll``)."""
-    from smile_spark.operators import labels as L
-
-    L.clear_label_state(_crossmodal_rung())
-
-
-def crossmodal_label_index_build(
-    spark: SparkSession, sf_dir: str
-) -> str:
-    """The cross-modal read-only base label table (bench cold entry
-    ``crossmodal_label_build``)."""
-    from smile_spark.operators import labels as L
-
-    return L.label_index_build(spark, sf_dir, _crossmodal_rung())
-
-
-def crossmodal_labelroll_restore_base(
-    spark: SparkSession, sf_dir: str
-) -> None:
-    """Bench/test device: roll tables back to the pre-fold BASE state
-    so the next roll-forward performs the fold alone."""
-    from smile_spark.operators import labels as L
-
-    L.roll_restore_base(spark, sf_dir, _crossmodal_rung())
-
-
-def crossmodal_label_rollforward(
-    spark: SparkSession, sf_dir: str
-) -> dict:
-    """The cross-modal label-table roll-forward (bench fold entry
-    ``crossmodal_labelroll``)."""
-    from smile_spark.operators import labels as L
-
-    return L.label_rollforward(spark, sf_dir, _crossmodal_rung())
-
-
-def crossmodal_label_compact(spark: SparkSession, sf_dir: str) -> dict:
-    """LSM compaction of the cross-modal label roll (bench cold entry
-    ``crossmodal_compact``)."""
-    from smile_spark.operators import labels as L
-
-    return L.label_compact(spark, sf_dir, _crossmodal_rung())
+CROSSMODAL_LABEL_RUNG = _crossmodal_rung()
 
 
 def crossmodal_clusters_incremental(
@@ -3805,9 +3147,7 @@ def crossmodal_clusters_incremental(
     :func:`crossmodal_dedup_clusters` (agreement-tested) and sharing
     its recursive min-reachability oracle.  Emits (doc_id,
     cluster_size, keep) for every image- and video-modality doc."""
-    from smile_spark.operators import labels as L
-
-    return L.clusters_incremental(spark, sf_dir, _crossmodal_rung())
+    return L.clusters_incremental(spark, sf_dir, CROSSMODAL_LABEL_RUNG)
 
 
 def crossmodal_labels_rolled(
@@ -3816,49 +3156,8 @@ def crossmodal_labels_rolled(
     """The joint visual keep list served from the ROLLED delta-log
     label state — the persisted-state twin of
     :func:`crossmodal_clusters_incremental`, same shared oracle."""
-    from smile_spark.operators import labels as L
-
-    return L.labels_rolled(spark, sf_dir, _crossmodal_rung())
+    return L.labels_rolled(spark, sf_dir, CROSSMODAL_LABEL_RUNG)
 
 
 CROSSMODAL_CLUSTERS_INCREMENTAL_SQL = CROSSMODAL_DEDUP_CLUSTERS_SQL
 CROSSMODAL_LABELS_ROLLED_SQL = CROSSMODAL_DEDUP_CLUSTERS_SQL
-
-
-def clear_crossmodal_labelroll_cache() -> None:
-    """Roll-state-only clear (bench fold/compact loops): leaves the
-    read-only base label memo warm so registered live-fold entries
-    never rebuild it inside a timed pass."""
-    from smile_spark.operators import labels as L
-
-    L.clear_label_state(_crossmodal_rung(), which="roll")
-
-
-def label_compact_if_needed(
-    spark: SparkSession,
-    sf_dir: str,
-    modality: str,
-    max_delta_frac: float | None = None,
-) -> bool:
-    """Compaction POLICY for the per-modality label rolls (VERDICT r14
-    next-round #5): compact when accumulated delta rows exceed
-    ``max_delta_frac`` × base label rows — both cheap metadata counts
-    (two parquet footer reads, never a scan).  Returns True iff a
-    compaction ran.  The threshold default is the shared
-    labels.COMPACT_MAX_DELTA_FRAC: below it the broadcast remap +
-    appended reader rows are strictly cheaper than a corpus-linear
-    rewrite; above it reader overhead starts to rival the one-off
-    rewrite.  At 100 TB this is the nightly job's closing step:
-    fold, check, amortize."""
-    from smile_spark.operators.labels import COMPACT_MAX_DELTA_FRAC
-    from smile_spark.sources.bucketed import read_bucketed
-
-    if max_delta_frac is None:
-        max_delta_frac = COMPACT_MAX_DELTA_FRAC
-    tables = label_rollforward(spark, sf_dir, modality)
-    n_delta = read_bucketed(spark, tables["delta"]).count()
-    n_base = read_bucketed(spark, tables["labels"]).count()
-    if n_delta <= max_delta_frac * max(n_base, 1):
-        return False
-    label_compact(spark, sf_dir, modality)
-    return True

@@ -384,11 +384,13 @@ def test_image_label_index_adoption(spark, sf_dir, monkeypatch):
     a rebuild; a stale sidecar forces one."""
     import json
 
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources import bucketed as BK
 
-    tbl = M.image_label_index_build(spark, sf_dir)
-    M._LABEL_READY.clear()
+    rung = M.LABEL_RUNGS["image"]
+    tbl = L.label_index_build(spark, sf_dir, rung)
+    L._RO_READY.clear()
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -396,7 +398,7 @@ def test_image_label_index_adoption(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(
         BK, "drop_bucketed_table", lambda *a, **k: jobs.append(a)
     )
-    assert M.image_label_index_build(spark, sf_dir) == tbl
+    assert L.label_index_build(spark, sf_dir, rung) == tbl
     assert jobs == [], "label adoption ran a rebuild"
     monkeypatch.undo()
     # stale sidecar → rebuild
@@ -406,7 +408,7 @@ def test_image_label_index_adoption(spark, sf_dir, monkeypatch):
     payload["base_rows"] += 1
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    M._LABEL_READY.clear()
+    L._RO_READY.clear()
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -414,7 +416,7 @@ def test_image_label_index_adoption(spark, sf_dir, monkeypatch):
         "write_bucketed",
         lambda *a, **k: (writes.append(a), real_write(*a, **k)),
     )
-    M.image_label_index_build(spark, sf_dir)
+    L.label_index_build(spark, sf_dir, rung)
     assert len(writes) == 1, "stale label sidecar must rebuild"
 
 

@@ -13,6 +13,14 @@ from pyspark.sql import functions as F
 SF001 = "/root/testdata/sf0.01"
 
 
+def _rung(name):
+    """The label rung named ``name``: a perceptual modality or text."""
+    from smile_spark.operators import dedup as D
+    from smile_spark.operators import multimodal as M
+
+    return D.TEXT_LABEL_RUNG if name == "text" else M.LABEL_RUNGS[name]
+
+
 @pytest.mark.parametrize("modality", ["image", "audio", "video"])
 def test_labels_rolled_agrees_with_incremental(spark, sf_dir, modality):
     """The keep list served from the persisted base + delta must be
@@ -21,18 +29,20 @@ def test_labels_rolled_agrees_with_incremental(spark, sf_dir, modality):
     physical state.  The delta must also be increment-sized: the
     whole point is that the nightly append never touches a base
     row."""
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources.bucketed import read_bucketed
 
+    rung = _rung(modality)
     rolled = {
-        tuple(r) for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     live = {
         tuple(r)
-        for r in M._clusters_incremental(spark, sf_dir, modality).collect()
+        for r in L.clusters_incremental(spark, sf_dir, rung).collect()
     }
     assert rolled == live
-    tables = M._labelroll_tables(sf_dir, modality)
+    tables = L.roll_tables(rung, sf_dir)
     n_delta = read_bucketed(spark, tables["delta"]).count()
     n_base = read_bucketed(spark, tables["labels"]).count()
     sub_mod, sub_res, _ = M._BAND_MODALITY[modality]
@@ -135,12 +145,14 @@ def test_labelroll_rolled_adoption(spark, sf_dir, monkeypatch):
     """A fresh 'session' (memo cleared, warehouse intact) must adopt
     the ROLLED label state without any drop/write/append job, and the
     reader must still serve from the adopted tables."""
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources import bucketed as BK
 
-    M.label_rollforward(spark, sf_dir, "image")
-    for key in [k for k in M._LROLL_READY if k[2] == "image"]:
-        M._LROLL_READY.discard(key)
+    rung = _rung("image")
+    L.label_rollforward(spark, sf_dir, rung)
+    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
+        L._ROLL_READY.discard(key)
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -151,7 +163,7 @@ def test_labelroll_rolled_adoption(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(
         BK, "drop_bucketed_table", lambda *a, **k: jobs.append(a)
     )
-    M.label_rollforward(spark, sf_dir, "image")
+    L.label_rollforward(spark, sf_dir, rung)
     assert jobs == [], "rolled adoption ran a rebuild/fold job"
     assert M.image_labels_rolled(spark, sf_dir).count() > 0
 
@@ -163,20 +175,19 @@ def test_labelroll_stale_params_full_rebuild(spark, sf_dir, monkeypatch):
     (1 append) — never adopt, never fold over unknown state."""
     import json
 
-    from smile_spark.operators import multimodal as M
+    from smile_spark.operators import labels as L
     from smile_spark.sources import bucketed as BK
 
-    M.label_rollforward(spark, sf_dir, "image")
-    path = BK.sidecar_path(
-        spark, M._labelroll_sidecar_name(sf_dir, "image")
-    )
+    rung = _rung("image")
+    L.label_rollforward(spark, sf_dir, rung)
+    path = BK.sidecar_path(spark, L._roll_sidecar_name(rung, sf_dir))
     with open(path) as fh:
         payload = json.load(fh)
     payload["grid"] = [7, 6]  # a PARAMETER changed, not the snapshot
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    for key in [k for k in M._LROLL_READY if k[2] == "image"]:
-        M._LROLL_READY.discard(key)
+    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
+        L._ROLL_READY.discard(key)
     writes, appends = [], []
     real_write = BK.write_bucketed
     real_append = BK.append_bucketed
@@ -190,7 +201,7 @@ def test_labelroll_stale_params_full_rebuild(spark, sf_dir, monkeypatch):
         "append_bucketed",
         lambda *a, **k: (appends.append(a), real_append(*a, **k)),
     )
-    M.label_rollforward(spark, sf_dir, "image")
+    L.label_rollforward(spark, sf_dir, rung)
     assert len(writes) == 2, "stale sidecar must trigger a full rebuild"
     assert len(appends) == 1, "the rebuild must still fold the increment"
     with open(path) as fh:
@@ -205,13 +216,13 @@ def test_labelroll_fold_failure_never_adoptable(
     instead of folding over (or reading) a half-appended delta."""
     import os
 
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources import bucketed as BK
 
-    M.labelroll_restore_base(spark, sf_dir, "image")
-    path = BK.sidecar_path(
-        spark, M._labelroll_sidecar_name(sf_dir, "image")
-    )
+    rung = _rung("image")
+    L.roll_restore_base(spark, sf_dir, rung)
+    path = BK.sidecar_path(spark, L._roll_sidecar_name(rung, sf_dir))
     real_append = BK.append_bucketed
 
     def dying_append(*a, **k):
@@ -219,18 +230,18 @@ def test_labelroll_fold_failure_never_adoptable(
 
     monkeypatch.setattr(BK, "append_bucketed", dying_append)
     with pytest.raises(RuntimeError, match="mid-fold"):
-        M.label_rollforward(spark, sf_dir, "image")
+        L.label_rollforward(spark, sf_dir, rung)
     assert not os.path.exists(path), (
         "a failed fold left an adoptable sidecar behind"
     )
-    tables = M._labelroll_tables(sf_dir, "image")
+    tables = L.roll_tables(rung, sf_dir)
     assert not any(
         spark.catalog.tableExists(t) for t in tables.values()
     ), "a failed fold left half-appended tables behind"
     monkeypatch.setattr(BK, "append_bucketed", real_append)
     # recovery: the next call runs the full rebuild + fold and serves
-    for key in [k for k in M._LROLL_READY if k[2] == "image"]:
-        M._LROLL_READY.discard(key)
+    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
+        L._ROLL_READY.discard(key)
     rolled = {
         tuple(r) for r in M.image_labels_rolled(spark, sf_dir).collect()
     }
@@ -241,25 +252,25 @@ def test_labelroll_fold_failure_never_adoptable(
     assert rolled == live
 
 
+@pytest.mark.parametrize("rung_name", ["image", "text"])
 def test_labelroll_crash_after_append_never_adopts_base(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir, monkeypatch, rung_name
 ):
-    """The ADVICE r14 crash window: a hard crash AFTER the delta
-    append succeeds but BEFORE the rolled sidecar lands must leave no
-    adoptable BASE sidecar — a second fold over the already-appended
-    delta would double every delta row (and double cluster sizes
-    through the broadcast remap).  The fix removes the sidecar before
-    the append, so this crash point has no sidecar and the next call
-    takes the full-rebuild arm."""
+    """The ADVICE r14 crash window, pinned on the shared label core: a
+    hard crash AFTER the delta append succeeds but BEFORE the rolled
+    sidecar lands must leave no adoptable BASE sidecar — a second
+    fold over the already-appended delta would double every delta row
+    (and double cluster sizes through the broadcast remap).  The fix
+    removes the sidecar before the append, so this crash point has no
+    sidecar and the next call takes the full-rebuild arm."""
     import os
 
-    from smile_spark.operators import multimodal as M
+    from smile_spark.operators import labels as L
     from smile_spark.sources import bucketed as BK
 
-    M.labelroll_restore_base(spark, sf_dir, "image")
-    path = BK.sidecar_path(
-        spark, M._labelroll_sidecar_name(sf_dir, "image")
-    )
+    rung = _rung(rung_name)
+    L.roll_restore_base(spark, sf_dir, rung)
+    path = BK.sidecar_path(spark, L._roll_sidecar_name(rung, sf_dir))
     assert os.path.exists(path)
     real_write_sidecar = BK.write_sidecar
 
@@ -270,7 +281,7 @@ def test_labelroll_crash_after_append_never_adopts_base(
 
     monkeypatch.setattr(BK, "write_sidecar", dying_write_sidecar)
     with pytest.raises(RuntimeError, match="pre-sidecar"):
-        M.label_rollforward(spark, sf_dir, "image")
+        L.label_rollforward(spark, sf_dir, rung)
     assert not os.path.exists(path), (
         "a crash between the delta append and the rolled-sidecar"
         " write left an adoptable sidecar behind"
@@ -278,8 +289,8 @@ def test_labelroll_crash_after_append_never_adopts_base(
     monkeypatch.setattr(BK, "write_sidecar", real_write_sidecar)
     # recovery takes the full-rebuild arm (labels + empty delta = 2
     # writes) and the rolled state still equals the live fold
-    for key in [k for k in M._LROLL_READY if k[2] == "image"]:
-        M._LROLL_READY.discard(key)
+    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
+        L._ROLL_READY.discard(key)
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -288,81 +299,94 @@ def test_labelroll_crash_after_append_never_adopts_base(
         lambda *a, **k: (writes.append(a), real_write(*a, **k)),
     )
     rolled = {
-        tuple(r) for r in M.image_labels_rolled(spark, sf_dir).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     assert len(writes) == 2, "recovery must take the full-rebuild arm"
     live = {
         tuple(r)
-        for r in M.image_clusters_incremental(spark, sf_dir).collect()
+        for r in L.clusters_incremental(spark, sf_dir, rung).collect()
     }
     assert rolled == live
 
 
-@pytest.mark.parametrize("modality", ["image", "audio", "video"])
+@pytest.fixture
+def refold_after(modality):
+    """Compaction leaves the rung's roll with an empty delta.  Drop the
+    roll's memo and sidecars afterwards, so tests that run later and
+    size the delta (the text rung's live-agreement test) read a
+    freshly folded state, as they do when no compaction ran first."""
+    from smile_spark.operators import labels as L
+
+    yield
+    L.clear_label_state(_rung(modality), which="roll")
+
+
+@pytest.mark.usefixtures("refold_after")
+@pytest.mark.parametrize("modality", ["image", "audio", "video", "text"])
 def test_label_compact_preserves_state(spark, sf_dir, modality):
     """Compaction must be invisible to readers (identical keep list),
     empty the delta, keep the rolled sidecar adoptable — and a fresh
     'session' must ADOPT the compacted state without any job."""
-    from smile_spark.operators import multimodal as M
+    from smile_spark.operators import labels as L
     from smile_spark.sources.bucketed import read_bucketed
 
+    rung = _rung(modality)
     before = {
-        tuple(r) for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
-    tables = M.label_compact(spark, sf_dir, modality)
+    tables = L.label_compact(spark, sf_dir, rung)
     after = {
-        tuple(r) for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     assert before == after, "compaction changed the visible state"
     assert read_bucketed(spark, tables["delta"]).count() == 0
     # a fresh session adopts the compacted (rolled) state
-    for key in [k for k in M._LROLL_READY if k[2] == modality]:
-        M._LROLL_READY.discard(key)
-    got = M.label_rollforward(spark, sf_dir, modality)
+    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
+        L._ROLL_READY.discard(key)
+    got = L.label_rollforward(spark, sf_dir, rung)
     assert got == tables
     post = {
-        tuple(r) for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     assert post == before
 
 
-@pytest.mark.parametrize("modality", ["image", "audio", "video"])
+@pytest.mark.usefixtures("refold_after")
+@pytest.mark.parametrize("modality", ["image", "audio", "video", "text"])
 def test_label_compact_policy(spark, sf_dir, modality):
     """The delta-growth trigger (VERDICT r14 next-round #5): an
     infinite threshold never compacts and leaves the delta untouched;
     a zero threshold compacts any non-empty delta; the visible state
     is identical throughout (the invisibility contract, extended to
     the policy path)."""
-    from smile_spark.operators import multimodal as M
+    from smile_spark.operators import labels as L
     from smile_spark.sources.bucketed import read_bucketed
 
+    rung = _rung(modality)
     # restore a freshly-folded state so the policy decision observes
     # a real (possibly empty, for video's tiny increment) delta
-    M.labelroll_restore_base(spark, sf_dir, modality)
-    for key in [k for k in M._LROLL_READY if k[2] == modality]:
-        M._LROLL_READY.discard(key)
-    tables = M.label_rollforward(spark, sf_dir, modality)
+    L.roll_restore_base(spark, sf_dir, rung)
+    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
+        L._ROLL_READY.discard(key)
+    tables = L.label_rollforward(spark, sf_dir, rung)
     n_delta = read_bucketed(spark, tables["delta"]).count()
+    if modality == "text":  # template duplication: the text fold
+        #                     always observes a non-empty delta
+        assert read_bucketed(spark, tables["delta"]).count() > 0
     before = {
-        tuple(r)
-        for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     assert (
-        M.label_compact_if_needed(
-            spark, sf_dir, modality, max_delta_frac=1e18
-        )
+        L.compact_if_needed(spark, sf_dir, rung, max_delta_frac=1e18)
         is False
     )
     assert read_bucketed(spark, tables["delta"]).count() == n_delta
-    compacted = M.label_compact_if_needed(
-        spark, sf_dir, modality, max_delta_frac=0.0
-    )
+    compacted = L.compact_if_needed(spark, sf_dir, rung, max_delta_frac=0.0)
     # zero threshold compacts iff any delta rows exist
     assert compacted is (n_delta > 0)
     if compacted:
         assert read_bucketed(spark, tables["delta"]).count() == 0
     after = {
-        tuple(r)
-        for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     assert before == after, "the policy path changed the visible state"

@@ -58,8 +58,7 @@ def test_text_labels_rolled_agrees_with_live(spark, sf_dir):
         for r in D.text_clusters_incremental(spark, sf_dir).collect()
     }
     assert rolled == live
-    rung = D._text_label_rung()
-    tables = L.roll_tables(rung, sf_dir)
+    tables = L.roll_tables(D.TEXT_LABEL_RUNG, sf_dir)
     n_delta = read_bucketed(spark, tables["delta"]).count()
     n_base = read_bucketed(spark, tables["labels"]).count()
     n_inc = (
@@ -94,8 +93,8 @@ def test_text_labelroll_rolled_adoption(spark, sf_dir, monkeypatch):
     from smile_spark.operators import labels as L
     from smile_spark.sources import bucketed as BK
 
-    D.text_label_rollforward(spark, sf_dir)
-    rung = D._text_label_rung()
+    rung = D.TEXT_LABEL_RUNG
+    L.label_rollforward(spark, sf_dir, rung)
     for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
         L._ROLL_READY.discard(key)
     jobs = []
@@ -108,108 +107,10 @@ def test_text_labelroll_rolled_adoption(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(
         BK, "drop_bucketed_table", lambda *a, **k: jobs.append(a)
     )
-    D.text_label_rollforward(spark, sf_dir)
+    L.label_rollforward(spark, sf_dir, rung)
     assert jobs == [], "rolled adoption ran a rebuild/fold job"
     assert D.text_labels_rolled(spark, sf_dir).count() > 0
     assert jobs == [], "the rolled reader ran a rebuild/fold job"
-
-
-def test_text_labelroll_crash_never_adopts_base(
-    spark, sf_dir, monkeypatch
-):
-    """The ADVICE-r14 crash ordering, pinned on the GENERIC core: a
-    crash after the delta append but before the rolled sidecar leaves
-    no adoptable state; recovery takes the full-rebuild arm."""
-    import os
-
-    from smile_spark.operators import dedup as D
-    from smile_spark.operators import labels as L
-    from smile_spark.sources import bucketed as BK
-
-    rung = D._text_label_rung()
-    D.text_labelroll_restore_base(spark, sf_dir)
-    path = BK.sidecar_path(spark, L._roll_sidecar_name(rung, sf_dir))
-    assert os.path.exists(path)
-    real_write_sidecar = BK.write_sidecar
-
-    def dying_write_sidecar(spark_, name, payload):
-        if payload.get("state") == "rolled":
-            raise RuntimeError("simulated process death pre-sidecar")
-        return real_write_sidecar(spark_, name, payload)
-
-    monkeypatch.setattr(BK, "write_sidecar", dying_write_sidecar)
-    with pytest.raises(RuntimeError, match="pre-sidecar"):
-        D.text_label_rollforward(spark, sf_dir)
-    assert not os.path.exists(path), (
-        "a crash between the delta append and the rolled-sidecar"
-        " write left an adoptable sidecar behind"
-    )
-    monkeypatch.setattr(BK, "write_sidecar", real_write_sidecar)
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
-    writes = []
-    real_write = BK.write_bucketed
-    monkeypatch.setattr(
-        BK,
-        "write_bucketed",
-        lambda *a, **k: (writes.append(a), real_write(*a, **k)),
-    )
-    rolled = {
-        tuple(r) for r in D.text_labels_rolled(spark, sf_dir).collect()
-    }
-    assert len(writes) == 2, "recovery must take the full-rebuild arm"
-    live = {
-        tuple(r)
-        for r in D.text_clusters_incremental(spark, sf_dir).collect()
-    }
-    assert rolled == live
-
-
-def test_text_label_compact_and_policy(spark, sf_dir):
-    """Compaction must be invisible (identical keep list, empty delta,
-    rolled sidecar still adoptable), and the POLICY must trigger on
-    the delta-growth threshold: an infinite threshold never compacts,
-    a zero threshold always does (when any delta rows exist)."""
-    from smile_spark.operators import dedup as D
-    from smile_spark.operators import labels as L
-    from smile_spark.sources.bucketed import read_bucketed
-
-    rung = D._text_label_rung()
-    # restore a freshly-folded state so the delta is non-empty and the
-    # policy decision is observable
-    D.text_labelroll_restore_base(spark, sf_dir)
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
-    tables = D.text_label_rollforward(spark, sf_dir)
-    assert read_bucketed(spark, tables["delta"]).count() > 0
-    before = {
-        tuple(r) for r in D.text_labels_rolled(spark, sf_dir).collect()
-    }
-    # infinite threshold: no compaction, delta untouched
-    assert (
-        L.compact_if_needed(spark, sf_dir, rung, max_delta_frac=1e18)
-        is False
-    )
-    assert read_bucketed(spark, tables["delta"]).count() > 0
-    # zero threshold: compaction runs, delta empties, state unchanged
-    assert (
-        L.compact_if_needed(spark, sf_dir, rung, max_delta_frac=0.0)
-        is True
-    )
-    assert read_bucketed(spark, tables["delta"]).count() == 0
-    after = {
-        tuple(r) for r in D.text_labels_rolled(spark, sf_dir).collect()
-    }
-    assert before == after, "compaction changed the visible state"
-    # a fresh session adopts the compacted (rolled) state
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
-    got = D.text_label_rollforward(spark, sf_dir)
-    assert got == tables
-    post = {
-        tuple(r) for r in D.text_labels_rolled(spark, sf_dir).collect()
-    }
-    assert post == before
 
 
 def test_semantic_labels_rolled_agrees_with_live(spark, sf_dir):
@@ -345,7 +246,7 @@ def test_crossmodal_labels_rolled_agrees_with_live(spark, sf_dir):
         ).collect()
     }
     assert rolled == live
-    rung = M._crossmodal_rung()
+    rung = M.CROSSMODAL_LABEL_RUNG
     tables = L.roll_tables(rung, sf_dir)
     n_delta = read_bucketed(spark, tables["delta"]).count()
     n_inc = rung.fold_count(spark, sf_dir)
@@ -364,8 +265,8 @@ def test_crossmodal_labelroll_rolled_adoption(
     from smile_spark.operators import multimodal as M
     from smile_spark.sources import bucketed as BK
 
-    M.crossmodal_label_rollforward(spark, sf_dir)
-    rung = M._crossmodal_rung()
+    rung = M.CROSSMODAL_LABEL_RUNG
+    L.label_rollforward(spark, sf_dir, rung)
     for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
         L._ROLL_READY.discard(key)
     jobs = []
@@ -378,7 +279,7 @@ def test_crossmodal_labelroll_rolled_adoption(
     monkeypatch.setattr(
         BK, "drop_bucketed_table", lambda *a, **k: jobs.append(a)
     )
-    M.crossmodal_label_rollforward(spark, sf_dir)
+    L.label_rollforward(spark, sf_dir, rung)
     assert jobs == [], "rolled adoption ran a rebuild/fold job"
     assert M.crossmodal_labels_rolled(spark, sf_dir).count() > 0
     assert jobs == [], "the rolled reader ran a rebuild/fold job"
