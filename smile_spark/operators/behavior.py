@@ -600,7 +600,10 @@ def session_path_topk(
     per-session ordered path fold (collect_list of (ts, event_id,
     type) structs, array_sort, JVM transform+join — deterministic
     order, no Python), then a path-keyed count with map-side combine
-    and TakeOrderedAndProject for the top-k.  At 100 TB: path
+    and a global ``row_number`` filtered to ``rn <= k``.  Not
+    ``orderBy().limit(k)``: its TakeOrderedAndProject sizes a bounded
+    priority queue from ``k``, so a huge ``k`` ("all paths") exhausts
+    the heap.  At 100 TB: path
     cardinality, not session count, bounds the final aggregate (the
     journey distribution is Zipfian — exactly the heavy hitters the
     partial agg combines best); pathological mega-sessions are
@@ -622,13 +625,12 @@ def session_path_topk(
     counts = paths.groupBy("path").agg(
         F.count(F.lit(1)).alias("n_sessions")
     )
-    top = counts.orderBy(
-        F.desc("n_sessions"), F.asc("path")
-    ).limit(k)
     w = Window.orderBy(F.desc("n_sessions"), F.asc("path"))
-    return top.withColumn(
-        "rn", F.row_number().over(w).cast("bigint")
-    ).select("path", "n_sessions", "rn")
+    return (
+        counts.withColumn("rn", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rn") <= k)
+        .select("path", "n_sessions", "rn")
+    )
 
 
 SESSION_PATH_TOPK_SQL = (

@@ -475,7 +475,18 @@ def _lsh_verify_pairs(
     few hundred documents, not the whole corpus (measured 2× on the
     end-to-end operator: the full-corpus re-explode was half its
     runtime).  Checkpoints created here are appended to ``ckpts`` —
-    the caller owns their release."""
+    the caller owns their release.
+
+    Shingles are keyed by ``xxhash64`` and made distinct per document
+    AFTER hashing, in the one exchange the set needs: each document's
+    set is a set of hashed keys, so a within-document collision merges
+    two shingles into one key instead of counting twice, and the
+    intersection ``i`` never exceeds ``min(na, nb)`` (Jaccard <= 1).
+    What remains is the merge bound: a collision between shingles of
+    the two documents adds at most one to ``i``, and one inside a
+    document removes one from its size.  For ``S`` distinct shingles
+    the expected number of colliding pairs is ``S^2 / 2^65`` (under
+    one at ``S = 10^9``)."""
     cand_ids = (
         cand.select(F.col("a").alias("doc_id"))
         .union(cand.select(F.col("b").alias("doc_id")))
@@ -486,14 +497,11 @@ def _lsh_verify_pairs(
     )
     # The distinct shingle set feeds three consumers (sizes, both join
     # sides); checkpoint so the explode+distinct runs once, not thrice.
-    # 64-bit shingle keys (r16, the dedup_eval/setsim device): the
-    # equi-join and intersection counts are identical under injective
-    # rekeying, 8-byte longs shuffle/compare cheaper than 12-char
-    # strings, and a collision would fail the string-semantics oracle
-    # of every consumer rather than ship silently.
+    # 8-byte keys shuffle and compare cheaper than 12-char strings.
     sh = (
-        _shingles(cand_docs)
+        _shingles(cand_docs, distinct=False)
         .select("doc_id", F.xxhash64("sh").alias("sh"))
+        .distinct()
         .localCheckpoint()
     )
     ckpts.append(sh)
@@ -3783,18 +3791,9 @@ def dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet row-count metadata makes this a cheap driver-side probe
     mod = _dedup_eval_mod(all_docs.count())
     docs = all_docs.filter(F.col("doc_id") % mod == 0)
-    # 64-bit shingle keys for the all-pairs truth join (r16): the
-    # equi-join and the per-pair intersection counts are identical
-    # under any injective rekeying, and 8-byte longs shuffle/compare
-    # far cheaper than 12-char strings (the r10 setsim token-hash
-    # device; a collision would fail this entry's string-semantics
-    # oracle rather than ship silently).  Measured 2.13 -> 1.67 s for
-    # the truth join at sf0.1.
-    sh = (
-        _shingles(docs)
-        .select("doc_id", F.xxhash64("sh").alias("sh"))
-        .localCheckpoint()
-    )
+    # Exact string shingles: this is the ground truth the hashed LSH
+    # verify is measured against, so it must not share its collisions.
+    sh = _shingles(docs).localCheckpoint()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = sh.select(F.col("doc_id").alias("a"), "sh")
     sb = sh.select(F.col("doc_id").alias("b"), "sh")

@@ -1216,19 +1216,21 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("deg"))
         .select(F.col("u").alias("id"), "deg"),
         n=F.count(F.lit(1)),
+        n_low=F.count_if(F.col("deg") < KCORE_K),
     )
     n_prev = seen["n"]
     rows: list[tuple[int, int, int]] = []
     for r in range(1, KCORE_ROUNDS + 1):
+        if r == KCORE_ROUNDS:
+            # budget exhausted: only the count is needed, and the job
+            # that checkpointed deg already observed it
+            n_drop = seen["n_low"]
+            rows.append((r, n_drop, n_prev - n_drop))
+            break
         # the dropped set is derived INLINE from the checkpointed
         # degree table (a node-sized scan per consumer beats a
         # dedicated checkpoint job per round)
         dropped = deg.filter(F.col("deg") < KCORE_K).select("id")
-        if r == KCORE_ROUNDS:
-            # budget exhausted: only the count is needed
-            n_drop = dropped.count()
-            rows.append((r, n_drop, n_prev - n_drop))
-            break
         # decrement survivors by their edges into the dropped set;
         # a survivor whose degree reaches 0 keeps its row (0 < K, so
         # it drops next round — same timing as the full recount,
@@ -1253,6 +1255,7 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("deg") - F.coalesce("d", F.lit(0))).alias("deg"),
             ),
             n=F.count(F.lit(1)),
+            n_low=F.count_if(F.col("deg") < KCORE_K),
         )
         n_now = seen["n"]
         n_drop = n_prev - n_now

@@ -6,12 +6,34 @@ reinterprets them as typed vectors.  Our storage layer is Parquet: the
 schema travels with the data, scans are columnar, and Catalyst pushes
 filters/projections into the scan — visible in the plan as
 ``PushedFilters`` / ``ReadSchema``.
+
+Like the reference, which registers each type once in its Schema
+(``src/data/schema.cpp:148-167``) and never re-derives a layout per
+query, :func:`table` infers each file's Parquet schema once.
+Spark runs a ``parquet`` schema-inference job for every
+``spark.read.parquet(path)``; a query that reads six tables paid six
+jobs before it planned.  The first read of a path infers as usual and
+stores the INFERRED schema (the on-disk form: ``events.ts`` before
+:func:`_normalize_event_ts`); later reads hand it to
+``spark.read.schema(...)``, which launches no job.  The memo key is
+``(path, st_mtime_ns, st_size)`` of the path plus the session's values
+of the confs that steer Parquet inference (``_INFERENCE_CONFS``), so a
+rewritten file or a session that reads Parquet types differently
+infers afresh.  For a directory, the stat is the directory's own,
+which changes when files are added, removed or renamed in it (an
+overwrite recreates it).  Only schemas are memoized, never DataFrames:
+a DataFrame is bound to its session, and each read lists its files
+afresh.  ``register_views`` still checks drift on the frame read with
+the inferred schema, so it still sees every fixture change.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -32,6 +54,19 @@ TABLE_NAMES = (
 # decide, we only *hint* where cardinality is bounded by construction).
 ALWAYS_BROADCAST = frozenset({"region", "nation"})
 
+# The session confs that change the schema Parquet inference yields.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# Inferred schema per (path, st_mtime_ns, st_size, *inference confs);
+# see the module docstring.
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table as a DataFrame (columnar parquet scan).
@@ -51,9 +86,30 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = _normalize_event_ts(df)
+    return df
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only on the
+    first read of an unchanged file (module docstring)."""
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path: nothing to key on
+        return spark.read.parquet(path)
+    key = (
+        path,
+        st.st_mtime_ns,
+        st.st_size,
+        *(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = df.schema
     return df
 
 

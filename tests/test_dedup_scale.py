@@ -112,3 +112,55 @@ def test_chunk_dedup_16x_duplication_canary(spark, sf_dir, tmp_path):
         # every chunk occurs >= 16 times globally now
         assert r.n_dup_chunks == r.n_chunks, r
         assert r.dup_chunk_pct == 100.0, r
+
+
+def test_lsh_verify_counts_hashed_sets_under_collisions(
+    spark, sf_dir, monkeypatch
+):
+    """With ``xxhash64`` coarsened to five values (-2..2: Spark's ``%``
+    keeps the sign), shingles collide inside every document.  The
+    verify step must still measure the Jaccard of the per-document sets
+    of hashed keys: a within-doc collision merges two shingles, it
+    never counts twice, so every pair's intersection stays
+    <= min(na, nb) and Jaccard <= 1."""
+    from smile_spark.operators import dedup
+    from smile_spark.session import unpersist_checkpoint
+
+    xxhash64 = F.xxhash64
+
+    def coarse(*cols):
+        return xxhash64(*cols) % 3
+
+    docs = table(spark, sf_dir, "documents").orderBy("doc_id").limit(12)
+    keys = {
+        r.doc_id: set(r.keys)
+        for r in dedup._shingles(docs)
+        .groupBy("doc_id")
+        .agg(F.collect_set(coarse(F.col("sh"))).alias("keys"))
+        .collect()
+    }
+    ids = sorted(keys)
+    cand = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "a long, b long"
+    )
+    monkeypatch.setattr(F, "xxhash64", coarse)
+    monkeypatch.setattr(dedup, "LSH_VERIFY_THRESHOLD", -1.0)
+    ckpts: list = []
+    got = {
+        (r.a, r.b): r.jaccard
+        for r in dedup._lsh_verify_pairs(spark, sf_dir, cand, ckpts).collect()
+    }
+    want = {
+        (a, b): len(keys[a] & keys[b]) / len(keys[a] | keys[b])
+        for a in ids
+        for b in ids
+        if a < b and keys[a] & keys[b]
+    }
+    for df in ckpts:
+        unpersist_checkpoint(df)
+    assert got.keys() == want.keys()
+    for (a, b), j in got.items():
+        na, nb = len(keys[a]), len(keys[b])
+        i = j * (na + nb) / (1 + j)
+        assert round(i) <= min(na, nb) and 0 < j <= 1, (a, b, j, na, nb)
+        assert abs(j - want[a, b]) < 1e-12, (a, b, j, want[a, b])

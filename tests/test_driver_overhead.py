@@ -1,5 +1,5 @@
-"""Per-pass driver costs: the generated-class cache and the halting
-count of the iterative loops.
+"""Per-pass driver costs: the generated-class cache, the halting count
+of the iterative loops and the Parquet schema memo of ``tables``.
 
 * Spark's codegen cache defaults to 100 classes, fewer than one pass of
   the OLAP queries compiles, so every pass recompiled them all; the
@@ -7,12 +7,23 @@ count of the iterative loops.
 * Each Pregel-style round gets its halting count from the job that
   checkpoints the round (``session.checkpoint_observed``), not from a
   second ``isEmpty()``/``count()`` job.
+* ``tables.table()`` infers a file's Parquet schema on its first read
+  only; later reads of the unchanged file launch no job.
 """
 
 from __future__ import annotations
 
+import shutil
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+
+from smile_spark.catalog import CatalogError
+from smile_spark.fixtures_catalog import register_views_validated
+from smile_spark.tables import TABLE_NAMES, table
 
 # The scan/filter/aggregate/join queries of the OLAP benchmark workload.
 OLAP_QUERIES = (
@@ -117,3 +128,114 @@ def test_min_label_components_releases_superseded_rounds(spark):
     assert {r.component for r in labels.collect()} == {0}
     n1 = jsc.getPersistentRDDs().size()
     assert n1 - n0 <= 1, (n0, n1)
+
+
+def test_kcore_last_round_needs_no_control_actions(
+    spark, sf_dir, monkeypatch, no_control_actions
+):
+    """A peel that spends its whole round budget takes the last round's
+    drop count from the job that checkpointed the previous round."""
+    from smile_spark.operators import graph
+    from smile_spark.testing import duckdb_oracle
+
+    # the fixture graph peels 48, 106, 46 nodes in rounds 1-3 and then
+    # converges: a 3-round budget ends on a round that still drops
+    monkeypatch.setattr(graph, "KCORE_ROUNDS", 3)
+    want = duckdb_oracle(graph.kcore_peel_sql(), sf_dir).values.tolist()
+    got = [tuple(r) for r in graph.kcore_peel(spark, sf_dir).collect()]
+    assert sorted(got) == sorted(map(tuple, want))
+    assert got[-1][0] == 3 and got[-1][1] > 0
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs it launched, from the status store)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _copy_fixtures(sf_dir, dst, names=TABLE_NAMES):
+    dst.mkdir(exist_ok=True)
+    for name in names:
+        shutil.copyfile(f"{sf_dir}/{name}.parquet", dst / f"{name}.parquet")
+    return str(dst)
+
+
+def test_second_table_read_launches_no_job(spark, sf_dir, tmp_path):
+    d = _copy_fixtures(sf_dir, tmp_path / "sf", ["orders"])
+    first, n_first = _jobs_launched(spark, lambda: table(spark, d, "orders"))
+    again, n_again = _jobs_launched(spark, lambda: table(spark, d, "orders"))
+    assert n_first >= 1  # the schema-inference job
+    assert n_again == 0
+    assert again.schema == first.schema
+    assert again.count() == first.count()
+
+
+def test_rewritten_file_is_inferred_afresh(spark, tmp_path):
+    path = tmp_path / "region.parquet"
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0, 1], pa.int32()),
+                  "r_name": ["A", "B"]}),
+        path,
+    )
+    d = str(tmp_path)
+    assert table(spark, d, "region").dtypes[0] == ("r_regionkey", "int")
+    assert table(spark, d, "region").dtypes[0] == ("r_regionkey", "int")
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([7], pa.int64()),
+                  "r_name": ["C"], "r_comment": ["new"]}),
+        path,
+    )
+    df = table(spark, d, "region")
+    assert df.dtypes == [
+        ("r_regionkey", "bigint"), ("r_name", "string"),
+        ("r_comment", "string"),
+    ]
+    assert [tuple(r) for r in df.collect()] == [(7, "C", "new")]
+
+
+def test_drift_is_caught_after_the_good_schema_was_memoized(
+    spark, sf_dir, tmp_path
+):
+    d = _copy_fixtures(sf_dir, tmp_path / "sf")
+    register_views_validated(spark, d)
+    good = pq.read_table(f"{d}/nation.parquet")
+    drifted = good.set_column(
+        0, "n_nationkey", good.column(0).cast(pa.int64())
+    )
+    pq.write_table(drifted, f"{d}/nation.parquet")
+    with pytest.raises(CatalogError, match="nation"):
+        register_views_validated(spark, d)
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_events_ts_is_a_micros_timestamp_on_every_read(
+    spark, sf_dir, tmp_path, unit
+):
+    """Whether the file stores naive µs or TIMESTAMP(NANOS), the first
+    read and the memoized read both give ``ts TIMESTAMP`` with the
+    fixture's instants: the memo stores the on-disk type, and
+    normalization runs on every read."""
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    i = ev.schema.get_field_index("ts")
+    want = sorted(zip(
+        ev.column("event_id").to_pylist(),
+        ev.column(i).cast(pa.timestamp("us")).cast(pa.int64()).to_pylist(),
+    ))
+    ev = ev.set_column(i, "ts", ev.column(i).cast(pa.timestamp(unit)))
+    pq.write_table(ev, tmp_path / "events.parquet")
+    for _ in range(2):
+        df = table(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = sorted(
+            tuple(r)
+            for r in df.select("event_id", F.unix_micros("ts")).collect()
+        )
+        assert got == want
