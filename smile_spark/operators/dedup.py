@@ -2965,8 +2965,26 @@ SETSIM_INCREMENTAL_SQL = (
 #   df(tok, df)           bucketed by tok — the probe ranking join
 #   reps(rb, ts)          bucketed by rb  — verify-side token arrays
 #   members(rb, b)        bucketed by rb  — rep -> doc expansion
+# SETSIM_INDEX_BUCKETS is a cap, not the bucket count: the count is
+# sized to the documents file by ``bucketed.bucket_count``, one bucket
+# per spark.sql.files.maxPartitionBytes of input (a 65 KB fixture gets
+# 1).  Inputs of more than 15 splits (about 1.9 GiB at the 128 MiB
+# default) and paths that are not a local file keep 16.  The sidecar
+# payloads of setsim_idx_* and setsim_roll_* record the count, so an
+# index written under another count is rebuilt, never adopted or
+# appended to.
 SETSIM_INDEX_BUCKETS = 16
 _SETSIM_INDEX_READY: set[tuple[str, str, bool]] = set()
+
+
+def _setsim_n_buckets(spark: SparkSession, sf_dir: str) -> int:
+    """Bucket count of the setsim index tables for ``sf_dir``."""
+    from smile_spark.sources.bucketed import bucket_count
+    from smile_spark.tables import table_path
+
+    return bucket_count(
+        spark, table_path(sf_dir, "documents"), SETSIM_INDEX_BUCKETS
+    )
 
 
 def _setsim_hash_conf(spark: SparkSession) -> bool:
@@ -3027,15 +3045,22 @@ def _setsim_index_write(
     docs: DataFrame,
     tables: dict[str, str],
     hash_tokens: bool,
-) -> None:
+    n_buckets: int = SETSIM_INDEX_BUCKETS,
+) -> int:
     """Compute and persist the four setsim index tables for ``docs``
     (the corpus-linear pass: tokenize, per-side GroupJoin collapse,
-    document frequencies, AllPairs prefixes), dropping any prior
-    version first.  Shared by :func:`setsim_index_build` and the
-    roll-forward family's base rebuild; sidecar/memo bookkeeping stays
-    with the callers.  Build-time checkpoints are consumed and
-    released in the finally block even when a drop/write throws
-    (ADVICE r12 #2)."""
+    document frequencies, AllPairs prefixes) in ``n_buckets`` buckets,
+    dropping any prior version first.  Shared by
+    :func:`setsim_index_build` and the roll-forward family's base
+    rebuild, which pass :func:`_setsim_n_buckets`; sidecar/memo
+    bookkeeping stays with the callers.  Build-time checkpoints are
+    consumed and released in the finally block even when a drop/write
+    throws (ADVICE r12 #2).
+
+    Returns the number of ``docs`` rows, null ``text`` included,
+    observed by the job that checkpoints the membership (the only job
+    that scans ``docs``)."""
+    from pyspark.sql import Observation
     from pyspark.sql.window import Window
 
     from smile_spark.sources.bucketed import (
@@ -3043,7 +3068,8 @@ def _setsim_index_write(
         write_bucketed,
     )
 
-    raw = docs.select(
+    seen = Observation()
+    raw = docs.observe(seen, F.count(F.lit(1)).alias("rows")).select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
     )
     if hash_tokens:
@@ -3095,26 +3121,23 @@ def _setsim_index_write(
     try:
         for tbl in tables.values():
             drop_bucketed_table(spark, tbl)
-        write_bucketed(
-            prefix, tables["prefix"], "tok", n_buckets=SETSIM_INDEX_BUCKETS
-        )
-        write_bucketed(
-            dfreq, tables["df"], "tok", n_buckets=SETSIM_INDEX_BUCKETS
-        )
+        write_bucketed(prefix, tables["prefix"], "tok", n_buckets=n_buckets)
+        write_bucketed(dfreq, tables["df"], "tok", n_buckets=n_buckets)
         write_bucketed(
             reps.select("rb", "ts", "nb"),
             tables["reps"],
             "rb",
-            n_buckets=SETSIM_INDEX_BUCKETS,
+            n_buckets=n_buckets,
         )
         write_bucketed(
             membership.select("rb", "b"),
             tables["members"],
             "rb",
-            n_buckets=SETSIM_INDEX_BUCKETS,
+            n_buckets=n_buckets,
         )
     finally:
         unpersist_checkpoint(membership)
+    return seen.get["rows"]
 
 
 def setsim_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
@@ -3141,9 +3164,14 @@ def setsim_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     snapshot changed) or missing tables fall through to the
     drop-and-rebuild path, which stays behind
     :func:`clear_setsim_index_cache` for the bench's cold pricing.
+    The base block is counted only when a sidecar exists to compare
+    with; a rebuild records the count its own scan observed.
     """
     from smile_spark.sources.bucketed import (
+        bucket_table_name,
+        read_sidecar,
         sidecar_adoptable,
+        sidecar_path,
         write_sidecar,
     )
 
@@ -3156,39 +3184,43 @@ def setsim_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         F.col("doc_id") % SETSIM_INC_MOD != 0
     )
     # snapshot fingerprint: base-block row count + every parameter the
-    # persisted tables depend on (one cheap column-pruned count); the
-    # sidecar name is (mode, sf_dir)-scoped exactly like the tables
-    from smile_spark.sources.bucketed import bucket_table_name
-
+    # persisted tables depend on; the sidecar name is (mode,
+    # sf_dir)-scoped exactly like the tables
     sidecar_name = bucket_table_name(
         f"setsim_idx_{'h1' if hash_tokens else 'h0'}", sf_dir
     )
-    expected = {
-        "base_rows": docs.count(),
+    params = {
         "hash_tokens": hash_tokens,
-        "n_buckets": SETSIM_INDEX_BUCKETS,
+        "n_buckets": _setsim_n_buckets(spark, sf_dir),
         "tau": [SETSIM_TAU_NUM, SETSIM_TAU_DEN],
         "inc_mod": SETSIM_INC_MOD,
         "prefix_cols": ["rb", "tok", "nb", "pos"],
         "sf_dir": sf_dir,
         "tables": sorted(tables.values()),
     }
-    if sidecar_adoptable(
-        spark, sidecar_name, expected, list(tables.values())
+    if read_sidecar(spark, sidecar_name) is not None and sidecar_adoptable(
+        spark,
+        sidecar_name,
+        {"base_rows": docs.count(), **params},
+        list(tables.values()),
     ):
         # track the sidecar whether built OR adopted (the IVF
         # contract, ADVICE r13 #2): clear_setsim_index_cache must be
         # able to force a true cold rebuild even when this process
         # only ever adopted a prior application's index
-        from smile_spark.sources.bucketed import sidecar_path
-
         _SETSIM_SIDECARS.add(sidecar_path(spark, sidecar_name))
         _SETSIM_INDEX_READY.add(key)
         return tables
-    _setsim_index_write(spark, docs, tables, hash_tokens)
+    base_rows = _setsim_index_write(
+        spark, docs, tables, hash_tokens, params["n_buckets"]
+    )
     # tables are complete — record the snapshot fingerprint so a
     # later session (on a metastore-backed catalog) can adopt them
-    _SETSIM_SIDECARS.add(write_sidecar(spark, sidecar_name, expected))
+    _SETSIM_SIDECARS.add(
+        write_sidecar(
+            spark, sidecar_name, {"base_rows": base_rows, **params}
+        )
+    )
     _SETSIM_INDEX_READY.add(key)
     return tables
 
@@ -3444,17 +3476,24 @@ def _setsim_roll_payloads(
     tables: dict[str, str],
 ) -> tuple[dict, dict]:
     """(base-state, rolled-state) sidecar payloads.  Both carry every
-    build parameter plus the covered-block row counts (cheap parquet
-    metadata counts), so a parameter change OR a snapshot change makes
-    both states unadoptable and forces the full rebuild."""
-    docs = table(spark, sf_dir, "documents")
+    build parameter plus the covered-block row counts (one aggregate
+    job), so a parameter change OR a snapshot change makes both states
+    unadoptable and forces the full rebuild.  Their ``n_buckets`` is
+    the bucket count of the roll tables: the base write and the fold
+    appends both take it from here."""
+    rows = (
+        table(spark, sf_dir, "documents")
+        .agg(
+            F.count_if(F.col("doc_id") % SETSIM_INC_MOD != 0).alias("base"),
+            F.count_if(F.col("doc_id") % SETSIM_ROLL_MOD == 0).alias("fold"),
+        )
+        .first()
+    )
     base = {
         "state": "base",
-        "base_rows": docs.filter(
-            F.col("doc_id") % SETSIM_INC_MOD != 0
-        ).count(),
+        "base_rows": rows["base"],
         "hash_tokens": hash_tokens,
-        "n_buckets": SETSIM_INDEX_BUCKETS,
+        "n_buckets": _setsim_n_buckets(spark, sf_dir),
         "tau": [SETSIM_TAU_NUM, SETSIM_TAU_DEN],
         "inc_mod": SETSIM_INC_MOD,
         "roll_mod": SETSIM_ROLL_MOD,
@@ -3462,11 +3501,7 @@ def _setsim_roll_payloads(
         "sf_dir": sf_dir,
         "tables": sorted(tables.values()),
     }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = docs.filter(
-        F.col("doc_id") % SETSIM_ROLL_MOD == 0
-    ).count()
+    rolled = dict(base, state="rolled", fold_rows=rows["fold"])
     return base, rolled
 
 
@@ -3506,8 +3541,8 @@ def setsim_roll_restore_base(spark: SparkSession, sf_dir: str) -> None:
     base_docs = table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % SETSIM_INC_MOD != 0
     )
-    _setsim_index_write(spark, base_docs, tables, hash_tokens)
     pb, _ = _setsim_roll_payloads(spark, sf_dir, hash_tokens, tables)
+    _setsim_index_write(spark, base_docs, tables, hash_tokens, pb["n_buckets"])
     _SETSIM_ROLL_SIDECARS.add(
         write_sidecar(
             spark, _setsim_roll_sidecar_name(sf_dir, hash_tokens), pb
@@ -3520,14 +3555,18 @@ def _setsim_fold_append(
     sf_dir: str,
     hash_tokens: bool,
     tables: dict[str, str],
+    n_buckets: int,
 ) -> None:
     """Append the fold block's collapse/membership/prefix rows to the
-    persisted roll tables — the increment-linear nightly step.  The
-    df table is NOT touched: it is the frozen total order (see the
-    section comment).  On ANY append failure the tables are dropped
-    and the sidecar removed, so a half-appended index is never
-    adoptable (the crash-window analogue of sidecar-after-write; a
-    transactional table format would make append+fingerprint atomic)."""
+    persisted roll tables — the increment-linear nightly step.
+    ``n_buckets`` must be the count the tables were written with (the
+    payloads' ``n_buckets``): Spark refuses an append whose bucket
+    spec differs.  The df table is NOT touched: it is the frozen total
+    order (see the section comment).  On ANY append failure the tables
+    are dropped and the sidecar removed, so a half-appended index is
+    never adoptable (the crash-window analogue of sidecar-after-write;
+    a transactional table format would make append+fingerprint
+    atomic)."""
     from pyspark.sql.window import Window
 
     from smile_spark.session import unpersist_checkpoint
@@ -3592,22 +3631,19 @@ def _setsim_fold_append(
         ).select(F.col("doc_id").alias("rb"), "tok", "nb", "pos")
         try:
             append_bucketed(
-                prefix,
-                tables["prefix"],
-                "tok",
-                n_buckets=SETSIM_INDEX_BUCKETS,
+                prefix, tables["prefix"], "tok", n_buckets=n_buckets
             )
             append_bucketed(
                 reps.select("rb", "ts", "nb"),
                 tables["reps"],
                 "rb",
-                n_buckets=SETSIM_INDEX_BUCKETS,
+                n_buckets=n_buckets,
             )
             append_bucketed(
                 membership.select("rb", "b"),
                 tables["members"],
                 "rb",
-                n_buckets=SETSIM_INDEX_BUCKETS,
+                n_buckets=n_buckets,
             )
         except Exception:
             for tbl in tables.values():
@@ -3668,7 +3704,9 @@ def setsim_index_rollforward(
         base_docs = table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % SETSIM_INC_MOD != 0
         )
-        _setsim_index_write(spark, base_docs, tables, hash_tokens)
+        _setsim_index_write(
+            spark, base_docs, tables, hash_tokens, pb["n_buckets"]
+        )
         _SETSIM_ROLL_SIDECARS.add(write_sidecar(spark, name, pb))
     # Crash contract (ADVICE r14): no adoptable sidecar may exist while
     # fold appends run — a hard crash between an append and the rolled
@@ -3681,7 +3719,7 @@ def setsim_index_rollforward(
     scpath = sidecar_path(spark, name)
     remove_sidecar_file(scpath)
     _SETSIM_ROLL_SIDECARS.discard(scpath)
-    _setsim_fold_append(spark, sf_dir, hash_tokens, tables)
+    _setsim_fold_append(spark, sf_dir, hash_tokens, tables, pb["n_buckets"])
     _SETSIM_ROLL_SIDECARS.add(write_sidecar(spark, name, pr))
     _SETSIM_ROLL_READY.add(key)
     return tables

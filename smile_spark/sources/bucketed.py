@@ -12,11 +12,49 @@ shuffling it at all — bucketing is paid once at write time.
 Bucketed tables must live in the session catalog (bucket metadata is
 table metadata, not file metadata), hence ``saveAsTable`` rather than
 path writes.
+
+Every bucket is at least one file per write, and every read of the
+table runs one task per bucket, so a fixed bucket count sized for the
+largest corpus turns a small input into many tiny files and tasks.
+:func:`bucket_count` sizes a table to its input instead, the way the
+reference sizes its files in fixed 64 KB pages
+(``file_storage.h:13-15``): ``n = clamp(ceil(input_bytes /
+spark.sql.files.maxPartitionBytes), 1, cap)``, where ``input_bytes``
+is the on-disk size of the Parquet file the table is built from, read
+with ``os.stat`` (no Spark job), and ``cap`` is the family's bucket
+constant.  A path that is not a local file (a remote URI, or a
+directory dataset) gets ``cap``.
+The value is deterministic per snapshot and session conf, so index
+families record it in their sidecar payloads: an index written under
+another count is never adopted, and an append (whose bucket spec must
+equal the table's) uses the count its table was written with.
+
+Sidecars are replaced atomically (:func:`write_sidecar`): a crash
+mid-write leaves the previous sidecar intact, never a truncated one.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
+
+
+def bucket_count(spark: SparkSession, path: str, cap: int) -> int:
+    """Bucket count for a table built from the Parquet file ``path``:
+    ``clamp(ceil(size / spark.sql.files.maxPartitionBytes), 1, cap)``,
+    and ``cap`` when ``path`` is not a regular local file (a remote
+    URI, or a directory dataset, whose own size says nothing of its
+    data); see the module docstring."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return cap
+    if not stat.S_ISREG(st.st_mode):
+        return cap
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(1, min(cap, -(-st.st_size // split)))
 
 
 def write_bucketed(
@@ -113,17 +151,10 @@ def drop_bucketed_table(spark: SparkSession, tbl: str) -> None:
     table location left by a PREVIOUS application (the in-memory
     catalog forgot it, the warehouse dir didn't) blocks creation with
     LOCATION_ALREADY_EXISTS."""
-    import os
     import shutil
 
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = os.path.join(
-        spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:"),
-        tbl,
-    )
-    shutil.rmtree(loc, ignore_errors=True)
+    shutil.rmtree(os.path.join(_warehouse_dir(spark), tbl), ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -145,16 +176,12 @@ def drop_bucketed_table(spark: SparkSession, tbl: str) -> None:
 
 
 def _warehouse_dir(spark: SparkSession) -> str:
-    import os
-
     return spark.conf.get(
         "spark.sql.warehouse.dir", "spark-warehouse"
     ).removeprefix("file:")
 
 
 def sidecar_path(spark: SparkSession, name: str) -> str:
-    import os
-
     return os.path.join(_warehouse_dir(spark), f"{name}.sidecar.json")
 
 
@@ -162,20 +189,29 @@ def write_sidecar(spark: SparkSession, name: str, payload: dict) -> str:
     """Persist an index fingerprint next to its warehouse tables.
     Written AFTER the tables: a crash between table writes and the
     sidecar leaves no sidecar, so the next session rebuilds (never
-    adopts a half-written index)."""
+    adopts a half-written index).  The payload goes to a temp file in
+    the same directory that ``os.replace`` then swaps in, so a crash
+    mid-write leaves the previous sidecar as it was."""
     import json
-    import os
+    import tempfile
 
     path = sidecar_path(spark, name)
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as fh:
-        json.dump(payload, fh, sort_keys=True)
+    fd, tmp = tempfile.mkstemp(
+        dir=os.path.dirname(path), prefix=f".{name}.", suffix=".tmp"
+    )
+    try:
+        with os.fdopen(fd, "w") as fh:
+            json.dump(payload, fh, sort_keys=True)
+        os.replace(tmp, path)
+    except BaseException:
+        remove_sidecar_file(tmp)
+        raise
     return path
 
 
 def read_sidecar(spark: SparkSession, name: str) -> dict | None:
     import json
-    import os
 
     path = sidecar_path(spark, name)
     if not os.path.exists(path):
@@ -188,8 +224,6 @@ def read_sidecar(spark: SparkSession, name: str) -> dict | None:
 
 
 def remove_sidecar_file(path: str) -> None:
-    import os
-
     try:
         os.remove(path)
     except OSError:

@@ -86,10 +86,15 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         df = _normalize_event_ts(df)
     return df
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    """The Parquet path :func:`table` reads ``name`` from."""
+    return f"{sf_dir}/{name}.parquet"
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
