@@ -2965,14 +2965,14 @@ SETSIM_INCREMENTAL_SQL = (
 #   df(tok, df)           bucketed by tok — the probe ranking join
 #   reps(rb, ts)          bucketed by rb  — verify-side token arrays
 #   members(rb, b)        bucketed by rb  — rep -> doc expansion
-# SETSIM_INDEX_BUCKETS is a cap, not the bucket count: the count is
-# sized to the documents file by ``bucketed.bucket_count``, one bucket
-# per spark.sql.files.maxPartitionBytes of input (a 65 KB fixture gets
-# 1).  Inputs of more than 15 splits (about 1.9 GiB at the 128 MiB
-# default) and paths that are not a local file keep 16.  The sidecar
-# payloads of setsim_idx_* and setsim_roll_* record the count, so an
-# index written under another count is rebuilt, never adopted or
-# appended to.
+# SETSIM_INDEX_BUCKETS is a cap, not the bucket count: the count comes
+# from ``bucketed.bucket_count`` on the documents file, 1 bucket when
+# it is a local file within spark.sql.autoBroadcastJoinThreshold (every
+# fixture SF), so the probe joins broadcast and need no bucketing, and
+# 16 otherwise, so a sort-merge probe join reads the index with no
+# exchange and at full width.  The sidecar payloads of setsim_idx_* and
+# setsim_roll_* record the count, so an index written under another
+# count is rebuilt, never adopted or appended to.
 SETSIM_INDEX_BUCKETS = 16
 _SETSIM_INDEX_READY: set[tuple[str, str, bool]] = set()
 
@@ -3052,10 +3052,11 @@ def _setsim_index_write(
     document frequencies, AllPairs prefixes) in ``n_buckets`` buckets,
     dropping any prior version first.  Shared by
     :func:`setsim_index_build` and the roll-forward family's base
-    rebuild, which pass :func:`_setsim_n_buckets`; sidecar/memo
-    bookkeeping stays with the callers.  Build-time checkpoints are
-    consumed and released in the finally block even when a drop/write
-    throws (ADVICE r12 #2).
+    rebuild, which pass :func:`_setsim_n_buckets` (the count their
+    sidecars record; the default suits scratch tables that have no
+    sidecar); sidecar/memo bookkeeping stays with the callers.
+    Build-time checkpoints are consumed and released in the finally
+    block even when a drop/write throws (ADVICE r12 #2).
 
     Returns the number of ``docs`` rows, null ``text`` included,
     observed by the job that checkpoints the membership (the only job
@@ -3164,13 +3165,13 @@ def setsim_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     snapshot changed) or missing tables fall through to the
     drop-and-rebuild path, which stays behind
     :func:`clear_setsim_index_cache` for the bench's cold pricing.
-    The base block is counted only when a sidecar exists to compare
-    with; a rebuild records the count its own scan observed.
+    The base block is counted only when the sidecar's parameters match
+    and the tables exist; a rebuild records the count its own scan
+    observed.
     """
     from smile_spark.sources.bucketed import (
         bucket_table_name,
         read_sidecar,
-        sidecar_adoptable,
         sidecar_path,
         write_sidecar,
     )
@@ -3198,11 +3199,14 @@ def setsim_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         "sf_dir": sf_dir,
         "tables": sorted(tables.values()),
     }
-    if read_sidecar(spark, sidecar_name) is not None and sidecar_adoptable(
-        spark,
-        sidecar_name,
-        {"base_rows": docs.count(), **params},
-        list(tables.values()),
+    # the base block is counted last, only when the sidecar's
+    # parameters match and the tables exist: a missing sidecar or a
+    # parameter change is a certain rebuild
+    prior = read_sidecar(spark, sidecar_name) or {}
+    if (
+        {k: v for k, v in prior.items() if k != "base_rows"} == params
+        and all(spark.catalog.tableExists(t) for t in tables.values())
+        and prior.get("base_rows") == docs.count()
     ):
         # track the sidecar whether built OR adopted (the IVF
         # contract, ADVICE r13 #2): clear_setsim_index_cache must be

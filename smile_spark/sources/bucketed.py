@@ -16,14 +16,20 @@ path writes.
 Every bucket is at least one file per write, and every read of the
 table runs one task per bucket, so a fixed bucket count sized for the
 largest corpus turns a small input into many tiny files and tasks.
-:func:`bucket_count` sizes a table to its input instead, the way the
-reference sizes its files in fixed 64 KB pages
-(``file_storage.h:13-15``): ``n = clamp(ceil(input_bytes /
-spark.sql.files.maxPartitionBytes), 1, cap)``, where ``input_bytes``
-is the on-disk size of the Parquet file the table is built from, read
-with ``os.stat`` (no Spark job), and ``cap`` is the family's bucket
-constant.  A path that is not a local file (a remote URI, or a
-directory dataset) gets ``cap``.
+:func:`bucket_count` gives a small input one bucket instead, the way
+the reference keeps a small table in a few fixed 64 KB pages
+(``file_storage.h:13-15``): a table built from a local Parquet file
+no larger than ``spark.sql.autoBroadcastJoinThreshold`` (its size read
+with ``os.stat``, no Spark job) gets 1 bucket, and every other table
+(a larger file, a directory dataset, a remote URI, or broadcast joins
+disabled) gets the family's cap.  The threshold is the line because a
+one-bucket table is only cheap while its joins broadcast: in a
+sort-merge join, a bucketed side with fewer buckets than
+``spark.sql.shuffle.partitions`` is either re-shuffled or narrows the
+whole join to its bucket count (one task for one bucket), so a table
+that may meet a shuffle join keeps the cap.  The input file's size
+stands in for the table's, which is only known once the table is
+written.
 The value is deterministic per snapshot and session conf, so index
 families record it in their sidecar payloads: an index written under
 another count is never adopted, and an append (whose bucket spec must
@@ -43,18 +49,19 @@ from pyspark.sql import DataFrame, SparkSession
 
 def bucket_count(spark: SparkSession, path: str, cap: int) -> int:
     """Bucket count for a table built from the Parquet file ``path``:
-    ``clamp(ceil(size / spark.sql.files.maxPartitionBytes), 1, cap)``,
-    and ``cap`` when ``path`` is not a regular local file (a remote
-    URI, or a directory dataset, whose own size says nothing of its
-    data); see the module docstring."""
+    1 when ``path`` is a regular local file no larger than the
+    session's broadcast-join threshold, ``cap`` otherwise (see the
+    module docstring)."""
+    threshold = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
     try:
         st = os.stat(path)
     except OSError:
         return cap
-    if not stat.S_ISREG(st.st_mode):
-        return cap
-    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    return max(1, min(cap, -(-st.st_size // split)))
+    if stat.S_ISREG(st.st_mode) and st.st_size <= threshold:
+        return 1
+    return cap
 
 
 def write_bucketed(

@@ -200,3 +200,75 @@ def test_skip_list_fully_audited(spark):
     assert not missing, (
         f"skip-listed queries without an executed-plan audit: {missing}"
     )
+
+
+
+def _scan_paths_to_join(plan: str, table: str) -> list[list[str]]:
+    """For each scan of ``table`` in a plan tree, the node lines from
+    the scan up to (and including) its nearest join ancestor."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    paths = []
+    for i, line in enumerate(lines):
+        if not re.search(rf"Scan parquet \S*\b{table}\b", line):
+            continue
+        path, d = [line], depth(line)
+        for up in reversed(lines[:i]):
+            if up.strip() and depth(up) < d:
+                path.append(up)
+                d = depth(up)
+                if "Join" in up:
+                    break
+        paths.append(path)
+    return paths
+
+
+def test_setsim_index_feeds_shuffle_joins_at_full_width(spark, sf_dir):
+    """With broadcast joins disabled the indexed probe joins the
+    persisted setsim tables by sort-merge join.  The index must then
+    keep at least spark.sql.shuffle.partitions buckets: its scans feed
+    those joins with no exchange, and no exchange hash-partitions the
+    other side into fewer partitions (a one-bucket index would squeeze
+    each join into one task)."""
+    from smile_spark.operators import dedup as D
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    D.clear_setsim_index_cache()
+    try:
+        descs = executed_plan_descriptions(
+            spark,
+            lambda: D.setsim_incremental_indexed(spark, sf_dir)
+            .write.format("noop")
+            .mode("overwrite")
+            .save(),
+        )
+    finally:
+        spark.conf.set(key, old)
+        D.clear_setsim_index_cache()
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    tables = D._setsim_index_tables(sf_dir, D._setsim_hash_conf(spark))
+    joined = set()
+    for d in descs:
+        plan = final_plan_section(d)
+        for part, tbl in tables.items():
+            for path in _scan_paths_to_join(plan, tbl):
+                if "SortMergeJoin" not in path[-1]:
+                    continue
+                joined.add(part)
+                above = [n for n in path if re.search(r"\bExchange\b", n)]
+                assert not above, (
+                    f"{tbl} is re-shuffled into its sort-merge join:\n"
+                    + "\n".join(reversed(path))
+                )
+        narrow = [
+            int(n)
+            for n in re.findall(r"hashpartitioning\(.*, (\d+)\)", d)
+            if int(n) < width
+        ]
+        assert not narrow, f"exchanges into {narrow} < {width} partitions"
+    assert {"prefix", "df"} <= joined, joined

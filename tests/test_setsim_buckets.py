@@ -1,8 +1,7 @@
 """Bucket counts sized to the input, and the setsim index sidecars.
 
-* ``bucketed.bucket_count`` gives ``clamp(ceil(input_bytes /
-  spark.sql.files.maxPartitionBytes), 1, cap)``, and ``cap`` for a path
-  that is not a local file.
+* ``bucketed.bucket_count`` gives 1 bucket for a local file within
+  ``spark.sql.autoBroadcastJoinThreshold`` and ``cap`` otherwise.
 * Every setsim index and roll table is written with that count, both
   sidecars record it, and an index written under another count is
   rebuilt.
@@ -26,6 +25,7 @@ from smile_spark.operators import dedup as D
 from smile_spark.sources import bucketed as BK
 
 CAP = D.SETSIM_INDEX_BUCKETS
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
 
 def _sized_file(path, size):
@@ -35,43 +35,38 @@ def _sized_file(path, size):
     return str(path)
 
 
-def _split_bytes(spark):
-    return spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-
-
 def test_bucket_count_rule(spark, tmp_path):
-    split = _split_bytes(spark)
-    assert split == 128 * 1024 * 1024
+    assert spark.conf.get(THRESHOLD) == "64MB"
+    limit = 64 * 1024 * 1024
     cases = {
         "small.parquet": (65 * 1024, 1),
-        "split.parquet": (split, 1),
-        "split_plus_one.parquet": (split + 1, 2),
+        "limit.parquet": (limit, 1),
+        "limit_plus_one.parquet": (limit + 1, CAP),
         "huge.parquet": (100 * 10**9, CAP),
     }
     for name, (size, want) in cases.items():
         path = _sized_file(tmp_path / name, size)
         assert BK.bucket_count(spark, path, CAP) == want, name
-    # a path os.stat cannot see keeps the cap
+    # a path os.stat cannot see, or a directory dataset, keeps the cap
     remote = "hdfs://namenode/warehouse/documents.parquet"
     assert BK.bucket_count(spark, remote, CAP) == CAP
-
-
-def test_bucket_count_follows_split_conf(spark, tmp_path):
-    path = _sized_file(tmp_path / "docs.parquet", 3 * 1024 * 1024 + 1)
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
-    try:
-        assert BK.bucket_count(spark, path, CAP) == 4
-        assert BK.bucket_count(spark, path, 3) == 3
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-
-
-def test_bucket_count_of_a_directory_is_the_cap(spark, tmp_path):
     d = tmp_path / "docs.parquet"
     d.mkdir()
     _sized_file(d / "part-0.parquet", 1000)
     assert BK.bucket_count(spark, str(d), CAP) == CAP
+
+
+def test_bucket_count_follows_broadcast_threshold(spark, tmp_path):
+    path = _sized_file(tmp_path / "docs.parquet", 65 * 1024)
+    old = spark.conf.get(THRESHOLD)
+    try:
+        spark.conf.set(THRESHOLD, "64k")
+        assert BK.bucket_count(spark, path, CAP) == CAP
+        spark.conf.set(THRESHOLD, "-1")  # broadcast joins disabled
+        assert BK.bucket_count(spark, path, CAP) == CAP
+    finally:
+        spark.conf.set(THRESHOLD, old)
+    assert BK.bucket_count(spark, path, CAP) == 1
 
 
 def _index_sidecar_path(spark, sf_dir):
@@ -112,7 +107,8 @@ def test_setsim_tables_use_the_rule(spark, sf_dir):
 
 def test_sixteen_bucket_sidecar_is_rebuilt(spark, sf_dir, monkeypatch):
     """An index left by the fixed 16-bucket layout fails the payload
-    comparison and is rebuilt, not adopted."""
+    comparison and is rebuilt, not adopted, without counting the base
+    block first."""
     D.setsim_index_build(spark, sf_dir)
     path = _index_sidecar_path(spark, sf_dir)
     with open(path) as fh:
@@ -129,8 +125,17 @@ def test_sixteen_bucket_sidecar_is_rebuilt(spark, sf_dir, monkeypatch):
         "write_bucketed",
         lambda *a, **k: (writes.append(a), real_write(*a, **k))[1],
     )
+    counts = []
+    frame_cls = type(spark.range(1))
+    real_count = frame_cls.count
+    monkeypatch.setattr(
+        frame_cls,
+        "count",
+        lambda self: (counts.append(self), real_count(self))[1],
+    )
     D.setsim_index_build(spark, sf_dir)
     assert len(writes) == 4, "a 16-bucket sidecar must trigger a full rebuild"
+    assert counts == [], "a parameter change must rebuild without a count"
     with open(path) as fh:
         assert json.load(fh)["n_buckets"] == D._setsim_n_buckets(spark, sf_dir)
 
