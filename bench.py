@@ -144,15 +144,11 @@ def main() -> None:
     samples: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
 
-    # Dedicated COLD timing for the LSH pair-table build: the regular
-    # dedup_minhash_lsh entry reads the per-application memo (its
-    # build-once contract), which hid real LSH cost from the bench
-    # (r04 recorded 0.019 s — a cache read, not LSH work).  Clear the
-    # memo and time the full signature+band+verify chain; runs BEFORE
-    # the main passes so every downstream consumer still finds the
-    # cache warm, exactly like a production run that builds the pair
-    # table once and reuses it.
     from smile_spark.operators import dedup as _dedup
+    from smile_spark.operators import graph as _graph
+    from smile_spark.operators import labels as _labels
+    from smile_spark.operators import multimodal as _mm
+    from smile_spark.operators import similarity as _sim
 
     def _build_wanted(bname: str) -> bool:
         # cold *_build entries price session memos — always in a full
@@ -160,7 +156,7 @@ def main() -> None:
         # it asked for (exact membership in the parsed keep set)
         return (not only) or bname in keep
 
-    # Memo-cold passes per *_build loop.  In a FULL run the untimed
+    # Memo-cold passes per cold entry.  In a FULL run the untimed
     # warmup lap has already invoked every build's consumer once, so
     # two memo-cold passes put the min at the third session invocation
     # — near codegen steady state.  A SUBSET run has no such lap: its
@@ -170,339 +166,82 @@ def main() -> None:
     # to land the min at the same session invocation a full run times.
     _build_passes = 3 if only else 2
 
-    for _ in range(_build_passes if _build_wanted("lsh_pairs_build") else 0):
-        # clear_lsh_cache also unpersists the discarded build's
-        # checkpointed blocks (bands/cand/shingles/pairs) — a bare
-        # dict clear leaked them in executor storage for the rest of
-        # the bench run (ADVICE r08 #4)
-        _dedup.clear_lsh_cache()
-        t0 = time.perf_counter()
-        try:
-            _force(_dedup.dedup_minhash_lsh(spark, sf_dir))
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["lsh_pairs_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("lsh_pairs_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
+    def _sf(fn):
+        return lambda: fn(spark, sf_dir)
 
-    # Same contract for the r08 LPA label memo: label_propagation and
-    # graph_modularity share a per-application label table, so their
-    # registered timings are memo reads once the warmup lap has built
-    # it.  Time the cold 3-round build separately, then leave the memo
-    # warm for the registered entries — exactly the lsh_pairs_build
-    # treatment.
-    from smile_spark.operators import graph as _graph
+    def _forced(fn):
+        return lambda: _force(fn(spark, sf_dir))
 
-    for _ in range(_build_passes if _build_wanted("lpa_build") else 0):
-        # unpersists the discarded build's label/stub checkpoints too
-        # (ADVICE r08 #4)
-        _graph.clear_lpa_cache()
-        t0 = time.perf_counter()
-        try:
-            _force(_graph.label_propagation(spark, sf_dir))
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["lpa_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("lpa_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
+    def _restored(clear_fn, restore_fn):
+        return lambda: (clear_fn(), restore_fn(spark, sf_dir))
 
-    # Cold build of the co-purchase edge/degree/oriented memo chain
-    # (VERDICT r09 next-round #3): clustering_coefficient, kcore_peel,
-    # degree_assortativity and LPA all share these session memos, so
-    # their registered timings read warm tables — price the build once
-    # here, then leave the memos warm for the registered entries
-    # (the lpa_build precedent).  Runs AFTER the lpa loop: the LPA
-    # label memo is independently checkpointed, so clearing the edge
-    # chain underneath it is safe.
-    for _ in range(_build_passes if _build_wanted("oriented_build") else 0):
-        _graph.clear_copurchase_cache()
-        t0 = time.perf_counter()
-        try:
-            _force(_graph._copurchase_oriented_cached(spark, sf_dir))
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["oriented_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("oriented_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
+    def _image(fn):
+        return lambda s, d: fn(s, d, "image")
 
-    # Cold build of the perceptual dHash pair table (VERDICT r11 #2):
-    # image_dhash_dedup memoizes its verified pair table per
-    # (application, sf_dir) — the lsh_pairs_build treatment — so the
-    # registered entry and image_dhash_clusters read the memo; price
-    # the decode+banding+verify chain here and leave the memo warm.
-    from smile_spark.operators import multimodal as _mm
-
-    for _ in range(_build_passes if _build_wanted("dhash_pairs_build") else 0):
-        _mm.clear_dhash_cache()
-        t0 = time.perf_counter()
-        try:
-            _force(_mm.image_dhash_dedup(spark, sf_dir))
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["dhash_pairs_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("dhash_pairs_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # Same contract for the audio rung's memoized pair table:
-    # audio_fingerprint_dedup and audio_fingerprint_clusters read the
-    # memo; price the cold decode+banding+verify chain here.
-    for _ in range(_build_passes if _build_wanted("audio_pairs_build") else 0):
-        _mm.clear_audio_cache()
-        t0 = time.perf_counter()
-        try:
-            _force(_mm.audio_fingerprint_dedup(spark, sf_dir))
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["audio_pairs_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("audio_pairs_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # Cold build of the persisted incremental-dedup base index
-    # (VERDICT r11 #5): setsim_incremental_indexed probes bucketed
-    # tables built once per application — price the corpus-linear
-    # build + bucketed writes here, leave the index warm so the
-    # registered entry times the PROBE path (the production daily-
-    # ingest cost).
-    for _ in range(_build_passes if _build_wanted("setsim_index_build") else 0):
-        _dedup.clear_setsim_index_cache()
-        t0 = time.perf_counter()
-        try:
-            _dedup.setsim_index_build(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["setsim_index_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("setsim_index_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # Cold decode of the memoized per-frame hash table: one decode
-    # pass per session serves video_frame_dedup and both cross-modal
-    # consumers (the dhash_pairs_build treatment one level earlier);
-    # the eager localCheckpoint materializes at call time, so the call
-    # IS the build.
-    for _ in range(_build_passes if _build_wanted("video_hashes_build") else 0):
-        _mm.clear_video_hash_cache()
-        t0 = time.perf_counter()
-        try:
-            _mm.video_frame_hashes_cached(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["video_hashes_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("video_hashes_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # Cold build of the memoized cross-modal pair table (the
-    # dhash_pairs_build contract): crossmodal_image_video_dedup and
-    # crossmodal_dedup_clusters both read the memo — price the image
-    # decode + asymmetric banded join + verify chain here, AFTER the
-    # video hash memo is warm so this isolates the cross-modal work.
-    for _ in range(_build_passes if _build_wanted("crossmodal_pairs_build") else 0):
-        _mm.clear_crossmodal_cache()
-        t0 = time.perf_counter()
-        try:
-            _force(_mm.crossmodal_image_video_dedup(spark, sf_dir))
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["crossmodal_pairs_build"] = (
-                f"{type(exc).__name__}: {exc}"[:500]
-            )
-            break
-        samples.setdefault("crossmodal_pairs_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # Cold build of the persisted perceptual fingerprint index
-    # (VERDICT r12 #2): image_dhash_incremental probes the bucketed
-    # base band table — price the base decode + banding + bucketed
-    # write here (clear_dhash_index_cache also drops the adoption
-    # sidecar so this really rebuilds), leave the index warm so the
-    # registered entry times the increment-only probe path.
-    for _ in range(_build_passes if _build_wanted("dhash_index_build") else 0):
-        _mm.clear_dhash_index_cache()
-        t0 = time.perf_counter()
-        try:
-            _mm.dhash_index_build(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["dhash_index_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("dhash_index_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # The AUDIO twin of dhash_index_build (the "(then audio)" half of
-    # VERDICT r12 #2): audio_fingerprint_incremental probes the
-    # bucketed audio band table — price the base decode + banding +
-    # write here, leave the index warm for the probe entry.
-    for _ in range(_build_passes if _build_wanted("audio_index_build") else 0):
-        _mm.clear_audio_index_cache()
-        t0 = time.perf_counter()
-        try:
-            _mm.audio_index_build(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["audio_index_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("audio_index_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # Cold build of the persisted MinHash band index:
-    # dedup_minhash_incremental probes the bucketed base band table —
-    # price the base signature + banding + write here, leave the
-    # index warm for the probe entry.
-    for _ in range(_build_passes if _build_wanted("minhash_index_build") else 0):
-        _dedup.clear_minhash_index_cache()
-        t0 = time.perf_counter()
-        try:
-            _dedup.minhash_index_build(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["minhash_index_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("minhash_index_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # The VIDEO third of the perceptual band-index family:
-    # video_dhash_incremental probes the bucketed hi-res frame band
-    # table — price the base decode + per-frame banding + write here,
-    # leave the index warm for the probe entry.
-    for _ in range(_build_passes if _build_wanted("video_index_build") else 0):
-        _mm.clear_video_index_cache()
-        t0 = time.perf_counter()
-        try:
-            _mm.video_index_build(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["video_index_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("video_index_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # Cold build of the persisted SemDeDup assignment index:
-    # semantic_dedup_incremental probes the bucketed base assignment
-    # table — price the corpus-linear assign + bucketed write here,
-    # leave the index warm so the registered entry times the
-    # increment-only probe path.
-    for _ in range(_build_passes if _build_wanted("semantic_index_build") else 0):
-        _dedup.clear_semantic_index_cache()
-        t0 = time.perf_counter()
-        try:
-            _dedup.semantic_index_build(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["semantic_index_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("semantic_index_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # Cold build of the persisted PQ index (VERDICT r12 #3):
-    # ann_pq_indexed probes the bucketed codes + codebook tables —
-    # price the codebook + full-corpus encode + writes here, leave
-    # the index warm so the registered entry times the
-    # reconstruct-and-rank probe path.
-    from smile_spark.operators import similarity as _sim
-
-    for _ in range(_build_passes if _build_wanted("pq_index_build") else 0):
-        _sim.clear_pq_index_cache()
-        t0 = time.perf_counter()
-        try:
-            _sim.pq_index_build(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["pq_index_build"] = f"{type(exc).__name__}: {exc}"[:500]
-            break
-        samples.setdefault("pq_index_build", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # Cold pricing of the nightly index FOLD (VERDICT r13 #3): the
-    # roll-forward appends the fold block's rows to the persisted
-    # index — the increment-linear nightly step.  A fold is a one-way
-    # append, so each timed pass first restores the pre-fold BASE
-    # state (untimed, corpus-linear — the cost setsim_index_build
-    # already prices) and then times the fold alone.
-    for _ in range(
-        _build_passes if _build_wanted("setsim_rollforward") else 0
-    ):
-        try:
-            _dedup.clear_setsim_roll_cache()
-            _dedup.setsim_roll_restore_base(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["setsim_rollforward"] = (
-                f"{type(exc).__name__}: {exc}"[:500]
-            )
-            break
-        t0 = time.perf_counter()
-        try:
-            _dedup.setsim_index_rollforward(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["setsim_rollforward"] = (
-                f"{type(exc).__name__}: {exc}"[:500]
-            )
-            break
-        samples.setdefault("setsim_rollforward", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # The IMAGE twin through the shared band core: restore the base
-    # band table untimed, then time the decode+band+append fold.
-    for _ in range(
-        _build_passes if _build_wanted("dhash_rollforward") else 0
-    ):
-        try:
-            _mm.clear_dhash_roll_cache()
-            _mm.band_roll_restore_base(spark, sf_dir, "image")
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["dhash_rollforward"] = (
-                f"{type(exc).__name__}: {exc}"[:500]
-            )
-            break
-        t0 = time.perf_counter()
-        try:
-            _mm.band_index_rollforward(spark, sf_dir, "image")
-        except Exception as exc:  # noqa: BLE001 — harness must survive
-            errors["dhash_rollforward"] = (
-                f"{type(exc).__name__}: {exc}"[:500]
-            )
-            break
-        samples.setdefault("dhash_rollforward", []).append(
-            round(time.perf_counter() - t0, 4)
-        )
-
-    # The MinHash and SemDeDup folds, same restore-then-time shape.
-    for bname, clear_fn, restore_fn, roll_fn in (
-        (
-            "minhash_rollforward",
-            _dedup.clear_minhash_roll_cache,
-            _dedup.minhash_roll_restore_base,
-            _dedup.minhash_index_rollforward,
-        ),
-        (
-            "semantic_rollforward",
-            _dedup.clear_semantic_roll_cache,
-            _dedup.semantic_roll_restore_base,
-            _dedup.semantic_index_rollforward,
-        ),
-    ):
-        for _ in range(_build_passes if _build_wanted(bname) else 0):
-            try:
-                clear_fn()
-                restore_fn(spark, sf_dir)
-            except Exception as exc:  # noqa: BLE001 — must survive
-                errors[bname] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            t0 = time.perf_counter()
-            try:
-                roll_fn(spark, sf_dir)
-            except Exception as exc:  # noqa: BLE001 — must survive
-                errors[bname] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            samples.setdefault(bname, []).append(
-                round(time.perf_counter() - t0, 4)
-            )
+    # The cold entries: (name, untimed prep, timed call).  They run
+    # BEFORE the main passes and leave every memo and persisted state
+    # warm, so the registered entries that read them time their own
+    # work (a production run builds each once and reuses it).
+    # - *_pairs_build / lpa_build / oriented_build / video_hashes_build:
+    #   clear a per-application memo, then time its cold build (the
+    #   registered entry alone would read the memo — r04 priced LSH at
+    #   0.019 s, a cache read).  The clears also unpersist the
+    #   discarded build's checkpoints (ADVICE r08 #4).  The cross-modal
+    #   pairs run after the video hash memo is warm, isolating the
+    #   cross-modal work.
+    # - *_index_build: clear the persisted index's memo AND sidecar (so
+    #   it really rebuilds), then time the corpus-linear build; the
+    #   registered *_incremental entries then time the probe.
+    # - *_rollforward: a fold is a one-way append, so restore the
+    #   pre-fold BASE state untimed, then time the fold alone.
+    cold_entries = [
+        ("lsh_pairs_build", _dedup.clear_lsh_cache,
+         _forced(_dedup.dedup_minhash_lsh)),
+        ("lpa_build", _graph.clear_lpa_cache,
+         _forced(_graph.label_propagation)),
+        ("oriented_build", _graph.clear_copurchase_cache,
+         _forced(_graph._copurchase_oriented_cached)),
+        ("dhash_pairs_build", _mm.clear_dhash_cache,
+         _forced(_mm.image_dhash_dedup)),
+        ("audio_pairs_build", _mm.clear_audio_cache,
+         _forced(_mm.audio_fingerprint_dedup)),
+        ("setsim_index_build", _dedup.clear_setsim_index_cache,
+         _sf(_dedup.setsim_index_build)),
+        # the eager localCheckpoint materializes at call time, so the
+        # call IS the build
+        ("video_hashes_build", _mm.clear_video_hash_cache,
+         _sf(_mm.video_frame_hashes_cached)),
+        ("crossmodal_pairs_build", _mm.clear_crossmodal_cache,
+         _forced(_mm.crossmodal_image_video_dedup)),
+        ("dhash_index_build", _mm.clear_dhash_index_cache,
+         _sf(_mm.dhash_index_build)),
+        ("audio_index_build", _mm.clear_audio_index_cache,
+         _sf(_mm.audio_index_build)),
+        ("minhash_index_build", _dedup.clear_minhash_index_cache,
+         _sf(_dedup.minhash_index_build)),
+        ("video_index_build", _mm.clear_video_index_cache,
+         _sf(_mm.video_index_build)),
+        ("semantic_index_build", _dedup.clear_semantic_index_cache,
+         _sf(_dedup.semantic_index_build)),
+        ("pq_index_build", _sim.clear_pq_index_cache,
+         _sf(_sim.pq_index_build)),
+        ("setsim_rollforward",
+         _restored(_dedup.clear_setsim_roll_cache,
+                   _dedup.setsim_roll_restore_base),
+         _sf(_dedup.setsim_index_rollforward)),
+        ("dhash_rollforward",
+         _restored(_mm.clear_dhash_roll_cache,
+                   _image(_mm.band_roll_restore_base)),
+         _sf(_image(_mm.band_index_rollforward))),
+        ("minhash_rollforward",
+         _restored(_dedup.clear_minhash_roll_cache,
+                   _dedup.minhash_roll_restore_base),
+         _sf(_dedup.minhash_index_rollforward)),
+        ("semantic_rollforward",
+         _restored(_dedup.clear_semantic_roll_cache,
+                   _dedup.semantic_roll_restore_base),
+         _sf(_dedup.semantic_index_rollforward)),
+    ]
 
     # The cluster-label lifecycle (operators/labels.py), priced per
     # LabelRung in three cold entries named after the rung, each a
@@ -521,8 +260,6 @@ def main() -> None:
     # keeps its own restore and fold.  Entries run phase by phase
     # (every build, then every fold, then every compaction), so each
     # compaction still runs after all folds have warmed the session.
-    from smile_spark.operators import labels as _labels
-
     def _rung_entries(rung) -> tuple:
         def restore() -> None:
             _labels.clear_label_state(rung, which="roll")
@@ -550,10 +287,6 @@ def main() -> None:
             ),
         )
 
-    def _semantic_restore() -> None:
-        _dedup.clear_semantic_label_cache()
-        _dedup.semantic_label_restore_base(spark, sf_dir)
-
     builds, rolls, compacts = zip(
         *(
             _rung_entries(rung)
@@ -564,17 +297,18 @@ def main() -> None:
             )
         )
     )
-    label_entries = [
+    cold_entries += [
         *builds,
         *rolls,
         (
             "semantic_labelroll",
-            _semantic_restore,
-            lambda: _dedup.semantic_label_rollforward(spark, sf_dir),
+            _restored(_dedup.clear_semantic_label_cache,
+                      _dedup.semantic_label_restore_base),
+            _sf(_dedup.semantic_label_rollforward),
         ),
         *compacts,
     ]
-    for bname, prep_fn, timed_fn in label_entries:
+    for bname, prep_fn, timed_fn in cold_entries:
         for _ in range(_build_passes if _build_wanted(bname) else 0):
             try:
                 prep_fn()

@@ -29,10 +29,13 @@ function anywhere.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smile_spark.operators import labels as L
+from smile_spark.sources import bucketed as BK
 from smile_spark.tables import fan_out, table
 
 SHINGLE_K = 12          # character shingle width
@@ -606,31 +609,65 @@ def dedup_minhash_lsh_sql() -> str:
 # --- persisted MinHash band index + incremental probe ----------------------
 
 MINHASH_INDEX_BUCKETS = 16
-_MH_INDEX_READY: set[tuple[str, str]] = set()
-_MH_INDEX_SIDECARS: set[str] = set()
 
 
 def _mh_index_table(sf_dir: str) -> str:
     """Catalog name of the persisted base band-key table (the
     setsim/dhash single-writer assumption applies — see
     :func:`_setsim_index_tables`)."""
-    from smile_spark.sources.bucketed import bucket_table_name
+    return BK.bucket_table_name("mh_idx_bands", sf_dir)
 
-    return bucket_table_name("mh_idx_bands", sf_dir)
+
+def _text_base() -> F.Column:
+    """The text base block (doc_id % SETSIM_INC_MOD != 0)."""
+    return F.col("doc_id") % SETSIM_INC_MOD != 0
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return table(spark, sf_dir, "documents")
+
+
+def _mh_bands(pred: Callable[[], F.Column]) -> Callable:
+    """Band rows of the ``pred()`` document block."""
+    return lambda spark, sf_dir: _lsh_bands_from_sig(
+        _minhash_sig_from_docs(_documents(spark, sf_dir).filter(pred()))
+    )
+
+
+def _mh_params(roll: bool) -> Callable:
+    def params(spark: SparkSession, sf_dir: str) -> dict:
+        p = {
+            "inc_mod": SETSIM_INC_MOD,
+            "n_buckets": MINHASH_INDEX_BUCKETS,
+            "n_hashes": N_HASHES,
+            "n_bands": N_BANDS,
+            "shingle_k": SHINGLE_K,
+        }
+        if roll:
+            p["roll_mod"] = MINHASH_ROLL_MOD
+        return p
+
+    return params
+
+
+MINHASH_INDEX = BK.StateSpec(
+    name="mh_idx",
+    tables=lambda spark, sf_dir: {"bands": _mh_index_table(sf_dir)},
+    params=_mh_params(roll=False),
+    source=_documents,
+    base=_text_base,
+    write_base=BK.frame_writer(
+        _mh_bands(_text_base), "bkey", MINHASH_INDEX_BUCKETS
+    ),
+)
 
 
 def clear_minhash_index_cache() -> None:
     """Forget the per-process index memo AND drop the adoption
     sidecars this process wrote, so the next probe (or the bench's
     cold ``minhash_index_build`` loop) reruns the full signature +
-    band + write path.  The build overwrites the table in place —
-    nothing to unpersist."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _MH_INDEX_READY.clear()
-    for path in list(_MH_INDEX_SIDECARS):
-        remove_sidecar_file(path)
-        _MH_INDEX_SIDECARS.discard(path)
+    band + write path."""
+    BK.clear_state(MINHASH_INDEX)
 
 
 def minhash_index_build(spark: SparkSession, sf_dir: str) -> str:
@@ -645,49 +682,11 @@ def minhash_index_build(spark: SparkSession, sf_dir: str) -> str:
     MinHash-LSH (here), and the perceptual image/audio rungs
     (``dhash_index_build``/``audio_index_build``) all share the same
     nightly-index + increment-linear-probe shape and the same sidecar
-    adoption contract.  At 100 TB the corpus pays its shingle +
-    signature pass once per snapshot; each daily ingest signatures
-    only its own documents.
+    adoption contract (``bucketed.build_state``).  At 100 TB the corpus
+    pays its shingle + signature pass once per snapshot; each daily
+    ingest signatures only its own documents.
     """
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        sidecar_adoptable,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _mh_index_table(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MH_INDEX_READY:
-        return tbl
-    base = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % SETSIM_INC_MOD != 0
-    )
-    expected = {
-        "base_rows": base.count(),
-        "inc_mod": SETSIM_INC_MOD,
-        "n_buckets": MINHASH_INDEX_BUCKETS,
-        "n_hashes": N_HASHES,
-        "n_bands": N_BANDS,
-        "shingle_k": SHINGLE_K,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    if sidecar_adoptable(spark, tbl, expected, [tbl]):
-        # track the sidecar whether built OR adopted (the IVF
-        # contract, ADVICE r13 #2) so the bench's cold loop always
-        # restores the full rebuild path
-        from smile_spark.sources.bucketed import sidecar_path
-
-        _MH_INDEX_SIDECARS.add(sidecar_path(spark, tbl))
-        _MH_INDEX_READY.add(key)
-        return tbl
-    bands = _lsh_bands_from_sig(_minhash_sig_from_docs(base))
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(bands, tbl, "bkey", n_buckets=MINHASH_INDEX_BUCKETS)
-    _MH_INDEX_SIDECARS.add(write_sidecar(spark, tbl, expected))
-    _MH_INDEX_READY.add(key)
-    return tbl
+    return BK.build_state(spark, MINHASH_INDEX, sf_dir)["bands"]
 
 
 def dedup_minhash_incremental(
@@ -819,141 +818,48 @@ MINHASH_INCREMENTAL_SQL = (
 # folded copies of its own probe block.
 
 MINHASH_ROLL_MOD = 2 * SETSIM_INC_MOD
-_MH_ROLL_READY: set[tuple[str, str]] = set()
-_MH_ROLL_SIDECARS: set[str] = set()
 
 
 def _mh_roll_table(sf_dir: str) -> str:
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    return bucket_table_name("mh_roll_bands", sf_dir)
+    return BK.bucket_table_name("mh_roll_bands", sf_dir)
 
 
-def _mh_roll_payloads(
-    spark: SparkSession, sf_dir: str, tbl: str
-) -> tuple[dict, dict]:
-    docs = table(spark, sf_dir, "documents")
-    base = {
-        "state": "base",
-        "base_rows": docs.filter(
-            F.col("doc_id") % SETSIM_INC_MOD != 0
-        ).count(),
-        "inc_mod": SETSIM_INC_MOD,
-        "roll_mod": MINHASH_ROLL_MOD,
-        "n_buckets": MINHASH_INDEX_BUCKETS,
-        "n_hashes": N_HASHES,
-        "n_bands": N_BANDS,
-        "shingle_k": SHINGLE_K,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = docs.filter(
-        F.col("doc_id") % MINHASH_ROLL_MOD == 0
-    ).count()
-    return base, rolled
+def _text_roll_fold() -> F.Column:
+    return F.col("doc_id") % MINHASH_ROLL_MOD == 0
+
+
+MINHASH_ROLL = BK.StateSpec(
+    name="mh_roll",
+    tables=lambda spark, sf_dir: {"bands": _mh_roll_table(sf_dir)},
+    params=_mh_params(roll=True),
+    source=_documents,
+    base=_text_base,
+    write_base=MINHASH_INDEX.write_base,
+    fold=_text_roll_fold,
+    append_fold=BK.frame_writer(
+        _mh_bands(_text_roll_fold), "bkey", MINHASH_INDEX_BUCKETS, append=True
+    ),
+)
 
 
 def clear_minhash_roll_cache() -> None:
     """Forget the roll memo AND drop this process' adoption sidecars
     (built or adopted), restoring the cold base-rebuild + fold path."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _MH_ROLL_READY.clear()
-    for path in list(_MH_ROLL_SIDECARS):
-        remove_sidecar_file(path)
-        _MH_ROLL_SIDECARS.discard(path)
+    BK.clear_state(MINHASH_ROLL)
 
 
 def minhash_roll_restore_base(spark: SparkSession, sf_dir: str) -> None:
     """Bench/test device: force the roll table back to the pre-fold
     BASE state so the next roll-forward performs the fold alone."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _mh_roll_table(sf_dir)
-    _MH_ROLL_READY.discard((spark.sparkContext.applicationId, sf_dir))
-    base = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % SETSIM_INC_MOD != 0
-    )
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(
-        _lsh_bands_from_sig(_minhash_sig_from_docs(base)),
-        tbl,
-        "bkey",
-        n_buckets=MINHASH_INDEX_BUCKETS,
-    )
-    pb, _ = _mh_roll_payloads(spark, sf_dir, tbl)
-    _MH_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pb))
+    BK.restore_base(spark, MINHASH_ROLL, sf_dir)
 
 
 def minhash_index_rollforward(spark: SparkSession, sf_dir: str) -> str:
     """Advance the persisted MinHash band index to cover base ∪ fold
     by appending the fold block's signature band rows — the
-    setsim_index_rollforward three-state contract (adopt rolled →
-    fold over base → full rebuild then fold); a failed append drops
-    the table and sidecar so a half-appended index never adopts."""
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _mh_roll_table(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MH_ROLL_READY:
-        return tbl
-    pb, pr = _mh_roll_payloads(spark, sf_dir, tbl)
-    if sidecar_adoptable(spark, tbl, pr, [tbl]):
-        _MH_ROLL_SIDECARS.add(sidecar_path(spark, tbl))
-        _MH_ROLL_READY.add(key)
-        return tbl
-    if not sidecar_adoptable(spark, tbl, pb, [tbl]):
-        base = table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % SETSIM_INC_MOD != 0
-        )
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(
-            _lsh_bands_from_sig(_minhash_sig_from_docs(base)),
-            tbl,
-            "bkey",
-            n_buckets=MINHASH_INDEX_BUCKETS,
-        )
-        _MH_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pb))
-    # crash contract (ADVICE r14): remove the sidecar BEFORE the
-    # append so a crash between the append and the rolled write can
-    # never leave a BASE sidecar adoptable over a folded table (a
-    # second fold would silently duplicate band rows)
-    scpath = sidecar_path(spark, tbl)
-    remove_sidecar_file(scpath)
-    _MH_ROLL_SIDECARS.discard(scpath)
-    fold = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % MINHASH_ROLL_MOD == 0
-    )
-    try:
-        append_bucketed(
-            _lsh_bands_from_sig(_minhash_sig_from_docs(fold)),
-            tbl,
-            "bkey",
-            n_buckets=MINHASH_INDEX_BUCKETS,
-        )
-    except Exception:
-        drop_bucketed_table(spark, tbl)
-        scpath = sidecar_path(spark, tbl)
-        remove_sidecar_file(scpath)
-        _MH_ROLL_SIDECARS.discard(scpath)
-        raise
-    _MH_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pr))
-    _MH_ROLL_READY.add(key)
-    return tbl
+    ``bucketed.roll_forward`` three-state contract (adopt rolled →
+    fold over base → full rebuild then fold)."""
+    return BK.roll_forward(spark, MINHASH_ROLL, sf_dir)["bands"]
 
 
 def minhash_rolled_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1355,30 +1261,57 @@ SEMANTIC_DEDUP_SQL = semantic_dedup_sql()
 # shared vec_id % 5 == 0 block.
 SEM_INC_MOD = 5
 SEM_INDEX_BUCKETS = 16
-_SEM_INDEX_READY: set[tuple[str, str]] = set()
-_SEM_INDEX_SIDECARS: set[str] = set()
 
 
 def _sem_index_table(sf_dir: str) -> str:
     """Catalog name of the persisted base assignment table.  The
     setsim/dhash single-writer assumption applies — one application
     owns the warehouse at a time; sidecar adoption never drops."""
-    from smile_spark.sources.bucketed import bucket_table_name
+    return BK.bucket_table_name("sem_idx_assign", sf_dir)
 
-    return bucket_table_name("sem_idx_assign", sf_dir)
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return table(spark, sf_dir, "embeddings")
+
+
+def _sem_base() -> F.Column:
+    """The embedding base block (vec_id % SEM_INC_MOD != 0)."""
+    return F.col("vec_id") % SEM_INC_MOD != 0
+
+
+def _sem_assigned(pred: Callable[[], F.Column]) -> Callable:
+    """Frozen-model assignment rows of the ``pred()`` vector block."""
+    return lambda spark, sf_dir: _sem_assign_block(spark, sf_dir, pred())
+
+
+def _sem_index_params(spark: SparkSession, sf_dir: str) -> dict:
+    from smile_spark.operators.similarity import CENTROID_MOD
+
+    return {
+        "op": "semantic",
+        "inc_mod": SEM_INC_MOD,
+        "centroid_mod": CENTROID_MOD,
+        "n_buckets": SEM_INDEX_BUCKETS,
+    }
+
+
+SEM_INDEX = BK.StateSpec(
+    name="sem_idx",
+    tables=lambda spark, sf_dir: {"assign": _sem_index_table(sf_dir)},
+    params=_sem_index_params,
+    source=_embeddings,
+    base=_sem_base,
+    write_base=BK.frame_writer(
+        _sem_assigned(_sem_base), "cid", SEM_INDEX_BUCKETS
+    ),
+)
 
 
 def clear_semantic_index_cache() -> None:
     """Forget the per-process memo AND drop this process' adoption
     sidecars, so the next probe (or the bench's cold
-    ``semantic_index_build`` loop) runs the full assign + write path.
-    The build overwrites the table in place — nothing to unpersist."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _SEM_INDEX_READY.clear()
-    for path in list(_SEM_INDEX_SIDECARS):
-        remove_sidecar_file(path)
-        _SEM_INDEX_SIDECARS.discard(path)
+    ``semantic_index_build`` loop) runs the full assign + write path."""
+    BK.clear_state(SEM_INDEX)
 
 
 def _sem_base_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1399,59 +1332,13 @@ def semantic_index_build(spark: SparkSession, sf_dir: str) -> str:
     """Persist the SemDeDup base assignment (cid, vec_id, v, d2)
     bucketed by cid — the corpus-linear nightly job.  Every daily
     probe then reads pre-bucketed cluster-mates with zero exchange on
-    the corpus side.  Sidecar adoption follows the setsim contract:
-    a fresh session adopts a matching index instead of rebuilding;
-    a stale sidecar (snapshot changed) forces the rebuild; the cold
-    path stays behind :func:`clear_semantic_index_cache` for bench
-    pricing (``semantic_index_build``)."""
-    from smile_spark.operators.similarity import (
-        CENTROID_MOD,
-        _assign,
-        _vectors,
-    )
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        sidecar_adoptable,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _sem_index_table(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEM_INDEX_READY:
-        return tbl
-    base = _vectors(spark, sf_dir).filter(
-        F.col("vec_id") % SEM_INC_MOD != 0
-    )
-    n_base = base.count()
-    expected = {
-        "base_rows": n_base,
-        "op": "semantic",
-        "inc_mod": SEM_INC_MOD,
-        "centroid_mod": CENTROID_MOD,
-        "n_buckets": SEM_INDEX_BUCKETS,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    if sidecar_adoptable(spark, tbl, expected, [tbl]):
-        # track the sidecar whether built OR adopted (the IVF
-        # contract, ADVICE r13 #2): without this, a fresh process
-        # over an existing warehouse adopts here and
-        # clear_semantic_index_cache cannot force the cold
-        # assign+write path the bench's semantic_index_build prices
-        from smile_spark.sources.bucketed import sidecar_path
-
-        _SEM_INDEX_SIDECARS.add(sidecar_path(spark, tbl))
-        _SEM_INDEX_READY.add(key)
-        return tbl
-    assigned = _assign(base, _sem_base_centroids(spark, sf_dir)).select(
-        "cid", "vec_id", "v", "d2"
-    )
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(assigned, tbl, "cid", n_buckets=SEM_INDEX_BUCKETS)
-    _SEM_INDEX_SIDECARS.add(write_sidecar(spark, tbl, expected))
-    _SEM_INDEX_READY.add(key)
-    return tbl
+    the corpus side.  Sidecar adoption follows the shared contract
+    (``bucketed.build_state``): a fresh session adopts a matching
+    index instead of rebuilding; a stale sidecar (snapshot changed)
+    forces the rebuild; the cold path stays behind
+    :func:`clear_semantic_index_cache` for bench pricing
+    (``semantic_index_build``)."""
+    return BK.build_state(spark, SEM_INDEX, sf_dir)["assign"]
 
 
 def semantic_dedup_incremental(
@@ -1581,42 +1468,10 @@ def semantic_dedup_incremental_sql() -> str:
 # vec_id % 10 == 5, rolled coverage vec_id % 10 != 5.
 
 SEM_ROLL_MOD = 2 * SEM_INC_MOD
-_SEM_ROLL_READY: set[tuple[str, str]] = set()
-_SEM_ROLL_SIDECARS: set[str] = set()
 
 
 def _sem_roll_table(sf_dir: str) -> str:
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    return bucket_table_name("sem_roll_assign", sf_dir)
-
-
-def _sem_roll_payloads(
-    spark: SparkSession, sf_dir: str, tbl: str
-) -> tuple[dict, dict]:
-    from smile_spark.operators.similarity import CENTROID_MOD, _vectors
-
-    vecs = _vectors(spark, sf_dir)
-    base = {
-        "state": "base",
-        "base_rows": vecs.filter(
-            F.col("vec_id") % SEM_INC_MOD != 0
-        ).count(),
-        "op": "semantic",
-        "centroid_rule": "base-block-subsample",
-        "centroid_mod": CENTROID_MOD,
-        "inc_mod": SEM_INC_MOD,
-        "roll_mod": SEM_ROLL_MOD,
-        "n_buckets": SEM_INDEX_BUCKETS,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = vecs.filter(
-        F.col("vec_id") % SEM_ROLL_MOD == 0
-    ).count()
-    return base, rolled
+    return BK.bucket_table_name("sem_roll_assign", sf_dir)
 
 
 def _sem_assign_block(
@@ -1632,100 +1487,54 @@ def _sem_assign_block(
     ).select("cid", "vec_id", "v", "d2")
 
 
+def _sem_roll_params(spark: SparkSession, sf_dir: str) -> dict:
+    from smile_spark.operators.similarity import CENTROID_MOD
+
+    return {
+        "op": "semantic",
+        "centroid_rule": "base-block-subsample",
+        "centroid_mod": CENTROID_MOD,
+        "inc_mod": SEM_INC_MOD,
+        "roll_mod": SEM_ROLL_MOD,
+        "n_buckets": SEM_INDEX_BUCKETS,
+    }
+
+
+def _sem_roll_fold() -> F.Column:
+    return F.col("vec_id") % SEM_ROLL_MOD == 0
+
+
+SEM_ROLL = BK.StateSpec(
+    name="sem_roll",
+    tables=lambda spark, sf_dir: {"assign": _sem_roll_table(sf_dir)},
+    params=_sem_roll_params,
+    source=_embeddings,
+    base=_sem_base,
+    write_base=SEM_INDEX.write_base,
+    fold=_sem_roll_fold,
+    append_fold=BK.frame_writer(
+        _sem_assigned(_sem_roll_fold), "cid", SEM_INDEX_BUCKETS, append=True
+    ),
+)
+
+
 def clear_semantic_roll_cache() -> None:
     """Forget the roll memo AND drop this process' adoption sidecars
     (built or adopted), restoring the cold base-rebuild + fold path."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _SEM_ROLL_READY.clear()
-    for path in list(_SEM_ROLL_SIDECARS):
-        remove_sidecar_file(path)
-        _SEM_ROLL_SIDECARS.discard(path)
+    BK.clear_state(SEM_ROLL)
 
 
 def semantic_roll_restore_base(spark: SparkSession, sf_dir: str) -> None:
     """Bench/test device: force the roll table back to the pre-fold
     BASE state so the next roll-forward performs the fold alone."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _sem_roll_table(sf_dir)
-    _SEM_ROLL_READY.discard((spark.sparkContext.applicationId, sf_dir))
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(
-        _sem_assign_block(
-            spark, sf_dir, F.col("vec_id") % SEM_INC_MOD != 0
-        ),
-        tbl,
-        "cid",
-        n_buckets=SEM_INDEX_BUCKETS,
-    )
-    pb, _ = _sem_roll_payloads(spark, sf_dir, tbl)
-    _SEM_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pb))
+    BK.restore_base(spark, SEM_ROLL, sf_dir)
 
 
 def semantic_index_rollforward(spark: SparkSession, sf_dir: str) -> str:
     """Advance the persisted SemDeDup assignment index to cover
     base ∪ fold by appending the fold block's frozen-model assignment
-    rows — the setsim_index_rollforward three-state contract; a
-    failed append drops the table and sidecar so a half-appended
-    index never adopts."""
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _sem_roll_table(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEM_ROLL_READY:
-        return tbl
-    pb, pr = _sem_roll_payloads(spark, sf_dir, tbl)
-    if sidecar_adoptable(spark, tbl, pr, [tbl]):
-        _SEM_ROLL_SIDECARS.add(sidecar_path(spark, tbl))
-        _SEM_ROLL_READY.add(key)
-        return tbl
-    if not sidecar_adoptable(spark, tbl, pb, [tbl]):
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(
-            _sem_assign_block(
-                spark, sf_dir, F.col("vec_id") % SEM_INC_MOD != 0
-            ),
-            tbl,
-            "cid",
-            n_buckets=SEM_INDEX_BUCKETS,
-        )
-        _SEM_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pb))
-    # crash contract (ADVICE r14): no adoptable sidecar while the
-    # fold append runs — remove first, write the rolled state last
-    scpath = sidecar_path(spark, tbl)
-    remove_sidecar_file(scpath)
-    _SEM_ROLL_SIDECARS.discard(scpath)
-    try:
-        append_bucketed(
-            _sem_assign_block(
-                spark, sf_dir, F.col("vec_id") % SEM_ROLL_MOD == 0
-            ),
-            tbl,
-            "cid",
-            n_buckets=SEM_INDEX_BUCKETS,
-        )
-    except Exception:
-        drop_bucketed_table(spark, tbl)
-        scpath = sidecar_path(spark, tbl)
-        remove_sidecar_file(scpath)
-        _SEM_ROLL_SIDECARS.discard(scpath)
-        raise
-    _SEM_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pr))
-    _SEM_ROLL_READY.add(key)
-    return tbl
+    rows — the ``bucketed.roll_forward`` three-state contract."""
+    return BK.roll_forward(spark, SEM_ROLL, sf_dir)["assign"]
 
 
 def semantic_rolled_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2974,7 +2783,6 @@ SETSIM_INCREMENTAL_SQL = (
 # setsim_roll_* record the count, so an index written under another
 # count is rebuilt, never adopted or appended to.
 SETSIM_INDEX_BUCKETS = 16
-_SETSIM_INDEX_READY: set[tuple[str, str, bool]] = set()
 
 
 def _setsim_n_buckets(spark: SparkSession, sf_dir: str) -> int:
@@ -2999,7 +2807,7 @@ def _setsim_index_tables(sf_dir: str, hash_tokens: bool) -> dict[str, str]:
 
     SINGLE-WRITER ASSUMPTION (ADVICE r12 #3): the tables (and their
     warehouse directories) are catalog/warehouse-global per (sf_dir,
-    mode) while the ``_SETSIM_INDEX_READY`` memo is per-process — a
+    mode) while the ``bucketed`` state registry is per-process — a
     second concurrent application that decides to rebuild runs
     ``drop_bucketed_table`` (which also rm -rf's the warehouse dir)
     and can yank files out from under another application's in-flight
@@ -3018,10 +2826,54 @@ def _setsim_index_tables(sf_dir: str, hash_tokens: bool) -> dict[str, str]:
     }
 
 
-# sidecar files this process wrote — removed by clear_setsim_index_cache
-# so the bench's cold loop forces the full drop-and-rebuild path
-# instead of adopting the index it just built
-_SETSIM_SIDECARS: set[str] = set()
+def _setsim_suffix(spark: SparkSession) -> str:
+    return "h1" if _setsim_hash_conf(spark) else "h0"
+
+
+def _setsim_params(roll: bool) -> Callable:
+    def params(spark: SparkSession, sf_dir: str) -> dict:
+        p = {
+            "hash_tokens": _setsim_hash_conf(spark),
+            "n_buckets": _setsim_n_buckets(spark, sf_dir),
+            "tau": [SETSIM_TAU_NUM, SETSIM_TAU_DEN],
+            "inc_mod": SETSIM_INC_MOD,
+            "prefix_cols": ["rb", "tok", "nb", "pos"],
+        }
+        if roll:
+            p["roll_mod"] = SETSIM_ROLL_MOD
+        return p
+
+    return params
+
+
+def _setsim_write_base(
+    spark: SparkSession, sf_dir: str, tables: dict[str, str]
+) -> int:
+    return _setsim_index_write(
+        spark,
+        _documents(spark, sf_dir).filter(_text_base()),
+        tables,
+        _setsim_hash_conf(spark),
+        _setsim_n_buckets(spark, sf_dir),
+    )
+
+
+# the snapshot fingerprint is the base-block row count plus every
+# parameter the persisted tables depend on; the sidecar name is (mode,
+# sf_dir)-scoped exactly like the tables
+SETSIM_INDEX = BK.StateSpec(
+    name="setsim_idx",
+    tables=lambda spark, sf_dir: _setsim_index_tables(
+        sf_dir, _setsim_hash_conf(spark)
+    ),
+    sidecar=lambda spark, sf_dir: BK.bucket_table_name(
+        f"setsim_idx_{_setsim_suffix(spark)}", sf_dir
+    ),
+    params=_setsim_params(roll=False),
+    source=_documents,
+    base=_text_base,
+    write_base=_setsim_write_base,
+)
 
 
 def clear_setsim_index_cache() -> None:
@@ -3029,15 +2881,8 @@ def clear_setsim_index_cache() -> None:
     sidecars this process wrote, so the next probe (or the bench's
     cold ``setsim_index_build`` loop) runs the full drop-and-rebuild
     path — without the sidecar removal, the rebuild would ADOPT the
-    tables it just wrote and the cold entry would price a no-op.  The
-    build overwrites the tables in place (drop + saveAsTable), so no
-    block storage leaks — nothing to unpersist."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _SETSIM_INDEX_READY.clear()
-    for path in list(_SETSIM_SIDECARS):
-        remove_sidecar_file(path)
-        _SETSIM_SIDECARS.discard(path)
+    tables it just wrote and the cold entry would price a no-op."""
+    BK.clear_state(SETSIM_INDEX)
 
 
 def _setsim_index_write(
@@ -3045,16 +2890,15 @@ def _setsim_index_write(
     docs: DataFrame,
     tables: dict[str, str],
     hash_tokens: bool,
-    n_buckets: int = SETSIM_INDEX_BUCKETS,
+    n_buckets: int,
 ) -> int:
     """Compute and persist the four setsim index tables for ``docs``
     (the corpus-linear pass: tokenize, per-side GroupJoin collapse,
     document frequencies, AllPairs prefixes) in ``n_buckets`` buckets,
-    dropping any prior version first.  Shared by
-    :func:`setsim_index_build` and the roll-forward family's base
-    rebuild, which pass :func:`_setsim_n_buckets` (the count their
-    sidecars record; the default suits scratch tables that have no
-    sidecar); sidecar/memo bookkeeping stays with the callers.
+    dropping any prior version first.  The base write of both setsim
+    state specs, which pass :func:`_setsim_n_buckets` (the count their
+    sidecars record); sidecar/memo bookkeeping stays with the
+    ``bucketed`` lifecycle.
     Build-time checkpoints are consumed and released in the finally
     block even when a drop/write throws (ADVICE r12 #2).
 
@@ -3157,76 +3001,19 @@ def setsim_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     serve an index built under the other tokenization.
 
     A session whose per-process memo is empty first tries to ADOPT
-    the existing tables (VERDICT r12 next-round #5): a sidecar JSON
-    written after the tables records the base-block row count and the
-    build parameters, and when it matches what this build would
-    produce — and the catalog still knows all four tables — the
-    corpus-linear pass is skipped entirely.  A stale sidecar (the
-    snapshot changed) or missing tables fall through to the
-    drop-and-rebuild path, which stays behind
-    :func:`clear_setsim_index_cache` for the bench's cold pricing.
-    The base block is counted only when the sidecar's parameters match
-    and the tables exist; a rebuild records the count its own scan
-    observed.
+    the existing tables (VERDICT r12 next-round #5, the shared
+    ``bucketed.build_state`` contract): a sidecar JSON written after
+    the tables records the base-block row count and the build
+    parameters, and when it matches what this build would produce —
+    and the catalog still knows all four tables — the corpus-linear
+    pass is skipped entirely.  A stale sidecar (the snapshot changed)
+    or missing tables fall through to the drop-and-rebuild path, which
+    stays behind :func:`clear_setsim_index_cache` for the bench's cold
+    pricing.  The base block is counted only when the sidecar's
+    parameters match and the tables exist; a rebuild records the count
+    its own scan observed.
     """
-    from smile_spark.sources.bucketed import (
-        bucket_table_name,
-        read_sidecar,
-        sidecar_path,
-        write_sidecar,
-    )
-
-    hash_tokens = _setsim_hash_conf(spark)
-    tables = _setsim_index_tables(sf_dir, hash_tokens)
-    key = (spark.sparkContext.applicationId, sf_dir, hash_tokens)
-    if key in _SETSIM_INDEX_READY:
-        return tables
-    docs = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % SETSIM_INC_MOD != 0
-    )
-    # snapshot fingerprint: base-block row count + every parameter the
-    # persisted tables depend on; the sidecar name is (mode,
-    # sf_dir)-scoped exactly like the tables
-    sidecar_name = bucket_table_name(
-        f"setsim_idx_{'h1' if hash_tokens else 'h0'}", sf_dir
-    )
-    params = {
-        "hash_tokens": hash_tokens,
-        "n_buckets": _setsim_n_buckets(spark, sf_dir),
-        "tau": [SETSIM_TAU_NUM, SETSIM_TAU_DEN],
-        "inc_mod": SETSIM_INC_MOD,
-        "prefix_cols": ["rb", "tok", "nb", "pos"],
-        "sf_dir": sf_dir,
-        "tables": sorted(tables.values()),
-    }
-    # the base block is counted last, only when the sidecar's
-    # parameters match and the tables exist: a missing sidecar or a
-    # parameter change is a certain rebuild
-    prior = read_sidecar(spark, sidecar_name) or {}
-    if (
-        {k: v for k, v in prior.items() if k != "base_rows"} == params
-        and all(spark.catalog.tableExists(t) for t in tables.values())
-        and prior.get("base_rows") == docs.count()
-    ):
-        # track the sidecar whether built OR adopted (the IVF
-        # contract, ADVICE r13 #2): clear_setsim_index_cache must be
-        # able to force a true cold rebuild even when this process
-        # only ever adopted a prior application's index
-        _SETSIM_SIDECARS.add(sidecar_path(spark, sidecar_name))
-        _SETSIM_INDEX_READY.add(key)
-        return tables
-    base_rows = _setsim_index_write(
-        spark, docs, tables, hash_tokens, params["n_buckets"]
-    )
-    # tables are complete — record the snapshot fingerprint so a
-    # later session (on a metastore-backed catalog) can adopt them
-    _SETSIM_SIDECARS.add(
-        write_sidecar(
-            spark, sidecar_name, {"base_rows": base_rows, **params}
-        )
-    )
-    _SETSIM_INDEX_READY.add(key)
-    return tables
+    return BK.build_state(spark, SETSIM_INDEX, sf_dir)
 
 
 def setsim_incremental_indexed(
@@ -3457,100 +3244,21 @@ def _setsim_probe_indexed(
 # observable.
 
 SETSIM_ROLL_MOD = 2 * SETSIM_INC_MOD  # fold: % 10 == 0; probe: % 10 == 5
-_SETSIM_ROLL_READY: set[tuple[str, str, bool]] = set()
-_SETSIM_ROLL_SIDECARS: set[str] = set()
 
 
 def _setsim_roll_tables(sf_dir: str, hash_tokens: bool) -> dict[str, str]:
     """Roll-forward twin of :func:`_setsim_index_tables` (same
     single-writer assumption)."""
-    from smile_spark.sources.bucketed import bucket_table_name
-
     suffix = "h1" if hash_tokens else "h0"
     return {
-        part: bucket_table_name(f"setsim_roll_{part}_{suffix}", sf_dir)
+        part: BK.bucket_table_name(f"setsim_roll_{part}_{suffix}", sf_dir)
         for part in ("prefix", "df", "reps", "members")
     }
 
 
-def _setsim_roll_payloads(
-    spark: SparkSession,
-    sf_dir: str,
-    hash_tokens: bool,
-    tables: dict[str, str],
-) -> tuple[dict, dict]:
-    """(base-state, rolled-state) sidecar payloads.  Both carry every
-    build parameter plus the covered-block row counts (one aggregate
-    job), so a parameter change OR a snapshot change makes both states
-    unadoptable and forces the full rebuild.  Their ``n_buckets`` is
-    the bucket count of the roll tables: the base write and the fold
-    appends both take it from here."""
-    rows = (
-        table(spark, sf_dir, "documents")
-        .agg(
-            F.count_if(F.col("doc_id") % SETSIM_INC_MOD != 0).alias("base"),
-            F.count_if(F.col("doc_id") % SETSIM_ROLL_MOD == 0).alias("fold"),
-        )
-        .first()
-    )
-    base = {
-        "state": "base",
-        "base_rows": rows["base"],
-        "hash_tokens": hash_tokens,
-        "n_buckets": _setsim_n_buckets(spark, sf_dir),
-        "tau": [SETSIM_TAU_NUM, SETSIM_TAU_DEN],
-        "inc_mod": SETSIM_INC_MOD,
-        "roll_mod": SETSIM_ROLL_MOD,
-        "prefix_cols": ["rb", "tok", "nb", "pos"],
-        "sf_dir": sf_dir,
-        "tables": sorted(tables.values()),
-    }
-    rolled = dict(base, state="rolled", fold_rows=rows["fold"])
-    return base, rolled
-
-
 def _setsim_roll_sidecar_name(sf_dir: str, hash_tokens: bool) -> str:
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    return bucket_table_name(
+    return BK.bucket_table_name(
         f"setsim_roll_{'h1' if hash_tokens else 'h0'}", sf_dir
-    )
-
-
-def clear_setsim_roll_cache() -> None:
-    """Forget the roll-forward memo AND drop this process' adoption
-    sidecars (built or adopted — the IVF contract), so the next call
-    runs the full base-rebuild + fold path.  Tables overwrite in
-    place; nothing to unpersist."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _SETSIM_ROLL_READY.clear()
-    for path in list(_SETSIM_ROLL_SIDECARS):
-        remove_sidecar_file(path)
-        _SETSIM_ROLL_SIDECARS.discard(path)
-
-
-def setsim_roll_restore_base(spark: SparkSession, sf_dir: str) -> None:
-    """Force the roll tables back to the pre-fold BASE state (drop +
-    corpus-linear rebuild + base sidecar) — the bench/test device for
-    pricing the FOLD alone: a fold is a one-way append, so re-timing
-    it cold requires restoring the state it consumes.  Production
-    never calls this; the nightly job folds each increment once."""
-    from smile_spark.sources.bucketed import write_sidecar
-
-    hash_tokens = _setsim_hash_conf(spark)
-    tables = _setsim_roll_tables(sf_dir, hash_tokens)
-    key = (spark.sparkContext.applicationId, sf_dir, hash_tokens)
-    _SETSIM_ROLL_READY.discard(key)
-    base_docs = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % SETSIM_INC_MOD != 0
-    )
-    pb, _ = _setsim_roll_payloads(spark, sf_dir, hash_tokens, tables)
-    _setsim_index_write(spark, base_docs, tables, hash_tokens, pb["n_buckets"])
-    _SETSIM_ROLL_SIDECARS.add(
-        write_sidecar(
-            spark, _setsim_roll_sidecar_name(sf_dir, hash_tokens), pb
-        )
     )
 
 
@@ -3566,21 +3274,15 @@ def _setsim_fold_append(
     ``n_buckets`` must be the count the tables were written with (the
     payloads' ``n_buckets``): Spark refuses an append whose bucket
     spec differs.  The df table is NOT touched: it is the frozen total
-    order (see the section comment).  On ANY append failure the tables
-    are dropped and the sidecar removed, so a half-appended index is
-    never adoptable (the crash-window analogue of sidecar-after-write;
-    a transactional table format would make append+fingerprint
+    order (see the section comment).  The ``bucketed`` lifecycle runs
+    it with the sidecar already removed and drops the tables if it
+    fails, so a half-appended index is never adoptable (a
+    transactional table format would make append+fingerprint
     atomic)."""
     from pyspark.sql.window import Window
 
     from smile_spark.session import unpersist_checkpoint
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        read_bucketed,
-        remove_sidecar_file,
-        sidecar_path,
-    )
+    from smile_spark.sources.bucketed import append_bucketed, read_bucketed
 
     fold = table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % SETSIM_ROLL_MOD == 0
@@ -3633,37 +3335,68 @@ def _setsim_fold_append(
         prefix = ranked.filter(
             F.col("pos") <= F.col("nb") - ceil_tau_n + 1
         ).select(F.col("doc_id").alias("rb"), "tok", "nb", "pos")
-        try:
-            append_bucketed(
-                prefix, tables["prefix"], "tok", n_buckets=n_buckets
-            )
-            append_bucketed(
-                reps.select("rb", "ts", "nb"),
-                tables["reps"],
-                "rb",
-                n_buckets=n_buckets,
-            )
-            append_bucketed(
-                membership.select("rb", "b"),
-                tables["members"],
-                "rb",
-                n_buckets=n_buckets,
-            )
-        except Exception:
-            for tbl in tables.values():
-                drop_bucketed_table(spark, tbl)
-            scpath = sidecar_path(
-                spark, _setsim_roll_sidecar_name(sf_dir, hash_tokens)
-            )
-            remove_sidecar_file(scpath)
-            _SETSIM_ROLL_SIDECARS.discard(scpath)
-            raise
+        append_bucketed(prefix, tables["prefix"], "tok", n_buckets=n_buckets)
+        append_bucketed(
+            reps.select("rb", "ts", "nb"),
+            tables["reps"],
+            "rb",
+            n_buckets=n_buckets,
+        )
+        append_bucketed(
+            membership.select("rb", "b"),
+            tables["members"],
+            "rb",
+            n_buckets=n_buckets,
+        )
     finally:
         # membership may not exist if its checkpoint threw
         try:
             unpersist_checkpoint(membership)
         except NameError:
             pass
+
+
+# Both payloads carry every build parameter plus the covered-block
+# row counts (one aggregate job), so a parameter OR a snapshot change
+# forces the full rebuild.  Their ``n_buckets`` is the bucket count of
+# the roll tables: the base write and the fold appends both use it.
+SETSIM_ROLL = BK.StateSpec(
+    name="setsim_roll",
+    tables=lambda spark, sf_dir: _setsim_roll_tables(
+        sf_dir, _setsim_hash_conf(spark)
+    ),
+    sidecar=lambda spark, sf_dir: _setsim_roll_sidecar_name(
+        sf_dir, _setsim_hash_conf(spark)
+    ),
+    params=_setsim_params(roll=True),
+    source=_documents,
+    base=_text_base,
+    write_base=_setsim_write_base,
+    fold=_text_roll_fold,
+    append_fold=lambda spark, sf_dir, tables: _setsim_fold_append(
+        spark,
+        sf_dir,
+        _setsim_hash_conf(spark),
+        tables,
+        _setsim_n_buckets(spark, sf_dir),
+    ),
+)
+
+
+def clear_setsim_roll_cache() -> None:
+    """Forget the roll-forward memo AND drop this process' adoption
+    sidecars (built or adopted — the IVF contract), so the next call
+    runs the full base-rebuild + fold path."""
+    BK.clear_state(SETSIM_ROLL)
+
+
+def setsim_roll_restore_base(spark: SparkSession, sf_dir: str) -> None:
+    """Force the roll tables back to the pre-fold BASE state (drop +
+    corpus-linear rebuild + base sidecar) — the bench/test device for
+    pricing the FOLD alone: a fold is a one-way append, so re-timing
+    it cold requires restoring the state it consumes.  Production
+    never calls this; the nightly job folds each increment once."""
+    BK.restore_base(spark, SETSIM_ROLL, sf_dir)
 
 
 def setsim_index_rollforward(
@@ -3676,7 +3409,8 @@ def setsim_index_rollforward(
     replacing the drop-and-rebuild that made every snapshot change
     corpus-linear.
 
-    Three-state resolution per (application, sf_dir, token-hash):
+    Three-state resolution per (application, sf_dir, token-hash), the
+    shared ``bucketed.roll_forward`` contract:
     1. a ROLLED sidecar over live tables → adopt (nothing to do);
     2. a BASE sidecar over live tables → fold (increment-linear);
     3. anything else (no sidecar, stale snapshot, CHANGED PARAMETERS)
@@ -3686,47 +3420,7 @@ def setsim_index_rollforward(
     other parameters can ever be adopted (the stale-params test pins
     this).  The single-writer assumption of the setsim index family
     applies unchanged."""
-    from smile_spark.sources.bucketed import (
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_sidecar,
-    )
-
-    hash_tokens = _setsim_hash_conf(spark)
-    tables = _setsim_roll_tables(sf_dir, hash_tokens)
-    key = (spark.sparkContext.applicationId, sf_dir, hash_tokens)
-    if key in _SETSIM_ROLL_READY:
-        return tables
-    name = _setsim_roll_sidecar_name(sf_dir, hash_tokens)
-    pb, pr = _setsim_roll_payloads(spark, sf_dir, hash_tokens, tables)
-    if sidecar_adoptable(spark, name, pr, list(tables.values())):
-        _SETSIM_ROLL_SIDECARS.add(sidecar_path(spark, name))
-        _SETSIM_ROLL_READY.add(key)
-        return tables
-    if not sidecar_adoptable(spark, name, pb, list(tables.values())):
-        base_docs = table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % SETSIM_INC_MOD != 0
-        )
-        _setsim_index_write(
-            spark, base_docs, tables, hash_tokens, pb["n_buckets"]
-        )
-        _SETSIM_ROLL_SIDECARS.add(write_sidecar(spark, name, pb))
-    # Crash contract (ADVICE r14): no adoptable sidecar may exist while
-    # fold appends run — a hard crash between an append and the rolled
-    # write would otherwise leave the BASE sidecar adoptable over
-    # already-folded tables, and the next session would fold AGAIN
-    # (silent prefix/reps/members duplication).  Remove the sidecar
-    # BEFORE the first append (the label_compact remove-first/
-    # rewrite-last ordering), so any crash inside the fold lands in the
-    # full-rebuild arm.
-    scpath = sidecar_path(spark, name)
-    remove_sidecar_file(scpath)
-    _SETSIM_ROLL_SIDECARS.discard(scpath)
-    _setsim_fold_append(spark, sf_dir, hash_tokens, tables, pb["n_buckets"])
-    _SETSIM_ROLL_SIDECARS.add(write_sidecar(spark, name, pr))
-    _SETSIM_ROLL_READY.add(key)
-    return tables
+    return BK.roll_forward(spark, SETSIM_ROLL, sf_dir)
 
 
 def setsim_rolled_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4653,20 +4347,6 @@ def _text_rung() -> L.LabelRung:
             "n_bands": N_BANDS,
         }
 
-    def base_count(spark: SparkSession, sf_dir: str) -> int:
-        return (
-            table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % SETSIM_INC_MOD != 0)
-            .count()
-        )
-
-    def fold_count(spark: SparkSession, sf_dir: str) -> int:
-        return (
-            table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % SETSIM_INC_MOD == 0)
-            .count()
-        )
-
     return L.LabelRung(
         name="text",
         table_base="text_labelroll",
@@ -4675,8 +4355,6 @@ def _text_rung() -> L.LabelRung:
         inc_pairs=_text_inc_pairs,
         is_increment=lambda c: c % SETSIM_INC_MOD == 0,
         params=params,
-        base_count=base_count,
-        fold_count=fold_count,
         # r16 contraction fast path — row-equal to cc over base_pairs
         # (pinned by tests/test_round15_ops.py's contraction-equality
         # test); the nightly build runs cc at group-rep level
@@ -4786,54 +4464,21 @@ def text_clusters_incremental_sql() -> str:
 # convention).  Three-state sidecar contract + the ADVICE-r14 crash
 # ordering (remove before append, write rolled last) as everywhere.
 
-_SEM_LABEL_READY: set[tuple[str, str]] = set()
-_SEM_LABEL_SIDECARS: set[str] = set()
-
-
 def _sem_label_table(sf_dir: str) -> str:
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    return bucket_table_name("sem_labelroll", sf_dir)
+    return BK.bucket_table_name("sem_labelroll", sf_dir)
 
 
-def _sem_label_payloads(
-    spark: SparkSession, sf_dir: str, tbl: str
-) -> tuple[dict, dict]:
-    from smile_spark.operators.similarity import CENTROID_MOD, _vectors
+def _sem_label_params(spark: SparkSession, sf_dir: str) -> dict:
+    from smile_spark.operators.similarity import CENTROID_MOD
 
-    vecs = _vectors(spark, sf_dir)
-    base = {
-        "state": "base",
-        "base_rows": vecs.filter(
-            F.col("vec_id") % SEM_INC_MOD != 0
-        ).count(),
+    return {
         "op": "semantic_labels",
         "centroid_rule": "base-block-subsample",
         "centroid_mod": CENTROID_MOD,
         "inc_mod": SEM_INC_MOD,
         "tau": SEMDEDUP_TAU,
         "n_buckets": SEM_INDEX_BUCKETS,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
     }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = vecs.filter(
-        F.col("vec_id") % SEM_INC_MOD == 0
-    ).count()
-    return base, rolled
-
-
-def clear_semantic_label_cache() -> None:
-    """Forget the semantic label-state memo AND drop this process'
-    adoption sidecars, restoring the cold build/fold paths (bench
-    entry ``semantic_labelroll``)."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _SEM_LABEL_READY.clear()
-    for path in list(_SEM_LABEL_SIDECARS):
-        remove_sidecar_file(path)
-        _SEM_LABEL_SIDECARS.discard(path)
 
 
 def _sem_base_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4915,30 +4560,35 @@ def _sem_fold_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SEM_LABEL_ROLL = BK.StateSpec(
+    name="sem_labelroll",
+    tables=lambda spark, sf_dir: {"verdicts": _sem_label_table(sf_dir)},
+    params=_sem_label_params,
+    source=_embeddings,
+    base=_sem_base,
+    write_base=BK.frame_writer(
+        _sem_base_verdicts, "vec_id", SEM_INDEX_BUCKETS
+    ),
+    fold=lambda: F.col("vec_id") % SEM_INC_MOD == 0,
+    append_fold=BK.frame_writer(
+        _sem_fold_verdicts, "vec_id", SEM_INDEX_BUCKETS, append=True
+    ),
+)
+
+
+def clear_semantic_label_cache() -> None:
+    """Forget the semantic label-state memo AND drop this process'
+    adoption sidecars, restoring the cold build/fold paths (bench
+    entry ``semantic_labelroll``)."""
+    BK.clear_state(SEM_LABEL_ROLL)
+
+
 def semantic_label_restore_base(
     spark: SparkSession, sf_dir: str
 ) -> None:
     """Bench/test device: force the verdict table back to the pre-fold
     BASE state so the next roll-forward performs the fold alone."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _sem_label_table(sf_dir)
-    _SEM_LABEL_READY.discard(
-        (spark.sparkContext.applicationId, sf_dir)
-    )
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(
-        _sem_base_verdicts(spark, sf_dir),
-        tbl,
-        "vec_id",
-        n_buckets=SEM_INDEX_BUCKETS,
-    )
-    pb, _ = _sem_label_payloads(spark, sf_dir, tbl)
-    _SEM_LABEL_SIDECARS.add(write_sidecar(spark, tbl, pb))
+    BK.restore_base(spark, SEM_LABEL_ROLL, sf_dir)
 
 
 def semantic_label_rollforward(
@@ -4947,51 +4597,8 @@ def semantic_label_rollforward(
     """Advance the persisted SemDeDup verdict state from covering the
     BASE block to base ∪ increment by appending the increment's
     frozen-model verdicts — the nightly keep/drop maintenance in
-    increment-linear form (the three-state contract; crash ordering:
-    sidecar removed before the append, rolled written last)."""
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _sem_label_table(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEM_LABEL_READY:
-        return tbl
-    pb, pr = _sem_label_payloads(spark, sf_dir, tbl)
-    if sidecar_adoptable(spark, tbl, pr, [tbl]):
-        _SEM_LABEL_SIDECARS.add(sidecar_path(spark, tbl))
-        _SEM_LABEL_READY.add(key)
-        return tbl
-    if not sidecar_adoptable(spark, tbl, pb, [tbl]):
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(
-            _sem_base_verdicts(spark, sf_dir),
-            tbl,
-            "vec_id",
-            n_buckets=SEM_INDEX_BUCKETS,
-        )
-    scpath = sidecar_path(spark, tbl)
-    remove_sidecar_file(scpath)
-    _SEM_LABEL_SIDECARS.discard(scpath)
-    try:
-        append_bucketed(
-            _sem_fold_verdicts(spark, sf_dir),
-            tbl,
-            "vec_id",
-            n_buckets=SEM_INDEX_BUCKETS,
-        )
-    except Exception:
-        drop_bucketed_table(spark, tbl)
-        raise
-    _SEM_LABEL_SIDECARS.add(write_sidecar(spark, tbl, pr))
-    _SEM_LABEL_READY.add(key)
-    return tbl
+    increment-linear form (the ``bucketed.roll_forward`` contract)."""
+    return BK.roll_forward(spark, SEM_LABEL_ROLL, sf_dir)["verdicts"]
 
 
 def semantic_labels_rolled(

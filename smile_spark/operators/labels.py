@@ -14,10 +14,14 @@ corpus-linear nightly input), how to produce its increment-incident
 pair set (the increment-linear daily input), which doc ids count as
 "today's increment", and the parameter payload that invalidates
 persisted state.  Everything else — cc labels over the base graph,
-the collapsed-supernode fold, the base+delta reader, compaction, the
-sidecar adoption contract, and the ADVICE-r14 crash ordering (remove
-the sidecar BEFORE the first append, write the rolled state LAST) —
-is shared code below.
+the collapsed-supernode fold, the base+delta reader and compaction —
+is shared code below.  Each rung declares two
+``bucketed.StateSpec`` s, the read-only base label table and the
+delta-log roll, whose sidecars, adoption, three-state roll-forward
+and crash ordering (sidecar removed before any table write, the new
+one published last) are the one persisted-state lifecycle in
+``sources/bucketed.py``; the base-block and fold row counts that
+fingerprint them split ``universe`` by ``is_increment``.
 
 Collapse-correctness argument: a stored base label IS the min doc_id
 of its base component, so min-label cc over the COLLAPSED graph —
@@ -48,20 +52,15 @@ operators/graph.py::cc_labels.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LABEL_STATE_BUCKETS = 16
+from smile_spark.sources import bucketed as BK
 
-# rung name -> (appId, sf_dir) memo / sidecar-path registries.  The
-# single-writer warehouse assumption of the whole persisted-index
-# family applies unchanged (see dedup._setsim_index_tables).
-_RO_READY: set[tuple[str, str, str]] = set()
-_RO_SIDECARS: dict[str, set[str]] = {}
-_ROLL_READY: set[tuple[str, str, str]] = set()
-_ROLL_SIDECARS: dict[str, set[str]] = {}
+LABEL_STATE_BUCKETS = 16
 
 
 @dataclass(frozen=True)
@@ -74,11 +73,13 @@ class LabelRung:
     build).  ``inc_pairs`` — the increment-incident (a, b) pair frame
     (increment-linear; ≥1 endpoint satisfies ``is_increment``).
     ``is_increment(col)`` — Column predicate classifying a doc id as
-    today's increment.  ``params(spark, sf_dir)`` — every build
-    parameter that must invalidate persisted state (goes verbatim
-    into both sidecar payloads).  ``base_count``/``fold_count`` —
-    covered-block row counts (cheap metadata counts) so snapshot
-    changes also invalidate."""
+    today's increment; it also splits ``universe`` into the covered
+    base and fold row counts that fingerprint persisted state.
+    ``params(spark, sf_dir)`` — every build parameter that must
+    invalidate persisted state (goes verbatim into both sidecar
+    payloads).  Construction registers the rung's two
+    ``bucketed.StateSpec`` s: ``ro`` (the read-only base label table)
+    and ``roll`` (the delta-log roll state)."""
 
     name: str
     table_base: str
@@ -87,8 +88,6 @@ class LabelRung:
     inc_pairs: Callable[[SparkSession, str], DataFrame]
     is_increment: Callable[[F.Column], F.Column]
     params: Callable[[SparkSession, str], dict]
-    base_count: Callable[[SparkSession, str], int]
-    fold_count: Callable[[SparkSession, str], int]
     # optional fast path (r16): produce the base (id, component)
     # labels DIRECTLY, row-equal to cc over base_pairs.  The text rung
     # contracts identical-token-set groups to representatives before
@@ -97,70 +96,67 @@ class LabelRung:
     # yields the same minima.  When set, the nightly build and the
     # roll-base restore use it instead of the generic pair-cc path.
     base_labels: Callable[[SparkSession, str], DataFrame] | None = None
+    ro: BK.StateSpec = field(init=False, repr=False, compare=False)
+    roll: BK.StateSpec = field(init=False, repr=False, compare=False)
 
+    def __post_init__(self) -> None:
+        rung = self
 
-def _registries(rung: LabelRung) -> None:
-    _RO_SIDECARS.setdefault(rung.name, set())
-    _ROLL_SIDECARS.setdefault(rung.name, set())
+        def params(op: str) -> Callable[[SparkSession, str], dict]:
+            return lambda spark, sf_dir: {
+                **rung.params(spark, sf_dir),
+                "op": op,
+                "n_buckets": LABEL_STATE_BUCKETS,
+            }
+
+        common = dict(
+            source=rung.universe,
+            base=lambda: ~rung.is_increment(F.col("doc_id")),
+        )
+        object.__setattr__(
+            self,
+            "ro",
+            BK.StateSpec(
+                name=f"labels_ro_{rung.name}",
+                tables=lambda spark, sf_dir: {
+                    "labels": _ro_table(rung, sf_dir)
+                },
+                params=params(f"{rung.name}_labels"),
+                write_base=partial(_ro_write, rung),
+                **common,
+            ),
+        )
+        object.__setattr__(
+            self,
+            "roll",
+            BK.StateSpec(
+                name=f"labels_roll_{rung.name}",
+                tables=lambda spark, sf_dir: roll_tables(rung, sf_dir),
+                sidecar=lambda spark, sf_dir: _roll_sidecar_name(
+                    rung, sf_dir
+                ),
+                params=params(f"{rung.name}_labelroll"),
+                write_base=partial(_roll_base_write, rung),
+                fold=lambda: rung.is_increment(F.col("doc_id")),
+                append_fold=partial(_roll_fold, rung),
+                **common,
+            ),
+        )
 
 
 def _ro_table(rung: LabelRung, sf_dir: str) -> str:
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    return bucket_table_name(f"{rung.table_base}_ro", sf_dir)
+    return BK.bucket_table_name(f"{rung.table_base}_ro", sf_dir)
 
 
 def roll_tables(rung: LabelRung, sf_dir: str) -> dict[str, str]:
-    from smile_spark.sources.bucketed import bucket_table_name
-
     return {
-        "labels": bucket_table_name(f"{rung.table_base}_labels", sf_dir),
-        "delta": bucket_table_name(f"{rung.table_base}_delta", sf_dir),
+        "labels": BK.bucket_table_name(f"{rung.table_base}_labels", sf_dir),
+        "delta": BK.bucket_table_name(f"{rung.table_base}_delta", sf_dir),
     }
 
 
 def _roll_sidecar_name(rung: LabelRung, sf_dir: str) -> str:
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    return bucket_table_name(rung.table_base, sf_dir)
-
-
-def _payload(
-    spark: SparkSession,
-    sf_dir: str,
-    rung: LabelRung,
-    op: str,
-    tables: list[str],
-) -> dict:
-    p = dict(rung.params(spark, sf_dir))
-    p.update(
-        {
-            "op": op,
-            "base_rows": rung.base_count(spark, sf_dir),
-            "n_buckets": LABEL_STATE_BUCKETS,
-            "sf_dir": sf_dir,
-            "tables": sorted(tables),
-        }
-    )
-    return p
-
-
-def _roll_payloads(
-    spark: SparkSession, sf_dir: str, rung: LabelRung
-) -> tuple[dict, dict]:
-    tables = roll_tables(rung, sf_dir)
-    base = _payload(
-        spark,
-        sf_dir,
-        rung,
-        f"{rung.name}_labelroll",
-        list(tables.values()),
-    )
-    base["state"] = "base"
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = rung.fold_count(spark, sf_dir)
-    return base, rolled
+    return BK.bucket_table_name(rung.table_base, sf_dir)
 
 
 def clear_label_state(rung: LabelRung, which: str = "all") -> None:
@@ -171,23 +167,9 @@ def clear_label_state(rung: LabelRung, which: str = "all") -> None:
     delta-log roll state), or "all" — the bench's roll-fold loop must
     clear ONLY the roll, or it would force the registered live-fold
     entries to rebuild the read-only table inside their timed pass."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _registries(rung)
-    targets = {
-        "ro": [(_RO_READY, _RO_SIDECARS[rung.name])],
-        "roll": [(_ROLL_READY, _ROLL_SIDECARS[rung.name])],
-        "all": [
-            (_RO_READY, _RO_SIDECARS[rung.name]),
-            (_ROLL_READY, _ROLL_SIDECARS[rung.name]),
-        ],
-    }[which]
-    for ready, sidecars in targets:
-        for key in [k for k in ready if k[2] == rung.name]:
-            ready.discard(key)
-        for path in list(sidecars):
-            remove_sidecar_file(path)
-            sidecars.discard(path)
+    specs = {"ro": [rung.ro], "roll": [rung.roll], "all": [rung.ro, rung.roll]}
+    for spec in specs[which]:
+        BK.clear_state(spec)
 
 
 def _with_base_labels(
@@ -229,34 +211,9 @@ def label_index_build(
 ) -> str:
     """Persist the rung's READ-ONLY base label table (id, component)
     bucketed by id — the nightly clustering job the live incremental
-    fold reads.  Standard sidecar-adoption contract."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    _registries(rung)
-    tbl = _ro_table(rung, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, rung.name)
-    if key in _RO_READY:
-        return tbl
-    expected = _payload(spark, sf_dir, rung, f"{rung.name}_labels", [tbl])
-    if sidecar_adoptable(spark, tbl, expected, [tbl]):
-        _RO_SIDECARS[rung.name].add(sidecar_path(spark, tbl))
-        _RO_READY.add(key)
-        return tbl
-
-    def sink(labels: DataFrame) -> None:
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(labels, tbl, "id", n_buckets=LABEL_STATE_BUCKETS)
-        _RO_SIDECARS[rung.name].add(write_sidecar(spark, tbl, expected))
-
-    _with_base_labels(spark, sf_dir, rung, sink)
-    _RO_READY.add(key)
-    return tbl
+    fold reads.  The shared ``bucketed.build_state`` adoption
+    contract."""
+    return BK.build_state(spark, rung.ro, sf_dir)["labels"]
 
 
 def _fold_delta(
@@ -430,26 +387,34 @@ def clusters_incremental(
     return out
 
 
+def _ro_write(
+    rung: LabelRung, spark: SparkSession, sf_dir: str, tables: dict
+) -> None:
+    """Corpus-linear build of the READ-ONLY base label table."""
+
+    def sink(labels: DataFrame) -> None:
+        BK.drop_bucketed_table(spark, tables["labels"])
+        BK.write_bucketed(
+            labels, tables["labels"], "id", n_buckets=LABEL_STATE_BUCKETS
+        )
+
+    _with_base_labels(spark, sf_dir, rung, sink)
+
+
 def _roll_base_write(
-    spark: SparkSession, sf_dir: str, rung: LabelRung
+    rung: LabelRung, spark: SparkSession, sf_dir: str, tables: dict
 ) -> None:
     """Corpus-linear base build of the ROLL state: cc labels into the
     roll's label table plus an EMPTY delta (the schema the fold
     appends)."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-    )
-
-    tables = roll_tables(rung, sf_dir)
 
     def sink(labels: DataFrame) -> None:
         for t in tables.values():
-            drop_bucketed_table(spark, t)
-        write_bucketed(
+            BK.drop_bucketed_table(spark, t)
+        BK.write_bucketed(
             labels, tables["labels"], "id", n_buckets=LABEL_STATE_BUCKETS
         )
-        write_bucketed(
+        BK.write_bucketed(
             labels.select(
                 "id", "component", F.lit(0).cast("int").alias("kind")
             ).limit(0),
@@ -468,51 +433,27 @@ def roll_restore_base(
     BASE state (drop + corpus-linear rebuild + base sidecar) so the
     next roll-forward performs the fold alone.  Production never
     calls this."""
-    from smile_spark.sources.bucketed import write_sidecar
-
-    _registries(rung)
-    key = (spark.sparkContext.applicationId, sf_dir, rung.name)
-    _ROLL_READY.discard(key)
-    _roll_base_write(spark, sf_dir, rung)
-    pb, _ = _roll_payloads(spark, sf_dir, rung)
-    _ROLL_SIDECARS[rung.name].add(
-        write_sidecar(spark, _roll_sidecar_name(rung, sf_dir), pb)
-    )
+    BK.restore_base(spark, rung.roll, sf_dir)
 
 
 def _roll_fold(
-    spark: SparkSession, sf_dir: str, rung: LabelRung
+    rung: LabelRung, spark: SparkSession, sf_dir: str, tables: dict
 ) -> None:
     """Append the day's merged labels as DELTA rows — the
-    increment-linear nightly step.  On an in-process append failure
-    the tables are dropped (the sidecar is ALREADY gone: the caller
-    removed it before invoking, the ADVICE-r14 crash ordering), so no
-    half-appended state ever adopts."""
+    increment-linear nightly step (run by ``bucketed.roll_forward``
+    with the sidecar already removed; a failed append drops the
+    tables, so no half-appended state ever adopts)."""
     from smile_spark.session import unpersist_checkpoint
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        read_bucketed,
-    )
 
-    tables = roll_tables(rung, sf_dir)
-    labels = read_bucketed(spark, tables["labels"])
+    labels = BK.read_bucketed(spark, tables["labels"])
     inc_src = rung.inc_pairs(spark, sf_dir)
     inc = inc_src.select("a", "b").distinct().localCheckpoint()
     del inc_src
     delta, m = _fold_delta(spark, rung, inc, labels)
     try:
-        try:
-            append_bucketed(
-                delta,
-                tables["delta"],
-                "id",
-                n_buckets=LABEL_STATE_BUCKETS,
-            )
-        except Exception:
-            for t in tables.values():
-                drop_bucketed_table(spark, t)
-            raise
+        BK.append_bucketed(
+            delta, tables["delta"], "id", n_buckets=LABEL_STATE_BUCKETS
+        )
     finally:
         unpersist_checkpoint(m)
         unpersist_checkpoint(inc)
@@ -523,41 +464,14 @@ def label_rollforward(
 ) -> dict[str, str]:
     """Advance the rung's persisted LABEL state from covering the BASE
     block to covering base ∪ increment by appending a delta of merged
-    labels.  Three-state contract per (application, sf_dir, rung):
-    adopt rolled → fold over base → full rebuild then fold; every
-    parameter lives in both sidecar payloads, so parameter changes
-    always land in the rebuild arm.  Crash contract (ADVICE r14): the
-    sidecar is removed BEFORE the first append and the rolled sidecar
-    written LAST, so a process crash anywhere inside the fold leaves
-    no adoptable state — a second fold (silent delta duplication) is
-    structurally impossible."""
-    from smile_spark.sources.bucketed import (
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_sidecar,
-    )
-
-    _registries(rung)
-    tables = roll_tables(rung, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, rung.name)
-    if key in _ROLL_READY:
-        return tables
-    name = _roll_sidecar_name(rung, sf_dir)
-    pb, pr = _roll_payloads(spark, sf_dir, rung)
-    if sidecar_adoptable(spark, name, pr, list(tables.values())):
-        _ROLL_SIDECARS[rung.name].add(sidecar_path(spark, name))
-        _ROLL_READY.add(key)
-        return tables
-    if not sidecar_adoptable(spark, name, pb, list(tables.values())):
-        _roll_base_write(spark, sf_dir, rung)
-    scpath = sidecar_path(spark, name)
-    remove_sidecar_file(scpath)
-    _ROLL_SIDECARS[rung.name].discard(scpath)
-    _roll_fold(spark, sf_dir, rung)
-    _ROLL_SIDECARS[rung.name].add(write_sidecar(spark, name, pr))
-    _ROLL_READY.add(key)
-    return tables
+    labels — the ``bucketed.roll_forward`` three-state contract per
+    (application, sf_dir, rung): adopt rolled → fold over base → full
+    rebuild then fold; every parameter lives in both sidecar payloads,
+    so parameter changes always land in the rebuild arm, and the
+    sidecar is removed before the append and written last, so a
+    second fold (silent delta duplication) is structurally
+    impossible."""
+    return BK.roll_forward(spark, rung.roll, sf_dir)
 
 
 def rolled_label_state(
@@ -606,41 +520,30 @@ def label_compact(
     """LSM-style compaction: rewrite the base label table as the
     EFFECTIVE rolled state and truncate the delta — amortized
     corpus-linear.  Readers see an identical state before and after.
-    Crash contract: sidecar removed FIRST, rewritten LAST, so a crash
-    anywhere inside leaves no adoptable state and the next session
-    falls into the full-rebuild arm.  The rewrite goes through a temp
-    table + catalog RENAME (a filesystem move for managed parquet
-    tables; on an object store a transactional table format would
-    replace this device)."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        read_bucketed,
-        remove_sidecar_file,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    _registries(rung)
+    The rewrite runs inside ``bucketed.replace_state`` (sidecar
+    removed first, rewritten last), so a crash anywhere inside leaves
+    no adoptable state and the next session falls into the
+    full-rebuild arm.  It goes through a temp table + catalog RENAME
+    (a filesystem move for managed parquet tables; on an object store
+    a transactional table format would replace this device)."""
     tables = label_rollforward(spark, sf_dir, rung)
-    name = _roll_sidecar_name(rung, sf_dir)
-    _, pr = _roll_payloads(spark, sf_dir, rung)
+    _, pr = BK.roll_payloads(spark, rung.roll, sf_dir)
     eff = rolled_label_state(spark, sf_dir, rung)
     empty_delta = spark.createDataFrame(
-        [], read_bucketed(spark, tables["delta"]).schema
+        [], BK.read_bucketed(spark, tables["delta"]).schema
     )
-    scpath = sidecar_path(spark, name)
-    remove_sidecar_file(scpath)
-    _ROLL_SIDECARS[rung.name].discard(scpath)
-    tmp = f"{tables['labels']}_cmp"
-    drop_bucketed_table(spark, tmp)
-    write_bucketed(eff, tmp, "id", n_buckets=LABEL_STATE_BUCKETS)
-    drop_bucketed_table(spark, tables["labels"])
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {tables['labels']}")
-    write_bucketed(
-        empty_delta, tables["delta"], "id", n_buckets=LABEL_STATE_BUCKETS
-    )
-    _ROLL_SIDECARS[rung.name].add(write_sidecar(spark, name, pr))
+
+    def rewrite() -> None:
+        tmp = f"{tables['labels']}_cmp"
+        BK.drop_bucketed_table(spark, tmp)
+        BK.write_bucketed(eff, tmp, "id", n_buckets=LABEL_STATE_BUCKETS)
+        BK.drop_bucketed_table(spark, tables["labels"])
+        spark.sql(f"ALTER TABLE {tmp} RENAME TO {tables['labels']}")
+        BK.write_bucketed(
+            empty_delta, tables["delta"], "id", n_buckets=LABEL_STATE_BUCKETS
+        )
+
+    BK.replace_state(spark, rung.roll, sf_dir, rewrite, pr)
     return tables
 
 

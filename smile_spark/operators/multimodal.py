@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smile_spark.operators import labels as L
+from smile_spark.sources import bucketed as BK
 from smile_spark.tables import table
 
 # --- real numpy codecs ----------------------------------------------------
@@ -1696,13 +1697,6 @@ IMAGE_DHASH_CLUSTERS_SQL = L.keep_list_sql(
 # decode + banding for its OWN documents only.
 DHASH_INC_MOD = 5
 DHASH_INDEX_BUCKETS = 16
-# (applicationId, sf_dir, modality) -> index table is ready
-_BAND_INDEX_READY: set[tuple[str, str, str]] = set()
-_BAND_INDEX_SIDECARS: dict[str, set[str]] = {
-    "image": set(),
-    "audio": set(),
-    "video": set(),
-}
 # modality -> (subset mod, subset residue, table base).  Image/audio
 # subsets are the modality thirds (doc_id % 3); video's tolerant rung
 # lives on the HI-RES subset (doc_id % HIRES_MOD == 2, every second
@@ -1738,41 +1732,27 @@ def _band_index_table(sf_dir: str, modality: str) -> str:
     single-writer assumption as the setsim index tables applies (see
     dedup._setsim_index_tables): one application owns the warehouse
     at a time; the sidecar adoption path never drops anything."""
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    return bucket_table_name(_BAND_MODALITY[modality][2], sf_dir)
-
-
-def _clear_band_index(modality: str) -> None:
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    for key in [k for k in _BAND_INDEX_READY if k[2] == modality]:
-        _BAND_INDEX_READY.discard(key)
-    sidecars = _BAND_INDEX_SIDECARS[modality]
-    for path in list(sidecars):
-        remove_sidecar_file(path)
-        sidecars.discard(path)
+    return BK.bucket_table_name(_BAND_MODALITY[modality][2], sf_dir)
 
 
 def clear_dhash_index_cache() -> None:
     """Forget the per-process IMAGE index memo AND drop the adoption
     sidecars this process wrote, so the next probe (or the bench's
     cold ``dhash_index_build`` loop) runs the full decode + band +
-    write path instead of adopting the table it just built.  The
-    build overwrites the table in place — nothing to unpersist."""
-    _clear_band_index("image")
+    write path instead of adopting the table it just built."""
+    BK.clear_state(BAND_INDEX["image"])
 
 
 def clear_audio_index_cache() -> None:
     """The AUDIO twin of :func:`clear_dhash_index_cache` (bench cold
     entry ``audio_index_build``)."""
-    _clear_band_index("audio")
+    BK.clear_state(BAND_INDEX["audio"])
 
 
 def clear_video_index_cache() -> None:
     """The VIDEO twin of :func:`clear_dhash_index_cache` (bench cold
     entry ``video_index_build``)."""
-    _clear_band_index("video")
+    BK.clear_state(BAND_INDEX["video"])
 
 
 def _band_rows_from_hashes(hashes: DataFrame) -> DataFrame:
@@ -1795,6 +1775,67 @@ def _band_rows_from_hashes(hashes: DataFrame) -> DataFrame:
     )
 
 
+def _band_base() -> F.Column:
+    """The perceptual base block (doc_id % DHASH_INC_MOD != 0)."""
+    return F.col("doc_id") % DHASH_INC_MOD != 0
+
+
+def _band_fold() -> F.Column:
+    return F.col("doc_id") % BAND_ROLL_MOD == 0
+
+
+# image/audio payloads are byte-identical to pre-video builds so
+# existing warehouse sidecars keep adopting; the video payload records
+# the hi-res dHash grid plus the per-video frame count
+_BAND_GRIDS = {
+    "image": [DHASH_GW, DHASH_GH],
+    "audio": [AUD_FP_GRID],
+    "video": [DHASH_GW, DHASH_GH, VID_FRAMES],
+}
+
+
+def _band_spec(modality: str, roll: bool) -> BK.StateSpec:
+    """The band-table state of one modality: the nightly index
+    (``roll=False``) or its roll-forward twin."""
+    sub_mod, sub_res, _ = _BAND_MODALITY[modality]
+    table_name = _band_roll_table if roll else _band_index_table
+
+    def rows(pred: Callable[[], F.Column]) -> Callable:
+        return lambda spark, sf_dir: _band_rows_from_hashes(
+            _band_frame(spark, sf_dir, modality, pred())
+        )
+
+    def params(spark: SparkSession, sf_dir: str) -> dict:
+        p = {
+            "modality": modality,
+            "inc_mod": DHASH_INC_MOD,
+            "n_buckets": DHASH_INDEX_BUCKETS,
+            "grid": _BAND_GRIDS[modality],
+        }
+        if roll:
+            p["roll_mod"] = BAND_ROLL_MOD
+        return p
+
+    return BK.StateSpec(
+        name=f"band_{'roll' if roll else 'idx'}_{modality}",
+        tables=lambda spark, sf_dir: {"bands": table_name(sf_dir, modality)},
+        params=params,
+        source=lambda spark, sf_dir: table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % sub_mod == sub_res
+        ),
+        base=_band_base,
+        write_base=BK.frame_writer(
+            rows(_band_base), "bv", DHASH_INDEX_BUCKETS
+        ),
+        fold=_band_fold if roll else None,
+        append_fold=BK.frame_writer(
+            rows(_band_fold), "bv", DHASH_INDEX_BUCKETS, append=True
+        )
+        if roll
+        else None,
+    )
+
+
 def _band_index_build(
     spark: SparkSession, sf_dir: str, modality: str
 ) -> str:
@@ -1812,67 +1853,13 @@ def _band_index_build(
     (VERDICT r12 What's-missing #1): the corpus pays decode + banding
     ONCE per snapshot, and every daily ingest probes the bucketed
     band table — the ``setsim_index_build`` contract applied to the
-    perceptual family.  Sidecar adoption is shared with setsim: a
-    fresh session whose memo is empty adopts a matching table instead
-    of rebuilding; stale sidecars rebuild; the cold path stays behind
-    the per-modality cache clears for bench pricing.
+    perceptual family.  Sidecar adoption is the shared
+    ``bucketed.build_state``: a fresh session whose memo is empty
+    adopts a matching table instead of rebuilding; stale sidecars
+    rebuild; the cold path stays behind the per-modality cache clears
+    for bench pricing.
     """
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        sidecar_adoptable,
-        write_bucketed,
-        write_sidecar,
-    )
-    from smile_spark.tables import table as _table
-
-    sub_mod, sub_res, _ = _BAND_MODALITY[modality]
-    tbl = _band_index_table(sf_dir, modality)
-    key = (spark.sparkContext.applicationId, sf_dir, modality)
-    if key in _BAND_INDEX_READY:
-        return tbl
-    base_pred = (F.col("doc_id") % sub_mod == sub_res) & (
-        F.col("doc_id") % DHASH_INC_MOD != 0
-    )
-    n_base = (
-        _table(spark, sf_dir, "documents").filter(base_pred).count()
-    )
-    # image/audio payloads are byte-identical to pre-video builds so
-    # existing warehouse sidecars keep adopting; the video payload
-    # records the hi-res dHash grid plus the per-video frame count
-    grids = {
-        "image": [DHASH_GW, DHASH_GH],
-        "audio": [AUD_FP_GRID],
-        "video": [DHASH_GW, DHASH_GH, VID_FRAMES],
-    }
-    expected = {
-        "base_rows": n_base,
-        "modality": modality,
-        "inc_mod": DHASH_INC_MOD,
-        "n_buckets": DHASH_INDEX_BUCKETS,
-        "grid": grids[modality],
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    if sidecar_adoptable(spark, tbl, expected, [tbl]):
-        # track the sidecar whether built OR adopted (the IVF
-        # contract, ADVICE r13 #2) so the per-modality cache clears
-        # always restore the cold decode+band+write path
-        from smile_spark.sources.bucketed import sidecar_path
-
-        _BAND_INDEX_SIDECARS[modality].add(sidecar_path(spark, tbl))
-        _BAND_INDEX_READY.add(key)
-        return tbl
-    hashes = _band_frame(
-        spark, sf_dir, modality, F.col("doc_id") % DHASH_INC_MOD != 0
-    )
-    bands = _band_rows_from_hashes(hashes)
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(bands, tbl, "bv", n_buckets=DHASH_INDEX_BUCKETS)
-    _BAND_INDEX_SIDECARS[modality].add(
-        write_sidecar(spark, tbl, expected)
-    )
-    _BAND_INDEX_READY.add(key)
-    return tbl
+    return BK.build_state(spark, BAND_INDEX[modality], sf_dir)["bands"]
 
 
 def dhash_index_build(spark: SparkSession, sf_dir: str) -> str:
@@ -2046,86 +2033,33 @@ def video_dhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # test; image and audio keep non-degenerate probe blocks.
 
 BAND_ROLL_MOD = 2 * DHASH_INC_MOD  # fold: % 10 == 0; probe: % 10 == 5
-_BAND_ROLL_READY: set[tuple[str, str, str]] = set()
-_BAND_ROLL_SIDECARS: dict[str, set[str]] = {
-    "image": set(),
-    "audio": set(),
-    "video": set(),
-}
 
 
 def _band_roll_table(sf_dir: str, modality: str) -> str:
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    return bucket_table_name(
+    return BK.bucket_table_name(
         f"{_BAND_MODALITY[modality][2]}_roll", sf_dir
     )
 
 
-def _band_roll_payloads(
-    spark: SparkSession, sf_dir: str, modality: str, tbl: str
-) -> tuple[dict, dict]:
-    """(base-state, rolled-state) sidecar payloads — every build
-    parameter plus covered-block row counts, so parameter AND
-    snapshot changes force the full rebuild."""
-    from smile_spark.tables import table as _table
-
-    sub_mod, sub_res, _ = _BAND_MODALITY[modality]
-    docs = _table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % sub_mod == sub_res
-    )
-    grids = {
-        "image": [DHASH_GW, DHASH_GH],
-        "audio": [AUD_FP_GRID],
-        "video": [DHASH_GW, DHASH_GH, VID_FRAMES],
-    }
-    base = {
-        "state": "base",
-        "base_rows": docs.filter(
-            F.col("doc_id") % DHASH_INC_MOD != 0
-        ).count(),
-        "modality": modality,
-        "inc_mod": DHASH_INC_MOD,
-        "roll_mod": BAND_ROLL_MOD,
-        "n_buckets": DHASH_INDEX_BUCKETS,
-        "grid": grids[modality],
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = docs.filter(
-        F.col("doc_id") % BAND_ROLL_MOD == 0
-    ).count()
-    return base, rolled
-
-
-def _clear_band_roll(modality: str) -> None:
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    for key in [k for k in _BAND_ROLL_READY if k[2] == modality]:
-        _BAND_ROLL_READY.discard(key)
-    sidecars = _BAND_ROLL_SIDECARS[modality]
-    for path in list(sidecars):
-        remove_sidecar_file(path)
-        sidecars.discard(path)
+BAND_INDEX = {m: _band_spec(m, roll=False) for m in _BAND_MODALITY}
+BAND_ROLL = {m: _band_spec(m, roll=True) for m in _BAND_MODALITY}
 
 
 def clear_dhash_roll_cache() -> None:
     """Forget the IMAGE roll-forward memo AND drop this process'
     adoption sidecars, so the next call runs the full base-rebuild +
     fold path (bench cold pricing)."""
-    _clear_band_roll("image")
+    BK.clear_state(BAND_ROLL["image"])
 
 
 def clear_audio_roll_cache() -> None:
     """The AUDIO twin of :func:`clear_dhash_roll_cache`."""
-    _clear_band_roll("audio")
+    BK.clear_state(BAND_ROLL["audio"])
 
 
 def clear_video_roll_cache() -> None:
     """The VIDEO twin of :func:`clear_dhash_roll_cache`."""
-    _clear_band_roll("video")
+    BK.clear_state(BAND_ROLL["video"])
 
 
 def band_roll_restore_base(
@@ -2135,29 +2069,7 @@ def band_roll_restore_base(
     corpus-linear rebuild + base sidecar) — the bench/test device for
     pricing the FOLD alone (a fold is a one-way append).  Production
     never calls this."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _band_roll_table(sf_dir, modality)
-    key = (spark.sparkContext.applicationId, sf_dir, modality)
-    _BAND_ROLL_READY.discard(key)
-    hashes = _band_frame(
-        spark, sf_dir, modality, F.col("doc_id") % DHASH_INC_MOD != 0
-    )
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(
-        _band_rows_from_hashes(hashes),
-        tbl,
-        "bv",
-        n_buckets=DHASH_INDEX_BUCKETS,
-    )
-    pb, _ = _band_roll_payloads(spark, sf_dir, modality, tbl)
-    _BAND_ROLL_SIDECARS[modality].add(
-        write_sidecar(spark, tbl, pb)
-    )
+    BK.restore_base(spark, BAND_ROLL[modality], sf_dir)
 
 
 def band_index_rollforward(
@@ -2166,68 +2078,11 @@ def band_index_rollforward(
     """Advance the persisted band index from covering the BASE block
     to base ∪ fold by appending the fold block's band rows and
     updating the sidecar — the increment-linear nightly step for the
-    perceptual rungs (the setsim_index_rollforward three-state
+    perceptual rungs (the ``bucketed.roll_forward`` three-state
     contract: adopt rolled → fold over base → full rebuild then
     fold).  The fold pays decode + banding for its OWN documents
-    only; a failed append drops the table and sidecar so a
-    half-appended index is never adoptable."""
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _band_roll_table(sf_dir, modality)
-    key = (spark.sparkContext.applicationId, sf_dir, modality)
-    if key in _BAND_ROLL_READY:
-        return tbl
-    pb, pr = _band_roll_payloads(spark, sf_dir, modality, tbl)
-    if sidecar_adoptable(spark, tbl, pr, [tbl]):
-        _BAND_ROLL_SIDECARS[modality].add(sidecar_path(spark, tbl))
-        _BAND_ROLL_READY.add(key)
-        return tbl
-    if not sidecar_adoptable(spark, tbl, pb, [tbl]):
-        hashes = _band_frame(
-            spark, sf_dir, modality, F.col("doc_id") % DHASH_INC_MOD != 0
-        )
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(
-            _band_rows_from_hashes(hashes),
-            tbl,
-            "bv",
-            n_buckets=DHASH_INDEX_BUCKETS,
-        )
-        _BAND_ROLL_SIDECARS[modality].add(write_sidecar(spark, tbl, pb))
-    # crash contract (ADVICE r14): remove the sidecar BEFORE the
-    # append so a crash between the append and the rolled write can
-    # never leave a BASE sidecar adoptable over a folded table (a
-    # second fold would silently duplicate band rows)
-    scpath = sidecar_path(spark, tbl)
-    remove_sidecar_file(scpath)
-    _BAND_ROLL_SIDECARS[modality].discard(scpath)
-    fold_hashes = _band_frame(
-        spark, sf_dir, modality, F.col("doc_id") % BAND_ROLL_MOD == 0
-    )
-    try:
-        append_bucketed(
-            _band_rows_from_hashes(fold_hashes),
-            tbl,
-            "bv",
-            n_buckets=DHASH_INDEX_BUCKETS,
-        )
-    except Exception:
-        drop_bucketed_table(spark, tbl)
-        scpath = sidecar_path(spark, tbl)
-        remove_sidecar_file(scpath)
-        _BAND_ROLL_SIDECARS[modality].discard(scpath)
-        raise
-    _BAND_ROLL_SIDECARS[modality].add(write_sidecar(spark, tbl, pr))
-    _BAND_ROLL_READY.add(key)
-    return tbl
+    only."""
+    return BK.roll_forward(spark, BAND_ROLL[modality], sf_dir)["bands"]
 
 
 def image_dhash_rolled_probe(
@@ -2270,12 +2125,6 @@ def image_dhash_rolled_probe(
 # probe's orientation).  Increment-internal pairs are by contract the
 # next nightly rebuild's input.
 
-# label grids: the banding parameters that invalidate a label table
-_LABEL_GRIDS = {
-    "image": [DHASH_GW, DHASH_GH],
-    "audio": [AUD_FP_GRID],
-    "video": [DHASH_GW, DHASH_GH, VID_FRAMES],
-}
 
 
 def _doc_pair_edges(pairs: DataFrame, modality: str) -> DataFrame:
@@ -2298,46 +2147,10 @@ def _doc_pair_edges(pairs: DataFrame, modality: str) -> DataFrame:
     )
 
 
-def _visual_rung(
-    name: str,
-    table_base: str,
-    universe: Callable[[SparkSession, str], DataFrame],
-    base_pairs: Callable[[SparkSession, str], DataFrame],
-    inc_pairs: Callable[[SparkSession, str], DataFrame],
-    params: Callable[[SparkSession, str], dict],
-) -> L.LabelRung:
-    """A label rung whose increment is the visual family's block
-    (doc_id % DHASH_INC_MOD == 0); the sidecars' covered-block counts
-    split ``universe`` by that predicate."""
-
-    def is_increment(c: F.Column) -> F.Column:
-        return c % DHASH_INC_MOD == 0
-
-    def base_count(spark: SparkSession, sf_dir: str) -> int:
-        return (
-            universe(spark, sf_dir)
-            .filter(~is_increment(F.col("doc_id")))
-            .count()
-        )
-
-    def fold_count(spark: SparkSession, sf_dir: str) -> int:
-        return (
-            universe(spark, sf_dir)
-            .filter(is_increment(F.col("doc_id")))
-            .count()
-        )
-
-    return L.LabelRung(
-        name=name,
-        table_base=table_base,
-        universe=universe,
-        base_pairs=base_pairs,
-        inc_pairs=inc_pairs,
-        is_increment=is_increment,
-        params=params,
-        base_count=base_count,
-        fold_count=fold_count,
-    )
+def _is_visual_increment(c: F.Column) -> F.Column:
+    """The visual family's increment block (doc_id % DHASH_INC_MOD ==
+    0), shared by the perceptual and cross-modal label rungs."""
+    return c % DHASH_INC_MOD == 0
 
 
 def _band_label_rung(modality: str, table_base: str) -> L.LabelRung:
@@ -2377,11 +2190,17 @@ def _band_label_rung(modality: str, table_base: str) -> L.LabelRung:
         return {
             "inc_mod": DHASH_INC_MOD,
             "max_distance": DHASH_MAX_DISTANCE,
-            "grid": _LABEL_GRIDS[modality],
+            "grid": _BAND_GRIDS[modality],
         }
 
-    return _visual_rung(
-        modality, table_base, universe, base_pairs, inc_pairs, params
+    return L.LabelRung(
+        name=modality,
+        table_base=table_base,
+        universe=universe,
+        base_pairs=base_pairs,
+        inc_pairs=inc_pairs,
+        is_increment=_is_visual_increment,
+        params=params,
     )
 
 
@@ -3122,13 +2941,14 @@ def _crossmodal_rung() -> L.LabelRung:
             "grid": [DHASH_GW, DHASH_GH, VID_FRAMES],
         }
 
-    return _visual_rung(
-        "crossmodal",
-        "crossmodal_labelroll",
-        universe,
-        base_pairs,
-        inc_pairs,
-        params,
+    return L.LabelRung(
+        name="crossmodal",
+        table_base="crossmodal_labelroll",
+        universe=universe,
+        base_pairs=base_pairs,
+        inc_pairs=inc_pairs,
+        is_increment=_is_visual_increment,
+        params=params,
     )
 
 

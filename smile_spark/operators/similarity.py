@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from smile_spark.sources import bucketed as BK
 from smile_spark.tables import table
 
 N_QUERIES = 3          # query vectors: vec_id < 3
@@ -1243,88 +1244,25 @@ def _pq_rank(emb: DataFrame, q: DataFrame, deq: DataFrame, k: int) -> DataFrame:
 # --- persisted PQ index (codebook + codes as bucketed tables) ---------------
 
 PQ_INDEX_BUCKETS = 16
-_PQ_INDEX_READY: set[tuple[str, str]] = set()
-_PQ_INDEX_SIDECARS: set[str] = set()
 
 
 def _pq_index_tables(sf_dir: str) -> dict[str, str]:
-    from smile_spark.sources.bucketed import bucket_table_name
-
     return {
-        part: bucket_table_name(f"pq_idx_{part}", sf_dir)
+        part: BK.bucket_table_name(f"pq_idx_{part}", sf_dir)
         for part in ("codes", "book")
     }
 
 
-def clear_pq_index_cache() -> None:
-    """Forget the per-process index memo AND drop the adoption
-    sidecars this process wrote, so the next probe (or the bench's
-    cold ``pq_index_build`` loop) reruns the full codebook + encode +
-    write path.  The build overwrites the tables in place — nothing
-    to unpersist."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _PQ_INDEX_READY.clear()
-    for path in list(_PQ_INDEX_SIDECARS):
-        remove_sidecar_file(path)
-        _PQ_INDEX_SIDECARS.discard(path)
-
-
-def pq_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """Materialize the PQ index once per corpus snapshot (VERDICT r12
-    next-round #3): the deterministic codebook (m, cid, cv) and the
-    corpus CODES (vec_id, m, cid) — M small ints per vector, the
-    32x-compressed artifact real PQ systems store — as two bucketed
-    tables.  Returns the table-name map.
-
-    This kills the two per-run costs of ann_pq_topk at 100 TB: the
-    codebook collect and, far worse, the O(N*M*K) re-encode of the
-    full corpus on EVERY query run.  After this build a search run
-    reads the code table (bucketed by vec_id) and reconstructs
-    codeword floats with a broadcast-codebook lookup — no distance
-    computation against the book at all.  Sidecar adoption as in
-    setsim_index_build / dhash_index_build; cold path behind
-    :func:`clear_pq_index_cache` for bench pricing.
-    """
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        sidecar_adoptable,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tables = _pq_index_tables(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PQ_INDEX_READY:
-        return tables
+def _pq_index_write(
+    spark: SparkSession, sf_dir: str, tables: dict[str, str]
+) -> None:
+    """The codebook + full-corpus encode, written as the two tables."""
     emb = _vectors(spark, sf_dir)
-    n_vec = emb.count()
-    expected = {
-        "n_vec": n_vec,
-        "m": PQ_M,
-        "k_target": PQ_K_TARGET,
-        "mod_floor": PQ_MOD_FLOOR,
-        "n_buckets": PQ_INDEX_BUCKETS,
-        "sf_dir": sf_dir,
-        "tables": sorted(tables.values()),
-    }
-    sidecar_name = tables["codes"]
-    if sidecar_adoptable(
-        spark, sidecar_name, expected, list(tables.values())
-    ):
-        # track the sidecar whether built OR adopted (the IVF
-        # contract, ADVICE r13 #2) so clear_pq_index_cache always
-        # restores the cold codebook+encode+write path
-        from smile_spark.sources.bucketed import sidecar_path
-
-        _PQ_INDEX_SIDECARS.add(sidecar_path(spark, sidecar_name))
-        _PQ_INDEX_READY.add(key)
-        return tables
     books = _pq_codebook(spark, emb)
     code = _pq_encode(spark, emb, books)
     for tbl in tables.values():
-        drop_bucketed_table(spark, tbl)
-    write_bucketed(
+        BK.drop_bucketed_table(spark, tbl)
+    BK.write_bucketed(
         code.select("vec_id", "m", "cid"),
         tables["codes"],
         "vec_id",
@@ -1339,12 +1277,52 @@ def pq_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     book = spark.createDataFrame(
         book_rows, schema="m int, cid bigint, cv array<double>"
     )
-    write_bucketed(
+    BK.write_bucketed(
         book, tables["book"], "cid", n_buckets=4, sort_cols=["cid", "m"]
     )
-    _PQ_INDEX_SIDECARS.add(write_sidecar(spark, sidecar_name, expected))
-    _PQ_INDEX_READY.add(key)
-    return tables
+
+
+PQ_INDEX = BK.StateSpec(
+    name="pq_idx",
+    tables=lambda spark, sf_dir: _pq_index_tables(sf_dir),
+    params=lambda spark, sf_dir: {
+        "m": PQ_M,
+        "k_target": PQ_K_TARGET,
+        "mod_floor": PQ_MOD_FLOOR,
+        "n_buckets": PQ_INDEX_BUCKETS,
+    },
+    source=lambda spark, sf_dir: table(spark, sf_dir, "embeddings"),
+    base=lambda: F.lit(True),
+    write_base=_pq_index_write,
+)
+
+
+def clear_pq_index_cache() -> None:
+    """Forget the per-process index memo AND drop the adoption
+    sidecars this process wrote, so the next probe (or the bench's
+    cold ``pq_index_build`` loop) reruns the full codebook + encode +
+    write path."""
+    BK.clear_state(PQ_INDEX)
+
+
+def pq_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
+    """Materialize the PQ index once per corpus snapshot (VERDICT r12
+    next-round #3): the deterministic codebook (m, cid, cv) and the
+    corpus CODES (vec_id, m, cid) — M small ints per vector, the
+    32x-compressed artifact real PQ systems store — as two bucketed
+    tables.  Returns the table-name map.
+
+    This kills the two per-run costs of ann_pq_topk at 100 TB: the
+    codebook collect and, far worse, the O(N*M*K) re-encode of the
+    full corpus on EVERY query run.  After this build a search run
+    reads the code table (bucketed by vec_id) and reconstructs
+    codeword floats with a broadcast-codebook lookup — no distance
+    computation against the book at all.  Sidecar adoption is the
+    shared ``bucketed.build_state`` (its fingerprint, ``base_rows``,
+    counts every vector); cold path behind :func:`clear_pq_index_cache`
+    for bench pricing.
+    """
+    return BK.build_state(spark, PQ_INDEX, sf_dir)
 
 
 def ann_pq_indexed(

@@ -466,19 +466,18 @@ def test_setsim_incremental_indexed_matches_oracle_two_sfs(spark, sf_dir):
 
 def test_setsim_index_is_built_once_and_rebuilt_on_clear(spark, sf_dir):
     from smile_spark.operators import dedup as D
+    from smile_spark.sources import bucketed as BK
 
     D.clear_setsim_index_cache()
     t1 = D.setsim_index_build(spark, sf_dir)
     # warm: same table map, no rebuild (READY key present)
     assert D.setsim_index_build(spark, sf_dir) == t1
-    assert any(
-        k[1] == sf_dir for k in D._SETSIM_INDEX_READY
-    )
+    assert BK.state_ready(spark, D.SETSIM_INDEX, sf_dir)
     # all four bucketed tables exist in the catalog
     for tbl in t1.values():
         assert spark.catalog.tableExists(tbl), tbl
     D.clear_setsim_index_cache()
-    assert not D._SETSIM_INDEX_READY
+    assert not BK.state_ready(spark, D.SETSIM_INDEX, sf_dir)
     # a rebuild after clear overwrites in place and works end-to-end
     assert D.setsim_index_build(spark, sf_dir) == t1
 

@@ -35,7 +35,7 @@ def test_setsim_index_adopted_by_fresh_session(spark, sf_dir, monkeypatch):
     D.clear_setsim_index_cache()
     t1 = D.setsim_index_build(spark, sf_dir)
     # simulate the fresh session: only the per-process memo is gone
-    D._SETSIM_INDEX_READY.clear()
+    BK.forget_state(D.SETSIM_INDEX)
     writes = []
     drops = []
     real_write = BK.write_bucketed
@@ -68,7 +68,7 @@ def test_setsim_index_stale_sidecar_rebuilds(spark, sf_dir, monkeypatch):
     payload["base_rows"] += 1  # pretend the snapshot grew
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    D._SETSIM_INDEX_READY.clear()
+    BK.forget_state(D.SETSIM_INDEX)
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -104,7 +104,7 @@ def test_setsim_index_build_failure_releases_checkpoints(
     n1 = jsc.getPersistentRDDs().size()
     assert n1 - n0 <= 0, (n0, n1)
     # memo must NOT be set after a failed build
-    assert not any(k[1] == sf_dir for k in D._SETSIM_INDEX_READY)
+    assert not BK.state_ready(spark, D.SETSIM_INDEX, sf_dir)
     # restore: a clean rebuild leaves a valid index for later tests
     monkeypatch.undo()
     D.clear_setsim_index_cache()
@@ -165,7 +165,7 @@ def test_dhash_index_adoption_and_stale_sidecar(spark, sf_dir, monkeypatch):
     tbl = M.dhash_index_build(spark, sf_dir)
     app = spark.sparkContext.applicationId
     # fresh 'session' (memo cleared, warehouse + catalog intact): adopt
-    M._BAND_INDEX_READY.discard((app, sf_dir, "image"))
+    BK.forget_state(M.BAND_INDEX["image"])
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -182,7 +182,7 @@ def test_dhash_index_adoption_and_stale_sidecar(spark, sf_dir, monkeypatch):
     payload["base_rows"] += 1
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    M._BAND_INDEX_READY.discard((app, sf_dir, "image"))
+    BK.forget_state(M.BAND_INDEX["image"])
     assert M.dhash_index_build(spark, sf_dir) == tbl
     assert len(writes) == 1, "stale sidecar must trigger a rebuild"
 
@@ -216,7 +216,7 @@ def test_pq_index_adoption(spark, sf_dir, monkeypatch):
 
     S.clear_pq_index_cache()
     tables = S.pq_index_build(spark, sf_dir)
-    S._PQ_INDEX_READY.clear()
+    BK.forget_state(S.PQ_INDEX)
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -338,16 +338,16 @@ def test_audio_index_adoption_is_modality_scoped(spark, sf_dir, monkeypatch):
     M.dhash_index_build(spark, sf_dir)
     tbl_a = M.audio_index_build(spark, sf_dir)
     app = spark.sparkContext.applicationId
-    assert (app, sf_dir, "image") in M._BAND_INDEX_READY
-    assert (app, sf_dir, "audio") in M._BAND_INDEX_READY
+    assert BK.state_ready(spark, M.BAND_INDEX["image"], sf_dir)
+    assert BK.state_ready(spark, M.BAND_INDEX["audio"], sf_dir)
     # audio clear leaves the image memo alone
     M.clear_audio_index_cache()
-    assert (app, sf_dir, "image") in M._BAND_INDEX_READY
-    assert (app, sf_dir, "audio") not in M._BAND_INDEX_READY
+    assert BK.state_ready(spark, M.BAND_INDEX["image"], sf_dir)
+    assert not BK.state_ready(spark, M.BAND_INDEX["audio"], sf_dir)
     # the audio sidecar is gone -> full rebuild, then fresh-session
     # adoption (memo cleared, sidecar + catalog intact) runs no writes
     M.audio_index_build(spark, sf_dir)
-    M._BAND_INDEX_READY.discard((app, sf_dir, "audio"))
+    BK.forget_state(M.BAND_INDEX["audio"])
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -410,7 +410,7 @@ def test_minhash_index_adoption(spark, sf_dir, monkeypatch):
 
     D.clear_minhash_index_cache()
     tbl = D.minhash_index_build(spark, sf_dir)
-    D._MH_INDEX_READY.clear()
+    BK.forget_state(D.MINHASH_INDEX)
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(

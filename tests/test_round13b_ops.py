@@ -71,14 +71,14 @@ def test_video_index_adoption_is_modality_scoped(spark, sf_dir, monkeypatch):
     M.dhash_index_build(spark, sf_dir)
     tbl_v = M.video_index_build(spark, sf_dir)
     app = spark.sparkContext.applicationId
-    assert (app, sf_dir, "image") in M._BAND_INDEX_READY
-    assert (app, sf_dir, "video") in M._BAND_INDEX_READY
+    assert BK.state_ready(spark, M.BAND_INDEX["image"], sf_dir)
+    assert BK.state_ready(spark, M.BAND_INDEX["video"], sf_dir)
     M.clear_video_index_cache()
-    assert (app, sf_dir, "image") in M._BAND_INDEX_READY
-    assert (app, sf_dir, "video") not in M._BAND_INDEX_READY
+    assert BK.state_ready(spark, M.BAND_INDEX["image"], sf_dir)
+    assert not BK.state_ready(spark, M.BAND_INDEX["video"], sf_dir)
     # sidecar gone -> full rebuild; then fresh-session adoption
     M.video_index_build(spark, sf_dir)
-    M._BAND_INDEX_READY.discard((app, sf_dir, "video"))
+    BK.forget_state(M.BAND_INDEX["video"])
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -142,7 +142,7 @@ def test_semantic_index_adoption_and_stale_sidecar(
     D.clear_semantic_index_cache()
     tbl = D.semantic_index_build(spark, sf_dir)
     # fresh session: only the per-process memo is gone
-    D._SEM_INDEX_READY.clear()
+    BK.forget_state(D.SEM_INDEX)
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -161,7 +161,7 @@ def test_semantic_index_adoption_and_stale_sidecar(
     payload["base_rows"] += 1
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    D._SEM_INDEX_READY.clear()
+    BK.forget_state(D.SEM_INDEX)
     assert D.semantic_index_build(spark, sf_dir) == tbl
     assert len(writes) == 1, "stale sidecar must trigger a rebuild"
 

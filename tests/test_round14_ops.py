@@ -46,7 +46,8 @@ def test_setsim_rollforward_agrees_with_full_rebuild(spark, sf_dir):
         F.col("doc_id") % D.SETSIM_ROLL_MOD != D.SETSIM_INC_MOD
     )
     try:
-        D._setsim_index_write(spark, grown, scratch, hash_tokens)
+        n_buckets = D._setsim_n_buckets(spark, sf_dir)
+        D._setsim_index_write(spark, grown, scratch, hash_tokens, n_buckets)
         want = {
             tuple(r)
             for r in D._setsim_probe_indexed(
@@ -66,7 +67,7 @@ def test_setsim_rollforward_rolled_adoption(spark, sf_dir, monkeypatch):
     from smile_spark.sources import bucketed as BK
 
     D.setsim_index_rollforward(spark, sf_dir)
-    D._SETSIM_ROLL_READY.clear()
+    BK.forget_state(D.SETSIM_ROLL)
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(("write", a))
@@ -109,7 +110,7 @@ def test_setsim_rollforward_stale_params_full_rebuild(
     payload["base_rows"] += 1  # the snapshot "changed"
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    D._SETSIM_ROLL_READY.clear()
+    BK.forget_state(D.SETSIM_ROLL)
     writes, appends = [], []
     real_write = BK.write_bucketed
     real_append = BK.append_bucketed
@@ -166,7 +167,7 @@ def test_setsim_fold_failure_never_adoptable(spark, sf_dir, monkeypatch):
     ), "a failed fold left half-appended tables behind"
     monkeypatch.setattr(BK, "append_bucketed", real_append)
     # recovery: the next call runs the full rebuild + fold and probes
-    D._SETSIM_ROLL_READY.clear()
+    BK.forget_state(D.SETSIM_ROLL)
     out = D.setsim_rolled_probe(spark, sf_dir)
     assert out.count() > 0
 
@@ -210,7 +211,7 @@ def test_setsim_crash_after_appends_never_adopts_base(
     # recovery: with no sidecar the next call lands in the FULL
     # rebuild arm (4 table writes) — never a second fold over the
     # already-folded tables
-    D._SETSIM_ROLL_READY.clear()
+    BK.forget_state(D.SETSIM_ROLL)
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -274,7 +275,7 @@ def test_band_rollforward_stale_params_full_rebuild(
     payload["grid"] = [7, 6]  # a PARAMETER changed, not the snapshot
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    M._BAND_ROLL_READY.clear()
+    BK.forget_state(M.BAND_ROLL["image"])
     writes, appends = [], []
     real_write = BK.write_bucketed
     real_append = BK.append_bucketed
@@ -301,8 +302,7 @@ def test_band_rollforward_rolled_adoption(spark, sf_dir, monkeypatch):
     from smile_spark.sources import bucketed as BK
 
     M.band_index_rollforward(spark, sf_dir, "image")
-    for key in [k for k in M._BAND_ROLL_READY if k[2] == "image"]:
-        M._BAND_ROLL_READY.discard(key)
+    BK.forget_state(M.BAND_ROLL["image"])
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -390,7 +390,7 @@ def test_image_label_index_adoption(spark, sf_dir, monkeypatch):
 
     rung = M.LABEL_RUNGS["image"]
     tbl = L.label_index_build(spark, sf_dir, rung)
-    L._RO_READY.clear()
+    BK.forget_state(rung.ro)
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -408,7 +408,7 @@ def test_image_label_index_adoption(spark, sf_dir, monkeypatch):
     payload["base_rows"] += 1
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    L._RO_READY.clear()
+    BK.forget_state(rung.ro)
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -531,8 +531,8 @@ def test_minhash_semantic_rolled_adoption(spark, sf_dir, monkeypatch):
 
     D.minhash_index_rollforward(spark, sf_dir)
     D.semantic_index_rollforward(spark, sf_dir)
-    D._MH_ROLL_READY.clear()
-    D._SEM_ROLL_READY.clear()
+    BK.forget_state(D.MINHASH_ROLL)
+    BK.forget_state(D.SEM_ROLL)
     jobs = []
     for fn in ("write_bucketed", "append_bucketed", "drop_bucketed_table"):
         monkeypatch.setattr(BK, fn, lambda *a, **k: jobs.append(a))

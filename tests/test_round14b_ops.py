@@ -151,8 +151,7 @@ def test_labelroll_rolled_adoption(spark, sf_dir, monkeypatch):
 
     rung = _rung("image")
     L.label_rollforward(spark, sf_dir, rung)
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    BK.forget_state(rung.roll)
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -186,8 +185,7 @@ def test_labelroll_stale_params_full_rebuild(spark, sf_dir, monkeypatch):
     payload["grid"] = [7, 6]  # a PARAMETER changed, not the snapshot
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    BK.forget_state(rung.roll)
     writes, appends = [], []
     real_write = BK.write_bucketed
     real_append = BK.append_bucketed
@@ -240,8 +238,7 @@ def test_labelroll_fold_failure_never_adoptable(
     ), "a failed fold left half-appended tables behind"
     monkeypatch.setattr(BK, "append_bucketed", real_append)
     # recovery: the next call runs the full rebuild + fold and serves
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    BK.forget_state(rung.roll)
     rolled = {
         tuple(r) for r in M.image_labels_rolled(spark, sf_dir).collect()
     }
@@ -289,8 +286,7 @@ def test_labelroll_crash_after_append_never_adopts_base(
     monkeypatch.setattr(BK, "write_sidecar", real_write_sidecar)
     # recovery takes the full-rebuild arm (labels + empty delta = 2
     # writes) and the rolled state still equals the live fold
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    BK.forget_state(rung.roll)
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -328,6 +324,7 @@ def test_label_compact_preserves_state(spark, sf_dir, modality):
     empty the delta, keep the rolled sidecar adoptable — and a fresh
     'session' must ADOPT the compacted state without any job."""
     from smile_spark.operators import labels as L
+    from smile_spark.sources import bucketed as BK
     from smile_spark.sources.bucketed import read_bucketed
 
     rung = _rung(modality)
@@ -341,8 +338,7 @@ def test_label_compact_preserves_state(spark, sf_dir, modality):
     assert before == after, "compaction changed the visible state"
     assert read_bucketed(spark, tables["delta"]).count() == 0
     # a fresh session adopts the compacted (rolled) state
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    BK.forget_state(rung.roll)
     got = L.label_rollforward(spark, sf_dir, rung)
     assert got == tables
     post = {
@@ -360,14 +356,14 @@ def test_label_compact_policy(spark, sf_dir, modality):
     is identical throughout (the invisibility contract, extended to
     the policy path)."""
     from smile_spark.operators import labels as L
+    from smile_spark.sources import bucketed as BK
     from smile_spark.sources.bucketed import read_bucketed
 
     rung = _rung(modality)
     # restore a freshly-folded state so the policy decision observes
     # a real (possibly empty, for video's tiny increment) delta
     L.roll_restore_base(spark, sf_dir, rung)
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    BK.forget_state(rung.roll)
     tables = L.label_rollforward(spark, sf_dir, rung)
     n_delta = read_bucketed(spark, tables["delta"]).count()
     if modality == "text":  # template duplication: the text fold

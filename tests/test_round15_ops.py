@@ -95,8 +95,7 @@ def test_text_labelroll_rolled_adoption(spark, sf_dir, monkeypatch):
 
     rung = D.TEXT_LABEL_RUNG
     L.label_rollforward(spark, sf_dir, rung)
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    BK.forget_state(rung.roll)
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -141,7 +140,7 @@ def test_semantic_labels_rolled_adoption(spark, sf_dir, monkeypatch):
     from smile_spark.sources import bucketed as BK
 
     D.semantic_label_rollforward(spark, sf_dir)
-    D._SEM_LABEL_READY.clear()
+    BK.forget_state(D.SEM_LABEL_ROLL)
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -184,7 +183,7 @@ def test_semantic_labelroll_crash_never_adopts_base(
         D.semantic_label_rollforward(spark, sf_dir)
     assert not os.path.exists(path)
     monkeypatch.setattr(BK, "write_sidecar", real_write_sidecar)
-    D._SEM_LABEL_READY.clear()
+    BK.forget_state(D.SEM_LABEL_ROLL)
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -249,7 +248,11 @@ def test_crossmodal_labels_rolled_agrees_with_live(spark, sf_dir):
     rung = M.CROSSMODAL_LABEL_RUNG
     tables = L.roll_tables(rung, sf_dir)
     n_delta = read_bucketed(spark, tables["delta"]).count()
-    n_inc = rung.fold_count(spark, sf_dir)
+    n_inc = (
+        rung.universe(spark, sf_dir)
+        .filter(rung.is_increment(F.col("doc_id")))
+        .count()
+    )
     ip = rung.inc_pairs(spark, sf_dir)
     n_pairs = ip.distinct().count()
     assert n_delta <= n_inc + n_pairs, (n_delta, n_inc, n_pairs)
@@ -267,8 +270,7 @@ def test_crossmodal_labelroll_rolled_adoption(
 
     rung = M.CROSSMODAL_LABEL_RUNG
     L.label_rollforward(spark, sf_dir, rung)
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    BK.forget_state(rung.roll)
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)

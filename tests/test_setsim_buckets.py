@@ -7,7 +7,7 @@
   rebuilt.
 * A cold ``setsim_index_build`` runs no standalone count job; its
   sidecar's ``base_rows`` comes from the build's own scan.
-* The roll payloads' two counts come from one aggregate.
+* Every roll spec's payloads take their two counts from one aggregate.
 * ``write_sidecar`` replaces the sidecar atomically.
 """
 
@@ -22,9 +22,14 @@ import pyarrow.parquet as pq
 import pytest
 
 from smile_spark.operators import dedup as D
+from smile_spark.operators import multimodal  # noqa: F401 — registers specs
+from smile_spark.operators import similarity  # noqa: F401 — registers specs
 from smile_spark.sources import bucketed as BK
 
 CAP = D.SETSIM_INDEX_BUCKETS
+ROLL_SPECS = sorted(
+    name for name, spec in BK.STATE_SPECS.items() if spec.append_fold
+)
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
 
@@ -117,7 +122,7 @@ def test_sixteen_bucket_sidecar_is_rebuilt(spark, sf_dir, monkeypatch):
     payload["n_buckets"] = 16
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    D._SETSIM_INDEX_READY.clear()
+    BK.forget_state(D.SETSIM_INDEX)
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -178,10 +183,7 @@ def null_text_dir(spark, sf_dir, tmp_path):
     for tbl in D._setsim_index_tables(d, hash_tokens).values():
         BK.drop_bucketed_table(spark, tbl)
     BK.remove_sidecar_file(path)
-    D._SETSIM_SIDECARS.discard(path)
-    D._SETSIM_INDEX_READY.discard(
-        (spark.sparkContext.applicationId, d, hash_tokens)
-    )
+    BK.forget_state(D.SETSIM_INDEX)
 
 
 def test_cold_build_runs_no_count_job(spark, null_text_dir):
@@ -225,33 +227,26 @@ def test_cold_build_runs_no_count_job(spark, null_text_dir):
         recorded = json.load(fh)["base_rows"]
     assert recorded == base.count()
     assert base.filter(F.col("text").isNull()).count() == 2
-    D._SETSIM_INDEX_READY.clear()  # a fresh session
+    BK.forget_state(D.SETSIM_INDEX)  # a fresh session
     assert n_count >= 1
     assert _jobs_launched(spark, build) == n_count
 
 
-def test_roll_payload_counts_in_one_aggregate(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from smile_spark.tables import table
-
-    hash_tokens = D._setsim_hash_conf(spark)
-    tables = D._setsim_roll_tables(sf_dir, hash_tokens)
-    docs = table(spark, sf_dir, "documents")
-    n_count = _jobs_launched(spark, docs.count)
+@pytest.mark.parametrize("spec_name", ROLL_SPECS)
+def test_roll_payload_counts_in_one_aggregate(spark, sf_dir, spec_name):
+    """Every roll spec counts its base and fold blocks in one job (the
+    jobs of one ``count()`` over its source frame)."""
+    spec = BK.STATE_SPECS[spec_name]
+    src = spec.source(spark, sf_dir)
+    n_count = _jobs_launched(spark, src.count)
     out = []
     n_payloads = _jobs_launched(
-        spark,
-        lambda: out.append(
-            D._setsim_roll_payloads(spark, sf_dir, hash_tokens, tables)
-        ),
+        spark, lambda: out.append(BK.roll_payloads(spark, spec, sf_dir))
     )
     assert n_payloads == n_count
     base, rolled = out[0]
-    assert base["base_rows"] == docs.filter(
-        F.col("doc_id") % D.SETSIM_INC_MOD != 0
-    ).count()
-    fold = docs.filter(F.col("doc_id") % D.SETSIM_ROLL_MOD == 0)
+    assert base["base_rows"] == src.filter(spec.base()).count()
+    fold = src.filter(spec.fold())
     assert rolled == dict(base, state="rolled", fold_rows=fold.count())
 
 
