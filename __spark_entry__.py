@@ -49,24 +49,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     ORDERING MATTERS: the driver verifies the FIRST 50 entries in
-    insertion order.  Round-15 window (exactly 50), per the r14
+    insertion order.  Window (exactly 50): (0) ``dedup_canonical`` and
+    ``golden_part_records``, whose clustering now runs through
+    graph.pair_components; then the round-15 window less its last two
+    entries (``column_profile``, ``referential_orphans``), per the r14
     VERDICT's next-round list and the r14 rotation note: (1) the SIX
     r15 additions (text_clusters_incremental, text_labels_rolled,
     semantic_labels_rolled, crossmodal_clusters_incremental,
     crossmodal_labels_rolled, streaming_manifest_agreement); (2) the
     TWENTY-EIGHT r10-verified entries the r14 additions displaced
     (spatial_grid_join .. degree_assortativity, in their declared
-    order); (3) the first SIXTEEN of the r11-verified block
-    (image_dhash_dedup .. referential_orphans).  6 + 28 + 16 = 50.
+    order); (3) the first FOURTEEN of the r11-verified block
+    (image_dhash_dedup .. revenue_growth_mom).  2 + 6 + 28 + 14 = 50.
     After this window completes, the oldest remaining newest-verdict
-    is r11 (the rest of the r11 block, constraint_violations ..
-    tfidf_top_terms — THIRTY-FOUR entries).
+    is r11 (the rest of the r11 block, column_profile ..
+    tfidf_top_terms — THIRTY-SIX entries).
     r16 NOTE: rotate (a) any r16 additions first, then (b) those
-    thirty-four remaining r11 entries, then (c) the r14-window block
+    thirty-six remaining r11 entries, then (c) the r14-window block
     (setsim_rolled_probe .. ann_sq8_topk, newest verdicts r14); the
     r12 block and the r13-window block rotate last.
     """
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+        # --- (0) the two queries whose clustering moved from the
+        # single-partition min-label loop to graph.pair_components ---
+        "dedup_canonical": P.dedup_canonical,
+        "golden_part_records": P.golden_part_records,
         # --- (1) NEW in r15, never driver-verified ---
         "text_clusters_incremental": D.text_clusters_incremental,
         "text_labels_rolled": D.text_labels_rolled,
@@ -106,7 +113,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "revenue_share": AN.revenue_share,
         "revenue_concentration": AN.revenue_concentration,
         "degree_assortativity": G.degree_assortativity,
-        # --- (3) the first SIXTEEN of the r11-verified block ---
+        # --- (3) the first FOURTEEN of the r11-verified block ---
         "image_dhash_dedup": M.image_dhash_dedup,
         "longest_repeat_profile": D.longest_repeat_profile,
         "video_frame_dedup": M.video_frame_dedup,
@@ -121,13 +128,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scd2_customer_history": C.scd2_customer_history,
         "date_dimension": R.date_dimension,
         "revenue_growth_mom": AN.revenue_growth_mom,
-        "column_profile": Q.column_profile,
-        "referential_orphans": Q.referential_orphans,
         # ------------------------------------------------------------------
         # entries below sit past the driver's 50-query window this
         # round (see the r16 NOTE in the docstring above for the next
         # rotation).
         # ------------------------------------------------------------------
+        # --- the two r11-verified entries the (0) pair displaced ---
+        "column_profile": Q.column_profile,
+        "referential_orphans": Q.referential_orphans,
         # --- the ELEVEN remaining r11-verified entries (first into
         # r16 after any r16 additions) ---
         "constraint_violations": Q.constraint_violations,
@@ -262,7 +270,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "string_functions": R.string_functions,
         "top_customers": R.top_customers,
         "dedup_minhash_lsh": D.dedup_minhash_lsh,
-        "dedup_canonical": P.dedup_canonical,
         "multimodal_meta": M.multimodal_meta,
         "multimodal_frames": M.multimodal_frames,
         "multimodal_resize": M.multimodal_resize,
@@ -282,9 +289,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "video_dhash_incremental": M.video_dhash_incremental,
         "semantic_dedup_incremental": D.semantic_dedup_incremental,
         # --- (2) the EIGHT r08-verified entries that slipped the
-        # r12 window (VERDICT r12 next-round #1) ---
+        # r12 window (VERDICT r12 next-round #1), less
+        # golden_part_records, which heads the window ---
         "containment_topk": D.containment_topk,
-        "golden_part_records": P.golden_part_records,
         "shortest_path_route": G.shortest_path_route,
         "hashjoin_agg": R.hashjoin_agg,
         "bfs": G.bfs,

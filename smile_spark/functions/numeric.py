@@ -38,11 +38,3 @@ def davg(col: str | Column, alias: str) -> Column:
 def sql_dsum(expr: str, alias: str) -> str:
     """Oracle-side rendering of :func:`dsum` (ANSI SQL for DuckDB)."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE) AS {alias}"
-
-
-def sql_davg(expr: str, alias: str) -> str:
-    """Oracle-side rendering of :func:`davg`."""
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
-        f" / COUNT({expr}) AS {alias}"
-    )

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smile_spark.operators import labels as L
+from smile_spark.operators.graph import pair_components
 from smile_spark.sources import bucketed as BK
 from smile_spark.tables import fan_out, table
 
@@ -4239,7 +4240,6 @@ def _text_base_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the contracted edge set is the verified REP pairs ∪ the
     rep-mapped MinHash pairs (guide §2.3 — decide on lightweight
     proxies, expand output-proportionally at the end)."""
-    from smile_spark.operators.graph import cc_labels
     from smile_spark.session import release_checkpoints_on_gc
 
     base = table(spark, sf_dir, "documents").filter(
@@ -4277,22 +4277,7 @@ def _text_base_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("ra", "rb").alias("b"),
         )
     )
-    edges = (
-        verified.select("a", "b")
-        .union(mh_rep)
-        .distinct()
-        .localCheckpoint()
-    )
-    ckpts.append(edges)
-    nodes = (
-        edges.select(F.col("a").alias("id"))
-        .union(edges.select(F.col("b").alias("id")))
-        .distinct()
-    )
-    und = edges.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    rep_labels = cc_labels(nodes, und)
+    rep_labels = pair_components(verified.select("a", "b").union(mh_rep))
     ckpts.append(rep_labels)
     gsz = m.groupBy("rep").agg(F.count(F.lit(1)).alias("g"))
     labels = (

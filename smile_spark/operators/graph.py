@@ -435,12 +435,6 @@ def sssp(
     count (vs. converging) keeps cross-engine semantics exact; at
     scale you'd iterate to fixpoint with the same per-round plan.
 
-    Full relaxation is deliberate for the SHORT-round expanding
-    regime benchmarked here; :func:`sssp_frontier` is the
-    result-identical queue-based form whose per-round join shrinks
-    with the frontier — the right variant for high-diameter graphs /
-    the convergence tail (equivalence-tested; measured 2× slower at
-    sf0.1's 4 expanding rounds, which is why it is not the default).
     Returns (source, id, dist).
     """
     e = weighted_edges(spark, sf_dir).localCheckpoint()
@@ -466,85 +460,6 @@ def sssp(
         # (eagerly materialized) — release it (cc_labels precedent)
         unpersist_checkpoint(dist)
         dist = new_dist
-    return dist
-
-
-def sssp_frontier(
-    spark: SparkSession,
-    sf_dir: str,
-    sources: Sequence[int] = SSSP_SOURCES,
-    rounds: int = SSSP_ROUNDS,
-) -> DataFrame:
-    """Queue-based (frontier-limited) Bellman-Ford: each round relaxes
-    ONLY the nodes whose distance improved last round.  A node
-    improving via a longer prefix is still reached, because that
-    prefix node sat in an earlier frontier — so after k rounds this is
-    exactly min over ≤ k-edge walks, identical to :func:`sssp`
-    (asserted in tests/test_graph.py).
-
-    This is the form that wins when frontier ≪ |dist|: high-diameter
-    graphs (road networks — the reference's routing domain) and the
-    convergence tail of iterate-to-fixpoint runs, where full
-    relaxation rescans every settled distance every round forever.
-    The cost is one extra improvement anti-join per round, which is
-    why the short-round expanding benchmark keeps full relaxation.
-    Returns (source, id, dist).
-    """
-    e = weighted_edges(spark, sf_dir).localCheckpoint()
-    dist = (
-        spark.createDataFrame([(int(s),) for s in sources], "source bigint")
-        .select(
-            "source",
-            F.col("source").alias("id"),
-            F.lit(0).cast("bigint").alias("dist"),
-        )
-        .localCheckpoint()
-    )
-    from smile_spark.session import unpersist_checkpoint
-
-    frontier = dist
-    for _ in range(rounds):
-        candidates = (
-            frontier.join(e, frontier.id == e.src)
-            .select(
-                "source",
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-            .groupBy("source", "id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        improved = (
-            candidates.alias("c")
-            .join(
-                dist.alias("d"),
-                (F.col("c.source") == F.col("d.source"))
-                & (F.col("c.id") == F.col("d.id")),
-                "left",
-            )
-            .filter(
-                F.col("d.dist").isNull()
-                | (F.col("c.dist") < F.col("d.dist"))
-            )
-            .select(
-                F.col("c.source").alias("source"),
-                F.col("c.id").alias("id"),
-                F.col("c.dist").alias("dist"),
-            )
-            .localCheckpoint()
-        )
-        # the previous frontier is consumed (skip round 1: it IS dist)
-        if frontier is not dist:
-            unpersist_checkpoint(frontier)
-        new_dist = (
-            dist.union(improved)
-            .groupBy("source", "id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        unpersist_checkpoint(dist)
-        dist = new_dist
-        frontier = improved
     return dist
 
 
@@ -706,6 +621,9 @@ def cc_labels(
     across every edge = component min everywhere) is the answer; the
     shortcut is pure acceleration and is label-stable at that
     fixpoint.
+
+    A loop that spends all ``max_iter`` rounds without reaching the
+    fixpoint raises instead of returning partial components.
     """
     from smile_spark.session import checkpoint_observed, unpersist_checkpoint
 
@@ -763,7 +681,40 @@ def cc_labels(
             ).localCheckpoint()
             unpersist_checkpoint(labels)
             labels = jumped
+    else:
+        unpersist_checkpoint(labels)
+        raise RuntimeError(
+            f"cc_labels: no fixpoint after {max_iter} rounds"
+        )
     return labels
+
+
+def pair_components(pairs: DataFrame) -> DataFrame:
+    """Connected components of an (a, b) pair graph — the one entry
+    every pair-set clustering (LSH duplicates, fuzzy matches, the
+    perceptual, text and label-fold graphs) goes through.  Returns
+    (id, component = min node id) for every node that appears in a
+    pair.
+
+    The distinct pair set is materialized ONCE: :func:`cc_labels`
+    scans its edge input every round, and a lazy pair frame (a banded
+    self-join, a levenshtein block join) would be re-derived in each.
+    Rebinding ``pairs`` drops this frame's hold on the input, so
+    checkpoints a builder tied to the input's gc can release.  The
+    pair checkpoint is released before returning: the labels are
+    cc_labels' own checkpoint and no longer reach it.
+    """
+    from smile_spark.session import unpersist_checkpoint
+
+    pairs = pairs.select("a", "b").distinct().localCheckpoint()
+    und = pairs.select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
+    ).union(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    nodes = und.select(F.col("src").alias("id")).distinct()
+    try:
+        return cc_labels(nodes, und)
+    finally:
+        unpersist_checkpoint(pairs)
 
 
 def connected_components(

@@ -58,6 +58,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smile_spark.operators.graph import pair_components
 from smile_spark.sources import bucketed as BK
 
 LABEL_STATE_BUCKETS = 16
@@ -176,14 +177,10 @@ def _with_base_labels(
     spark: SparkSession, sf_dir: str, rung: LabelRung, sink
 ) -> None:
     """Compute the rung's BASE-block cc labels (id, component) and
-    hand them to ``sink`` while the pair checkpoint backing the plan
-    is still alive (the cc output's plan references the pair table
-    until the sink materializes it).  The pair frame's own upstream
-    checkpoints (builders tie theirs to the frame's gc) stay
-    referenced until the local checkpoint below has materialized."""
-    from smile_spark.operators.graph import cc_labels
-    from smile_spark.session import unpersist_checkpoint
-
+    hand them to ``sink``.  The pair frame is passed straight to
+    graph.pair_components, which holds it only until its own pair
+    checkpoint has materialized, so checkpoints a builder tied to the
+    frame's gc can release."""
     if rung.base_labels is not None:
         # contraction fast path (r16): the rung produces the labels
         # directly (row-equal to cc over base_pairs by construction);
@@ -191,19 +188,7 @@ def _with_base_labels(
         # it eagerly while it is alive
         sink(rung.base_labels(spark, sf_dir))
         return
-    src = rung.base_pairs(spark, sf_dir)
-    pairs = src.select("a", "b").distinct().localCheckpoint()
-    del src  # upstream checkpoints may now release on gc
-    try:
-        und = pairs.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).union(
-            pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-        nodes = und.select(F.col("src").alias("id")).distinct()
-        sink(cc_labels(nodes, und))
-    finally:
-        unpersist_checkpoint(pairs)
+    sink(pair_components(rung.base_pairs(spark, sf_dir)))
 
 
 def label_index_build(
@@ -235,8 +220,6 @@ def _fold_delta(
     Everything here is increment-sized at any corpus size; the only
     corpus-side touch is the id-keyed left join against the bucketed
     base label table."""
-    from smile_spark.operators.graph import cc_labels
-
     ids = (
         inc.select(F.col("a").alias("id"))
         .union(inc.select(F.col("b").alias("id")))
@@ -261,34 +244,15 @@ def _fold_delta(
         )
         .localCheckpoint()
     )
-    # the collapsed edge set is CHECKPOINTED (r16): cc_labels scans
-    # its edge input once per round, and an unmaterialized e would
-    # re-run the two m-joins + distinct in EVERY round (measured ~2 s
-    # of the 4.5 s fold at sf0.1); e is increment-sized, so the
-    # checkpoint is one tiny job.  Released as soon as cc_labels
-    # returns — its final label table is its own checkpoint.
-    from smile_spark.session import unpersist_checkpoint
-
-    e = (
+    # the collapsed edge set stays lazy: pair_components checkpoints
+    # it once (an unmaterialized edge set would re-run the two m-joins
+    # in EVERY cc round — measured ~2 s of the 4.5 s fold at sf0.1)
+    cc = pair_components(
         inc.join(m.select(F.col("id").alias("a"), F.col("s").alias("sa")), "a")
         .join(m.select(F.col("id").alias("b"), F.col("s").alias("sb")), "b")
-        .select("sa", "sb")
         .filter(F.col("sa") != F.col("sb"))
-        .distinct()
-        .localCheckpoint()
+        .select(F.col("sa").alias("a"), F.col("sb").alias("b"))
     )
-    try:
-        nodes = (
-            e.select(F.col("sa").alias("id"))
-            .union(e.select(F.col("sb").alias("id")))
-            .distinct()
-        )
-        und = e.select(
-            F.col("sa").alias("src"), F.col("sb").alias("dst")
-        ).union(e.select(F.col("sb").alias("src"), F.col("sa").alias("dst")))
-        cc = cc_labels(nodes, und)
-    finally:
-        unpersist_checkpoint(e)
     # collapsed-node kinds: increment ids, unpaired base ids, and base
     # labels are pairwise disjoint (a base label is the min member of
     # a PAIRED component, so it is never an unpaired id; base and

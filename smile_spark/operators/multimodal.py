@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smile_spark.operators import labels as L
+from smile_spark.operators.graph import pair_components
 from smile_spark.sources import bucketed as BK
 from smile_spark.tables import table
 
@@ -1583,7 +1584,7 @@ VIDEO_DHASH_TOLERANT_SQL = (
 def _perceptual_keep_list(pairs: DataFrame, universe: DataFrame) -> DataFrame:
     """Shared pairs -> clusters -> keep core of the perceptual dedup
     family: connected components of the (a, b) pair set (min-label
-    pointer jumping, graph.cc_labels), cluster sizes, and the
+    pointer jumping, graph.pair_components), cluster sizes, and the
     survivorship rule — keep the min-doc_id member of each cluster,
     keep every singleton.  ``universe`` is a one-column (doc_id) frame
     naming every document of the modality, so singletons (no pair)
@@ -1593,16 +1594,7 @@ def _perceptual_keep_list(pairs: DataFrame, universe: DataFrame) -> DataFrame:
     the pair table every stage is dimension-sized (components over
     near-dup nodes only, O(log D) pointer-jumping rounds); the left
     joins back to the modality dimension are id-keyed."""
-    from smile_spark.operators.graph import cc_labels
-
-    p = pairs.select("a", "b")
-    und = p.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).union(
-        p.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    nodes = und.select(F.col("src").alias("id")).distinct()
-    labels = cc_labels(nodes, und)
+    labels = pair_components(pairs)
     sizes = labels.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -1629,8 +1621,8 @@ def _perceptual_keep_list(pairs: DataFrame, universe: DataFrame) -> DataFrame:
 def image_dhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-image dedup DECISION over the perceptual near-dup graph:
     connected components of the :func:`image_dhash_dedup` pair set
-    (min-label pointer jumping, graph.cc_labels), cluster sizes, and
-    the survivorship rule — keep the min-doc_id member of each
+    (min-label pointer jumping, graph.pair_components), cluster sizes,
+    and the survivorship rule — keep the min-doc_id member of each
     cluster, keep every singleton.  This is the artifact a curation
     run actually consumes ("which image files survive"), completing
     pairs -> clusters -> keep for the multimodal rung exactly as
@@ -2050,16 +2042,6 @@ def clear_dhash_roll_cache() -> None:
     adoption sidecars, so the next call runs the full base-rebuild +
     fold path (bench cold pricing)."""
     BK.clear_state(BAND_ROLL["image"])
-
-
-def clear_audio_roll_cache() -> None:
-    """The AUDIO twin of :func:`clear_dhash_roll_cache`."""
-    BK.clear_state(BAND_ROLL["audio"])
-
-
-def clear_video_roll_cache() -> None:
-    """The VIDEO twin of :func:`clear_dhash_roll_cache`."""
-    BK.clear_state(BAND_ROLL["video"])
 
 
 def band_roll_restore_base(

@@ -6,16 +6,20 @@ operators/dedup.py, operators/text.py) are the building blocks; a real
 forms, oracle-verified end-to-end:
 
 * ``dedup_canonical`` — MinHash-LSH near-dup pairs → duplicate
-  clusters (min-label propagation over the pair graph) → one canonical
-  document per cluster.  This is the step that turns "similar pairs"
-  into an actionable keep/drop decision.
+  clusters (graph.pair_components, the one pair-graph cc) → one
+  canonical document per cluster.  This is the step that turns
+  "similar pairs" into an actionable keep/drop decision.
 * ``corpus_quality_filter`` — exact-dedup survivors ∩ language filter
   ∩ quality-score band ∩ token-length band, aggregated per source —
   the end-of-pipeline corpus accounting a data curation run reports.
 
 Scale notes: the pair graph is tiny relative to the corpus by LSH
 design, so the cluster iteration runs over candidate pairs only (the
-corpus-sized tables are touched once, by the upstream operators).  The
+corpus-sized tables are touched once, by the upstream operators).
+Every pair-graph clustering in this module (``dedup_canonical``,
+``golden_part_records``, ``dedup_cluster_sizes``,
+``group_split_no_leakage``) goes through graph.pair_components: one
+distinct-pair checkpoint, then cc_labels' O(log D) rounds.  The
 quality filter is one pass over each upstream result joined on doc_id
 — all equi-joins, quality/token/lang scores computed in single shuffles
 keyed by doc_id.
@@ -29,109 +33,17 @@ from pyspark.sql import functions as F
 from smile_spark.functions.numeric import sql_dsum
 from smile_spark.operators import dedup as D
 from smile_spark.operators import text as T
+from smile_spark.operators.graph import pair_components
 from smile_spark.tables import table
-
-# Duplicate clusters are near-cliques by construction (members agree on
-# ≥1 LSH band), so min-label propagation converges in very few rounds;
-# the cap is a safety bound, mirrored in the oracle's recursion.
-CANONICAL_MAX_ITER = 10
 
 QUALITY_MIN = 0.8
 TOKENS_MIN, TOKENS_MAX = 5, 5000
 LANG_KEEP = "en"
 
 
-def min_label_components(
-    pairs: DataFrame, max_iter: int = CANONICAL_MAX_ITER
-) -> DataFrame:
-    """Connected components of a small (a, b) pair graph by min-label
-    propagation.  Returns (id, component) for every node appearing in
-    a pair.
-
-    The iteration state deliberately lives in ONE partition: callers
-    pass pair graphs that are a vanishing fraction of their corpus by
-    construction (LSH candidates, within-block fuzzy matches), so each
-    round is a single-task job instead of shuffle-partition-many tiny
-    tasks.  If a pathological input ever produced a huge pair graph,
-    drop the coalesce — the loop is partitioning-agnostic."""
-    from smile_spark.session import checkpoint_observed, unpersist_checkpoint
-
-    pairs = pairs.select("a", "b").coalesce(1).localCheckpoint()
-    und = pairs.union(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).coalesce(1)
-    labels = (
-        und.select(F.col("a").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("component"))
-        .coalesce(1)
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            labels.join(und, labels.id == und.a)
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        propagated = (
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    "component", F.coalesce("nbr_component", "component")
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_component", "component")
-                    < F.col("component")
-                ).alias("changed"),
-            )
-        )
-        # pointer jumping: component := component's component.  Plain
-        # neighbor propagation needs DIAMETER rounds (a levenshtein
-        # match CHAIN like rod→rot→dot makes long thin clusters —
-        # measured 10 rounds / ~10s at sf0.1); the shortcut halves the
-        # distance-to-root every round, so convergence is O(log D)
-        # (measured 4 rounds / ~3s).  Convergence detection stays on
-        # the propagation phase: its fixpoint is the answer, the
-        # shortcut is pure acceleration.
-        new_labels, seen = checkpoint_observed(
-            propagated.alias("x")
-            .join(
-                propagated.select(
-                    F.col("id").alias("cid"),
-                    F.col("component").alias("ccomp"),
-                ).alias("y"),
-                F.col("x.component") == F.col("y.cid"),
-                "left",
-            )
-            .select(
-                F.col("x.id").alias("id"),
-                F.least(
-                    F.col("x.component"),
-                    F.coalesce(F.col("ccomp"), F.col("x.component")),
-                ).alias("component"),
-                F.col("x.changed").alias("changed"),
-            )
-            .coalesce(1),
-            keep=("id", "component"),
-            n_changed=F.count_if("changed"),
-        )
-        # the new round supersedes the previous one, which is released
-        # at once (cc_labels precedent)
-        unpersist_checkpoint(labels)
-        labels = new_labels
-        if seen["n_changed"] == 0:
-            break
-    # the labels are their own checkpoint: the pair materialization is
-    # unreachable from them (bfs_frontier precedent)
-    unpersist_checkpoint(pairs)
-    return labels
-
-
 def dedup_canonical(
     spark: SparkSession,
     sf_dir: str,
-    max_iter: int = CANONICAL_MAX_ITER,
     pairs: DataFrame | str | None = None,
 ) -> DataFrame:
     """Canonical-document assignment over MinHash-LSH duplicate pairs.
@@ -149,24 +61,17 @@ def dedup_canonical(
     chain inside the cluster pass.  At 100 TB the pair table is the
     artifact a dedup run writes once and every downstream pass reads.
 
-    The component computation is Pregel-style min-label propagation —
-    same loop shape as operators/graph.py::connected_components — but
-    runs over the PAIR graph only: LSH guarantees that table is a
-    vanishing fraction of the corpus, so each round is a join over a
-    small, broadcastable frame regardless of corpus size.
+    The components come from operators/graph.py::pair_components, the
+    same min-label cc as connected_components, run over the PAIR graph
+    only: LSH guarantees that table is a vanishing fraction of the
+    corpus, so each round is a join over a small, broadcastable frame
+    regardless of corpus size.
     """
-    # LSH guarantees the pair graph is a vanishing fraction of the
-    # corpus, so the whole iteration state fits one partition: coalesce
-    # before checkpointing and every propagation round becomes a
-    # single-task job instead of shuffle-partition-many tiny tasks —
-    # the rounds are scheduler-overhead-bound, not data-bound.  (If a
-    # pathological corpus ever produced a huge pair graph, drop the
-    # coalesce — the loop is partitioning-agnostic.)
     if pairs is None:
         pairs = D.lsh_pairs_cached(spark, sf_dir)
     elif isinstance(pairs, str):
         pairs = spark.read.parquet(pairs)
-    labels = min_label_components(pairs, max_iter)
+    labels = pair_components(pairs)
     return labels.select(
         F.col("id").alias("doc_id"),
         F.col("component").alias("canonical_id"),
@@ -634,7 +539,7 @@ def golden_part_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("pk").alias("rep_pk"),
         F.count(F.lit(1)).alias("n_in_group"),
     )
-    labels = min_label_components(_golden_candidate_pairs(groups))
+    labels = pair_components(_golden_candidate_pairs(groups))
     enriched = groups.join(
         labels.withColumnRenamed("id", "rep_pk"), "rep_pk", "left"
     ).select(
@@ -691,22 +596,14 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivorship policy).
 
     Pipeline: the memoized LSH pair table → min-label connected
-    components (graph.cc_labels — alternate-round pointer jumping) →
+    components (graph.pair_components — alternate-round pointer
+    jumping) →
     per-cluster sizes → size histogram, plus the singleton row
     (documents in no near-dup pair) computed by difference.  Every
     stage is dimension-sized once past the pair table; the oracle
     replays the clustering as a recursive min-reachability CTE.
     Emits (cluster_size, n_clusters)."""
-    from smile_spark.operators.graph import cc_labels
-
-    pairs = D.dedup_minhash_lsh(spark, sf_dir).select("a", "b")
-    und = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).union(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    nodes = und.select(F.col("src").alias("id")).distinct()
-    labels = cc_labels(nodes, und)
+    labels = pair_components(D.dedup_minhash_lsh(spark, sf_dir))
     sizes = labels.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -770,20 +667,13 @@ def group_split_no_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the clustering or the bucketing broke.
 
     Scale: the pair table is the LSH memo (built once per session),
-    components come from pointer-jumping cc_labels (O(log D) rounds),
+    components come from pointer-jumping pair_components (O(log D)
+    rounds),
     the group attach is one left join, and the md5 split bucket is
     the sampling_hash device — deterministic under any partitioning.
     Everything past the pair table is dimension-sized."""
-    from smile_spark.operators.graph import cc_labels
-
     pairs = D.dedup_minhash_lsh(spark, sf_dir).select("a", "b")
-    und = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).union(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    nodes = und.select(F.col("src").alias("id")).distinct()
-    comp = cc_labels(nodes, und)
+    comp = pair_components(pairs)
     docs = table(spark, sf_dir, "documents").select("doc_id")
     grouped = docs.join(
         comp.select(F.col("id").alias("doc_id"), "component"),

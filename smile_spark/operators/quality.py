@@ -294,7 +294,6 @@ SNAPSHOT_DIFF_SQL = (
 
 BLOOM_BITS = 16_384          # m: filter width
 BLOOM_WORD_BITS = 32         # packed into BIGINT words, shift-safe range
-BLOOM_WORDS = BLOOM_BITS // BLOOM_WORD_BITS
 BLOOM_K = 3                  # independent hash functions
 BLOOM_BUILD_MIN_BAL = 9000.0  # selective build-side predicate
 

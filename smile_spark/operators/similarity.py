@@ -786,7 +786,6 @@ ANN_SQ8_SQL = (
 # ---------------------------------------------------------------------------
 
 SRP_BITS = 8            # hyperplanes -> 2^8 buckets
-SRP_PROBE_HAMMING = 2   # probe all buckets within this hamming radius
 _SRP_A = 2654435761     # Knuth multiplicative constant
 _SRP_STRIDE = 1000003   # bit-index stride into the hash domain
 # XOR masks enumerating the hamming<=2 ball around a query's bucket:

@@ -58,11 +58,29 @@ _DEFAULT_CONFS: dict[str, str] = {
     "spark.ui.enabled": "false",
 }
 
+
+def _default_driver_memory() -> str:
+    """Two-thirds of the memory this process may use — the smaller of
+    physical memory and a readable cgroup v2 ``memory.max`` — capped
+    at 64g.  The remaining third is for the JVM's off-heap memory
+    and the Python workers."""
+    cap = 64 << 30
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = min(limit, int(f.read()))
+    except (OSError, ValueError):  # absent, or "max" (no limit)
+        pass
+    return f"{min(cap, limit * 2 // 3) >> 20}m"
+
+
 # local[*] runs driver+executors in ONE JVM whose heap defaults to 1g —
 # 32 concurrent tasks OOM in any spilling sort/agg at sf0.1.  Size the
 # heap to the machine (cluster deployments set executor memory via
 # spark-submit instead; this only applies when WE launch the JVM).
-_DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "64g")
+_DRIVER_MEMORY = (
+    os.environ.get("SPARK_GRAFT_DRIVER_MEMORY") or _default_driver_memory()
+)
 
 
 def get_spark(

@@ -48,12 +48,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at every realistic scale
-# (region/nation are bounded by geography; supplier/part/customer are
-# broadcastable at test SFs — at 100 TB the optimizer's size stats
-# decide, we only *hint* where cardinality is bounded by construction).
-ALWAYS_BROADCAST = frozenset({"region", "nation"})
-
 # The session confs that change the schema Parquet inference yields.
 _INFERENCE_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",

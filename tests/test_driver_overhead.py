@@ -78,8 +78,11 @@ def no_control_actions(monkeypatch, spark):
 def test_label_loops_need_no_control_actions(spark, no_control_actions):
     """The label loops and the BFS frontier halt on the count their
     checkpoint job observed, and still find the same components."""
-    from smile_spark.operators.graph import bfs_frontier, cc_labels
-    from smile_spark.operators.pipeline import min_label_components
+    from smile_spark.operators.graph import (
+        bfs_frontier,
+        cc_labels,
+        pair_components,
+    )
 
     pairs = _path_pairs(spark)
     e = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
@@ -91,7 +94,7 @@ def test_label_loops_need_no_control_actions(spark, no_control_actions):
     assert got == want
     got = {
         (r.id, r.component)
-        for r in min_label_components(pairs).collect()
+        for r in pair_components(pairs).collect()
     }
     assert got == want
     # a short path, so the frontier runs dry before the round cap
@@ -117,17 +120,39 @@ def test_checkpoint_observed_counts(spark):
     assert seen == {"n": 0}
 
 
-def test_min_label_components_releases_superseded_rounds(spark):
-    """Like cc_labels, the pair-graph loop keeps only its FINAL label
-    table persisted, not one checkpoint per round."""
-    from smile_spark.operators.pipeline import min_label_components
+def test_pair_components_releases_superseded_rounds(spark):
+    """The pair-graph entry keeps only its FINAL label table
+    persisted: no checkpoint per round, and not its pair checkpoint."""
+    from smile_spark.operators.graph import pair_components
 
     jsc = spark.sparkContext._jsc.sc()
     n0 = jsc.getPersistentRDDs().size()
-    labels = min_label_components(_path_pairs(spark))
+    labels = pair_components(_path_pairs(spark))
     assert {r.component for r in labels.collect()} == {0}
     n1 = jsc.getPersistentRDDs().size()
     assert n1 - n0 <= 1, (n0, n1)
+
+
+def test_lazy_pair_input_is_evaluated_once(spark):
+    """A lazy pair frame handed to a clustering is derived once, not
+    once per cc round: a counting UDF in its plan runs once per pair
+    however many rounds the path graph takes."""
+    from smile_spark.operators.multimodal import _perceptual_keep_list
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        calls.add(1)
+        return x
+
+    count_udf = F.udf(counted, "long")
+    pairs = spark.range(PATH_N - 1).select(
+        count_udf("id").alias("a"), (F.col("id") + 1).alias("b")
+    )
+    universe = spark.range(PATH_N).select(F.col("id").alias("doc_id"))
+    rows = _perceptual_keep_list(pairs, universe).collect()
+    assert {r.cluster_size for r in rows} == {PATH_N}
+    assert calls.value == PATH_N - 1, calls.value
 
 
 def test_kcore_last_round_needs_no_control_actions(

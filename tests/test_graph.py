@@ -2,6 +2,7 @@
 and multi-node components on synthetic graphs (the fixture graph is a
 union of stars, depth ≤ 2, so it cannot exercise deep traversal)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from smile_spark.operators.graph import bfs_frontier, edges, graph_load
@@ -58,17 +59,6 @@ def test_edges_deterministic(spark, sf_dir):
     assert a == b
 
 
-def test_sssp_frontier_equals_full_relaxation(spark, sf_dir):
-    """Queue-based Bellman-Ford must produce exactly the full-
-    relaxation distance table (same hop cap, same sources)."""
-    from smile_spark.operators.graph import sssp, sssp_frontier
-
-    full = sssp(spark, sf_dir)
-    frontier = sssp_frontier(spark, sf_dir)
-    assert full.exceptAll(frontier).count() == 0
-    assert frontier.exceptAll(full).count() == 0
-
-
 def test_cc_long_path_converges_in_log_rounds(spark):
     """A 200-node path graph (diameter 199 >> the 30-round cap) must
     still converge: pointer jumping makes the loop O(log D), so plain
@@ -86,6 +76,18 @@ def test_cc_long_path_converges_in_log_rounds(spark):
     )
     labels = cc_labels(nodes, und, max_iter=30)
     assert labels.filter(F.col("component") != 0).isEmpty()
+
+
+def test_cc_raises_when_round_cap_ends_before_fixpoint(spark):
+    """Two rounds cannot settle a 64-node path: the loop must raise
+    instead of returning partial components."""
+    from smile_spark.operators.graph import cc_labels
+
+    n = 64
+    nodes = spark.range(n).select(F.col("id"))
+    und = _edges_df(spark, [(i, i + 1) for i in range(n - 1)])
+    with pytest.raises(RuntimeError, match="after 2 rounds"):
+        cc_labels(nodes, und, max_iter=2)
 
 
 def test_cc_two_components_min_labels(spark):

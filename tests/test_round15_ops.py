@@ -325,26 +325,14 @@ def test_text_base_labels_contraction_equals_pair_cc(spark, sf_dir):
     be ROW-EQUAL to min-label cc over the expanded base pair set —
     same doc membership, same component minima."""
     from smile_spark.operators import dedup as D
-    from smile_spark.operators.graph import cc_labels
-    from smile_spark.session import unpersist_checkpoint
+    from smile_spark.operators.graph import pair_components
 
     fast = {
         (r.id, r.component)
         for r in D._text_base_labels(spark, sf_dir).collect()
     }
-    src = D._text_base_pairs(spark, sf_dir)
-    pairs = src.select("a", "b").distinct().localCheckpoint()
-    del src
-    try:
-        und = pairs.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).union(
-            pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-        nodes = und.select(F.col("src").alias("id")).distinct()
-        slow = {
-            (r.id, r.component) for r in cc_labels(nodes, und).collect()
-        }
-    finally:
-        unpersist_checkpoint(pairs)
+    slow = {
+        (r.id, r.component)
+        for r in pair_components(D._text_base_pairs(spark, sf_dir)).collect()
+    }
     assert fast == slow
