@@ -49,8 +49,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     ORDERING MATTERS: the driver verifies the FIRST 50 entries in
-    insertion order.  Window (exactly 50): (0) ``dedup_canonical`` and
-    ``golden_part_records``, whose clustering now runs through
+    insertion order.  Window (exactly 50): (00) the SIX set-similarity
+    entries whose path now runs through the one setsim kernel
+    (setsim_join_prefix, setsim_incremental,
+    setsim_incremental_indexed, setsim_rolled_probe,
+    setsim_hash_agreement, duplicate_set_groups); (0)
+    ``dedup_canonical`` and ``golden_part_records``, whose clustering now runs through
     graph.pair_components; then the round-15 window less its last two
     entries (``column_profile``, ``referential_orphans``), per the r14
     VERDICT's next-round list and the r14 rotation note: (1) the SIX
@@ -59,17 +63,29 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     crossmodal_labels_rolled, streaming_manifest_agreement); (2) the
     TWENTY-EIGHT r10-verified entries the r14 additions displaced
     (spatial_grid_join .. degree_assortativity, in their declared
-    order); (3) the first FOURTEEN of the r11-verified block
-    (image_dhash_dedup .. revenue_growth_mom).  2 + 6 + 28 + 14 = 50.
+    order); (3) the first EIGHT of the r11-verified block less
+    setsim_incremental, which moved to (00) (image_dhash_dedup ..
+    event_transition_matrix).  6 + 2 + 6 + 28 + 8 = 50.  The (00)
+    block displaced five r11-verified entries (seasonality_profile,
+    cms_heavy_hitters, scd2_customer_history, date_dimension,
+    revenue_growth_mom), which now head the entries past the window.
     After this window completes, the oldest remaining newest-verdict
-    is r11 (the rest of the r11 block, column_profile ..
-    tfidf_top_terms — THIRTY-SIX entries).
+    is r11 (those five plus the rest of the r11 block,
+    column_profile .. tfidf_top_terms — FORTY-ONE entries).
     r16 NOTE: rotate (a) any r16 additions first, then (b) those
-    thirty-six remaining r11 entries, then (c) the r14-window block
+    forty-one remaining r11 entries, then (c) the r14-window block
     (setsim_rolled_probe .. ann_sq8_topk, newest verdicts r14); the
     r12 block and the r13-window block rotate last.
     """
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+        # --- (00) the six entries whose set-similarity path now runs
+        # through the one setsim kernel ---
+        "setsim_join_prefix": D.setsim_join_prefix,
+        "setsim_incremental": D.setsim_incremental,
+        "setsim_incremental_indexed": D.setsim_incremental_indexed,
+        "setsim_rolled_probe": D.setsim_rolled_probe,
+        "setsim_hash_agreement": D.setsim_hash_agreement,
+        "duplicate_set_groups": D.duplicate_set_groups,
         # --- (0) the two queries whose clustering moved from the
         # single-partition min-label loop to graph.pair_components ---
         "dedup_canonical": P.dedup_canonical,
@@ -113,26 +129,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "revenue_share": AN.revenue_share,
         "revenue_concentration": AN.revenue_concentration,
         "degree_assortativity": G.degree_assortativity,
-        # --- (3) the first FOURTEEN of the r11-verified block ---
+        # --- (3) the first EIGHT of the r11-verified block ---
         "image_dhash_dedup": M.image_dhash_dedup,
         "longest_repeat_profile": D.longest_repeat_profile,
         "video_frame_dedup": M.video_frame_dedup,
-        "setsim_incremental": D.setsim_incremental,
         "csv_malformed_audit": TF.csv_malformed_audit,
         "dedup_cluster_sizes": P.dedup_cluster_sizes,
         "watermark_late_audit": W.watermark_late_audit,
         "fuzzy_name_match": T.fuzzy_name_match,
         "event_transition_matrix": B.event_transition_matrix,
-        "seasonality_profile": B.seasonality_profile,
-        "cms_heavy_hitters": K.cms_heavy_hitters,
-        "scd2_customer_history": C.scd2_customer_history,
-        "date_dimension": R.date_dimension,
-        "revenue_growth_mom": AN.revenue_growth_mom,
         # ------------------------------------------------------------------
         # entries below sit past the driver's 50-query window this
         # round (see the r16 NOTE in the docstring above for the next
         # rotation).
         # ------------------------------------------------------------------
+        # --- the five r11-verified entries the (00) block displaced ---
+        "seasonality_profile": B.seasonality_profile,
+        "cms_heavy_hitters": K.cms_heavy_hitters,
+        "scd2_customer_history": C.scd2_customer_history,
+        "date_dimension": R.date_dimension,
+        "revenue_growth_mom": AN.revenue_growth_mom,
         # --- the two r11-verified entries the (0) pair displaced ---
         "column_profile": Q.column_profile,
         "referential_orphans": Q.referential_orphans,
@@ -174,7 +190,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tfidf_top_terms": T.tfidf_top_terms,
         # --- the r14-WINDOW entries (all 50 verified green in r14;
         # rotate after the r11 leftovers) ---
-        "setsim_rolled_probe": D.setsim_rolled_probe,
         "image_dhash_rolled_probe": M.image_dhash_rolled_probe,
         "minhash_rolled_probe": D.minhash_rolled_probe,
         "semantic_rolled_probe": D.semantic_rolled_probe,
@@ -204,13 +219,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "session_path_topk": B.session_path_topk,
         "embedding_outliers": S.embedding_outliers,
         "streaming_window_agreement": ST.streaming_window_agreement,
-        "setsim_join_prefix": D.setsim_join_prefix,
-        # --- (3) the first 21 of the r10-verified block ---
+        # --- (3) the first entries of the r10-verified block ---
         "semantic_dedup": D.semantic_dedup,
-        "setsim_hash_agreement": D.setsim_hash_agreement,
         "ngram_hash_agreement": D.ngram_hash_agreement,
         "join_skew_profile": Q.join_skew_profile,
-        "duplicate_set_groups": D.duplicate_set_groups,
         "pca_power_iteration": FT.pca_power_iteration,
         "jsonl_roundtrip": TF.jsonl_roundtrip,
         "compaction_roundtrip": CP.compaction_roundtrip,
@@ -229,7 +241,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_sq8_topk": S.ann_sq8_topk,
         # --- r12-verified entries (the r12 window; rotate last) ---
         "audio_fingerprint_dedup": M.audio_fingerprint_dedup,
-        "setsim_incremental_indexed": D.setsim_incremental_indexed,
         "video_dhash_tolerant": M.video_dhash_tolerant,
         "audio_fingerprint_clusters": M.audio_fingerprint_clusters,
         "image_dhash_clusters": M.image_dhash_clusters,

@@ -442,19 +442,28 @@ def _dedup_minhash_lsh_build(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     sig = minhash_signature(spark, sf_dir)
-    # The band table is tiny (#docs × N_BANDS rows) and feeds both
-    # sides of the candidate self-join — at scale this is the
-    # signature table you'd persist anyway (minhash_index_build does
-    # exactly that for the incremental path).
-    bands = _lsh_bands_from_sig(sig).localCheckpoint()
-    _LSH_CHECKPOINTS.append(bands)
+    cand = _lsh_band_candidates(_lsh_bands_from_sig(sig), _LSH_CHECKPOINTS)
+    return _lsh_verify_pairs(spark, sf_dir, cand, _LSH_CHECKPOINTS)
+
+
+def _lsh_band_candidates(bands: DataFrame, ckpts: list) -> DataFrame:
+    """Checkpointed (a, b) candidate pairs, a < b, of the documents
+    sharing a (band, bkey) bucket; both checkpoints it makes are
+    appended to ``ckpts``, whose release the caller owns.
+
+    The band table is tiny (#docs × N_BANDS rows) and feeds both
+    sides of the self-join — at scale this is the signature table
+    you'd persist anyway (minhash_index_build does exactly that for
+    the incremental path).  NO coalesce on the candidates: they are
+    corpus-proportional on a boilerplate-heavy corpus (round-1 had a
+    coalesce(1) that pinned them to one task — a single-partition
+    exchange at 100 TB).  They are checkpointed because they feed
+    both the verify's semi-join filter and its join, but stay
+    shuffle-partitioned."""
+    bands = bands.localCheckpoint()
+    ckpts.append(bands)
     ba = bands.select(F.col("doc_id").alias("a"), "band", "bkey")
     bb = bands.select(F.col("doc_id").alias("b"), "band", "bkey")
-    # NO coalesce here: the candidate table is corpus-proportional on a
-    # boilerplate-heavy corpus (round-1 had a coalesce(1) that pinned it
-    # to one task — a single-partition exchange at 100 TB).  Keep the
-    # checkpoint (it feeds both the semi-join filter and the final
-    # verify join) but let it stay shuffle-partitioned.
     cand = (
         ba.join(bb, ["band", "bkey"])
         .filter(F.col("a") < F.col("b"))
@@ -462,8 +471,8 @@ def _dedup_minhash_lsh_build(
         .distinct()
         .localCheckpoint()
     )
-    _LSH_CHECKPOINTS.append(cand)
-    return _lsh_verify_pairs(spark, sf_dir, cand, _LSH_CHECKPOINTS)
+    ckpts.append(cand)
+    return cand
 
 
 def _lsh_verify_pairs(
@@ -615,7 +624,7 @@ MINHASH_INDEX_BUCKETS = 16
 def _mh_index_table(sf_dir: str) -> str:
     """Catalog name of the persisted base band-key table (the
     setsim/dhash single-writer assumption applies — see
-    :func:`_setsim_index_tables`)."""
+    :func:`_setsim_tables`)."""
     return BK.bucket_table_name("mh_idx_bands", sf_dir)
 
 
@@ -1967,187 +1976,309 @@ def setsim_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-joined down to candidate ids first — no corpus-proportional
     table is ever broadcast (the r05 design's one scale defect).
     Tokens are 64-bit ``xxhash64`` keys end to end (see
-    :func:`setsim_join_frame`); the string path survives behind
-    ``spark.smile.setsim.tokenHash=false`` as the oracle-shaped form.
+    :func:`_setsim_token_sets`); the raw-string path survives only as
+    ``setsim_join_frame(docs, hash_tokens=False)``, the reference
+    :func:`setsim_hash_agreement` certifies the hashed path against.
     """
     return setsim_join_frame(table(spark, sf_dir, "documents"))
 
 
-# Checkpoint lifetime is tied to the RETURNED frame (ADVICE r10
-# medium): each setsim_join_frame invocation localCheckpoints up to
-# six stages into a per-invocation group, and a weakref finalizer on
-# the result releases that group's blocks when the result is
-# garbage-collected.  CPython refcounting makes this deterministic
-# for the bench/driver pattern (the previous result goes out of scope
-# before the next call), so back-to-back runs still never accumulate
-# dead blocks — measured 11 s -> 48 s timing blowups by the fifth
-# sf0.1 run without release.  Unlike the previous
-# released-at-next-call design, two LIVE setsim frames (interleaved
-# or threaded callers, setsim_hash_agreement's double run) are now
-# safe: neither frame's checkpoints are freed while the frame itself
-# is still reachable, so the sequential-consumption contract — and
-# the release_previous escape hatch it required — are gone.
-def _setsim_release_group(group: list) -> None:
-    from smile_spark.session import unpersist_checkpoint
+# ---------------------------------------------------------------------------
+# The set-similarity kernel: every setsim entry (the self-join, the
+# in-memory and persisted incremental probes, the index build and roll
+# fold, the duplicate-set statistics) is built from these stages, each
+# written once.
+# ---------------------------------------------------------------------------
 
-    while group:
-        unpersist_checkpoint(group.pop())
+
+def _setsim_token_sets(docs: DataFrame, hash_tokens: bool = True) -> DataFrame:
+    """(doc_id, ts): each document's distinct whitespace tokens as a
+    sorted array, built in ONE exchange (collect_set dedups inside the
+    aggregate, map-side partial sets; r16 micro-bench: groupBy-direct
+    0.27 s vs distinct-then-groupBy 0.35-0.46 s at sf0.1).
+
+    Tokens are replaced by their ``xxhash64`` BEFORE the first
+    shuffle: the per-doc set, the document-frequency aggregate, the
+    prefix equi-join key and the verify-side arrays all carry
+    fixed-width 8-byte longs instead of variable-length strings — at
+    100 TB the shuffle-byte cut on the tokenize and prefix-join stages
+    is the difference between a network-bound and a CPU-bound job.
+    The pair set is IDENTICAL to the string path (the prefix filter
+    only needs a consistent global token order, and any total order
+    works; the (df, tok) tie-break just becomes (df, hash)) unless two
+    corpus tokens collide in 64 bits — ~1e-9 for a 10^5-token fixture
+    vocabulary, and detected rather than trusted:
+    :func:`setsim_hash_agreement` certifies path agreement on a corpus
+    block, and tests/test_round10_ops.py asserts full-output equality.
+    ``hash_tokens=False`` keeps the raw-string tokens, the reference
+    that certificate compares against (and the form the textual DuckDB
+    oracle mirrors token for token)."""
+    raw = docs.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("tok")
+    )
+    if hash_tokens:
+        raw = raw.select("doc_id", F.xxhash64("tok").alias("tok"))
+    return raw.groupBy("doc_id").agg(
+        F.array_sort(F.collect_set("tok")).alias("ts")
+    )
+
+
+def _setsim_index_frames(
+    docs: DataFrame, df: DataFrame | None = None, hash_tokens: bool = True
+) -> tuple[dict[str, DataFrame], list]:
+    """The index side of every setsim join over a (doc_id, text)
+    frame, in the persisted index layout (``_SETSIM_LAYOUT``):
+
+    - ``prefix`` (rb, tok, nb, pos): each representative's AllPairs
+      prefix, its first nb - ceil(tau*nb) + 1 tokens in the (df, tok)
+      order, with 1-based positions for the PPJoin positional filter;
+    - ``df`` (tok, df): the token order's document frequencies;
+    - ``reps`` (rb, ts, nb): each representative's sorted token array;
+    - ``members`` (rb, b, nb): representative -> member documents.
+
+    GROUP step (the GroupJoin optimization, Bouros et al. EDBT'12):
+    documents with IDENTICAL token sets are interchangeable for set
+    similarity — J(a, b) = 1 within a group, and J(a, x) is the same
+    for every member a — so candidate generation and verification run
+    on group REPRESENTATIVES only (rb = the group's min doc id) and
+    results expand back through ``members``.  On a template-heavy
+    corpus this collapses the quadratic core hard (sf0.1: 5,000 docs
+    -> 3,935 unique sets, one group of 248 verbatim-template docs).
+    Grouping is EXACT — the key is the sorted token array itself, not
+    a hash — and lossless: every output value (na, nb, i, jaccard)
+    depends on the pair's token SETS only.
+
+    ``df`` is the token order the prefixes are ranked by.  None
+    computes it from these representatives (an index build); a probe
+    or a fold passes the index's own df, under which tokens absent
+    from the index read 0 and sort first.  The AllPairs prefix filter
+    is lossless under ANY total order both sides share, so the df
+    values only size the prefixes, never decide correctness.
+
+    The membership is checkpointed (the one job that scans ``docs``);
+    it carries ts per member, so the four frames are narrow
+    derivations of it.  Returns the frames and the checkpoint list,
+    whose release the caller owns."""
+    from pyspark.sql.window import Window
+
+    membership = (
+        _setsim_token_sets(docs, hash_tokens)
+        .groupBy("ts")
+        .agg(
+            F.min("doc_id").alias("rb"),
+            F.collect_list("doc_id").alias("ms"),
+        )
+        .select(
+            "rb",
+            "ts",
+            F.explode("ms").alias("b"),
+            F.size("ts").cast("bigint").alias("nb"),
+        )
+        .localCheckpoint()
+    )
+    reps = membership.filter(F.col("b") == F.col("rb")).select(
+        "rb", "ts", "nb"
+    )
+    rtoks = reps.select("rb", "nb", F.explode("ts").alias("tok"))
+    if df is None:
+        df = rtoks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    wdoc = Window.partitionBy("rb").orderBy(F.asc("df"), F.asc("tok"))
+    ceil_tau_n = F.expr(
+        f"({SETSIM_TAU_NUM} * nb + {SETSIM_TAU_DEN - 1})"
+        f" div {SETSIM_TAU_DEN}"
+    )
+    prefix = (
+        rtoks.join(df, "tok", "left")
+        .withColumn("df", F.coalesce("df", F.lit(0)))
+        .withColumn("pos", F.row_number().over(wdoc))
+        .filter(F.col("pos") <= F.col("nb") - ceil_tau_n + 1)
+        .select("rb", "tok", "nb", "pos")
+    )
+    frames = {
+        "prefix": prefix,
+        "df": df,
+        "reps": reps,
+        "members": membership.select("rb", "b", "nb"),
+    }
+    return frames, [membership]
+
+
+def _setsim_side(prefix: DataFrame, s: str) -> DataFrame:
+    """A prefix frame as join side ``s``: (r<s>, tok, n<s>, i<s>)."""
+    return prefix.select(
+        F.col("rb").alias(f"r{s}"),
+        "tok",
+        F.col("nb").alias(f"n{s}"),
+        F.col("pos").alias(f"i{s}"),
+    )
+
+
+def _setsim_bounds() -> F.Column:
+    """The length and positional filters over a joined (na, ia, nb, ib)
+    prefix-token pair, in exact integers.
+
+    Length: tau*na <= nb AND tau*nb <= na.  Positional (PPJoin, Xiao
+    et al. TODS'11): a shared prefix token at positions (ia, ib)
+    bounds the overlap by 1 + min(na-ia, nb-ib); a qualifying pair
+    needs alpha = ceil(tau/(1+tau) * (na+nb)).  Lossless: the bound
+    holds for the FIRST shared token of any qualifying pair, which
+    both prefixes retain — so can't-reach-tau pairs drop inside the
+    join, before the candidate distinct and the exact verify.  The
+    float forms of these thresholds are off by one at boundary sizes
+    (see SETSIM_TAU_NUM)."""
+    na, nb = F.col("na"), F.col("nb")
+    alpha = F.expr(
+        f"({_SETSIM_ALPHA_NUM} * (na + nb) + {_SETSIM_ALPHA_DEN - 1})"
+        f" div {_SETSIM_ALPHA_DEN}"
+    )
+    return (
+        (nb * SETSIM_TAU_DEN >= na * SETSIM_TAU_NUM)
+        & (na * SETSIM_TAU_DEN >= nb * SETSIM_TAU_NUM)
+        & (1 + F.least(na - F.col("ia"), nb - F.col("ib")) >= alpha)
+    )
+
+
+def _setsim_verify(
+    cand: DataFrame, reps_a: DataFrame, reps_b: DataFrame
+) -> DataFrame:
+    """Exact verify of CHECKPOINTED representative candidates
+    (ra, rb, na, nb) against the two sides' (rb, ts) arrays:
+    (ra, rb, na, nb, i, jaccard) with jaccard rounded to 6 places and
+    >= SETSIM_TAU.
+
+    Candidate-bounded, never corpus-bounded: each side's arrays are
+    semi-joined down to the ids that appear in a candidate BEFORE
+    they are broadcast (the r05 full-corpus array broadcast was the
+    one 100 TB scale-killer in the repo); one distinct id set serves
+    both semi-joins, so its exchange runs once.  Verification stays
+    map-side over cand's partitions instead of dragging ~KB arrays
+    through two shuffles per pair (measured 8x slower).  ``cand`` fans
+    out first: AQE coalesces a candidate distinct to ~1 partition by
+    its shuffle BYTES, while verify cost is per-ROW array_intersect
+    work (measured 35 s serial vs ~4 s spread)."""
+    ids = F.broadcast(
+        cand.select(F.explode(F.array("ra", "rb")).alias("id")).distinct()
+    )
+    pa = reps_a.join(ids, F.col("rb") == F.col("id"), "semi").select(
+        F.col("rb").alias("ra"), F.col("ts").alias("ta")
+    )
+    pb = reps_b.join(ids, F.col("rb") == F.col("id"), "semi").select(
+        "rb", F.col("ts").alias("tb")
+    )
+    return (
+        fan_out(cand)
+        .join(F.broadcast(pa), "ra")
+        .join(F.broadcast(pb), "rb")
+        .withColumn(
+            "i", F.size(F.array_intersect("ta", "tb")).cast("bigint")
+        )
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("i").cast("double")
+                / (F.col("na") + F.col("nb") - F.col("i")),
+                6,
+            ),
+        )
+        .filter(F.col("jaccard") >= SETSIM_TAU)
+        .select("ra", "rb", "na", "nb", "i", "jaccard")
+    )
+
+
+def _setsim_expand(
+    verified: DataFrame, members_a: DataFrame, members_b: DataFrame
+) -> DataFrame:
+    """Expand verified representative pairs to document pairs
+    (a, b, na, nb, i, jaccard): a verified (ra, rb) holds for every
+    member of ra's group x every member of rb's group.  Both joins are
+    output-proportional (each joined row IS one result row)."""
+    ma = members_a.select(F.col("rb").alias("ra"), F.col("b").alias("a"))
+    return (
+        verified.join(ma, "ra")
+        .join(members_b.select("rb", "b"), "rb")
+        .select("a", "b", "na", "nb", "i", "jaccard")
+    )
+
+
+def _setsim_probe_indexed(
+    docs: DataFrame, index: dict[str, DataFrame]
+) -> DataFrame:
+    """Probe ``docs`` against setsim index frames (the persisted
+    tables via :func:`_setsim_read_index`, or a base block's in-memory
+    :func:`_setsim_index_frames`): (a, b, na, nb, i, jaccard), a from
+    ``docs``, b from the index.
+
+    The probe side is the same frame builder under the index's df, so
+    both sides rank tokens by one shared total order.  Both sides keep
+    the AllPairs prefix n - ceil(tau*n) + 1: the sharper PPJoin index
+    prefix of :func:`_setsim_join_core` is valid only under that
+    join's (n, id) role canonicalization (it needs the index doc to
+    be the pair's smaller set), which a semantic probe-vs-index split
+    cannot impose — using it here measurably DROPS qualifying pairs
+    (22 of 3,314 at sf0.001).  The length and positional filters are
+    role-free and apply unchanged.  Checkpointed stages release when
+    the returned frame dies."""
+    from smile_spark.session import release_checkpoints_on_gc
+
+    probe, group = _setsim_index_frames(docs, index["df"])
+    cand = (
+        _setsim_side(probe["prefix"], "a")
+        .join(_setsim_side(index["prefix"], "b"), "tok")
+        .filter(_setsim_bounds())
+        .select("ra", "rb", "na", "nb")
+        .distinct()
+        .localCheckpoint()
+    )
+    group.append(cand)
+    verified = _setsim_verify(cand, probe["reps"], index["reps"])
+    out = _setsim_expand(verified, probe["members"], index["members"])
+    release_checkpoints_on_gc(out, group)
+    return out
 
 
 def _setsim_join_core(
     docs: DataFrame,
     checkpoint: bool = True,
-    hash_tokens: bool | None = None,
+    hash_tokens: bool = True,
 ) -> tuple[DataFrame, DataFrame, list]:
-    """The prefix-filtered exact Jaccard join over any (doc_id, text)
-    frame up to the REPRESENTATIVE level: returns (verified rep pairs
-    (a, b, na, nb, i, jaccard), membership (doc_id, rep, n),
-    checkpoint group).  The caller owns the checkpoint group's
-    release (setsim_join_frame ties it to its expanded result; the
-    r16 text label contraction releases it with the label frame).
-    Factored out so the text-rung base label build can run connected
-    components over the COLLAPSED (representative-level) graph —
-    identical-token-set groups are cliques, so contraction preserves
-    components, and min-label cc over reps yields the same minima
-    (each rep IS its group's min doc id).
+    """The prefix-filtered exact Jaccard self-join over any
+    (doc_id, text) frame up to the REPRESENTATIVE level: returns
+    (verified rep pairs (ra, rb, na, nb, i, jaccard) with ra < rb,
+    members (rb, b, nb), checkpoint group).  The caller owns the
+    checkpoint group's release (setsim_join_frame ties it to its
+    expanded result; the text label contraction releases it with the
+    label frame, running connected components over the COLLAPSED
+    graph — identical-token-set groups are cliques, so contraction
+    preserves components, and each rep IS its group's min doc id).
 
-    The original full-join contract (setsim_join_prefix's docstring
-    below still applies): the core of :func:`setsim_join_prefix`, exposed for reuse
-    and boundary testing (pairs with Jaccard EXACTLY tau are the cases
-    the integer thresholds exist for).
+    The index side is :func:`_setsim_index_frames` over the whole
+    input; the self-join then takes ASYMMETRIC prefixes (PPJoin, Xiao
+    et al. TODS'11): the probe side keeps the AllPairs length
+    plen = n - ceil(tau*n) + 1, the INDEX side only needs
+    plen_idx = n - ceil(2*tau/(1+tau)*n) + 1.  Lossless: for a
+    qualifying pair let w be the FIRST shared token in the global
+    (df, tok) order and y the canonical-smaller doc ((n, id) order).
+    All shared tokens rank >= w, so the overlap i satisfies
+    i <= n_side - pos_side(w) + 1 on EACH side; with
+    i >= alpha = ceil(tau/(1+tau)*(nx+ny)) >= ceil(tau*nx) (length
+    filter) the probe bound follows, and alpha >=
+    ceil(2*tau/(1+tau)*ny) (ny <= nx) gives the sharper index bound.
+    At tau = 9/10 the index prefix is ~n/19 + 1 vs ~n/10 + 1 — the raw
+    join output roughly HALVES vs the symmetric join, measured
+    3.28M -> 2.0M candidates at sf0.1.
 
-    ``hash_tokens`` (default: session conf
-    ``spark.smile.setsim.tokenHash``, true) replaces every token with
-    its ``xxhash64`` BEFORE the first shuffle: the per-doc distinct,
-    the document-frequency aggregate, the prefix equi-join key, and
-    the verify-side token arrays all carry fixed-width 8-byte longs
-    instead of variable-length strings — at 100 TB the shuffle-byte
-    cut on the tokenize/distinct and prefix-join stages is the
-    difference between a network-bound and a CPU-bound job.  The pair
-    set is IDENTICAL to the string path (the prefix filter only needs
-    a consistent global token order, and any total order works; the
-    (df, tok) tie-break just becomes (df, hash)) unless two corpus
-    tokens collide in 64 bits — ~1e-9 for a 10^5-token fixture
-    vocabulary, and detected rather than trusted:
-    :func:`setsim_hash_agreement` certifies path agreement on a
-    corpus block, and tests/test_dedup.py asserts full-output
-    equality at two SFs.  ``hash_tokens=False`` keeps the raw-string
-    path (the form the textual DuckDB oracle mirrors token-for-token).
-
-    ``checkpoint=False`` keeps the full logical plan visible (the
-    candidate table otherwise localCheckpoints, because it feeds both
-    the id semi-join and the verify join) — used by the plan audit.
+    ``checkpoint=False`` keeps the prefix and candidate tables lazy
+    (they otherwise localCheckpoint, because each feeds several
+    consumers) — used by the plan audit; the membership is always
+    checkpointed by the frame builder.
     """
-    if hash_tokens is None:
-        hash_tokens = _setsim_hash_conf(docs.sparkSession)
-    # this invocation's checkpointed stages; released when the
-    # RETURNED frame is garbage-collected (see _setsim_release_group)
-    group: list[DataFrame] = []
-    raw = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    )
-    if hash_tokens:
-        # hash BEFORE the first shuffle so it moves 8-byte keys, not
-        # token text
-        raw = raw.select("doc_id", F.xxhash64("tok").alias("tok"))
-    # ONE exchange builds the per-doc token sets: collect_set dedups
-    # inside the aggregate (map-side partial sets), so the previous
-    # distinct() exchange + separately checkpointed token table were
-    # pure overhead — the per-token views below re-derive from the
-    # checkpointed arrays with a narrow explode instead (guide §2.4;
-    # r16 micro-bench: groupBy-direct 0.27 s vs distinct-then-groupBy
-    # 0.35-0.46 s at sf0.1, and one exchange + one materialize job
-    # fewer per invocation).
-    # GROUP step (the GroupJoin optimization, Bouros et al. EDBT'12):
-    # documents with IDENTICAL distinct-token sets are interchangeable
-    # for set similarity — J(a, b) = 1 within a group, and J(a, x)
-    # is identical for every member a of a group.  On a template-heavy
-    # corpus this collapses the quadratic core hard (sf0.1: 5,000 docs
-    # -> 3,935 unique sets, one group of 248 verbatim-template docs
-    # alone accounts for 30.6k result pairs), so the prefix join,
-    # candidate distinct, and exact verify all run on GROUP
-    # REPRESENTATIVES only; results expand back through two
-    # output-proportional membership joins plus the intra-group
-    # all-pairs (J = 1 by construction, no verify needed).  Grouping
-    # is EXACT — the group key is the sorted token array itself, not
-    # a hash — and costs one corpus-linear groupBy(doc) + one
-    # groupBy(set) shuffle, which the verify-array collection needed
-    # to build anyway.  Lossless: every output value (na, nb, i,
-    # jaccard) depends on the pair's token SETS only.
-    dsets = raw.groupBy("doc_id").agg(
-        F.array_sort(F.collect_set("tok")).alias("ts")
-    )
-    if checkpoint:
-        # dsets feeds the membership aggregate, the rep-token explode,
-        # AND the verify arrays
-        dsets = dsets.localCheckpoint()
-        group.append(dsets)
-    membership = (
-        dsets.groupBy("ts")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.collect_list("doc_id").alias("ms"),
-        )
-        .select(
-            F.explode("ms").alias("doc_id"),
-            "rep",
-            F.size("ts").cast("bigint").alias("n"),
-        )
-    )
-    if checkpoint:
-        # membership is read five times (rep filter, expansion x2,
-        # intra-group x2) and is tiny — (doc_id, rep, n) ints
-        membership = membership.localCheckpoint()
-        group.append(membership)
-    reps = membership.filter(F.col("doc_id") == F.col("rep")).select(
-        "doc_id"
-    )
-    # the quadratic core sees representatives only from here on; the
-    # per-token view re-derives from the checkpointed arrays (narrow
-    # explode — n = |ts| rides along, so the former sizes aggregate
-    # and its join are gone too)
-    rtoks = dsets.join(reps, "doc_id", "semi").select(
-        "doc_id",
-        F.size("ts").cast("bigint").alias("n"),
-        F.explode("ts").alias("tok"),
-    )
-    dfreq = rtoks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    from pyspark.sql.window import Window
-
-    wdoc = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("tok"))
-    ranked = rtoks.join(dfreq, "tok").withColumn(
-        "pos", F.row_number().over(wdoc)
-    )
-    # ASYMMETRIC prefixes (PPJoin, Xiao et al. TODS'11): the probe
-    # side keeps the AllPairs length plen = n - ceil(tau*n) + 1, the
-    # INDEX side only needs plen_idx = n - ceil(2*tau/(1+tau)*n) + 1.
-    # Lossless: for a qualifying pair let w be the FIRST shared token
-    # in the global (df, tok) order and y the canonical-smaller doc
-    # ((n, id) order).  All shared tokens rank >= w, so the overlap i
-    # satisfies i <= n_side - pos_side(w) + 1 on EACH side; with
-    # i >= alpha = ceil(tau/(1+tau)*(nx+ny)) >= ceil(tau*nx) (length
-    # filter) the probe bound follows, and alpha >=
-    # ceil(2*tau/(1+tau)*ny) (ny <= nx) gives the sharper index
-    # bound.  At tau = 9/10 the index prefix is ~n/19 + 1 vs ~n/10 + 1
-    # — the raw join output (sum over tokens of probe-bucket x
-    # index-bucket) roughly HALVES vs the symmetric join, measured
-    # 3.28M -> 2.0M candidates at sf0.1.  Ceils in exact integers.
-    ceil_tau_n = F.expr(
-        f"({SETSIM_TAU_NUM} * n + {SETSIM_TAU_DEN - 1})"
-        f" div {SETSIM_TAU_DEN}"
-    )
-    plen = F.col("n") - ceil_tau_n + 1
+    frames, group = _setsim_index_frames(docs, hash_tokens=hash_tokens)
     ceil_idx_n = F.expr(
-        f"(2 * {SETSIM_TAU_NUM} * n + {_SETSIM_ALPHA_DEN - 1})"
+        f"(2 * {SETSIM_TAU_NUM} * nb + {_SETSIM_ALPHA_DEN - 1})"
         f" div {_SETSIM_ALPHA_DEN}"
     )
-    plen_idx = F.col("n") - ceil_idx_n + 1
-    prefix = ranked.filter(F.col("pos") <= plen).select(
-        "doc_id",
-        "tok",
-        "n",
-        "pos",
-        (F.col("pos") <= plen_idx).alias("in_idx"),
+    prefix = frames["prefix"].withColumn(
+        "in_idx", F.col("pos") <= F.col("nb") - ceil_idx_n + 1
     )
     if checkpoint:
         # prefix feeds the salt-factor probe plus both join sides —
@@ -2176,30 +2307,6 @@ def _setsim_join_core(
             .first()["h"]
         )
         n_salts = _setsim_n_salts_pairs(int(hot or 0))
-    px = prefix.select(
-        F.col("doc_id").alias("x"),
-        "tok",
-        F.col("n").alias("nx"),
-        F.col("pos").alias("ix"),
-    )
-    py = prefix.filter("in_idx").select(
-        F.col("doc_id").alias("y"),
-        "tok",
-        F.col("n").alias("ny"),
-        F.col("pos").alias("iy"),
-    )
-    # PPJoin positional filter: a shared prefix token at positions
-    # (ix, iy) bounds the overlap by 1 + min(nx-ix, ny-iy); pairs that
-    # cannot reach the required alpha = ceil(tau/(1+tau)*(nx+ny)) are
-    # dropped INSIDE the join (lossless: the bound holds for the first
-    # shared token of any qualifying pair).  On this template-heavy
-    # corpus the raw prefix join upper bound is 44M rows at sf0.1 —
-    # the asymmetric index prefix and the inline filters keep that
-    # from ever reaching the distinct.
-    alpha = F.expr(
-        f"({_SETSIM_ALPHA_NUM} * (nx + ny) + {_SETSIM_ALPHA_DEN - 1})"
-        f" div {_SETSIM_ALPHA_DEN}"
-    )
     # The prefix-token join is SALTED (functions/skew.py): "prefix
     # tokens are rare" fails on a template-heavy corpus — here the
     # hottest prefix token sits in 3,816 docs' probe prefixes at
@@ -2208,180 +2315,93 @@ def _setsim_join_core(
     # split can't see: the INPUT partitions are tiny).  Salting
     # spreads each hot token over n_salts reducers by replicating the
     # (short-prefix, hence small) index side — bounded cost, balanced
-    # output.  The previous explicit broadcast of the full prefix
-    # table was balanced too but grew with the corpus and would hit
-    # the 8GB broadcast cap / driver OOM long before 100 TB (VERDICT
-    # r05 What's-wrong #1); the salted join keeps the balance with a
-    # corpus-independent replication factor instead.
+    # output, and unlike a broadcast of the full prefix table it never
+    # grows with the corpus toward the 8GB broadcast cap (VERDICT r05
+    # What's-wrong #1).
     from smile_spark.functions.skew import salted_join
 
+    na, nb, ra, rb = (F.col(c) for c in ("na", "nb", "ra", "rb"))
     cand = (
-        salted_join(px, py, "tok", n_salts=n_salts)
-        .filter(
-            # y strictly canonical-smaller than x in (n, id) order —
-            # each unordered pair is generated in exactly one role
-            # assignment, and the index-prefix bound applies to y
-            (
-                (F.col("ny") < F.col("nx"))
-                | ((F.col("ny") == F.col("nx")) & (F.col("y") < F.col("x")))
-            )
-            # length filter: ny >= tau * nx (the other direction is
-            # implied by ny <= nx)
-            & (
-                F.lit(SETSIM_TAU_DEN) * F.col("ny")
-                >= F.lit(SETSIM_TAU_NUM) * F.col("nx")
-            )
-            & (
-                1
-                + F.least(
-                    F.col("nx") - F.col("ix"), F.col("ny") - F.col("iy")
-                )
-                >= alpha
-            )
+        salted_join(
+            _setsim_side(prefix, "a"),
+            _setsim_side(prefix.filter("in_idx"), "b"),
+            "tok",
+            n_salts=n_salts,
         )
-        # output contract is id-ordered (a < b), independent of the
+        # b strictly canonical-smaller than a in (n, id) order — each
+        # unordered pair is generated in exactly one role assignment,
+        # and the index-prefix bound applies to b
+        .filter(((nb < na) | ((nb == na) & (rb < ra))) & _setsim_bounds())
+        # output contract is id-ordered (ra < rb), independent of the
         # (n, id) role order the join used
         .select(
-            F.least("x", "y").alias("a"),
-            F.greatest("x", "y").alias("b"),
-            F.when(F.col("x") < F.col("y"), F.col("nx"))
-            .otherwise(F.col("ny"))
-            .alias("na"),
-            F.when(F.col("x") < F.col("y"), F.col("ny"))
-            .otherwise(F.col("nx"))
-            .alias("nb"),
+            F.least(ra, rb).alias("ra"),
+            F.greatest(ra, rb).alias("rb"),
+            F.when(ra < rb, na).otherwise(nb).alias("na"),
+            F.when(ra < rb, nb).otherwise(na).alias("nb"),
         )
         .distinct()
     )
     if checkpoint:
-        # cand feeds the id semi-join AND the verify join — cut the
-        # lineage so the (expensive) prefix join runs exactly once,
-        # the same contract as _dedup_minhash_lsh_build's cand.
+        # cand feeds both id semi-joins AND the verify join — cut the
+        # lineage so the (expensive) prefix join runs exactly once
         cand = cand.localCheckpoint()
         group.append(cand)
-    # Exact verification only ever touches documents that appear in a
-    # candidate pair — semi-join the token-array table down to those
-    # ids BEFORE collecting arrays (the dedup_minhash_lsh template at
-    # _dedup_minhash_lsh_build), so the verify side is CANDIDATE-
-    # bounded, never corpus-bounded (the previous full-corpus array
-    # broadcast was the one genuine 100 TB scale-killer in the repo).
-    cand_ids = (
-        cand.select(F.col("a").alias("doc_id"))
-        .union(cand.select(F.col("b").alias("doc_id")))
-        .distinct()
-    )
-    arrays = dsets.join(F.broadcast(cand_ids), "doc_id", "semi").select(
-        "doc_id", F.col("ts").alias("toks")
-    )
-    if checkpoint:
-        # both verify sides read arrays — one corpus token explode,
-        # not two (the table itself is candidate-bounded, i.e. tiny)
-        arrays = arrays.localCheckpoint()
-        group.append(arrays)
-    # fan_out BEFORE the verify: AQE coalesces the candidate distinct
-    # to ~1 partition by its shuffle BYTES (3.28M 4-int rows compress
-    # small), but verify cost is per-ROW array_intersect work — the
-    # post-expansion-cost rule from tables.fan_out.  Without this the
-    # whole verify runs in one task (measured 35 s serial vs ~4 s
-    # spread).
-    cand = fan_out(cand)
-    # Broadcast the CANDIDATE-BOUNDED arrays so verification stays
-    # map-side over cand's partitions: the candidate table is the big
-    # side on a template-heavy corpus (3.28M pairs at sf0.1) and each
-    # row would otherwise drag its ~KB token arrays through two
-    # shuffles (measured 8x slower).  Unlike r05 this broadcast scales
-    # with candidate-touched docs, not the corpus; in the degenerate
-    # regime where candidates touch most of the corpus, the exact
-    # tau-join is intrinsically quadratic and needs blocking upstream
-    # regardless of the verify plan.
-    verified = (
-        cand.join(F.broadcast(arrays.select(F.col("doc_id").alias("a"),
-                                            F.col("toks").alias("ta"))), "a")
-        .join(F.broadcast(arrays.select(F.col("doc_id").alias("b"),
-                                        F.col("toks").alias("tb"))), "b")
-        .withColumn(
-            "i", F.size(F.array_intersect("ta", "tb")).cast("bigint")
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("i").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("i")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= SETSIM_TAU)
-    )
-    return verified, membership, group
+    verified = _setsim_verify(cand, frames["reps"], frames["reps"])
+    return verified, frames["members"], group
 
 
 def setsim_join_frame(
     docs: DataFrame,
     checkpoint: bool = True,
-    hash_tokens: bool | None = None,
+    hash_tokens: bool = True,
 ) -> DataFrame:
     """Expand :func:`_setsim_join_core`'s verified representative
     pairs back to document pairs — the full join's public face; see
-    the core's docstring for the pipeline."""
-    verified, membership, group = _setsim_join_core(
+    the core's docstring for the pipeline.
+
+    Checkpoint lifetime is tied to the RETURNED frame (ADVICE r10
+    medium): the invocation's checkpoints are released when the result
+    is garbage-collected (``session.release_checkpoints_on_gc``), so
+    back-to-back runs never accumulate dead blocks (measured 11 s ->
+    48 s by the fifth sf0.1 run without release), and two LIVE setsim
+    frames (setsim_hash_agreement's double run) are safe."""
+    from smile_spark.session import release_checkpoints_on_gc
+
+    verified, members, group = _setsim_join_core(
         docs, checkpoint, hash_tokens
     )
-    # EXPAND group representatives back to documents — both joins are
-    # output-proportional (each joined row IS one result row).
-    # Inter-group: a verified rep pair (ra, rb) holds for every
-    # (member of ra's group) x (member of rb's group); na/nb swap with
-    # the id order because the output contract is id-ordered.
-    ma = membership.select(
-        F.col("rep").alias("a"), F.col("doc_id").alias("da")
-    )
-    mb = membership.select(
-        F.col("rep").alias("b"), F.col("doc_id").alias("db")
-    )
-    inter = (
-        verified.join(ma, "a")
-        .join(mb, "b")
-        .select(
-            F.least("da", "db").alias("a"),
-            F.greatest("da", "db").alias("b"),
-            F.when(F.col("da") < F.col("db"), F.col("na"))
-            .otherwise(F.col("nb"))
-            .cast("bigint")
-            .alias("na"),
-            F.when(F.col("da") < F.col("db"), F.col("nb"))
-            .otherwise(F.col("na"))
-            .cast("bigint")
-            .alias("nb"),
-            "i",
-            "jaccard",
-        )
+    # Inter-group: expanded pairs re-orient to the id-ordered output
+    # contract; na/nb swap with the order.
+    a, b = F.col("a"), F.col("b")
+    inter = _setsim_expand(verified, members, members).select(
+        F.least(a, b).alias("a"),
+        F.greatest(a, b).alias("b"),
+        F.when(a < b, F.col("na")).otherwise(F.col("nb")).alias("na"),
+        F.when(a < b, F.col("nb")).otherwise(F.col("na")).alias("nb"),
+        "i",
+        "jaccard",
     )
     # Intra-group: members share one token set, so every in-group pair
     # is a result with i = na = nb = n and jaccard exactly 1.0 — no
     # candidate generation, no verify.  ROUND(n/(n+n-n), 6) = 1.0 on
     # both engines.
-    ga = membership.select("rep", F.col("doc_id").alias("da"), "n")
-    gb = membership.select("rep", F.col("doc_id").alias("db"))
+    ga = members.select("rb", F.col("b").alias("da"), "nb")
+    gb = members.select("rb", F.col("b").alias("db"))
     intra = (
-        ga.join(gb, "rep")
+        ga.join(gb, "rb")
         .filter(F.col("da") < F.col("db"))
         .select(
             F.col("da").alias("a"),
             F.col("db").alias("b"),
-            F.col("n").alias("na"),
-            F.col("n").alias("nb"),
-            F.col("n").alias("i"),
+            F.col("nb").alias("na"),
+            "nb",
+            F.col("nb").alias("i"),
             F.lit(1.0).alias("jaccard"),
         )
     )
     result = inter.unionByName(intra)
-    if group:
-        import weakref
-
-        # release this invocation's checkpoint blocks when the result
-        # frame dies; deterministic under CPython refcounting for the
-        # sequential bench/driver pattern, and safe for callers that
-        # hold several live setsim frames at once.
-        weakref.finalize(result, _setsim_release_group, group)
+    release_checkpoints_on_gc(result, group)
     return result
 
 
@@ -2502,37 +2522,17 @@ def setsim_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     full corpus on every ingest — the naive alternative — is avoided
     entirely.
 
-    Plan (the PPJoin asymmetry of setsim_join_frame, specialized to
-    two sides): one corpus-linear tokenize + distinct (64-bit xxhash64
-    keys under ``spark.smile.setsim.tokenHash``); document frequencies
-    from the BASE side only (the production index ships precomputed
-    stats; the prefix theorem holds under ANY shared total order, so
-    probe tokens unseen in the base — df 0, sorted first — cost probe
-    prefix slots but never correctness); the AllPairs prefix
-    n - ceil(tau*n) + 1 on BOTH sides — the sharper PPJoin index
-    bound of setsim_join_frame is valid only under that join's
-    (n, id) role canonicalization (it needs the index doc to be the
-    pair's smaller set), which a semantic probe-vs-base split cannot
-    impose, so using it here measurably DROPS qualifying pairs (22
-    of 3,314 at sf0.001 — caught by the oracle during development);
-    a tok-keyed equi-join
-    with the exact-integer length filter (tau*na <= nb <= na/tau);
-    and a candidate-bounded exact verify (arrays semi-joined to
-    candidate ids, broadcast because candidate-bounded — never
-    corpus-bounded).  Checkpointed stages release when the returned
-    frame dies.
-
-    PER-SIDE GroupJoin collapse (the Bouros et al. device of
-    setsim_join_frame, simplified by the disjoint sides): documents
-    with identical token SETS are interchangeable for set similarity,
-    so the prefix join, length filter, and exact verify all run on
-    per-side group REPRESENTATIVES only, and results expand back
-    through two output-proportional membership joins.  Because the
-    probe and index sides are disjoint, no intra-group or unordered-
-    pair handling is needed — an increment group and a base group
-    with the SAME token set meet as an ordinary rep pair (J = 1)
-    through the regular join.  Measured 5.7 -> ~2.5 s at sf0.1 (the
-    fixture's template families collapse the candidate core hard).
+    Plan: the base block's index frames are built in memory
+    (:func:`_setsim_index_frames`: tokenize, per-side GroupJoin
+    collapse, document frequencies from the BASE side only, AllPairs
+    prefixes) and probed by the increment through
+    :func:`_setsim_probe_indexed` — the same probe core
+    :func:`setsim_incremental_indexed` runs over the persisted index.
+    Because the probe and index sides are disjoint, no intra-group or
+    unordered-pair handling is needed — an increment group and a base
+    group with the SAME token set meet as an ordinary rep pair
+    (J = 1) through the regular join.  Checkpointed stages release
+    when the returned frame dies.
 
     Returns (a, b, na, nb, i, jaccard) with a from the increment and
     b from the base (NOT id-ordered — the sides are semantically
@@ -2541,199 +2541,10 @@ def setsim_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smile_spark.session import release_checkpoints_on_gc
 
     docs = table(spark, sf_dir, "documents")
-    hash_tokens = _setsim_hash_conf(spark)
-    group: list[DataFrame] = []
-    raw = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    )
-    if hash_tokens:
-        raw = raw.select("doc_id", F.xxhash64("tok").alias("tok"))
-    # ONE exchange builds the per-doc token sets (collect_set dedups
-    # inside the aggregate — the former distinct() exchange and the
-    # checkpointed token table are gone; per-token views re-derive
-    # from the checkpointed arrays, guide §2.4).  is_inc is a pure
-    # function of doc_id, so it is re-derived after the aggregate
-    # instead of riding through it as a first() column.
-    dsets = (
-        raw.groupBy("doc_id")
-        .agg(F.array_sort(F.collect_set("tok")).alias("ts"))
-        .select(
-            "doc_id",
-            (F.col("doc_id") % SETSIM_INC_MOD == 0).alias("is_inc"),
-            "ts",
-        )
-        .localCheckpoint()
-    )
-    group.append(dsets)
-    # GROUP step, per side: (is_inc, token set) -> representative +
-    # members.  n = |set| is shared by every member, so na/nb expand
-    # losslessly with the membership joins.
-    membership = (
-        dsets.groupBy("is_inc", "ts")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.collect_list("doc_id").alias("ms"),
-        )
-        .select(
-            "is_inc",
-            F.explode("ms").alias("doc_id"),
-            "rep",
-            F.size("ts").cast("bigint").alias("n"),
-        )
-        .localCheckpoint()
-    )
-    group.append(membership)
-    reps = membership.filter(F.col("doc_id") == F.col("rep")).select(
-        "is_inc", "doc_id", "n"
-    )
-    # the quadratic core sees per-side representatives only — a
-    # narrow explode of the checkpointed rep arrays (n rides along,
-    # so the former reps re-join in ranked is gone too)
-    rtoks = dsets.join(reps.select("doc_id"), "doc_id", "semi").select(
-        "doc_id",
-        "is_inc",
-        F.size("ts").cast("bigint").alias("n"),
-        F.explode("ts").alias("tok"),
-    )
-    # index-side document frequencies (base-rep groups only); probe
-    # tokens absent from the index read df 0 via the left join below
-    dfreq = (
-        rtoks.filter(~F.col("is_inc"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    from pyspark.sql.window import Window
-
-    wdoc = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("tok"))
-    ranked = (
-        rtoks.join(dfreq, "tok", "left")
-        .withColumn("df", F.coalesce("df", F.lit(0)))
-        .withColumn("pos", F.row_number().over(wdoc))
-    )
-    ceil_tau_n = F.expr(
-        f"({SETSIM_TAU_NUM} * n + {SETSIM_TAU_DEN - 1})"
-        f" div {SETSIM_TAU_DEN}"
-    )
-    plen_probe = F.col("n") - ceil_tau_n + 1
-    # AllPairs prefix for the index side too — see the docstring for
-    # why the sharper PPJoin index-prefix bound is NOT valid in this
-    # asymmetry.  The PPJoin POSITIONAL filter below IS valid: its
-    # derivation (setsim_join_frame) binds the overlap through the
-    # first shared token's positions and never uses role order.
-    plen_idx = plen_probe
-    probe = ranked.filter(
-        F.col("is_inc") & (F.col("pos") <= plen_probe)
-    ).select(
-        F.col("doc_id").alias("ra"),
-        "tok",
-        F.col("n").alias("na"),
-        F.col("pos").alias("ia"),
-    )
-    index = ranked.filter(
-        ~F.col("is_inc") & (F.col("pos") <= plen_idx)
-    ).select(
-        F.col("doc_id").alias("rb"),
-        "tok",
-        F.col("n").alias("nb"),
-        F.col("pos").alias("ib"),
-    )
-    # alpha = ceil(tau/(1+tau) * (na+nb)): the overlap a qualifying
-    # pair must reach; a shared prefix token at positions (ia, ib)
-    # bounds the overlap by 1 + min(na-ia, nb-ib) — lossless (the
-    # bound holds for the FIRST shared token of any qualifying pair,
-    # which the AllPairs prefixes on both sides always retain).  r16:
-    # 722k -> far fewer candidate rows reach the distinct AND the
-    # exact verify (guide §3.2's shrink-before-shuffle applied to the
-    # quadratic core).
-    alpha = F.expr(
-        f"({_SETSIM_ALPHA_NUM} * (na + nb) + {_SETSIM_ALPHA_DEN - 1})"
-        f" div {_SETSIM_ALPHA_DEN}"
-    )
-    cand = (
-        probe.join(index, "tok")
-        # exact-integer length filter: tau*na <= nb AND tau*nb <= na
-        .filter(
-            (F.col("nb") * SETSIM_TAU_DEN >= F.col("na") * SETSIM_TAU_NUM)
-            & (F.col("na") * SETSIM_TAU_DEN >= F.col("nb") * SETSIM_TAU_NUM)
-            & (
-                1
-                + F.least(
-                    F.col("na") - F.col("ia"), F.col("nb") - F.col("ib")
-                )
-                >= alpha
-            )
-        )
-        .select("ra", "rb", "na", "nb")
-        .distinct()
-        .localCheckpoint()
-    )
-    group.append(cand)
-    cand_ids = (
-        cand.select(F.col("ra").alias("doc_id"))
-        .union(cand.select(F.col("rb").alias("doc_id")))
-        .distinct()
-    )
-    arrays = (
-        dsets.select("doc_id", "ts")
-        .join(F.broadcast(cand_ids), "doc_id", "semi")
-        .localCheckpoint()
-    )
-    group.append(arrays)
-    # fan out BEFORE the per-row array_intersect verify (the AQE
-    # bytes-vs-rows coalesce trap; see setsim_join_frame)
-    cand = fan_out(cand)
-    verified = (
-        cand.join(
-            F.broadcast(
-                arrays.select(
-                    F.col("doc_id").alias("ra"), F.col("ts").alias("ta")
-                )
-            ),
-            "ra",
-        )
-        .join(
-            F.broadcast(
-                arrays.select(
-                    F.col("doc_id").alias("rb"), F.col("ts").alias("tb")
-                )
-            ),
-            "rb",
-        )
-        .withColumn(
-            "i", F.size(F.array_intersect("ta", "tb")).cast("bigint")
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("i").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("i")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= SETSIM_TAU)
-        .select("ra", "rb", "na", "nb", "i", "jaccard")
-    )
-    # EXPAND representatives back to documents — both joins are
-    # output-proportional (each joined row IS one result row)
-    ma = membership.filter("is_inc").select(
-        F.col("rep").alias("ra"), F.col("doc_id").alias("a")
-    )
-    mb = membership.filter(~F.col("is_inc")).select(
-        F.col("rep").alias("rb"), F.col("doc_id").alias("b")
-    )
-    out = (
-        verified.join(ma, "ra")
-        .join(mb, "rb")
-        .select(
-            "a",
-            "b",
-            F.col("na").cast("bigint").alias("na"),
-            F.col("nb").cast("bigint").alias("nb"),
-            "i",
-            "jaccard",
-        )
-    )
-    release_checkpoints_on_gc(out, group)
+    is_inc = F.col("doc_id") % SETSIM_INC_MOD == 0
+    index, ckpts = _setsim_index_frames(docs.filter(~is_inc))
+    out = _setsim_probe_indexed(docs.filter(is_inc), index)
+    release_checkpoints_on_gc(out, ckpts)
     return out
 
 
@@ -2767,14 +2578,10 @@ SETSIM_INCREMENTAL_SQL = (
 # :func:`setsim_incremental` recomputes the base side's tokenize + df
 # stats + prefixes on EVERY run — corpus-linear work a daily-ingest
 # pipeline should pay once.  The index below persists the base side's
-# four artifacts as bucketed catalog tables (the graph_adjacency /
-# bucketed_join_revenue physical layout), each bucketed on its probe
-# join key so the index side of every probe join reads pre-partitioned
-# data with ZERO exchange:
-#   prefix(tok, rb, nb)   bucketed by tok — the candidate join side
-#   df(tok, df)           bucketed by tok — the probe ranking join
-#   reps(rb, ts)          bucketed by rb  — verify-side token arrays
-#   members(rb, b)        bucketed by rb  — rep -> doc expansion
+# four :func:`_setsim_index_frames` as bucketed catalog tables (the
+# graph_adjacency / bucketed_join_revenue physical layout), each
+# bucketed on its probe join key so the index side of every probe join
+# reads pre-partitioned data with ZERO exchange (``_SETSIM_LAYOUT``).
 # SETSIM_INDEX_BUCKETS is a cap, not the bucket count: the count comes
 # from ``bucketed.bucket_count`` on the documents file, 1 bucket when
 # it is a local file within spark.sql.autoBroadcastJoinThreshold (every
@@ -2784,6 +2591,15 @@ SETSIM_INCREMENTAL_SQL = (
 # setsim_roll_* record the count, so an index written under another
 # count is rebuilt, never adopted or appended to.
 SETSIM_INDEX_BUCKETS = 16
+
+# part -> (bucket key, persisted columns); the df part is written by a
+# build only, a fold keeps it frozen
+_SETSIM_LAYOUT = {
+    "prefix": ("tok", ["rb", "tok", "nb", "pos"]),  # candidate join side
+    "df": ("tok", ["tok", "df"]),  # the probe ranking join
+    "reps": ("rb", ["rb", "ts", "nb"]),  # verify-side token arrays
+    "members": ("rb", ["rb", "b"]),  # rep -> doc expansion
+}
 
 
 def _setsim_n_buckets(spark: SparkSession, sf_dir: str) -> int:
@@ -2796,20 +2612,14 @@ def _setsim_n_buckets(spark: SparkSession, sf_dir: str) -> int:
     )
 
 
-def _setsim_hash_conf(spark: SparkSession) -> bool:
-    return str(
-        spark.conf.get("spark.smile.setsim.tokenHash", "true")
-    ).lower() == "true"
-
-
-def _setsim_index_tables(sf_dir: str, hash_tokens: bool) -> dict[str, str]:
-    """Catalog names of the four bucketed index tables for one
-    (fixture dir, token-hash mode).
+def _setsim_tables(family: str, sf_dir: str) -> dict[str, str]:
+    """Catalog names of the four bucketed tables of one setsim family
+    (``setsim_idx`` or ``setsim_roll``) for one fixture dir.
 
     SINGLE-WRITER ASSUMPTION (ADVICE r12 #3): the tables (and their
-    warehouse directories) are catalog/warehouse-global per (sf_dir,
-    mode) while the ``bucketed`` state registry is per-process — a
-    second concurrent application that decides to rebuild runs
+    warehouse directories) are catalog/warehouse-global per sf_dir
+    while the ``bucketed`` state registry is per-process — a second
+    concurrent application that decides to rebuild runs
     ``drop_bucketed_table`` (which also rm -rf's the warehouse dir)
     and can yank files out from under another application's in-flight
     probe.  One application owns the warehouse at a time — the same
@@ -2818,33 +2628,87 @@ def _setsim_index_tables(sf_dir: str, hash_tokens: bool) -> dict[str, str]:
     :func:`setsim_index_build`) narrows the exposure — a fresh
     session that finds a valid sidecar never drops anything — but the
     rebuild path remains single-writer."""
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    suffix = "h1" if hash_tokens else "h0"
     return {
-        part: bucket_table_name(f"setsim_idx_{part}_{suffix}", sf_dir)
-        for part in ("prefix", "df", "reps", "members")
+        part: BK.bucket_table_name(f"{family}_{part}", sf_dir)
+        for part in _SETSIM_LAYOUT
     }
 
 
-def _setsim_suffix(spark: SparkSession) -> str:
-    return "h1" if _setsim_hash_conf(spark) else "h0"
+def _setsim_read_index(
+    spark: SparkSession, tables: dict[str, str]
+) -> dict[str, DataFrame]:
+    """The persisted index tables as the frames
+    :func:`_setsim_probe_indexed` takes."""
+    return {
+        part: BK.read_bucketed(spark, tbl) for part, tbl in tables.items()
+    }
 
 
 def _setsim_params(roll: bool) -> Callable:
     def params(spark: SparkSession, sf_dir: str) -> dict:
         p = {
-            "hash_tokens": _setsim_hash_conf(spark),
             "n_buckets": _setsim_n_buckets(spark, sf_dir),
             "tau": [SETSIM_TAU_NUM, SETSIM_TAU_DEN],
             "inc_mod": SETSIM_INC_MOD,
-            "prefix_cols": ["rb", "tok", "nb", "pos"],
+            "prefix_cols": _SETSIM_LAYOUT["prefix"][1],
         }
         if roll:
             p["roll_mod"] = SETSIM_ROLL_MOD
         return p
 
     return params
+
+
+def _setsim_persist(
+    put: Callable,
+    frames: dict[str, DataFrame],
+    tables: dict[str, str],
+    parts: list[str],
+    n_buckets: int,
+) -> None:
+    """Write (``put`` = write_bucketed) or append (append_bucketed)
+    the ``parts`` of an index frame set in the persisted layout."""
+    for part in parts:
+        key, cols = _SETSIM_LAYOUT[part]
+        put(frames[part].select(*cols), tables[part], key, n_buckets=n_buckets)
+
+
+def _setsim_index_write(
+    spark: SparkSession,
+    docs: DataFrame,
+    tables: dict[str, str],
+    n_buckets: int,
+) -> int:
+    """Compute and persist the four setsim index tables for ``docs``
+    (the corpus-linear pass of :func:`_setsim_index_frames`) in
+    ``n_buckets`` buckets, dropping any prior version first.  The base
+    write of both setsim state specs, which pass
+    :func:`_setsim_n_buckets` (the count their sidecars record);
+    sidecar/memo bookkeeping stays with the ``bucketed`` lifecycle.
+    Build-time checkpoints are released in the finally block even when
+    a drop/write throws (ADVICE r12 #2).
+
+    Returns the number of ``docs`` rows, null ``text`` included,
+    observed by the job that checkpoints the membership (the only job
+    that scans ``docs``)."""
+    from pyspark.sql import Observation
+
+    from smile_spark.session import unpersist_checkpoint
+
+    seen = Observation()
+    frames, ckpts = _setsim_index_frames(
+        docs.observe(seen, F.count(F.lit(1)).alias("rows"))
+    )
+    try:
+        for tbl in tables.values():
+            BK.drop_bucketed_table(spark, tbl)
+        _setsim_persist(
+            BK.write_bucketed, frames, tables, list(_SETSIM_LAYOUT), n_buckets
+        )
+    finally:
+        for c in ckpts:
+            unpersist_checkpoint(c)
+    return seen.get["rows"]
 
 
 def _setsim_write_base(
@@ -2854,22 +2718,16 @@ def _setsim_write_base(
         spark,
         _documents(spark, sf_dir).filter(_text_base()),
         tables,
-        _setsim_hash_conf(spark),
         _setsim_n_buckets(spark, sf_dir),
     )
 
 
 # the snapshot fingerprint is the base-block row count plus every
-# parameter the persisted tables depend on; the sidecar name is (mode,
-# sf_dir)-scoped exactly like the tables
+# parameter the persisted tables depend on; the sidecar name is
+# sf_dir-scoped exactly like the tables
 SETSIM_INDEX = BK.StateSpec(
     name="setsim_idx",
-    tables=lambda spark, sf_dir: _setsim_index_tables(
-        sf_dir, _setsim_hash_conf(spark)
-    ),
-    sidecar=lambda spark, sf_dir: BK.bucket_table_name(
-        f"setsim_idx_{_setsim_suffix(spark)}", sf_dir
-    ),
+    tables=lambda spark, sf_dir: _setsim_tables("setsim_idx", sf_dir),
     params=_setsim_params(roll=False),
     source=_documents,
     base=_text_base,
@@ -2886,120 +2744,18 @@ def clear_setsim_index_cache() -> None:
     BK.clear_state(SETSIM_INDEX)
 
 
-def _setsim_index_write(
-    spark: SparkSession,
-    docs: DataFrame,
-    tables: dict[str, str],
-    hash_tokens: bool,
-    n_buckets: int,
-) -> int:
-    """Compute and persist the four setsim index tables for ``docs``
-    (the corpus-linear pass: tokenize, per-side GroupJoin collapse,
-    document frequencies, AllPairs prefixes) in ``n_buckets`` buckets,
-    dropping any prior version first.  The base write of both setsim
-    state specs, which pass :func:`_setsim_n_buckets` (the count their
-    sidecars record); sidecar/memo bookkeeping stays with the
-    ``bucketed`` lifecycle.
-    Build-time checkpoints are consumed and released in the finally
-    block even when a drop/write throws (ADVICE r12 #2).
-
-    Returns the number of ``docs`` rows, null ``text`` included,
-    observed by the job that checkpoints the membership (the only job
-    that scans ``docs``)."""
-    from pyspark.sql import Observation
-    from pyspark.sql.window import Window
-
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-    )
-
-    seen = Observation()
-    raw = docs.observe(seen, F.count(F.lit(1)).alias("rows")).select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    )
-    if hash_tokens:
-        raw = raw.select("doc_id", F.xxhash64("tok").alias("tok"))
-    # ONE exchange builds the per-doc token sets (collect_set dedups
-    # inside the aggregate); the membership checkpoint carries ts per
-    # member, so the rep-token view below is a narrow explode of the
-    # REP rows — the former distinct() exchange, separate token
-    # checkpoint, and rep semi-join are gone (guide §2.4).
-    dsets = raw.groupBy("doc_id").agg(
-        F.array_sort(F.collect_set("tok")).alias("ts")
-    )
-    membership = (
-        dsets.groupBy("ts")
-        .agg(
-            F.min("doc_id").alias("rb"),
-            F.collect_list("doc_id").alias("ms"),
-        )
-        .select(
-            "rb",
-            "ts",
-            F.explode("ms").alias("b"),
-            F.size("ts").cast("bigint").alias("nb"),
-        )
-        .localCheckpoint()
-    )
-    reps = membership.filter(F.col("b") == F.col("rb"))
-    rtoks = reps.select(
-        F.col("rb").alias("doc_id"), "nb", F.explode("ts").alias("tok")
-    )
-    dfreq = rtoks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    wdoc = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("tok"))
-    ceil_tau_n = F.expr(
-        f"({SETSIM_TAU_NUM} * nb + {SETSIM_TAU_DEN - 1})"
-        f" div {SETSIM_TAU_DEN}"
-    )
-    ranked = rtoks.join(dfreq, "tok").withColumn(
-        "pos", F.row_number().over(wdoc)
-    )
-    # pos is persisted with each prefix row (r16) so probes can apply
-    # the lossless PPJoin positional filter before the candidate
-    # distinct + exact verify; the index sidecar payloads carry
-    # "prefix_cols" so indexes written without pos are unadoptable.
-    prefix = ranked.filter(
-        F.col("pos") <= F.col("nb") - ceil_tau_n + 1
-    ).select(F.col("doc_id").alias("rb"), "tok", "nb", "pos")
-    from smile_spark.session import unpersist_checkpoint
-
-    try:
-        for tbl in tables.values():
-            drop_bucketed_table(spark, tbl)
-        write_bucketed(prefix, tables["prefix"], "tok", n_buckets=n_buckets)
-        write_bucketed(dfreq, tables["df"], "tok", n_buckets=n_buckets)
-        write_bucketed(
-            reps.select("rb", "ts", "nb"),
-            tables["reps"],
-            "rb",
-            n_buckets=n_buckets,
-        )
-        write_bucketed(
-            membership.select("rb", "b"),
-            tables["members"],
-            "rb",
-            n_buckets=n_buckets,
-        )
-    finally:
-        unpersist_checkpoint(membership)
-    return seen.get["rows"]
-
-
 def setsim_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Materialize the incremental-dedup BASE index once per
-    (application, fixture dir, token-hash mode): one corpus-linear
-    pass over the base block (tokenize, per-side GroupJoin collapse,
-    document frequencies, AllPairs prefixes — exactly the base-side
-    stages of :func:`setsim_incremental`), persisted as four bucketed
-    tables.  Returns the table-name map.
+    (application, fixture dir): one corpus-linear pass over the base
+    block (:func:`_setsim_index_frames` — tokenize, GroupJoin
+    collapse, document frequencies, AllPairs prefixes — exactly the
+    base side :func:`setsim_incremental` builds in memory), persisted
+    as four bucketed tables.  Returns the table-name map.
 
     At 100 TB this is the nightly index job: the corpus pays its
     linear pass ONCE, and every ingest probes the bucketed tables —
     the ``ann_ivf_indexed`` persist-and-probe contract applied to set
-    similarity.  The token-hash mode is baked into the table names, so
-    flipping ``spark.smile.setsim.tokenHash`` mid-session can never
-    serve an index built under the other tokenization.
+    similarity.
 
     A session whose per-process memo is empty first tries to ADOPT
     the existing tables (VERDICT r12 next-round #5, the shared
@@ -3030,182 +2786,19 @@ def setsim_incremental_indexed(
     exchange.
 
     Result-identical to :func:`setsim_incremental` (asserted by an
-    agreement test and the shared DuckDB oracle): the probe ranks its
-    prefix tokens by the PERSISTED base document frequencies (absent
-    tokens read df 0 and sort first — the same shared total order),
-    both sides keep the AllPairs prefix bound, the exact-integer
-    length filter and candidate-bounded exact verify are unchanged.
+    agreement test and the shared DuckDB oracle): both run the one
+    probe core :func:`_setsim_probe_indexed`, here over the
+    ``read_bucketed`` frames of the index instead of the in-memory
+    frames of the base block.
 
     Returns (a, b, na, nb, i, jaccard), a from the increment, b from
     the base.
     """
+    index = _setsim_read_index(spark, setsim_index_build(spark, sf_dir))
+    docs = table(spark, sf_dir, "documents")
     return _setsim_probe_indexed(
-        spark,
-        sf_dir,
-        setsim_index_build(spark, sf_dir),
-        F.col("doc_id") % SETSIM_INC_MOD == 0,
+        docs.filter(F.col("doc_id") % SETSIM_INC_MOD == 0), index
     )
-
-
-def _setsim_probe_indexed(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: dict[str, str],
-    probe_pred,
-) -> DataFrame:
-    """The indexed-probe core of :func:`setsim_incremental_indexed`,
-    parametrized by the index table map and the probe-block predicate
-    so the roll-forward family (:func:`setsim_rolled_probe`) reuses
-    the identical probe plan against its own tables."""
-    from pyspark.sql.window import Window
-
-    from smile_spark.session import release_checkpoints_on_gc
-    from smile_spark.sources.bucketed import read_bucketed
-
-    hash_tokens = _setsim_hash_conf(spark)
-    group: list[DataFrame] = []
-    docs = table(spark, sf_dir, "documents").filter(probe_pred)
-    raw = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    )
-    if hash_tokens:
-        raw = raw.select("doc_id", F.xxhash64("tok").alias("tok"))
-    # ONE exchange builds the per-doc token sets (collect_set dedups
-    # inside the aggregate); the membership checkpoint carries ts per
-    # member, so the probe-side token view below is a narrow explode
-    # of the REP rows — the former distinct() exchange, separate
-    # token checkpoint, and rep semi-join are all gone (guide §2.4).
-    dsets = raw.groupBy("doc_id").agg(
-        F.array_sort(F.collect_set("tok")).alias("ts")
-    )
-    membership = (
-        dsets.groupBy("ts")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.collect_list("doc_id").alias("ms"),
-        )
-        .select(
-            "ts",
-            F.explode("ms").alias("doc_id"),
-            "rep",
-            F.size("ts").cast("bigint").alias("n"),
-        )
-        .localCheckpoint()
-    )
-    group.append(membership)
-    reps = membership.filter(F.col("doc_id") == F.col("rep")).select(
-        "doc_id", "ts", "n"
-    )
-    rtoks = reps.select("doc_id", "n", F.explode("ts").alias("tok"))
-    # probe tokens ranked by the PERSISTED base df; unseen tokens read
-    # df 0 and sort first (prefix-valid under any shared total order)
-    dfreq = read_bucketed(spark, tables["df"])
-    wdoc = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("tok"))
-    ranked = (
-        rtoks.join(dfreq, "tok", "left")
-        .withColumn("df", F.coalesce("df", F.lit(0)))
-        .withColumn("pos", F.row_number().over(wdoc))
-    )
-    ceil_tau_n = F.expr(
-        f"({SETSIM_TAU_NUM} * n + {SETSIM_TAU_DEN - 1})"
-        f" div {SETSIM_TAU_DEN}"
-    )
-    probe = ranked.filter(
-        F.col("pos") <= F.col("n") - ceil_tau_n + 1
-    ).select(
-        F.col("doc_id").alias("ra"),
-        "tok",
-        F.col("n").alias("na"),
-        F.col("pos").alias("ia"),
-    )
-    index = read_bucketed(spark, tables["prefix"]).select(
-        F.col("rb"), "tok", F.col("nb"), F.col("pos").alias("ib")
-    )
-    # lossless PPJoin positional filter (the setsim_incremental r16
-    # device): a shared prefix token at (ia, ib) bounds the overlap by
-    # 1 + min(na-ia, nb-ib); pairs that cannot reach
-    # alpha = ceil(tau/(1+tau)*(na+nb)) are dropped inside the join,
-    # before the candidate distinct and the exact verify.
-    alpha = F.expr(
-        f"({_SETSIM_ALPHA_NUM} * (na + nb) + {_SETSIM_ALPHA_DEN - 1})"
-        f" div {_SETSIM_ALPHA_DEN}"
-    )
-    cand = (
-        probe.join(index, "tok")
-        .filter(
-            (F.col("nb") * SETSIM_TAU_DEN >= F.col("na") * SETSIM_TAU_NUM)
-            & (F.col("na") * SETSIM_TAU_DEN >= F.col("nb") * SETSIM_TAU_NUM)
-            & (
-                1
-                + F.least(
-                    F.col("na") - F.col("ia"), F.col("nb") - F.col("ib")
-                )
-                >= alpha
-            )
-        )
-        .select("ra", "rb", "na", "nb")
-        .distinct()
-        .localCheckpoint()
-    )
-    group.append(cand)
-    # candidate-bounded verify: probe rep arrays come from the already
-    # CHECKPOINTED membership table (never a second collect_set
-    # aggregate over the increment), base arrays from the persisted
-    # rep table — both semi-joined down to candidate ids before
-    # broadcasting.  Neither is checkpointed: each feeds exactly ONE
-    # broadcast build, so a checkpoint would just add a job.
-    pa = (
-        membership.filter(F.col("doc_id") == F.col("rep"))
-        .select(F.col("rep").alias("ra"), F.col("ts").alias("ta"))
-        .join(
-            F.broadcast(cand.select("ra").distinct()), "ra", "semi"
-        )
-    )
-    pb = (
-        read_bucketed(spark, tables["reps"])
-        .select(F.col("rb"), F.col("ts").alias("tb"))
-        .join(
-            F.broadcast(cand.select("rb").distinct()), "rb", "semi"
-        )
-    )
-    verified = (
-        fan_out(cand)
-        .join(F.broadcast(pa), "ra")
-        .join(F.broadcast(pb), "rb")
-        .withColumn(
-            "i", F.size(F.array_intersect("ta", "tb")).cast("bigint")
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("i").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("i")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= SETSIM_TAU)
-        .select("ra", "rb", "na", "nb", "i", "jaccard")
-    )
-    ma = membership.select(
-        F.col("rep").alias("ra"), F.col("doc_id").alias("a")
-    )
-    mb = read_bucketed(spark, tables["members"]).select(
-        "rb", F.col("b")
-    )
-    out = (
-        verified.join(ma, "ra")
-        .join(mb, "rb")
-        .select(
-            "a",
-            "b",
-            F.col("na").cast("bigint").alias("na"),
-            F.col("nb").cast("bigint").alias("nb"),
-            "i",
-            "jaccard",
-        )
-    )
-    release_checkpoints_on_gc(out, group)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -3247,114 +2840,36 @@ def _setsim_probe_indexed(
 SETSIM_ROLL_MOD = 2 * SETSIM_INC_MOD  # fold: % 10 == 0; probe: % 10 == 5
 
 
-def _setsim_roll_tables(sf_dir: str, hash_tokens: bool) -> dict[str, str]:
-    """Roll-forward twin of :func:`_setsim_index_tables` (same
-    single-writer assumption)."""
-    suffix = "h1" if hash_tokens else "h0"
-    return {
-        part: BK.bucket_table_name(f"setsim_roll_{part}_{suffix}", sf_dir)
-        for part in ("prefix", "df", "reps", "members")
-    }
-
-
-def _setsim_roll_sidecar_name(sf_dir: str, hash_tokens: bool) -> str:
-    return BK.bucket_table_name(
-        f"setsim_roll_{'h1' if hash_tokens else 'h0'}", sf_dir
-    )
-
-
 def _setsim_fold_append(
-    spark: SparkSession,
-    sf_dir: str,
-    hash_tokens: bool,
-    tables: dict[str, str],
-    n_buckets: int,
+    spark: SparkSession, sf_dir: str, tables: dict[str, str]
 ) -> None:
-    """Append the fold block's collapse/membership/prefix rows to the
-    persisted roll tables — the increment-linear nightly step.
-    ``n_buckets`` must be the count the tables were written with (the
-    payloads' ``n_buckets``): Spark refuses an append whose bucket
-    spec differs.  The df table is NOT touched: it is the frozen total
-    order (see the section comment).  The ``bucketed`` lifecycle runs
-    it with the sidecar already removed and drops the tables if it
-    fails, so a half-appended index is never adoptable (a
+    """Append the fold block's prefix/reps/members rows — its
+    :func:`_setsim_index_frames` ranked under the FROZEN persisted df
+    (see the section comment) — to the persisted roll tables, the
+    increment-linear nightly step.  The appends use the bucket count
+    the tables were written with (the payloads' ``n_buckets``): Spark
+    refuses an append whose bucket spec differs.  The ``bucketed``
+    lifecycle runs it with the sidecar already removed and drops the
+    tables if it fails, so a half-appended index is never adoptable (a
     transactional table format would make append+fingerprint
     atomic)."""
-    from pyspark.sql.window import Window
-
     from smile_spark.session import unpersist_checkpoint
-    from smile_spark.sources.bucketed import append_bucketed, read_bucketed
 
-    fold = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % SETSIM_ROLL_MOD == 0
-    )
-    raw = fold.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    )
-    if hash_tokens:
-        raw = raw.select("doc_id", F.xxhash64("tok").alias("tok"))
-    # same one-exchange shape as _setsim_index_write (guide §2.4)
-    dsets = raw.groupBy("doc_id").agg(
-        F.array_sort(F.collect_set("tok")).alias("ts")
+    fold = _documents(spark, sf_dir).filter(_text_roll_fold())
+    frames, ckpts = _setsim_index_frames(
+        fold, BK.read_bucketed(spark, tables["df"])
     )
     try:
-        membership = (
-            dsets.groupBy("ts")
-            .agg(
-                F.min("doc_id").alias("rb"),
-                F.collect_list("doc_id").alias("ms"),
-            )
-            .select(
-                "rb",
-                "ts",
-                F.explode("ms").alias("b"),
-                F.size("ts").cast("bigint").alias("nb"),
-            )
-            .localCheckpoint()
-        )
-        reps = membership.filter(F.col("b") == F.col("rb"))
-        rtoks = reps.select(
-            F.col("rb").alias("doc_id"),
-            "nb",
-            F.explode("ts").alias("tok"),
-        )
-        # prefixes ranked under the FROZEN persisted df — absent
-        # tokens read df 0 and sort first, the probe's exact rule
-        dfreq = read_bucketed(spark, tables["df"])
-        wdoc = Window.partitionBy("doc_id").orderBy(
-            F.asc("df"), F.asc("tok")
-        )
-        ceil_tau_n = F.expr(
-            f"({SETSIM_TAU_NUM} * nb + {SETSIM_TAU_DEN - 1})"
-            f" div {SETSIM_TAU_DEN}"
-        )
-        ranked = (
-            rtoks.join(dfreq, "tok", "left")
-            .withColumn("df", F.coalesce("df", F.lit(0)))
-            .withColumn("pos", F.row_number().over(wdoc))
-        )
-        prefix = ranked.filter(
-            F.col("pos") <= F.col("nb") - ceil_tau_n + 1
-        ).select(F.col("doc_id").alias("rb"), "tok", "nb", "pos")
-        append_bucketed(prefix, tables["prefix"], "tok", n_buckets=n_buckets)
-        append_bucketed(
-            reps.select("rb", "ts", "nb"),
-            tables["reps"],
-            "rb",
-            n_buckets=n_buckets,
-        )
-        append_bucketed(
-            membership.select("rb", "b"),
-            tables["members"],
-            "rb",
-            n_buckets=n_buckets,
+        _setsim_persist(
+            BK.append_bucketed,
+            frames,
+            tables,
+            ["prefix", "reps", "members"],
+            _setsim_n_buckets(spark, sf_dir),
         )
     finally:
-        # membership may not exist if its checkpoint threw
-        try:
-            unpersist_checkpoint(membership)
-        except NameError:
-            pass
+        for c in ckpts:
+            unpersist_checkpoint(c)
 
 
 # Both payloads carry every build parameter plus the covered-block
@@ -3363,24 +2878,13 @@ def _setsim_fold_append(
 # the roll tables: the base write and the fold appends both use it.
 SETSIM_ROLL = BK.StateSpec(
     name="setsim_roll",
-    tables=lambda spark, sf_dir: _setsim_roll_tables(
-        sf_dir, _setsim_hash_conf(spark)
-    ),
-    sidecar=lambda spark, sf_dir: _setsim_roll_sidecar_name(
-        sf_dir, _setsim_hash_conf(spark)
-    ),
+    tables=lambda spark, sf_dir: _setsim_tables("setsim_roll", sf_dir),
     params=_setsim_params(roll=True),
     source=_documents,
     base=_text_base,
     write_base=_setsim_write_base,
     fold=_text_roll_fold,
-    append_fold=lambda spark, sf_dir, tables: _setsim_fold_append(
-        spark,
-        sf_dir,
-        _setsim_hash_conf(spark),
-        tables,
-        _setsim_n_buckets(spark, sf_dir),
-    ),
+    append_fold=_setsim_fold_append,
 )
 
 
@@ -3410,8 +2914,8 @@ def setsim_index_rollforward(
     replacing the drop-and-rebuild that made every snapshot change
     corpus-linear.
 
-    Three-state resolution per (application, sf_dir, token-hash), the
-    shared ``bucketed.roll_forward`` contract:
+    Three-state resolution per (application, sf_dir), the shared
+    ``bucketed.roll_forward`` contract:
     1. a ROLLED sidecar over live tables → adopt (nothing to do);
     2. a BASE sidecar over live tables → fold (increment-linear);
     3. anything else (no sidecar, stale snapshot, CHANGED PARAMETERS)
@@ -3432,19 +2936,16 @@ def setsim_rolled_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     so any fold defect (wrong ranking order, missed append, schema
     drift) fails the closed-form oracle's hash gate.
 
-    The probe plan is byte-identical to setsim_incremental_indexed's
-    (the shared :func:`_setsim_probe_indexed` core): increment-only
-    tokenize/collapse/prefix, candidates against the bucketed prefix
-    table, candidate-bounded exact verify.  Returns
-    (a, b, na, nb, i, jaccard): a from the probe block, b from
+    The probe plan is setsim_incremental_indexed's (the shared
+    :func:`_setsim_probe_indexed` core) over the rolled tables.
+    Returns (a, b, na, nb, i, jaccard): a from the probe block, b from
     base ∪ fold.
     """
-    tables = setsim_index_rollforward(spark, sf_dir)
+    index = _setsim_read_index(spark, setsim_index_rollforward(spark, sf_dir))
+    docs = table(spark, sf_dir, "documents")
     return _setsim_probe_indexed(
-        spark,
-        sf_dir,
-        tables,
-        F.col("doc_id") % SETSIM_ROLL_MOD == SETSIM_INC_MOD,
+        docs.filter(F.col("doc_id") % SETSIM_ROLL_MOD == SETSIM_INC_MOD),
+        index,
     )
 
 
@@ -3756,11 +3257,10 @@ def exact_ngram_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — every stage linear in corpus tokens, shuffles keyed on
     gram/doc (hot template grams produce count rows and H joined rows,
     never H^2).  The gram key is a 64-bit ``xxhash64`` of the window
-    text (``spark.smile.ngram.gramHash``, default true): a 13-token
-    gram is ~80-100 bytes of text, so hashing cuts the distinct +
-    count + join shuffles ~10x at 100 TB; the string path survives
-    behind the conf as the oracle-shaped form, and
-    :func:`ngram_hash_agreement` certifies the two paths agree."""
+    text: a 13-token gram is ~80-100 bytes of text, so hashing cuts
+    the distinct + count + join shuffles ~10x at 100 TB; the string
+    path survives as ``hash_grams=False``, the reference
+    :func:`ngram_hash_agreement` certifies the hashed path against."""
     return exact_ngram_frame(
         table(spark, sf_dir, "documents"), SUBSTR_GRAM_N
     )
@@ -3776,27 +3276,18 @@ def _gram_expr(n: int, hashed: bool) -> str:
     return f"transform(sequence(1, size(tk) - {n - 1}), i -> {win})"
 
 
-def _gram_hash_conf(docs: DataFrame, hash_grams: bool | None) -> bool:
-    if hash_grams is None:
-        return str(
-            docs.sparkSession.conf.get("spark.smile.ngram.gramHash", "true")
-        ).lower() == "true"
-    return hash_grams
-
-
 def exact_ngram_frame(
-    docs: DataFrame, n: int, hash_grams: bool | None = None
+    docs: DataFrame, n: int, hash_grams: bool = True
 ) -> DataFrame:
     """Core per-doc duplicate-gram profile over any (doc_id, text)
     frame at window size ``n`` — exposed for property testing with
     small grams.  ``hash_grams`` as in :func:`dup_span_frame`."""
-    hashed = _gram_hash_conf(docs, hash_grams)
     toks = docs.select(
         "doc_id", F.split("text", " ").alias("tk")
     ).filter(F.size("tk") >= n)
     grams = toks.select(
         "doc_id",
-        F.explode(F.expr(_gram_expr(n, hashed))).alias("gram"),
+        F.explode(F.expr(_gram_expr(n, hash_grams))).alias("gram"),
     ).distinct()
     gstat = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("ndocs"))
     per = (
@@ -3933,23 +3424,22 @@ def dup_span_cutlist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dup_span_frame(
-    docs: DataFrame, n: int, hash_grams: bool | None = None
+    docs: DataFrame, n: int, hash_grams: bool = True
 ) -> DataFrame:
     """Core merged-span cut list over any (doc_id, text) frame at
     window size ``n`` — exposed for property testing with small
-    grams.  ``hash_grams`` (default: conf
-    ``spark.smile.ngram.gramHash``, true) joins on the 64-bit
+    grams.  ``hash_grams`` (default true) joins on the 64-bit
     xxhash64 of each window instead of its text — positions, spans,
     and every output value are unchanged unless two distinct grams
     collide in 64 bits (certified by :func:`ngram_hash_agreement` and
-    the two-SF equality tests)."""
-    hashed = _gram_hash_conf(docs, hash_grams)
+    the two-SF equality tests); ``False`` is that certificate's
+    raw-string reference."""
     toks = docs.select(
         "doc_id", F.split("text", " ").alias("tk")
     ).filter(F.size("tk") >= n)
     gpos = toks.select(
         "doc_id",
-        F.posexplode(F.expr(_gram_expr(n, hashed))).alias("p0", "gram"),
+        F.posexplode(F.expr(_gram_expr(n, hash_grams))).alias("p0", "gram"),
     ).select("doc_id", (F.col("p0") + 1).alias("i"), "gram")
     gdocs = (
         gpos.select("doc_id", "gram")
@@ -4026,10 +3516,10 @@ def longest_repeat_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is a total profile, not a hit list.
 
     Plan: the merged-span table from :func:`dup_span_frame` (linear
-    gram inventory + gaps-and-islands — 64-bit gram keys under
-    ``spark.smile.ngram.gramHash``), a doc-keyed aggregate over it
-    (spans per doc are disjoint by construction, so SUM(span_tokens)
-    is an exact covered-token count), and one left join back to the
+    gram inventory + gaps-and-islands over 64-bit gram keys), a
+    doc-keyed aggregate over it (spans per doc are disjoint by
+    construction, so SUM(span_tokens) is an exact covered-token
+    count), and one left join back to the
     per-doc token counts — every stage linear in corpus tokens,
     shuffled on doc_id.  Integer arithmetic throughout; the one
     double (max_run_frac) is a ROUND(int/int, 6) both engines compute
@@ -4040,7 +3530,7 @@ def longest_repeat_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def longest_repeat_frame(
-    docs: DataFrame, n: int, hash_grams: bool | None = None
+    docs: DataFrame, n: int, hash_grams: bool = True
 ) -> DataFrame:
     """Core longest-repeat profile over any (doc_id, text) frame at
     window size ``n`` — exposed for property testing with small
@@ -4111,24 +3601,16 @@ def duplicate_set_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_docs - n_groups) / n_docs rounded to 4 and intra_pairs =
     sum over groups of g*(g-1)/2 (exact integers).
 
-    Scale: the same corpus-linear tokenize + per-doc set + set-keyed
-    groupBy the GroupJoin itself runs (token sets travel as 64-bit
-    hashes under spark.smile.setsim.tokenHash, default true), then a
-    one-row aggregate — strictly cheaper than any join it plans for.
+    Scale: the same corpus-linear per-doc token sets
+    (:func:`_setsim_token_sets`, 64-bit token hashes) and set-keyed
+    groupBy the GroupJoin itself runs, then a one-row aggregate —
+    strictly cheaper than any join it plans for.
     """
-    docs = table(spark, sf_dir, "documents")
-    hash_tokens = _setsim_hash_conf(spark)
-    raw = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
+    groups = (
+        _setsim_token_sets(table(spark, sf_dir, "documents"))
+        .groupBy("ts")
+        .agg(F.count(F.lit(1)).alias("g"))
     )
-    if hash_tokens:
-        raw = raw.select("doc_id", F.xxhash64("tok").alias("tok"))
-    dsets = (
-        raw.distinct()
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_set("tok")).alias("ts"))
-    )
-    groups = dsets.groupBy("ts").agg(F.count(F.lit(1)).alias("g"))
     return groups.agg(
         F.sum("g").cast("bigint").alias("n_docs"),
         F.count(F.lit(1)).cast("bigint").alias("n_groups"),
@@ -4201,18 +3683,9 @@ def _text_base_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sp = setsim_join_frame(base)
     ckpts: list = []
-    bands = _lsh_bands_from_sig(_minhash_sig_from_docs(base)).localCheckpoint()
-    ckpts.append(bands)
-    ba = bands.select(F.col("doc_id").alias("a"), "band", "bkey")
-    bb = bands.select(F.col("doc_id").alias("b"), "band", "bkey")
-    cand = (
-        ba.join(bb, ["band", "bkey"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint()
+    cand = _lsh_band_candidates(
+        _lsh_bands_from_sig(_minhash_sig_from_docs(base)), ckpts
     )
-    ckpts.append(cand)
     mh = _lsh_verify_pairs(spark, sf_dir, cand, ckpts)
     out = sp.select("a", "b").union(mh.select("a", "b"))
     release_checkpoints_on_gc(out, ckpts)
@@ -4245,22 +3718,13 @@ def _text_base_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % SETSIM_INC_MOD != 0
     )
-    verified, membership, group = _setsim_join_core(base)
+    verified, members, group = _setsim_join_core(base)
     ckpts: list = list(group)
-    bands = _lsh_bands_from_sig(_minhash_sig_from_docs(base)).localCheckpoint()
-    ckpts.append(bands)
-    ba = bands.select(F.col("doc_id").alias("a"), "band", "bkey")
-    bb = bands.select(F.col("doc_id").alias("b"), "band", "bkey")
-    cand = (
-        ba.join(bb, ["band", "bkey"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint()
+    cand = _lsh_band_candidates(
+        _lsh_bands_from_sig(_minhash_sig_from_docs(base)), ckpts
     )
-    ckpts.append(cand)
     mh = _lsh_verify_pairs(spark, sf_dir, cand, ckpts)
-    m = membership.select("doc_id", "rep")
+    m = members.select(F.col("b").alias("doc_id"), F.col("rb").alias("rep"))
     mh_rep = (
         mh.select("a", "b")
         .join(
@@ -4277,7 +3741,10 @@ def _text_base_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("ra", "rb").alias("b"),
         )
     )
-    rep_labels = pair_components(verified.select("a", "b").union(mh_rep))
+    rep_labels = pair_components(
+        verified.select(F.col("ra").alias("a"), F.col("rb").alias("b"))
+        .union(mh_rep)
+    )
     ckpts.append(rep_labels)
     gsz = m.groupBy("rep").agg(F.count(F.lit(1)).alias("g"))
     labels = (
@@ -4317,11 +3784,6 @@ def _text_rung() -> L.LabelRung:
         return table(spark, sf_dir, "documents").select("doc_id")
 
     def params(spark: SparkSession, sf_dir: str) -> dict:
-        # token hashing is deliberately absent: the setsim pair SET is
-        # identical under either token representation (any total token
-        # order works for the lossless prefix filter — certified by
-        # setsim_hash_agreement), so flipping the conf must not
-        # invalidate persisted cluster state
         return {
             "pair_rungs": ["setsim", "minhash"],
             "inc_mod": SETSIM_INC_MOD,

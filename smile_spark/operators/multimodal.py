@@ -1722,7 +1722,7 @@ def _band_frame(
 def _band_index_table(sf_dir: str, modality: str) -> str:
     """Catalog name of the persisted base band table.  The same
     single-writer assumption as the setsim index tables applies (see
-    dedup._setsim_index_tables): one application owns the warehouse
+    dedup._setsim_tables): one application owns the warehouse
     at a time; the sidecar adoption path never drops anything."""
     return BK.bucket_table_name(_BAND_MODALITY[modality][2], sf_dir)
 

@@ -19,6 +19,8 @@ hand-written stateful loop.
 from __future__ import annotations
 
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,10 +92,26 @@ def streaming_tumbling(
     )
 
 
-# serializes run_stream_to_memory drains: the state-partition override
-# below is session-global, so overlapping drains could restore a stale
-# previous value (ADVICE r08 #1)
+# serializes stream drains: the state-partition override in
+# _drain_partitions is session-global, so overlapping drains could
+# restore a stale previous value (ADVICE r08 #1)
 _DRAIN_LOCK = threading.Lock()
+# state-store partitions of a drained stream (see run_stream_to_memory)
+STATE_PARTITIONS = 8
+
+
+@contextmanager
+def _drain_partitions(spark: SparkSession) -> Iterator[None]:
+    """Hold ``_DRAIN_LOCK`` and run the body with
+    ``spark.sql.shuffle.partitions`` at STATE_PARTITIONS, restoring the
+    previous value on exit, error included."""
+    with _DRAIN_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_stream_to_memory(
@@ -109,10 +127,9 @@ def run_stream_to_memory(
     store commits per trigger, which dominated the certificate drains
     (measured 17.2 s → 3.1 s at 8 partitions for
     streaming_join_agreement at sf0.1).  The drain therefore sizes
-    state partitions to the fixture's traffic (override with
-    ``spark.smile.streaming.statePartitions``); a production
-    deployment sizes this to per-trigger volume, not to the batch
-    shuffle default.  Results are partitioning-independent — only the
+    state partitions to the fixture's traffic (STATE_PARTITIONS); a
+    production deployment sizes this to per-trigger volume, not to the
+    batch shuffle default.  Results are partitioning-independent — only the
     commit overhead changes.
 
     The override is SESSION-GLOBAL for the duration of the drain
@@ -125,25 +142,17 @@ def run_stream_to_memory(
     drain is in flight (ADVICE r08 #1; the bench and the test suite
     already run drains standalone)."""
     spark = df.sparkSession
-    with _DRAIN_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        n_state = spark.conf.get(
-            "spark.smile.streaming.statePartitions", "8"
+    with _drain_partitions(spark):
+        query = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .start()
         )
-        spark.conf.set("spark.sql.shuffle.partitions", n_state)
         try:
-            query = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+            query.processAllAvailable()
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            query.stop()
     return spark.table(name)
 
 
@@ -1006,27 +1015,19 @@ def streaming_manifest_agreement(
             batches.append(batch_id)
 
     try:
-        with _DRAIN_LOCK:
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            n_state = spark.conf.get(
-                "spark.smile.streaming.statePartitions", "8"
+        with _drain_partitions(spark):
+            query = (
+                spark.readStream.schema("doc_id bigint")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(stage)
+                .writeStream.foreachBatch(handle)
+                .queryName(f"sma_{uuid.uuid4().hex[:10]}")
+                .start()
             )
-            spark.conf.set("spark.sql.shuffle.partitions", n_state)
             try:
-                query = (
-                    spark.readStream.schema("doc_id bigint")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(stage)
-                    .writeStream.foreachBatch(handle)
-                    .queryName(f"sma_{uuid.uuid4().hex[:10]}")
-                    .start()
-                )
-                try:
-                    query.processAllAvailable()
-                finally:
-                    query.stop()
+                query.processAllAvailable()
             finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
+                query.stop()
     except Exception:
         unpersist_checkpoint(pinned)
         raise

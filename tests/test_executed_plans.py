@@ -251,7 +251,7 @@ def test_setsim_index_feeds_shuffle_joins_at_full_width(spark, sf_dir):
         spark.conf.set(key, old)
         D.clear_setsim_index_cache()
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    tables = D._setsim_index_tables(sf_dir, D._setsim_hash_conf(spark))
+    tables = D._setsim_tables("setsim_idx", sf_dir)
     joined = set()
     for d in descs:
         plan = final_plan_section(d)

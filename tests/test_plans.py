@@ -146,8 +146,8 @@ def test_no_cartesian_in_any_lazy_query(spark, sf_dir):
         "image_dhash_dedup", "video_frame_dedup", "image_dhash_clusters",
         "audio_fingerprint_dedup", "video_dhash_tolerant",
         "audio_fingerprint_clusters",
-        # localCheckpoints toks/cand/arrays at plan time (the
-        # setsim_join_frame checkpoint contract, probe-vs-base form);
+        # localCheckpoint their memberships and candidates at plan
+        # time (the shared setsim probe core);
         # the indexed form additionally writes its bucketed base index
         # on first call (the ann_ivf_indexed eager-build precedent)
         "setsim_incremental", "setsim_incremental_indexed",

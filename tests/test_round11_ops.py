@@ -224,25 +224,6 @@ def test_setsim_incremental_equals_full_join_slice(spark, sf_dir):
     assert want, "fixture should contain increment-base near-dups"
 
 
-def test_setsim_incremental_hash_and_string_paths_agree(spark, sf_dir):
-    """Like setsim, the 64-bit token path must be pair-for-pair
-    identical to the raw-string path (the prefix filter holds under
-    any shared total order, including df-from-base with hash
-    tie-breaks)."""
-    from smile_spark.operators.dedup import setsim_incremental
-
-    def run(flag):
-        spark.conf.set("spark.smile.setsim.tokenHash", flag)
-        try:
-            return sorted(
-                map(tuple, setsim_incremental(spark, sf_dir).collect())
-            )
-        finally:
-            spark.conf.set("spark.smile.setsim.tokenHash", "true")
-
-    assert run("true") == run("false")
-
-
 def test_csv_malformed_audit_matches_oracle_two_sfs(spark, sf_dir):
     from smile_spark.sources.text_formats import (
         CSV_MALFORMED_AUDIT_SQL,

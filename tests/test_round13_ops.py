@@ -18,11 +18,7 @@ def _setsim_sidecar_path(spark, sf_dir):
     from smile_spark.operators import dedup as D
     from smile_spark.sources import bucketed as BK
 
-    hash_tokens = D._setsim_hash_conf(spark)
-    name = BK.bucket_table_name(
-        f"setsim_idx_{'h1' if hash_tokens else 'h0'}", sf_dir
-    )
-    return BK.sidecar_path(spark, name)
+    return BK.sidecar_path(spark, D.SETSIM_INDEX.sidecar_name(spark, sf_dir))
 
 
 def test_setsim_index_adopted_by_fresh_session(spark, sf_dir, monkeypatch):

@@ -39,19 +39,19 @@ def test_setsim_rollforward_agrees_with_full_rebuild(spark, sf_dir):
         "no pair hits a FOLD doc — the append never participated"
     )
     scratch = _scratch_setsim_tables(sf_dir)
-    hash_tokens = D._setsim_hash_conf(spark)
     from smile_spark.tables import table
 
-    grown = table(spark, sf_dir, "documents").filter(
+    docs = table(spark, sf_dir, "documents")
+    grown = docs.filter(
         F.col("doc_id") % D.SETSIM_ROLL_MOD != D.SETSIM_INC_MOD
     )
     try:
         n_buckets = D._setsim_n_buckets(spark, sf_dir)
-        D._setsim_index_write(spark, grown, scratch, hash_tokens, n_buckets)
+        D._setsim_index_write(spark, grown, scratch, n_buckets)
         want = {
             tuple(r)
             for r in D._setsim_probe_indexed(
-                spark, sf_dir, scratch, probe_pred
+                docs.filter(probe_pred), D._setsim_read_index(spark, scratch)
             ).collect()
         }
     finally:
@@ -80,11 +80,13 @@ def test_setsim_rollforward_rolled_adoption(spark, sf_dir, monkeypatch):
     )
     tables = D.setsim_index_rollforward(spark, sf_dir)
     assert jobs == [], "rolled adoption ran a rebuild/fold job"
+    from smile_spark.tables import table
+
     assert D._setsim_probe_indexed(
-        spark,
-        sf_dir,
-        tables,
-        F.col("doc_id") % D.SETSIM_ROLL_MOD == D.SETSIM_INC_MOD,
+        table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % D.SETSIM_ROLL_MOD == D.SETSIM_INC_MOD
+        ),
+        D._setsim_read_index(spark, tables),
     ).count() > 0
 
 
@@ -101,10 +103,7 @@ def test_setsim_rollforward_stale_params_full_rebuild(
     from smile_spark.sources import bucketed as BK
 
     D.setsim_index_rollforward(spark, sf_dir)
-    hash_tokens = D._setsim_hash_conf(spark)
-    path = BK.sidecar_path(
-        spark, D._setsim_roll_sidecar_name(sf_dir, hash_tokens)
-    )
+    path = BK.sidecar_path(spark, D.SETSIM_ROLL.sidecar_name(spark, sf_dir))
     with open(path) as fh:
         payload = json.load(fh)
     payload["base_rows"] += 1  # the snapshot "changed"
@@ -142,10 +141,7 @@ def test_setsim_fold_failure_never_adoptable(spark, sf_dir, monkeypatch):
     from smile_spark.sources import bucketed as BK
 
     D.setsim_roll_restore_base(spark, sf_dir)
-    hash_tokens = D._setsim_hash_conf(spark)
-    path = BK.sidecar_path(
-        spark, D._setsim_roll_sidecar_name(sf_dir, hash_tokens)
-    )
+    path = BK.sidecar_path(spark, D.SETSIM_ROLL.sidecar_name(spark, sf_dir))
     calls = []
     real_append = BK.append_bucketed
 
@@ -161,7 +157,7 @@ def test_setsim_fold_failure_never_adoptable(spark, sf_dir, monkeypatch):
     assert not os.path.exists(path), (
         "a failed fold left an adoptable sidecar behind"
     )
-    tables = D._setsim_roll_tables(sf_dir, hash_tokens)
+    tables = D._setsim_tables("setsim_roll", sf_dir)
     assert not any(
         spark.catalog.tableExists(t) for t in tables.values()
     ), "a failed fold left half-appended tables behind"
@@ -188,10 +184,7 @@ def test_setsim_crash_after_appends_never_adopts_base(
     from smile_spark.sources import bucketed as BK
 
     D.setsim_roll_restore_base(spark, sf_dir)
-    hash_tokens = D._setsim_hash_conf(spark)
-    path = BK.sidecar_path(
-        spark, D._setsim_roll_sidecar_name(sf_dir, hash_tokens)
-    )
+    path = BK.sidecar_path(spark, D.SETSIM_ROLL.sidecar_name(spark, sf_dir))
     assert os.path.exists(path)  # the base sidecar restore_base wrote
     real_write_sidecar = BK.write_sidecar
 

@@ -75,13 +75,7 @@ def test_bucket_count_follows_broadcast_threshold(spark, tmp_path):
 
 
 def _index_sidecar_path(spark, sf_dir):
-    hash_tokens = D._setsim_hash_conf(spark)
-    return BK.sidecar_path(
-        spark,
-        BK.bucket_table_name(
-            f"setsim_idx_{'h1' if hash_tokens else 'h0'}", sf_dir
-        ),
-    )
+    return BK.sidecar_path(spark, D.SETSIM_INDEX.sidecar_name(spark, sf_dir))
 
 
 def _num_buckets(spark, tbl):
@@ -97,7 +91,6 @@ def test_setsim_tables_use_the_rule(spark, sf_dir):
     want = BK.bucket_count(spark, table_path(sf_dir, "documents"), CAP)
     assert want == 1  # the sf0.001 documents file is 65 KB
     assert D._setsim_n_buckets(spark, sf_dir) == want
-    hash_tokens = D._setsim_hash_conf(spark)
     idx = D.setsim_index_build(spark, sf_dir)
     roll = D.setsim_index_rollforward(spark, sf_dir)
     for tbl in [*idx.values(), *roll.values()]:
@@ -105,7 +98,7 @@ def test_setsim_tables_use_the_rule(spark, sf_dir):
     with open(_index_sidecar_path(spark, sf_dir)) as fh:
         idx_sidecar = json.load(fh)
     roll_sidecar = BK.read_sidecar(
-        spark, D._setsim_roll_sidecar_name(sf_dir, hash_tokens)
+        spark, D.SETSIM_ROLL.sidecar_name(spark, sf_dir)
     )
     assert idx_sidecar["n_buckets"] == roll_sidecar["n_buckets"] == want
 
@@ -177,10 +170,9 @@ def null_text_dir(spark, sf_dir, tmp_path):
     d.mkdir()
     pq.write_table(pa.concat_tables([docs, extra]), d / "documents.parquet")
     d = str(d)
-    hash_tokens = D._setsim_hash_conf(spark)
     path = _index_sidecar_path(spark, d)
     yield d, path
-    for tbl in D._setsim_index_tables(d, hash_tokens).values():
+    for tbl in D._setsim_tables("setsim_idx", d).values():
         BK.drop_bucketed_table(spark, tbl)
     BK.remove_sidecar_file(path)
     BK.forget_state(D.SETSIM_INDEX)
@@ -197,7 +189,6 @@ def test_cold_build_runs_no_count_job(spark, null_text_dir):
     from smile_spark.tables import table
 
     d, path = null_text_dir
-    hash_tokens = D._setsim_hash_conf(spark)
     base = table(spark, d, "documents").filter(
         F.col("doc_id") % D.SETSIM_INC_MOD != 0
     )
@@ -210,9 +201,7 @@ def test_cold_build_runs_no_count_job(spark, null_text_dir):
     try:
         n_write = _jobs_launched(
             spark,
-            lambda: D._setsim_index_write(
-                spark, base, scratch, hash_tokens, n_buckets
-            ),
+            lambda: D._setsim_index_write(spark, base, scratch, n_buckets),
         )
     finally:
         for tbl in scratch.values():
