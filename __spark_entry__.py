@@ -49,35 +49,49 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     ORDERING MATTERS: the driver verifies the FIRST 50 entries in
-    insertion order.  Window (exactly 50): (00) the SIX set-similarity
-    entries whose path now runs through the one setsim kernel
-    (setsim_join_prefix, setsim_incremental,
+    insertion order.  Window (exactly 50): (000) the FOUR entries whose
+    connected components now take graph.cc_labels' driver-side pass
+    (connected_components, image_dhash_clusters,
+    crossmodal_dedup_clusters, group_split_no_leakage); (00) the SIX
+    set-similarity entries whose path runs through the one setsim
+    kernel (setsim_join_prefix, setsim_incremental,
     setsim_incremental_indexed, setsim_rolled_probe,
     setsim_hash_agreement, duplicate_set_groups); (0)
-    ``dedup_canonical`` and ``golden_part_records``, whose clustering now runs through
-    graph.pair_components; then the round-15 window less its last two
-    entries (``column_profile``, ``referential_orphans``), per the r14
-    VERDICT's next-round list and the r14 rotation note: (1) the SIX
-    r15 additions (text_clusters_incremental, text_labels_rolled,
-    semantic_labels_rolled, crossmodal_clusters_incremental,
-    crossmodal_labels_rolled, streaming_manifest_agreement); (2) the
-    TWENTY-EIGHT r10-verified entries the r14 additions displaced
-    (spatial_grid_join .. degree_assortativity, in their declared
-    order); (3) the first EIGHT of the r11-verified block less
-    setsim_incremental, which moved to (00) (image_dhash_dedup ..
-    event_transition_matrix).  6 + 2 + 6 + 28 + 8 = 50.  The (00)
-    block displaced five r11-verified entries (seasonality_profile,
-    cms_heavy_hitters, scd2_customer_history, date_dimension,
-    revenue_growth_mom), which now head the entries past the window.
-    After this window completes, the oldest remaining newest-verdict
-    is r11 (those five plus the rest of the r11 block,
-    column_profile .. tfidf_top_terms — FORTY-ONE entries).
+    ``dedup_canonical`` and ``golden_part_records``, whose clustering
+    runs through graph.pair_components; then the round-15 window less
+    its last two entries (``column_profile``, ``referential_orphans``),
+    per the r14 VERDICT's next-round list and the r14 rotation note:
+    (1) the SIX r15 additions (text_clusters_incremental,
+    text_labels_rolled, semantic_labels_rolled,
+    crossmodal_clusters_incremental, crossmodal_labels_rolled,
+    streaming_manifest_agreement); (2) the TWENTY-EIGHT r10-verified
+    entries the r14 additions displaced (spatial_grid_join ..
+    degree_assortativity, in their declared order); (3) FOUR entries
+    of the r11-verified block (image_dhash_dedup,
+    longest_repeat_profile, video_frame_dedup, dedup_cluster_sizes):
+    its first eight less the four the (000) block displaced
+    (setsim_incremental had already moved to (00)).
+    4 + 6 + 2 + 6 + 28 + 4 = 50.  The (000)
+    block displaced csv_malformed_audit, watermark_late_audit,
+    fuzzy_name_match and event_transition_matrix, which now head the
+    entries past the window; the (00) block had displaced five
+    r11-verified entries (seasonality_profile, cms_heavy_hitters,
+    scd2_customer_history, date_dimension, revenue_growth_mom), which
+    follow them.  After this window completes, the oldest remaining
+    newest-verdict is r11 (those nine plus the rest of the r11 block,
+    column_profile .. tfidf_top_terms — FORTY-FIVE entries).
     r16 NOTE: rotate (a) any r16 additions first, then (b) those
-    forty-one remaining r11 entries, then (c) the r14-window block
+    forty-five remaining r11 entries, then (c) the r14-window block
     (setsim_rolled_probe .. ann_sq8_topk, newest verdicts r14); the
     r12 block and the r13-window block rotate last.
     """
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+        # --- (000) the four entries whose connected components now
+        # take graph.cc_labels' driver-side pass at fixture SFs ---
+        "connected_components": G.connected_components,
+        "image_dhash_clusters": M.image_dhash_clusters,
+        "crossmodal_dedup_clusters": M.crossmodal_dedup_clusters,
+        "group_split_no_leakage": P.group_split_no_leakage,
         # --- (00) the six entries whose set-similarity path now runs
         # through the one setsim kernel ---
         "setsim_join_prefix": D.setsim_join_prefix,
@@ -129,20 +143,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "revenue_share": AN.revenue_share,
         "revenue_concentration": AN.revenue_concentration,
         "degree_assortativity": G.degree_assortativity,
-        # --- (3) the first EIGHT of the r11-verified block ---
+        # --- (3) the r11-verified block's first eight, less the four
+        # the (000) block displaced ---
         "image_dhash_dedup": M.image_dhash_dedup,
         "longest_repeat_profile": D.longest_repeat_profile,
         "video_frame_dedup": M.video_frame_dedup,
-        "csv_malformed_audit": TF.csv_malformed_audit,
         "dedup_cluster_sizes": P.dedup_cluster_sizes,
-        "watermark_late_audit": W.watermark_late_audit,
-        "fuzzy_name_match": T.fuzzy_name_match,
-        "event_transition_matrix": B.event_transition_matrix,
         # ------------------------------------------------------------------
         # entries below sit past the driver's 50-query window this
         # round (see the r16 NOTE in the docstring above for the next
         # rotation).
         # ------------------------------------------------------------------
+        # --- the four r11-verified entries the (000) block displaced
+        # (first into the next rotation) ---
+        "csv_malformed_audit": TF.csv_malformed_audit,
+        "watermark_late_audit": W.watermark_late_audit,
+        "fuzzy_name_match": T.fuzzy_name_match,
+        "event_transition_matrix": B.event_transition_matrix,
         # --- the five r11-verified entries the (00) block displaced ---
         "seasonality_profile": B.seasonality_profile,
         "cms_heavy_hitters": K.cms_heavy_hitters,
@@ -231,7 +248,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "personalized_pagerank": G.personalized_pagerank,
         "multimodal_decode_image": M.multimodal_decode_image,
         "multimodal_decode_video": M.multimodal_decode_video,
-        "connected_components": G.connected_components,
         "token_entropy": T.token_entropy,
         "equi_depth_bins": AN.equi_depth_bins,
         "skyline_pareto": AN.skyline_pareto,
@@ -243,7 +259,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "audio_fingerprint_dedup": M.audio_fingerprint_dedup,
         "video_dhash_tolerant": M.video_dhash_tolerant,
         "audio_fingerprint_clusters": M.audio_fingerprint_clusters,
-        "image_dhash_clusters": M.image_dhash_clusters,
         "winsorize_prices": AN.winsorize_prices,
         "bucketed_join_revenue": BK.bucketed_join_revenue,
         "copurchase_pairs": R.copurchase_pairs,
@@ -296,7 +311,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crossmodal_image_video_dedup": M.crossmodal_image_video_dedup,
         "audio_fingerprint_incremental": M.audio_fingerprint_incremental,
         "dedup_minhash_incremental": D.dedup_minhash_incremental,
-        "crossmodal_dedup_clusters": M.crossmodal_dedup_clusters,
         "video_dhash_incremental": M.video_dhash_incremental,
         "semantic_dedup_incremental": D.semantic_dedup_incremental,
         # --- (2) the EIGHT r08-verified entries that slipped the
@@ -321,7 +335,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gap_interpolate_daily": B.gap_interpolate_daily,
         "benford_screen": Q.benford_screen,
         "hard_negative_mining": S.hard_negative_mining,
-        "group_split_no_leakage": P.group_split_no_leakage,
         "token_count": T.token_count,
         "lang_id": T.lang_id,
         "fingerprint": T.fingerprint,

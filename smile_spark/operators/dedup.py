@@ -1930,20 +1930,6 @@ def _setsim_n_salts_pairs(
     return max(1, min(cap, -(-hot_pairs // pairs_per_task)))
 
 
-def _setsim_n_salts(
-    hot_bucket: int,
-    pairs_per_task: int = SETSIM_PAIRS_PER_TASK,
-    cap: int = SETSIM_MAX_SALTS,
-) -> int:
-    """Salt factor for a SYMMETRIC prefix bucket of ``hot_bucket``
-    docs (~hot^2/2 candidate pairs) — kept for the property tests;
-    the production path sizes from the asymmetric probe x index
-    product via :func:`_setsim_n_salts_pairs`."""
-    return _setsim_n_salts_pairs(
-        hot_bucket * hot_bucket // 2, pairs_per_task, cap
-    )
-
-
 def setsim_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALL qualifying document pairs with word-set Jaccard >= SETSIM_TAU
     over the FULL corpus — the exact set-similarity join, made scalable

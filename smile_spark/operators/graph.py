@@ -17,6 +17,15 @@ Each round is a distributed join+shuffle, so a 1000-executor cluster
 expands the whole frontier in parallel — the scalable analogue of the
 reference's one-page-pin-at-a-time loop
 (/root/reference/src/regtests/bfsgraph_regtest.cpp:44-104).
+
+Connected components choose their physical plan by the data's size
+(the Pregelix point): :func:`cc_labels` runs ONE driver-side numpy
+pass, the reference's in-memory single-node loop, when the directed
+edge set (observed rows × 16 B) is within
+``spark.sql.autoBroadcastJoinThreshold`` — the size at which Spark
+itself already ships a relation through the driver — and the
+distributed supersteps above it.  Every fixture SF takes the driver
+pass; a threshold of -1 forces the supersteps.
 """
 
 from __future__ import annotations
@@ -593,22 +602,119 @@ def pagerank_sql() -> str:
     )
 
 
-def cc_labels(
-    nodes: DataFrame, e: DataFrame, max_iter: int = 30
-) -> DataFrame:
-    """Distributed connected-components core: min-label propagation
-    with POINTER JUMPING over ``nodes(id)`` and undirected-expanded
-    ``edges(src, dst)``.  Returns (id, component = min node id).
+# Bytes of one directed (src, dst) edge row: two bigints.  The driver-
+# side gate of cc_labels sizes the edge set as observed rows × this.
+EDGE_ROW_BYTES = 16
 
-    Each round: (1) hook — every node takes the min of its own and its
-    neighbors' labels (join + agg on ``src``, the Pregel shape);
-    (2) shortcut — ``component := component's component``, which
-    halves every node's distance-to-root, so convergence is O(log D)
-    rounds instead of O(D).  Plain propagation needs DIAMETER rounds —
-    fine on the bipartite fixture graph (diameter ~4), the slow
+
+def _fits_driver(spark: SparkSession, n_edges: int) -> bool:
+    """True when ``n_edges`` directed edges fit within the session's
+    broadcast-join threshold (read as ``bucketed.bucket_count`` reads
+    it); a threshold of -1 turns the driver path off."""
+    threshold = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    return 0 <= n_edges * EDGE_ROW_BYTES <= threshold
+
+
+def _min_label_arrays(src, dst):
+    """Connected components of the undirected edge list ``src[i] —
+    dst[i]`` (int64 numpy arrays) in one driver-side pass.
+
+    Ids are compacted by ``np.unique`` (sorted, so the smallest index
+    of a component is its smallest id).  Each round hooks every root
+    to the smallest root across its edges, in both directions, then
+    pointer-jumps until every node points at its root; it ends on the
+    first round where no edge joins two roots.  Hooking only ever
+    lowers a label, so each round that does not end the loop merges
+    at least two trees.  Returns ``(ids, component)``: the distinct
+    endpoints and the min id of each one's component.
+    """
+    import numpy as np
+
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    u, v = inv[: len(src)], inv[len(src):]
+    label = np.arange(len(ids))
+    while True:
+        lu, lv = label[u], label[v]
+        if np.array_equal(lu, lv):
+            return ids, ids[label]
+        np.minimum.at(label, lu, lv)
+        np.minimum.at(label, lv, lu)
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+
+
+def _driver_cc(nodes: DataFrame, e: DataFrame) -> DataFrame:
+    """:func:`cc_labels`' answer for an edge set small enough to ship
+    through the driver: one collect of the edges, :func:`_min_label_arrays`,
+    and a broadcast left join that labels every row of ``nodes``
+    (a node on no edge is its own component)."""
+    import pyarrow as pa
+
+    spark = e.sparkSession
+    t = (
+        e.select(
+            F.col("src").cast("bigint").alias("src"),
+            F.col("dst").cast("bigint").alias("dst"),
+        )
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .toArrow()
+    )
+    ids, comp = _min_label_arrays(
+        t.column("src").to_numpy(), t.column("dst").to_numpy()
+    )
+    id_type = nodes.schema["id"].dataType
+    m = spark.createDataFrame(
+        pa.table({"lid": ids, "lcomp": comp}), "lid bigint, lcomp bigint"
+    )
+    return (
+        nodes.select("id")
+        .join(F.broadcast(m), F.col("id") == F.col("lid"), "left")
+        .select(
+            "id",
+            F.coalesce(F.col("lcomp").cast(id_type), F.col("id")).alias(
+                "component"
+            ),
+        )
+        .localCheckpoint()
+    )
+
+
+def cc_labels(
+    nodes: DataFrame, e: DataFrame, max_iter: int = 30, *, n_edges: int
+) -> DataFrame:
+    """Connected components over ``nodes(id)`` (distinct ids) and
+    undirected-expanded integer ``edges(src, dst)``.  Returns (id, component = min node id)
+    for every row of ``nodes``, as a bare checkpoint.
+
+    SIZE GATE.  ``n_edges`` is the row count of ``e``, observed by the
+    caller's checkpoint job that materialized it, so the gate costs no
+    job.  When the edge set, sized as rows × ``EDGE_ROW_BYTES``, is within
+    ``spark.sql.autoBroadcastJoinThreshold``, the components come from
+    ONE driver-side pass (:func:`_min_label_arrays`): that threshold is
+    the size at which Spark itself already ships a relation through
+    the driver, so collecting the edges costs no more than a broadcast
+    join would, and it replaces a Spark job per round — each round's
+    fixed cost, not its data, dominates a small graph.  A threshold of
+    -1 forces the distributed loop below; tests of the loop set it.
+
+    DISTRIBUTED LOOP (larger graphs): min-label propagation with
+    POINTER JUMPING.  Each round: (1) hook — every node takes the min
+    of its own and its neighbors' labels (join + agg on ``src``, the
+    Pregel shape); (2) shortcut — ``component := component's
+    component``, which halves every node's distance-to-root, so
+    convergence is O(log D) rounds instead of O(D) when ids run in
+    order along long chains.  Plain propagation needs DIAMETER rounds
+    — fine on the bipartite fixture graph (diameter ~4), the slow
     algorithm on a long-path graph; the shortcut is what makes the cap
-    safe for long chains (tested on a >2^5-hop path in
-    tests/test_graph.py).
+    safe for such chains (tested on a 200-node path in
+    tests/test_graph.py).  On a path with shuffled ids the rounds
+    still grow near-linearly (a 40-node path can need 35), so a long
+    chain can reach the cap.
 
     The shortcut self-join runs only on EVERY SECOND round (and never
     on a round whose hook already reached the fixpoint): on
@@ -623,8 +729,20 @@ def cc_labels(
     fixpoint.
 
     A loop that spends all ``max_iter`` rounds without reaching the
-    fixpoint raises instead of returning partial components.
+    fixpoint raises instead of returning partial components; the
+    driver pass always runs to its fixpoint.
     """
+    from pyspark.sql.types import IntegralType
+
+    if _fits_driver(e.sparkSession, n_edges) and all(
+        isinstance(e.schema[c].dataType, IntegralType) for c in ("src", "dst")
+    ):
+        return _driver_cc(nodes, e)
+    return _cc_rounds(nodes, e, max_iter)
+
+
+def _cc_rounds(nodes: DataFrame, e: DataFrame, max_iter: int) -> DataFrame:
+    """:func:`cc_labels`' distributed min-label + pointer-jumping loop."""
     from smile_spark.session import checkpoint_observed, unpersist_checkpoint
 
     labels = nodes.select("id", F.col("id").alias("component")).localCheckpoint()
@@ -699,20 +817,26 @@ def pair_components(pairs: DataFrame) -> DataFrame:
     The distinct pair set is materialized ONCE: :func:`cc_labels`
     scans its edge input every round, and a lazy pair frame (a banded
     self-join, a levenshtein block join) would be re-derived in each.
-    Rebinding ``pairs`` drops this frame's hold on the input, so
-    checkpoints a builder tied to the input's gc can release.  The
-    pair checkpoint is released before returning: the labels are
-    cc_labels' own checkpoint and no longer reach it.
+    The same checkpoint job counts the pairs, which gives cc_labels
+    its edge count (two directed edges per pair) for the driver-side
+    size gate at no extra job: a pair graph within the broadcast
+    threshold is clustered in one driver pass.  Rebinding ``pairs``
+    drops this frame's hold on the input, so checkpoints that the
+    input's producer tied to its gc can release.  The pair checkpoint is
+    released before returning: the labels are cc_labels' own
+    checkpoint and no longer reach it.
     """
-    from smile_spark.session import unpersist_checkpoint
+    from smile_spark.session import checkpoint_observed, unpersist_checkpoint
 
-    pairs = pairs.select("a", "b").distinct().localCheckpoint()
+    pairs, seen = checkpoint_observed(
+        pairs.select("a", "b").distinct(), n=F.count(F.lit(1))
+    )
     und = pairs.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).union(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     nodes = und.select(F.col("src").alias("id")).distinct()
     try:
-        return cc_labels(nodes, und)
+        return cc_labels(nodes, und, n_edges=2 * seen["n"])
     finally:
         unpersist_checkpoint(pairs)
 
@@ -722,10 +846,15 @@ def connected_components(
 ) -> DataFrame:
     """Connected components over the customer-order bipartite graph
     (beyond-reference; licensed by the north star's Pregel-analytics
-    direction).  Delegates to :func:`cc_labels` — min-label
-    propagation + pointer jumping, O(log D) rounds.
-    Returns (id, component)."""
-    e = edges(spark, sf_dir, undirected=True).localCheckpoint()
+    direction).  Delegates to :func:`cc_labels`; the edge checkpoint's
+    own job counts the edges for its size gate, so every fixture SF
+    takes the one-pass driver path and larger graphs the min-label +
+    pointer-jumping rounds.  Returns (id, component)."""
+    from smile_spark.session import checkpoint_observed, unpersist_checkpoint
+
+    e, seen = checkpoint_observed(
+        edges(spark, sf_dir, undirected=True), n=F.count(F.lit(1))
+    )
     customer = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     nodes = (
@@ -735,7 +864,10 @@ def connected_components(
         )
         # disjoint unique key ranges — already a set, no dedup exchange
     )
-    return cc_labels(nodes, e, max_iter)
+    try:
+        return cc_labels(nodes, e, max_iter, n_edges=seen["n"])
+    finally:
+        unpersist_checkpoint(e)
 
 
 # ---------------------------------------------------------------------------

@@ -19,7 +19,8 @@ corpus-sized tables are touched once, by the upstream operators).
 Every pair-graph clustering in this module (``dedup_canonical``,
 ``golden_part_records``, ``dedup_cluster_sizes``,
 ``group_split_no_leakage``) goes through graph.pair_components: one
-distinct-pair checkpoint, then cc_labels' O(log D) rounds.  The
+distinct-pair checkpoint, then cc_labels: one driver-side pass when
+the pair graph is within the broadcast threshold, else its rounds.  The
 quality filter is one pass over each upstream result joined on doc_id
 — all equi-joins, quality/token/lang scores computed in single shuffles
 keyed by doc_id.

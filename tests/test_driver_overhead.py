@@ -75,9 +75,12 @@ def no_control_actions(monkeypatch, spark):
         monkeypatch.setattr(type(spark.range(1)), name, refuse)
 
 
-def test_label_loops_need_no_control_actions(spark, no_control_actions):
+def test_label_loops_need_no_control_actions(
+    spark, no_control_actions, cc_paths
+):
     """The label loops and the BFS frontier halt on the count their
-    checkpoint job observed, and still find the same components."""
+    checkpoint job observed, and still find the same components; the
+    driver-side cc pass sizes its edges from that count too."""
     from smile_spark.operators.graph import (
         bfs_frontier,
         cc_labels,
@@ -90,13 +93,15 @@ def test_label_loops_need_no_control_actions(spark, no_control_actions):
     )
     nodes = spark.range(PATH_N)
     want = {(i, 0) for i in range(PATH_N)}
-    got = {(r.id, r.component) for r in cc_labels(nodes, e).collect()}
-    assert got == want
-    got = {
-        (r.id, r.component)
-        for r in pair_components(pairs).collect()
-    }
-    assert got == want
+    for path in cc_paths():
+        labels = cc_labels(nodes, e, n_edges=2 * (PATH_N - 1))
+        got = {(r.id, r.component) for r in labels.collect()}
+        assert got == want, path
+        got = {
+            (r.id, r.component)
+            for r in pair_components(pairs).collect()
+        }
+        assert got == want, path
     # a short path, so the frontier runs dry before the round cap
     dist = {
         r.id: r.dist
@@ -120,17 +125,18 @@ def test_checkpoint_observed_counts(spark):
     assert seen == {"n": 0}
 
 
-def test_pair_components_releases_superseded_rounds(spark):
+def test_pair_components_releases_superseded_rounds(spark, cc_paths):
     """The pair-graph entry keeps only its FINAL label table
     persisted: no checkpoint per round, and not its pair checkpoint."""
     from smile_spark.operators.graph import pair_components
 
     jsc = spark.sparkContext._jsc.sc()
-    n0 = jsc.getPersistentRDDs().size()
-    labels = pair_components(_path_pairs(spark))
-    assert {r.component for r in labels.collect()} == {0}
-    n1 = jsc.getPersistentRDDs().size()
-    assert n1 - n0 <= 1, (n0, n1)
+    for path in cc_paths():
+        n0 = jsc.getPersistentRDDs().size()
+        labels = pair_components(_path_pairs(spark))
+        assert {r.component for r in labels.collect()} == {0}, path
+        n1 = jsc.getPersistentRDDs().size()
+        assert n1 - n0 <= 1, (path, n0, n1)
 
 
 def test_lazy_pair_input_is_evaluated_once(spark):
@@ -184,6 +190,22 @@ def _jobs_launched(spark, fn):
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_runs_at_most_five_jobs(spark, sf_dir):
+    """The sf0.001 graph is within the broadcast threshold, so
+    connected_components takes the driver-side pass: the edge
+    checkpoint (which counts the edges), one edge collect and the
+    label checkpoint, not a checkpoint job per round.  The first call
+    warms the tables' schema memo, whose inference jobs are not the
+    graph's."""
+    from smile_spark.operators.graph import connected_components
+
+    connected_components(spark, sf_dir)
+    _, n_jobs = _jobs_launched(
+        spark, lambda: connected_components(spark, sf_dir)
+    )
+    assert n_jobs <= 5, n_jobs
 
 
 def _copy_fixtures(sf_dir, dst, names=TABLE_NAMES):

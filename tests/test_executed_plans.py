@@ -34,17 +34,20 @@ from smile_spark.plans.audit import (
     final_plan_section,
 )
 
-# measured max shuffle-Exchange count per execution at sf0.001 (r10)
+# measured max shuffle-Exchange count per execution at sf0.001 (r10);
+# the entries whose connected components take graph.cc_labels'
+# driver-side pass (no per-round label joins) were re-measured and
+# lowered when that pass landed
 MEASURED = {
     "bfs": 2,
     "sssp": 1,
     "pagerank": 2,
     "personalized_pagerank": 2,
-    "connected_components": 2,
+    "connected_components": 0,
     "graph_check": 4,
     "dedup_minhash_lsh": 3,
     "hypertable_daily": 1,
-    "dedup_canonical": 4,
+    "dedup_canonical": 1,
     "simhash_pairs": 2,
     "corpus_curation_manifest": 8,
     "dedup_cluster_sizes": 4,
@@ -73,11 +76,11 @@ MEASURED = {
     "video_frame_dedup": 1,  # r11 measured (hash equi-join + count)
     "setsim_incremental": 2,  # r11 measured (rep-collapsed prefix join)
     "csv_malformed_audit": 1,  # r11 measured (text write + one agg)
-    "image_dhash_clusters": 4,  # r11 measured (cc rounds + size joins)
+    "image_dhash_clusters": 1,  # size joins (driver-side cc)
     "audio_fingerprint_dedup": 2,  # r12 measured (banded core, shared)
     "setsim_incremental_indexed": 3,  # r12 measured cold AND warm
     "video_dhash_tolerant": 2,  # r12 measured (banded core + doc agg)
-    "audio_fingerprint_clusters": 3,  # r12 measured (cc + size joins)
+    "audio_fingerprint_clusters": 1,  # size joins (driver-side cc)
     "ann_pq_indexed": 1,  # r13 measured cold AND warm (probe: bucketed
     #                       read + broadcast book, one agg exchange)
     "image_dhash_incremental": 1,  # r13 measured cold AND warm
@@ -89,7 +92,7 @@ MEASURED = {
     "dedup_minhash_incremental": 3,  # r13 measured cold AND warm
     #                       (probe signature agg + cand distinct +
     #                        candidate-bounded verify)
-    "crossmodal_dedup_clusters": 5,  # r13 measured (three pair
+    "crossmodal_dedup_clusters": 3,  # r13 measured (three pair
     #                       sources + cc rounds + size joins)
     "video_dhash_incremental": 2,  # r13 measured cold AND warm
     #                       (broadcast probe frames over bucketed
@@ -103,7 +106,7 @@ MEASURED = {
     "image_dhash_rolled_probe": 1,  # r14 measured cold AND warm (the
     #                       shared _band_probe plan over the rolled
     #                       band table)
-    "image_clusters_incremental": 4,  # r14 measured cold AND warm
+    "image_clusters_incremental": 3,  # r14 measured cold AND warm
     #                       (label join + collapsed-graph cc rounds +
     #                        relabel/size joins)
     "increment_ingest_manifest": 11,  # r14 measured cold AND warm
@@ -118,17 +121,17 @@ MEASURED = {
     "audio_clusters_incremental": 4,  # r14 measured (shared fold
     #                       core: label join + collapsed-graph cc +
     #                        relabel/size joins)
-    "image_labels_rolled": 4,  # r14 measured cold AND warm (warm
+    "image_labels_rolled": 3,  # r14 measured cold AND warm (warm
     #                       reader: bucketed base scan + broadcast
     #                        delta remap + keep-list size joins)
     "audio_labels_rolled": 4,  # r14 measured cold AND warm (same
     #                       shared rolled-reader core as image)
-    "video_dhash_clusters": 4,  # r14 measured cold AND warm (banded
+    "video_dhash_clusters": 2,  # r14 measured cold AND warm (banded
     #                       frame join collapsed per video pair + cc
     #                        rounds + keep-list size joins)
-    "video_clusters_incremental": 4,  # r14 measured cold AND warm
+    "video_clusters_incremental": 3,  # r14 measured cold AND warm
     #                       (shared fold core over video-level edges)
-    "video_labels_rolled": 4,  # r14 measured cold AND warm (shared
+    "video_labels_rolled": 3,  # r14 measured cold AND warm (shared
     #                       rolled-reader core over the video labels)
     "text_clusters_incremental": 8,  # r15 measured cold AND warm (the
     #                       setsim+minhash increment probe pipelines
@@ -141,10 +144,10 @@ MEASURED = {
     #                        delta remap + keep-list size joins)
     "semantic_labels_rolled": 3,  # r15 measured cold 3 / warm 0
     #                       (warm reader: one bucketed verdict scan)
-    "crossmodal_clusters_incremental": 6,  # r15 measured cold AND
+    "crossmodal_clusters_incremental": 3,  # r15 measured cold AND
     #                       warm (joint pair memos + collapsed-graph
     #                        cc + relabel/size joins)
-    "crossmodal_labels_rolled": 6,  # r15 measured cold 6 / warm 3
+    "crossmodal_labels_rolled": 3,  # measured with driver-side cc
     #                       (shared rolled-reader core)
     "streaming_manifest_agreement": 9,  # r15 measured cold AND warm
     #                       (per-micro-batch six-rung precedence

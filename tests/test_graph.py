@@ -59,11 +59,11 @@ def test_edges_deterministic(spark, sf_dir):
     assert a == b
 
 
-def test_cc_long_path_converges_in_log_rounds(spark):
+def test_cc_long_path_converges_in_log_rounds(spark, cc_paths):
     """A 200-node path graph (diameter 199 >> the 30-round cap) must
     still converge: pointer jumping makes the loop O(log D), so plain
     min-label propagation's diameter assumption is gone (VERDICT r04
-    'What's wrong' #4)."""
+    'What's wrong' #4).  The driver-side pass gives the same answer."""
     from smile_spark.operators.graph import cc_labels
 
     n = 200
@@ -74,23 +74,40 @@ def test_cc_long_path_converges_in_log_rounds(spark):
     und = fwd.union(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    labels = cc_labels(nodes, und, max_iter=30)
-    assert labels.filter(F.col("component") != 0).isEmpty()
+    for path in cc_paths():
+        labels = cc_labels(
+            nodes, und, max_iter=30, n_edges=2 * (n - 1)
+        )
+        assert labels.filter(F.col("component") != 0).isEmpty(), path
 
 
-def test_cc_raises_when_round_cap_ends_before_fixpoint(spark):
+def _path_graph(spark, n):
+    nodes = spark.range(n).select(F.col("id"))
+    return nodes, _edges_df(spark, [(i, i + 1) for i in range(n - 1)])
+
+
+def test_cc_raises_when_round_cap_ends_before_fixpoint(spark, distributed_cc):
     """Two rounds cannot settle a 64-node path: the loop must raise
     instead of returning partial components."""
     from smile_spark.operators.graph import cc_labels
 
-    n = 64
-    nodes = spark.range(n).select(F.col("id"))
-    und = _edges_df(spark, [(i, i + 1) for i in range(n - 1)])
+    nodes, und = _path_graph(spark, 64)
     with pytest.raises(RuntimeError, match="after 2 rounds"):
-        cc_labels(nodes, und, max_iter=2)
+        cc_labels(nodes, und, max_iter=2, n_edges=2 * 63)
 
 
-def test_cc_two_components_min_labels(spark):
+def test_cc_driver_pass_runs_to_its_fixpoint(spark):
+    """The driver-side pass has no round cap: a round budget the
+    distributed loop cannot settle the 64-node path in still gives
+    the full answer."""
+    from smile_spark.operators.graph import cc_labels
+
+    nodes, und = _path_graph(spark, 64)
+    labels = cc_labels(nodes, und, max_iter=2, n_edges=2 * 63)
+    assert {r.component for r in labels.collect()} == {0}
+
+
+def test_cc_two_components_min_labels(spark, cc_paths):
     """Two disjoint chains resolve to their own min ids."""
     from smile_spark.operators.graph import cc_labels
 
@@ -102,12 +119,14 @@ def test_cc_two_components_min_labels(spark):
     nodes = (
         und.select(F.col("src").alias("id")).distinct()
     )
-    got = {
-        (r.id, r.component) for r in cc_labels(nodes, und).collect()
-    }
-    assert got == {
-        (0, 0), (1, 0), (2, 0), (10, 10), (11, 10), (12, 10),
-    }
+    for path in cc_paths():
+        got = {
+            (r.id, r.component)
+            for r in cc_labels(nodes, und, n_edges=2 * len(rows)).collect()
+        }
+        assert got == {
+            (0, 0), (1, 0), (2, 0), (10, 10), (11, 10), (12, 10),
+        }, path
 
 
 def test_shortest_path_route_emits_closed_flag(spark, sf_dir):

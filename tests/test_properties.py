@@ -2,7 +2,7 @@
 (ties, duplicates, degenerate sizes) fixture data can't be trusted to
 cover.  Small example counts — each example builds a Spark DataFrame."""
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 
@@ -344,3 +344,98 @@ def test_setsim_incremental_matches_bruteforce(spark, token_lists):
 
         dmod.table = orig
     assert got == want, (token_lists, got, want)
+
+
+@st.composite
+def cc_graphs(draw):
+    """(distinct node ids, undirected edges among them, endpoints of
+    null-ended edges).  Random edges give isolated nodes,
+    self-loops, duplicate edges and several components; the optional
+    path over shuffled fresh ids is 40 nodes long, beyond 2^5 hops."""
+    ids = draw(
+        st.lists(
+            st.integers(min_value=-10**6, max_value=10**12),
+            min_size=1,
+            max_size=30,
+            unique=True,
+        )
+    )
+    edges = draw(
+        st.lists(st.tuples(st.sampled_from(ids), st.sampled_from(ids)),
+                 max_size=40)
+    )
+    if draw(st.booleans()):
+        start = max(ids) + 1
+        path = draw(st.permutations(range(start, start + 40)))
+        ids = ids + path
+        edges = edges + list(zip(path, path[1:]))
+    null_ended = draw(st.lists(st.sampled_from(ids), max_size=2))
+    return ids, edges, null_ended
+
+
+# 139, 137, .., 101, 100, 102, .., 138
+_MIN_MID_PATH = [*range(139, 100, -2), *range(100, 140, 2)]
+
+
+def _union_find_min(ids, edges):
+    parent = {i: i for i in ids}
+
+    def root(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {i: root(i) for i in ids}
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(graph=cc_graphs())
+@example(
+    # isolated 99, self-loop on 5, duplicate 5-6, components {5, 6}
+    # and a 40-node path with its min id mid-path, a null-ended edge
+    graph=(
+        [99, 5, 6, *_MIN_MID_PATH],
+        [(5, 5), (5, 6), (6, 5), *zip(_MIN_MID_PATH, _MIN_MID_PATH[1:])],
+        [6],
+    )
+)
+def test_cc_driver_and_distributed_paths_match_union_find(
+    spark, cc_paths, graph
+):
+    """cc_labels' driver-side pass, its distributed loop (threshold -1)
+    and a brute-force union-find give the same (id, component) row for
+    every row of nodes, with the same schema; edges with a null
+    endpoint are ignored.  The loop's round cap is set so it cannot
+    bind (min-label propagation settles within diameter + 1 <= n
+    rounds): on a path with shuffled ids the loop needs up to ~n
+    rounds, more than the default 30, and this test checks answers,
+    not round counts."""
+    from smile_spark.operators.graph import cc_labels
+
+    nodes, edges, null_ended = graph
+    comp = _union_find_min(nodes, edges)
+    want = sorted((i, comp[i]) for i in nodes)
+    und = (
+        edges
+        + [(b, a) for a, b in edges]
+        + [(None, x) for x in null_ended]
+        + [(x, None) for x in null_ended]
+    )
+    nodes_df = spark.createDataFrame([(i,) for i in nodes], "id bigint")
+    e = spark.createDataFrame(und, "src bigint, dst bigint")
+    got = {}
+    for path in cc_paths():
+        out = cc_labels(
+            nodes_df, e, max_iter=len(nodes) + 1, n_edges=len(und)
+        )
+        got[path] = (out.schema, sorted(tuple(r) for r in out.collect()))
+    assert got["driver"] == got["distributed"]
+    assert got["driver"][1] == want

@@ -408,24 +408,26 @@ def test_setsim_incremental_tau_boundary(spark):
     assert got == {(SETSIM_INC_MOD, SETSIM_INC_MOD + 1): SETSIM_TAU}
 
 
-def test_cc_labels_releases_superseded_rounds(spark):
+def test_cc_labels_releases_superseded_rounds(spark, cc_paths):
     """Iterative loops must not accumulate one persisted RDD per
     round: after cc_labels converges on a long path (many pointer-
     jumping rounds), only the FINAL label table may remain persisted
     (the r11 superseded-checkpoint release, cc_labels precedent for
-    bfs/sssp/pagerank/kcore/LPA)."""
+    bfs/sssp/pagerank/kcore/LPA).  The driver-side pass keeps only
+    its label table too."""
     from smile_spark.operators.graph import cc_labels
 
     jsc = spark.sparkContext._jsc.sc()
-    n0 = jsc.getPersistentRDDs().size()
     n = 40  # path graph: diameter 39 -> many rounds without jumping
     edges = [(i, i + 1) for i in range(n - 1)]
     e = spark.createDataFrame(
         edges + [(b, a) for a, b in edges], "src long, dst long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    labels = cc_labels(nodes, e)
-    comps = {r.component for r in labels.collect()}
-    assert comps == {0}
-    n1 = jsc.getPersistentRDDs().size()
-    assert n1 - n0 <= 1, (n0, n1)
+    for path in cc_paths():
+        n0 = jsc.getPersistentRDDs().size()
+        labels = cc_labels(nodes, e, n_edges=2 * len(edges))
+        comps = {r.component for r in labels.collect()}
+        assert comps == {0}, path
+        n1 = jsc.getPersistentRDDs().size()
+        assert n1 - n0 <= 1, (path, n0, n1)

@@ -91,16 +91,17 @@ def test_pq_recall_against_brute_force(spark, sf_dir):
 
 class TestSetsimSaltSizing:
     def test_scales_with_bucket_skew(self):
-        from smile_spark.operators.dedup import _setsim_n_salts
+        from smile_spark.operators.dedup import _setsim_n_salts_pairs
 
+        # a symmetric prefix bucket of h docs makes ~h*h//2 pairs
         sizes = [0, 10, 100, 1_000, 3_816, 10_000, 100_000]
-        salts = [_setsim_n_salts(h) for h in sizes]
+        salts = [_setsim_n_salts_pairs(h * h // 2) for h in sizes]
         assert salts == sorted(salts), "must be monotone in the skew"
         assert salts[0] == 1 and salts[1] == 1
-        assert _setsim_n_salts(1_000) == 1  # 500k pairs fit one task
+        assert _setsim_n_salts_pairs(1_000 * 1_000 // 2) == 1  # 500k pairs
         # the observed sf0.1 hot bucket lands near the hand-tuned 16
-        assert 8 <= _setsim_n_salts(3_816) <= 32
-        assert _setsim_n_salts(10**9) == 64  # capped
+        assert 8 <= _setsim_n_salts_pairs(3_816 * 3_816 // 2) <= 32
+        assert _setsim_n_salts_pairs(10**9 * 10**9 // 2) == 64  # capped
 
     def test_session_conf_override(self, spark, sf_dir):
         from smile_spark.operators import dedup as D
