@@ -49,43 +49,54 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     ORDERING MATTERS: the driver verifies the FIRST 50 entries in
-    insertion order.  Window (exactly 50): (000) the FOUR entries whose
-    connected components now take graph.cc_labels' driver-side pass
-    (connected_components, image_dhash_clusters,
+    insertion order.  Window (exactly 50): (0000) the EIGHT entries
+    whose iteration loops now run through graph.supersteps (bfs,
+    sssp, pagerank, personalized_pagerank, kcore_peel,
+    label_propagation, graph_modularity, shortest_path_route); (000)
+    the FOUR entries whose connected components take graph.cc_labels'
+    driver-side pass (connected_components, image_dhash_clusters,
     crossmodal_dedup_clusters, group_split_no_leakage); (00) the SIX
     set-similarity entries whose path runs through the one setsim
     kernel (setsim_join_prefix, setsim_incremental,
     setsim_incremental_indexed, setsim_rolled_probe,
     setsim_hash_agreement, duplicate_set_groups); (0)
     ``dedup_canonical`` and ``golden_part_records``, whose clustering
-    runs through graph.pair_components; then the round-15 window less
-    its last two entries (``column_profile``, ``referential_orphans``),
-    per the r14 VERDICT's next-round list and the r14 rotation note:
-    (1) the SIX r15 additions (text_clusters_incremental,
-    text_labels_rolled, semantic_labels_rolled,
-    crossmodal_clusters_incremental, crossmodal_labels_rolled,
-    streaming_manifest_agreement); (2) the TWENTY-EIGHT r10-verified
-    entries the r14 additions displaced (spatial_grid_join ..
-    degree_assortativity, in their declared order); (3) FOUR entries
-    of the r11-verified block (image_dhash_dedup,
-    longest_repeat_profile, video_frame_dedup, dedup_cluster_sizes):
-    its first eight less the four the (000) block displaced
-    (setsim_incremental had already moved to (00)).
-    4 + 6 + 2 + 6 + 28 + 4 = 50.  The (000)
-    block displaced csv_malformed_audit, watermark_late_audit,
-    fuzzy_name_match and event_transition_matrix, which now head the
-    entries past the window; the (00) block had displaced five
-    r11-verified entries (seasonality_profile, cms_heavy_hitters,
-    scd2_customer_history, date_dimension, revenue_growth_mom), which
-    follow them.  After this window completes, the oldest remaining
-    newest-verdict is r11 (those nine plus the rest of the r11 block,
-    column_profile .. tfidf_top_terms — FORTY-FIVE entries).
-    r16 NOTE: rotate (a) any r16 additions first, then (b) those
-    forty-five remaining r11 entries, then (c) the r14-window block
-    (setsim_rolled_probe .. ann_sq8_topk, newest verdicts r14); the
-    r12 block and the r13-window block rotate last.
+    runs through graph.pair_components; (1) the SIX r15 additions
+    (text_clusters_incremental, text_labels_rolled,
+    semantic_labels_rolled, crossmodal_clusters_incremental,
+    crossmodal_labels_rolled, streaming_manifest_agreement); (2) the
+    first TWENTY-FOUR of the twenty-eight r10-verified entries the r14
+    additions displaced (spatial_grid_join .. zorder_cluster, in their
+    declared order).  8 + 4 + 6 + 2 + 6 + 24 = 50.  The (0000) block
+    displaced the last four of (2) (interval_overlap_join,
+    revenue_share, revenue_concentration, degree_assortativity) and
+    the four r11-verified entries of the old block (3)
+    (image_dhash_dedup, longest_repeat_profile, video_frame_dedup,
+    dedup_cluster_sizes), which now head the entries past the window;
+    the (000) block had displaced csv_malformed_audit,
+    watermark_late_audit, fuzzy_name_match and
+    event_transition_matrix, which follow them, and the (00) block
+    five r11-verified entries (seasonality_profile,
+    cms_heavy_hitters, scd2_customer_history, date_dimension,
+    revenue_growth_mom), which come next.
+    r16 NOTE: rotate (a) any r16 additions first, then (b) the eight
+    entries the (0000) block displaced, then (c) the remaining
+    r11-verified entries (csv_malformed_audit .. tfidf_top_terms),
+    then (d) the r14-window block (setsim_rolled_probe ..
+    ann_sq8_topk, newest verdicts r14); the r12 block and the
+    r13-window block rotate last.
     """
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+        # --- (0000) the eight entries whose iteration loops now run
+        # through graph.supersteps ---
+        "bfs": G.bfs,
+        "sssp": G.sssp,
+        "pagerank": G.pagerank,
+        "personalized_pagerank": G.personalized_pagerank,
+        "kcore_peel": G.kcore_peel,
+        "label_propagation": G.label_propagation,
+        "graph_modularity": G.graph_modularity,
+        "shortest_path_route": G.shortest_path_route,
         # --- (000) the four entries whose connected components now
         # take graph.cc_labels' driver-side pass at fixture SFs ---
         "connected_components": G.connected_components,
@@ -113,8 +124,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         "crossmodal_labels_rolled": M.crossmodal_labels_rolled,
         "streaming_manifest_agreement": ST.streaming_manifest_agreement,
-        # --- (2) the TWENTY-EIGHT r10-verified entries the r14
-        # additions displaced (r14 rotation note) ---
+        # --- (2) the first TWENTY-FOUR of the r10-verified entries
+        # the r14 additions displaced (r14 rotation note) ---
         "spatial_grid_join": SP.spatial_grid_join,
         "join_size_estimate": K.join_size_estimate,
         "clustering_coefficient": G.clustering_coefficient,
@@ -139,23 +150,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "unpivot_long": AN.unpivot_long,
         "rolling_daily_activity": B.rolling_daily_activity,
         "zorder_cluster": AN.zorder_cluster,
-        "interval_overlap_join": A.interval_overlap_join,
-        "revenue_share": AN.revenue_share,
-        "revenue_concentration": AN.revenue_concentration,
-        "degree_assortativity": G.degree_assortativity,
-        # --- (3) the r11-verified block's first eight, less the four
-        # the (000) block displaced ---
-        "image_dhash_dedup": M.image_dhash_dedup,
-        "longest_repeat_profile": D.longest_repeat_profile,
-        "video_frame_dedup": M.video_frame_dedup,
-        "dedup_cluster_sizes": P.dedup_cluster_sizes,
         # ------------------------------------------------------------------
         # entries below sit past the driver's 50-query window this
         # round (see the r16 NOTE in the docstring above for the next
         # rotation).
         # ------------------------------------------------------------------
-        # --- the four r11-verified entries the (000) block displaced
-        # (first into the next rotation) ---
+        # --- the eight entries the (0000) block displaced: the last
+        # four of the r10-verified block (2), then the four of the
+        # r11-verified block (3) (first into the next rotation) ---
+        "interval_overlap_join": A.interval_overlap_join,
+        "revenue_share": AN.revenue_share,
+        "revenue_concentration": AN.revenue_concentration,
+        "degree_assortativity": G.degree_assortativity,
+        "image_dhash_dedup": M.image_dhash_dedup,
+        "longest_repeat_profile": D.longest_repeat_profile,
+        "video_frame_dedup": M.video_frame_dedup,
+        "dedup_cluster_sizes": P.dedup_cluster_sizes,
+        # --- the four r11-verified entries the (000) block displaced ---
         "csv_malformed_audit": TF.csv_malformed_audit,
         "watermark_late_audit": W.watermark_late_audit,
         "fuzzy_name_match": T.fuzzy_name_match,
@@ -182,8 +193,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_metadata": G.graph_metadata,
         "degree_distribution": G.degree_distribution,
         "triangle_count": G.triangle_count,
-        "pagerank": G.pagerank,
-        "sssp": G.sssp,
         "groupby_count_array": R.groupby_count_array,
         "timestamp_filter": R.timestamp_filter,
         "groupby_count": R.groupby_count,
@@ -245,14 +254,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "compaction_roundtrip": CP.compaction_roundtrip,
         "incremental_ingest_certificate": IC.incremental_ingest_certificate,
         "schema_evolution_certificate": TF.schema_evolution_certificate,
-        "personalized_pagerank": G.personalized_pagerank,
         "multimodal_decode_image": M.multimodal_decode_image,
         "multimodal_decode_video": M.multimodal_decode_video,
         "token_entropy": T.token_entropy,
         "equi_depth_bins": AN.equi_depth_bins,
         "skyline_pareto": AN.skyline_pareto,
         "mad_outliers": Q.mad_outliers,
-        "kcore_peel": G.kcore_peel,
         "ewma_anomaly": B.ewma_anomaly,
         "ann_sq8_topk": S.ann_sq8_topk,
         # --- r12-verified entries (the r12 window; rotate last) ---
@@ -266,9 +273,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_pq_topk": S.ann_pq_topk,
         "link_prediction_aa": G.link_prediction_aa,
         "lsh_band_planner": D.lsh_band_planner,
-        "label_propagation": G.label_propagation,
         "rake_keyphrases": T.rake_keyphrases,
-        "graph_modularity": G.graph_modularity,
         "streaming_join_agreement": ST.streaming_join_agreement,
         "agg_stats": R.agg_stats,
         "array_functions": AN.array_functions,
@@ -315,11 +320,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "semantic_dedup_incremental": D.semantic_dedup_incremental,
         # --- (2) the EIGHT r08-verified entries that slipped the
         # r12 window (VERDICT r12 next-round #1), less
-        # golden_part_records, which heads the window ---
+        # golden_part_records, bfs and shortest_path_route, which sit
+        # in the window ---
         "containment_topk": D.containment_topk,
-        "shortest_path_route": G.shortest_path_route,
         "hashjoin_agg": R.hashjoin_agg,
-        "bfs": G.bfs,
         "simhash_pairs": D.simhash_pairs,
         "ngram_jaccard_topk": D.ngram_jaccard_topk,
         "text_stats": T.text_stats,

@@ -10,12 +10,16 @@ offset array is a prefix sum over per-source degrees (computed here,
 so the load produces the same logical artifact the reference persists).
 
 Traversals (BFS & friends) are data-dependent iteration — not one
-Catalyst plan.  We run the Pregel pattern: a frontier DataFrame joined
-against edges each round, anti-joined against the visited set, with
-``localCheckpoint()`` per iteration to cut lineage (SURVEY.md §3.3).
-Each round is a distributed join+shuffle, so a 1000-executor cluster
-expands the whole frontier in parallel — the scalable analogue of the
-reference's one-page-pin-at-a-time loop
+Catalyst plan.  Every iteration loop here (BFS, SSSP, PageRank and
+its personalized form, connected components, the k-core peel, label
+propagation) runs through ONE Pregel superstep core,
+:func:`supersteps` (SURVEY.md §3.3): one superstep is one checkpoint
+job that materializes the round's state AND computes its halting
+aggregate in the same pass (Pregelix's superstep as one dataflow
+plan), and the checkpoint cuts the lineage so a plan stays O(1) in
+rounds.  Each round is a distributed join+shuffle, so a 1000-executor
+cluster expands the whole frontier in parallel — the scalable
+analogue of the reference's one-page-pin-at-a-time loop
 (/root/reference/src/regtests/bfsgraph_regtest.cpp:44-104).
 
 Connected components choose their physical plan by the data's size
@@ -210,6 +214,38 @@ def graph_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def supersteps(state, step, rounds, halt=None, **observe):
+    """The one Pregel superstep driver of every iteration loop here.
+
+    Round ``r`` (1-based, at most ``rounds``) materializes
+    ``step(state, r)`` in ONE checkpoint job that also computes the
+    ``observe`` aggregates (name -> aggregate Column): a superstep is
+    one job with its halting aggregate inside it, never a checkpoint
+    plus a ``count()``.  The stored frame is narrowed to the incoming
+    state's columns, so a step may add a column that only feeds an
+    aggregate (cc's ``changed`` flag).  Each state the core made is
+    released once its successor is materialized; the ``state`` passed
+    in stays the caller's, like every other loop input (edge tables,
+    node sets).  The loop stops after the first round whose ``halt``
+    aggregate is 0.  Returns ``(final state, [each round's
+    aggregates])``.
+    """
+    from smile_spark.session import checkpoint_observed, unpersist_checkpoint
+
+    seen_per_round = []
+    for r in range(1, rounds + 1):
+        nxt, seen = checkpoint_observed(
+            step(state, r), keep=state.columns, **observe
+        )
+        if r > 1:
+            unpersist_checkpoint(state)
+        state = nxt
+        seen_per_round.append(seen)
+        if halt is not None and seen[halt] == 0:
+            break
+    return state, seen_per_round
+
+
 def bfs_frontier(
     spark: SparkSession,
     e: DataFrame,
@@ -222,51 +258,37 @@ def bfs_frontier(
     tree), so each iteration is a single join — k sources cost one
     traversal, unlike the reference's 100 sequential runs
     (/root/reference/src/regtests/bfsgraph_regtest.cpp:35).
-    Per round: frontier ⋈ edges → candidate dsts → distinct →
-    anti-join visited → new frontier.  ``localCheckpoint`` cuts the
-    lineage so plan size stays O(1) in iterations.
+    The state is the visited set; round ``r`` is one superstep:
+    frontier (the visited rows at hop ``r - 1``) ⋈ edges → candidate
+    dsts → distinct → anti-join visited → the new hop, unioned into
+    visited.  The same job counts the new hop; an empty hop halts.
     Returns (source, id, dist) with the BFS (minimal) hop distance.
     """
-    # Materialize the edge set once; every iteration re-joins against it
+    from smile_spark.session import unpersist_checkpoint
+
+    # Materialize the edge set once; every round re-joins against it
     # and must not re-derive it from the source scan each round.
     e = e.localCheckpoint()
-
-    src_df = spark.createDataFrame(
+    visited = spark.createDataFrame(
         [(int(s),) for s in sources], "source bigint"
     ).select("source", F.col("source").alias("id"), F.lit(0).alias("dist"))
 
-    from smile_spark.session import checkpoint_observed, unpersist_checkpoint
-
-    visited = src_df.localCheckpoint()
-    frontier = visited
-    for it in range(1, max_iter + 1):
-        nxt, seen = checkpoint_observed(
+    def hop(visited, r):
+        frontier = visited.filter(F.col("dist") == r - 1)
+        new = (
             frontier.join(e, frontier.id == e.src)
             .select("source", F.col("dst").alias("id"))
             .distinct()
             .join(visited.select("source", "id"), ["source", "id"], "left_anti")
-            .withColumn("dist", F.lit(it)),
-            n=F.count(F.lit(1)),
+            .select(
+                "source", "id", F.lit(r).alias("dist"), F.lit(True).alias("new")
+            )
         )
-        # the previous frontier was fully consumed building nxt (and
-        # its rows were already folded into visited last round) —
-        # release its blocks instead of leaking one frame per hop
-        # (cc_labels precedent; skip round 1, where frontier IS the
-        # live visited set)
-        if frontier is not visited:
-            unpersist_checkpoint(frontier)
-        frontier = nxt
-        if seen["n"] == 0:
-            break
-        new_visited = visited.union(nxt).localCheckpoint()
-        unpersist_checkpoint(visited)
-        visited = new_visited
-    # the returned distances live in visited's own checkpoint blocks;
-    # the last frontier and the per-call edge materialization are
-    # unreachable from them — release both instead of leaking one
-    # frame pair per traversal (ADVICE r11 #3)
-    if frontier is not visited:
-        unpersist_checkpoint(frontier)
+        return visited.withColumn("new", F.lit(False)).union(new)
+
+    visited, _ = supersteps(
+        visited, hop, max_iter, halt="n_new", n_new=F.count_if("new")
+    )
     unpersist_checkpoint(e)
     return visited
 
@@ -446,29 +468,30 @@ def sssp(
 
     Returns (source, id, dist).
     """
-    e = weighted_edges(spark, sf_dir).localCheckpoint()
-    dist = (
-        spark.createDataFrame([(int(s),) for s in sources], "source bigint")
-        .select("source", F.col("source").alias("id"), F.lit(0).cast("bigint").alias("dist"))
-        .localCheckpoint()
-    )
     from smile_spark.session import unpersist_checkpoint
 
-    for _ in range(rounds):
+    e = weighted_edges(spark, sf_dir).localCheckpoint()
+    dist0 = spark.createDataFrame(
+        [(int(s),) for s in sources], "source bigint"
+    ).select(
+        "source",
+        F.col("source").alias("id"),
+        F.lit(0).cast("bigint").alias("dist"),
+    )
+
+    def relax(dist, _r):
         relaxed = (
             dist.join(e, dist.id == e.src)
             .select("source", F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        new_dist = (
+        return (
             dist.union(relaxed)
             .groupBy("source", "id")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
         )
-        # the superseded round's table is folded into new_dist
-        # (eagerly materialized) — release it (cc_labels precedent)
-        unpersist_checkpoint(dist)
-        dist = new_dist
+
+    dist, _ = supersteps(dist0, relax, rounds)
+    unpersist_checkpoint(e)
     return dist
 
 
@@ -505,6 +528,62 @@ PAGERANK_DAMPING = 0.85
 PAGERANK_ROUND = 8
 
 
+def _customer_order_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer–order graph's node set: every customer plus every
+    order at ``NODE_OFFSET + orderkey``.  Both legs are unique primary
+    keys in disjoint id ranges, so the union is already a set — no
+    dedup exchange needed."""
+    return table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("id")
+    ).union(
+        table(spark, sf_dir, "orders").select(
+            (F.lit(NODE_OFFSET) + F.col("o_orderkey")).alias("id")
+        )
+    )
+
+
+def _rank_loop(
+    spark: SparkSession, sf_dir: str, nodes: DataFrame, name: str,
+    init, teleport, iterations: int,
+) -> DataFrame:
+    """The one rank loop of :func:`pagerank` and
+    :func:`personalized_pagerank` over the undirected edge view: from
+    ``init``, each superstep pushes rank/degree along the edges (one
+    join), sums it per destination (one aggregate) and sets
+    ``round(teleport + damping * sum)``.  ``nodes`` is the caller's
+    node checkpoint; it and the degree-edge table are released once the
+    last round no longer reads them.  Returns (id, ``name``)."""
+    from smile_spark.session import unpersist_checkpoint
+
+    e = edges(spark, sf_dir, undirected=True)
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
+    ed = e.join(deg, "src").localCheckpoint()
+
+    def push(pr, _r):
+        sums = (
+            pr.join(ed, pr.id == ed.src)
+            .select(
+                F.col("dst").alias("id"), (F.col(name) / F.col("d")).alias("c")
+            )
+            .groupBy("id")
+            .agg(F.sum("c").alias("c"))
+        )
+        return nodes.join(sums, "id", "left").select(
+            "id",
+            F.round(
+                teleport + PAGERANK_DAMPING * F.coalesce("c", F.lit(0.0)),
+                PAGERANK_ROUND,
+            ).alias(name),
+        )
+
+    pr0 = nodes.select("id", init.alias(name))
+    pr, _ = supersteps(pr0, push, iterations)
+    unpersist_checkpoint(ed)
+    if pr is not pr0:
+        unpersist_checkpoint(nodes)
+    return pr
+
+
 def pagerank(
     spark: SparkSession,
     sf_dir: str,
@@ -521,51 +600,18 @@ def pagerank(
     order drift can never accumulate across iterations — the technique
     that makes an iterative float algorithm bit-comparable
     cross-engine.  Fixed iteration count (vs. convergence) for the
-    same reason as sssp.  Returns (id, pr).
+    same reason as sssp.  The node count comes from the job that
+    checkpoints the node set.  Returns (id, pr).
     """
-    e = edges(spark, sf_dir, undirected=True)
-    customer = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders")
-    nodes = (
-        customer.select(F.col("c_custkey").alias("id"))
-        .union(
-            orders.select((F.lit(NODE_OFFSET) + F.col("o_orderkey")).alias("id"))
-        )
-        # both legs are unique primary keys in disjoint id ranges, so
-        # the union is already a set — no dedup exchange needed
-        .localCheckpoint()
+    from smile_spark.session import checkpoint_observed
+
+    nodes, seen = checkpoint_observed(
+        _customer_order_nodes(spark, sf_dir), n=F.count(F.lit(1))
     )
-    n = float(nodes.count())
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
-    ed = e.join(deg, "src").localCheckpoint()
-
-    from smile_spark.session import unpersist_checkpoint
-
-    pr = nodes.select("id", F.lit(1.0 / n).alias("pr"))
-    prev = None  # round 0 is a lazy select over nodes, not a checkpoint
-    for _ in range(iterations):
-        sums = (
-            pr.join(ed, pr.id == ed.src)
-            .select(F.col("dst").alias("id"), (F.col("pr") / F.col("d")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("c"))
-        )
-        pr = (
-            nodes.join(sums, "id", "left")
-            .select(
-                "id",
-                F.round(
-                    0.15 / n + PAGERANK_DAMPING * F.coalesce("c", F.lit(0.0)),
-                    PAGERANK_ROUND,
-                ).alias("pr"),
-            )
-            .localCheckpoint()
-        )
-        # release the superseded round (cc_labels precedent)
-        if prev is not None:
-            unpersist_checkpoint(prev)
-        prev = pr
-    return pr
+    n = float(seen["n"])
+    return _rank_loop(
+        spark, sf_dir, nodes, "pr", F.lit(1.0 / n), F.lit(0.15 / n), iterations
+    )
 
 
 def pagerank_sql() -> str:
@@ -685,7 +731,7 @@ def _driver_cc(nodes: DataFrame, e: DataFrame) -> DataFrame:
 
 
 def cc_labels(
-    nodes: DataFrame, e: DataFrame, max_iter: int = 30, *, n_edges: int
+    nodes: DataFrame, e: DataFrame, max_iter: int | None = None, *, n_edges: int
 ) -> DataFrame:
     """Connected components over ``nodes(id)`` (distinct ids) and
     undirected-expanded integer ``edges(src, dst)``.  Returns (id, component = min node id)
@@ -710,11 +756,11 @@ def cc_labels(
     convergence is O(log D) rounds instead of O(D) when ids run in
     order along long chains.  Plain propagation needs DIAMETER rounds
     — fine on the bipartite fixture graph (diameter ~4), the slow
-    algorithm on a long-path graph; the shortcut is what makes the cap
-    safe for such chains (tested on a 200-node path in
+    algorithm on a long-path graph; the shortcut is what makes such
+    chains fast (tested on a 200-node path in
     tests/test_graph.py).  On a path with shuffled ids the rounds
-    still grow near-linearly (a 40-node path can need 35), so a long
-    chain can reach the cap.
+    still grow near-linearly (a 40-node path can need 35): a long
+    unordered chain costs more rounds, not an error.
 
     The shortcut self-join runs only on EVERY SECOND round (and never
     on a round whose hook already reached the fixpoint): on
@@ -728,9 +774,14 @@ def cc_labels(
     shortcut is pure acceleration and is label-stable at that
     fixpoint.
 
-    A loop that spends all ``max_iter`` rounds without reaching the
-    fixpoint raises instead of returning partial components; the
-    driver pass always runs to its fixpoint.
+    ROUND CAP.  By default the loop may run n + 1 rounds, n being the
+    node count its first labels checkpoint observes.  Hooking with
+    shortcuts only lowers labels, and every label is at most the one
+    plain propagation would give, so the fixpoint is reached and seen
+    within diameter + 1 <= n hooks: the default cap cannot bind on
+    valid input.  A loop that spends an explicit ``max_iter`` without
+    reaching the fixpoint raises instead of returning partial
+    components; the driver pass always runs to its fixpoint.
     """
     from pyspark.sql.types import IntegralType
 
@@ -741,45 +792,26 @@ def cc_labels(
     return _cc_rounds(nodes, e, max_iter)
 
 
-def _cc_rounds(nodes: DataFrame, e: DataFrame, max_iter: int) -> DataFrame:
-    """:func:`cc_labels`' distributed min-label + pointer-jumping loop."""
+def _cc_rounds(
+    nodes: DataFrame, e: DataFrame, max_iter: int | None
+) -> DataFrame:
+    """:func:`cc_labels`' distributed min-label + pointer-jumping loop.
+
+    Round ``r`` hooks; rounds 3, 5, ... first pointer-jump the labels,
+    so the jump that follows every second hook runs inside the next
+    round's superstep, and no round ends on a jump.  The first labels
+    checkpoint counts the nodes, which sets the default cap."""
     from smile_spark.session import checkpoint_observed, unpersist_checkpoint
 
-    labels = nodes.select("id", F.col("id").alias("component")).localCheckpoint()
-    # Each round's localCheckpoint supersedes the previous one: eager
-    # checkpointing materializes the new round BEFORE the old blocks
-    # are touched again, so the superseded round releases immediately
-    # instead of leaking O(rounds) label tables per invocation into
-    # executor storage for the life of the application.  Only the
-    # FINAL labels frame stays persisted — callers consume it freely.
-    for r in range(max_iter):
-        nbr_min = (
-            labels.join(e, labels.id == e.src)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        # Carry the changed flag through the same pass so convergence is
-        # counted by the checkpoint job itself, not by a second job.
-        propagated, seen = checkpoint_observed(
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    "component", F.coalesce("nbr_component", "component")
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_component", "component") < F.col("component")
-                ).alias("changed"),
-            ),
-            keep=("id", "component"),
-            n_changed=F.count_if("changed"),
-        )
-        unpersist_checkpoint(labels)
-        labels = propagated
-        if seen["n_changed"] == 0:
-            break
-        if r % 2 == 1:
-            jumped = (
+    labels0, seen = checkpoint_observed(
+        nodes.select("id", F.col("id").alias("component")),
+        n=F.count(F.lit(1)),
+    )
+    cap = seen["n"] + 1 if max_iter is None else max_iter
+
+    def hook(labels, r):
+        if r > 1 and r % 2 == 1:
+            labels = (
                 labels.alias("x")
                 .join(
                     labels.select(
@@ -796,14 +828,29 @@ def _cc_rounds(nodes: DataFrame, e: DataFrame, max_iter: int) -> DataFrame:
                         F.coalesce(F.col("ccomp"), F.col("x.component")),
                     ).alias("component"),
                 )
-            ).localCheckpoint()
-            unpersist_checkpoint(labels)
-            labels = jumped
-    else:
-        unpersist_checkpoint(labels)
-        raise RuntimeError(
-            f"cc_labels: no fixpoint after {max_iter} rounds"
+            )
+        nbr_min = (
+            labels.join(e, labels.id == e.src)
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.min("component").alias("nbr_component"))
         )
+        return labels.join(nbr_min, "id", "left").select(
+            "id",
+            F.least(
+                "component", F.coalesce("nbr_component", "component")
+            ).alias("component"),
+            (
+                F.coalesce("nbr_component", "component") < F.col("component")
+            ).alias("changed"),
+        )
+
+    labels, seen = supersteps(
+        labels0, hook, cap, halt="n_changed", n_changed=F.count_if("changed")
+    )
+    unpersist_checkpoint(labels0)
+    if not seen or seen[-1]["n_changed"]:
+        unpersist_checkpoint(labels)
+        raise RuntimeError(f"cc_labels: no fixpoint after {cap} rounds")
     return labels
 
 
@@ -841,9 +888,7 @@ def pair_components(pairs: DataFrame) -> DataFrame:
         unpersist_checkpoint(pairs)
 
 
-def connected_components(
-    spark: SparkSession, sf_dir: str, max_iter: int = 30
-) -> DataFrame:
+def connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the customer-order bipartite graph
     (beyond-reference; licensed by the north star's Pregel-analytics
     direction).  Delegates to :func:`cc_labels`; the edge checkpoint's
@@ -855,17 +900,10 @@ def connected_components(
     e, seen = checkpoint_observed(
         edges(spark, sf_dir, undirected=True), n=F.count(F.lit(1))
     )
-    customer = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders")
-    nodes = (
-        customer.select(F.col("c_custkey").alias("id"))
-        .union(
-            orders.select((F.lit(NODE_OFFSET) + F.col("o_orderkey")).alias("id"))
-        )
-        # disjoint unique key ranges — already a set, no dedup exchange
-    )
     try:
-        return cc_labels(nodes, e, max_iter, n_edges=seen["n"])
+        return cc_labels(
+            _customer_order_nodes(spark, sf_dir), e, n_edges=seen["n"]
+        )
     finally:
         unpersist_checkpoint(e)
 
@@ -1122,7 +1160,8 @@ _SSSP_FIELD_CACHE: dict[tuple[str, str], DataFrame] = {}
 def _sssp_field_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _SSSP_FIELD_CACHE:
-        _SSSP_FIELD_CACHE[key] = sssp(spark, sf_dir).localCheckpoint()
+        # sssp() already returns a bare checkpoint: store it as is
+        _SSSP_FIELD_CACHE[key] = sssp(spark, sf_dir)
     return _SSSP_FIELD_CACHE[key]
 
 
@@ -1282,9 +1321,11 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     JUST-DROPPED nodes, so total peel work is O(E) across ALL rounds
     instead of O(E x rounds).  The dropped set is small per round —
     AQE broadcasts it into the semi/anti joins, so the edge table is
-    scanned but never reshuffled.  localCheckpoint cuts per-round
-    lineage exactly like bfs/pagerank; rounds are bounded by the
-    budget, not the graph.
+    scanned but never reshuffled.  Each round is one superstep
+    (:func:`supersteps`) whose checkpoint job also counts the survivors
+    and those below K, so the peel halts on the first state with
+    nothing left to drop; rounds are bounded by the budget, not the
+    graph.
     """
     from smile_spark.session import checkpoint_observed, unpersist_checkpoint
 
@@ -1294,22 +1335,18 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(und.select(F.col("p2").alias("u"), F.col("p1").alias("v")))
         .localCheckpoint()
     )
-    deg, seen = checkpoint_observed(
+    counts = {
+        "n": F.count(F.lit(1)),
+        "n_low": F.count_if(F.col("deg") < KCORE_K),
+    }
+    deg0, seen0 = checkpoint_observed(
         edges.groupBy("u")
         .agg(F.count(F.lit(1)).alias("deg"))
         .select(F.col("u").alias("id"), "deg"),
-        n=F.count(F.lit(1)),
-        n_low=F.count_if(F.col("deg") < KCORE_K),
+        **counts,
     )
-    n_prev = seen["n"]
-    rows: list[tuple[int, int, int]] = []
-    for r in range(1, KCORE_ROUNDS + 1):
-        if r == KCORE_ROUNDS:
-            # budget exhausted: only the count is needed, and the job
-            # that checkpointed deg already observed it
-            n_drop = seen["n_low"]
-            rows.append((r, n_drop, n_prev - n_drop))
-            break
+
+    def peel(deg, _r):
         # the dropped set is derived INLINE from the checkpointed
         # degree table (a node-sized scan per consumer beats a
         # dedicated checkpoint job per round)
@@ -1327,40 +1364,36 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
             .select(F.col("u").alias("id"), "d")
         )
-        # ONE job per round: the checkpoint materialization counts the
-        # survivors as it goes (new_deg excludes the dropped set by
-        # construction)
-        new_deg, seen = checkpoint_observed(
+        return (
             deg.join(dropped, "id", "left_anti")
             .join(dec, "id", "left")
             .select(
                 "id",
                 (F.col("deg") - F.coalesce("d", F.lit(0))).alias("deg"),
-            ),
-            n=F.count(F.lit(1)),
-            n_low=F.count_if(F.col("deg") < KCORE_K),
-        )
-        n_now = seen["n"]
-        n_drop = n_prev - n_now
-        rows.append((r, n_drop, n_now))
-        # superseded state is consumed (cc_labels precedent)
-        unpersist_checkpoint(deg)
-        deg, n_prev = new_deg, n_now
-        if n_drop == 0:
-            # converged: every later round deterministically drops 0 —
-            # emit the remaining profile rows as literals instead of
-            # running no-op rounds (driver sees counts only, never
-            # data; the fixed-budget output contract is unchanged)
-            rows.extend(
-                (rr, 0, n_now) for rr in range(r + 1, KCORE_ROUNDS + 1)
             )
-            break
-    # the returned profile is driver-built from the counted rows, so
-    # the degree state and the per-call edge materialization are
-    # unreachable yet persisted — release both instead of leaking one
-    # frame pair per invocation (ADVICE r11 #3)
-    unpersist_checkpoint(deg)
-    unpersist_checkpoint(edges)
+        )
+
+    # round r drops the nodes below K in the state after round r - 1,
+    # so the last profile row needs only that state's counts: the
+    # supersteps stop one short of the budget, or as soon as no node
+    # is below K (every later round then drops 0)
+    deg, seen = supersteps(
+        deg0,
+        peel,
+        KCORE_ROUNDS - 1 if seen0["n_low"] else 0,
+        halt="n_low",
+        **counts,
+    )
+    hist = [seen0, *seen]
+    rows = []
+    for r in range(1, KCORE_ROUNDS + 1):
+        h = hist[min(r, len(hist)) - 1]
+        rows.append((r, h["n_low"], h["n"] - h["n_low"]))
+    # the profile is driver-built from the counts, so the degree states
+    # and the edge materialization are unreachable yet persisted
+    # (releasing deg0 twice, when no round ran, is a no-op)
+    for df in (deg, deg0, edges):
+        unpersist_checkpoint(df)
     return spark.createDataFrame(
         rows, "round bigint, n_dropped bigint, n_alive bigint"
     )
@@ -1546,27 +1579,21 @@ def personalized_pagerank(
     cannot accumulate.  The teleport vector is a pure function of the
     node id, so no extra state moves; at 100 TB the per-round cost is
     identical to PageRank's (one edge join, one aggregate), and many
-    source sets amortize over the same cached degree-edge table.
-    Returns (id, ppr).
+    source sets amortize over the same cached degree-edge table.  The
+    teleport set's size is counted by the job that checkpoints the
+    node set.  Returns (id, ppr).
     """
-    e = edges(spark, sf_dir, undirected=True)
-    customer = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders")
-    nodes = (
-        customer.select(F.col("c_custkey").alias("id"))
-        .union(
-            orders.select(
-                (F.lit(NODE_OFFSET) + F.col("o_orderkey")).alias("id")
-            )
-        )
-        .localCheckpoint()
+    from smile_spark.session import checkpoint_observed, unpersist_checkpoint
+
+    is_src = (F.col("id") % PPR_SOURCE_MOD == 0) & (
+        F.col("id") < NODE_OFFSET
     )
-    n_src = float(
-        customer.filter(
-            F.col("c_custkey") % PPR_SOURCE_MOD == 0
-        ).count()
+    nodes, seen = checkpoint_observed(
+        _customer_order_nodes(spark, sf_dir), n_src=F.count_if(is_src)
     )
+    n_src = float(seen["n_src"])
     if n_src == 0:
+        unpersist_checkpoint(nodes)
         # an empty teleport set makes PPR undefined (division by the
         # source count); fail with a defined error instead of a
         # ZeroDivisionError at plan time on filtered/fixture inputs
@@ -1574,44 +1601,9 @@ def personalized_pagerank(
             "personalized_pagerank: no customer satisfies the teleport"
             f" predicate c_custkey % {PPR_SOURCE_MOD} == 0"
         )
-    is_src = (F.col("id") % PPR_SOURCE_MOD == 0) & (
-        F.col("id") < NODE_OFFSET
-    )
     tele = F.when(is_src, F.lit(1.0 / n_src)).otherwise(F.lit(0.0))
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
-    ed = e.join(deg, "src").localCheckpoint()
-
-    pr = nodes.select("id", tele.alias("ppr"))
-    from smile_spark.session import unpersist_checkpoint
-
-    prev = None  # round 0 is a lazy select over nodes, not a checkpoint
-    for _ in range(iterations):
-        sums = (
-            pr.join(ed, pr.id == ed.src)
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("ppr") / F.col("d")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("c"))
-        )
-        pr = (
-            nodes.join(sums, "id", "left")
-            .select(
-                "id",
-                F.round(
-                    (1.0 - PAGERANK_DAMPING) * tele
-                    + PAGERANK_DAMPING * F.coalesce("c", F.lit(0.0)),
-                    PAGERANK_ROUND,
-                ).alias("ppr"),
-            )
-            .localCheckpoint()
-        )
-        # release the superseded round (cc_labels precedent)
-        if prev is not None:
-            unpersist_checkpoint(prev)
-        prev = pr
-    return pr
+    teleport = (1.0 - PAGERANK_DAMPING) * tele
+    return _rank_loop(spark, sf_dir, nodes, "ppr", tele, teleport, iterations)
 
 
 def personalized_pagerank_sql() -> str:
@@ -1880,9 +1872,9 @@ LPA_ROUNDS = 3
 # _COPURCHASE_DEG_CACHE pattern) so the 3 synchronous rounds run once
 # per session instead of once per consumer (VERDICT r07 next-round #4).
 _LPA_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-# every localCheckpoint the LPA build creates (stubs + per-round label
-# tables, not just the final one), so clear_lpa_cache can release the
-# block-manager storage a discarded build left behind (ADVICE r08 #4)
+# the checkpoints an LPA build leaves behind (stubs and the final label
+# table), so clear_lpa_cache can release the block-manager storage a
+# discarded build left behind (ADVICE r08 #4)
 _LPA_CHECKPOINTS: list[DataFrame] = []
 
 
@@ -1915,14 +1907,10 @@ def _lpa_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
         _LPA_CHECKPOINTS.append(stubs)
-        labels = stubs.select(F.col("u").alias("id")).distinct().select(
-            "id", F.col("id").alias("lbl")
-        ).localCheckpoint()
         w = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("lbl"))
-        from smile_spark.session import unpersist_checkpoint
 
-        for _ in range(LPA_ROUNDS):
-            new_labels = (
+        def adopt(labels, _r):
+            return (
                 stubs.join(
                     labels.select(F.col("id").alias("v"), "lbl"), "v"
                 )
@@ -1931,13 +1919,15 @@ def _lpa_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") == 1)
                 .select("id", "lbl")
-                .localCheckpoint()
             )
-            # the superseded round is fully consumed (eager checkpoint
-            # materialized) — release now instead of holding every
-            # round's table until the next clear_lpa_cache
-            unpersist_checkpoint(labels)
-            labels = new_labels
+
+        labels, _ = supersteps(
+            stubs.select(F.col("u").alias("id"))
+            .distinct()
+            .select("id", F.col("id").alias("lbl")),
+            adopt,
+            LPA_ROUNDS,
+        )
         # only the FINAL label table outlives the build (plus stubs,
         # registered above) — the memo clear releases them
         _LPA_CHECKPOINTS.append(labels)
@@ -1958,10 +1948,10 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is one stubs ⋈ labels equi-join, a (node, label)
     partial/final count, and a per-node rank-1 window — all keyed
-    shuffles; ``localCheckpoint`` per round cuts the lineage exactly
-    like bfs/pagerank, and the round count is a budget, not a
-    convergence gamble.  The label table itself is a session memo
-    shared with graph_modularity.  Emits (part, community).
+    shuffles, run as one superstep (:func:`supersteps`) per round, and
+    the round count is a budget, not a convergence gamble.  The label
+    table itself is a session memo shared with graph_modularity.
+    Emits (part, community).
     """
     labels = _lpa_labels_cached(spark, sf_dir)
     return labels.select(

@@ -176,15 +176,17 @@ def checkpoint_observed(df, keep=None, **aggs):
     ``keep`` (column names) narrows what is stored, after the
     aggregates have seen every column: a flag that only feeds the
     count is never checkpointed, and the result stays a bare
-    checkpoint that :func:`unpersist_checkpoint` can release.
+    checkpoint that :func:`unpersist_checkpoint` can release.  With
+    no aggregates it is a plain ``localCheckpoint`` that observed ``{}``.
     """
     from pyspark.sql import Observation
 
     obs = Observation()
-    df = df.observe(obs, *(agg.alias(name) for name, agg in aggs.items()))
+    if aggs:
+        df = df.observe(obs, *(agg.alias(name) for name, agg in aggs.items()))
     if keep is not None:
         df = df.select(*keep)
-    return df.localCheckpoint(), obs.get
+    return df.localCheckpoint(), obs.get if aggs else {}
 
 
 def _release_checkpoint_group(group: list) -> None:

@@ -208,6 +208,64 @@ def test_connected_components_runs_at_most_five_jobs(spark, sf_dir):
     assert n_jobs <= 5, n_jobs
 
 
+# Jobs each Pregel loop entry launched at sf0.001, warm, before its
+# loop ran on graph.supersteps (measured in this suite's Spark
+# settings: shuffle_partitions=8, 4 cores).  A port that adds a
+# checkpoint or a control job per round goes over.
+LOOP_JOBS_BEFORE_SUPERSTEPS = {
+    "bfs": 13,
+    "sssp": 14,
+    "pagerank": 21,
+    "personalized_pagerank": 21,
+    "kcore_peel": 21,
+    "lpa_build": 15,
+}
+
+
+def _loop_entries(spark, sf_dir):
+    """name -> a call that runs that graph entry's iteration loop; the
+    LPA build is run cold (its label memo cleared first)."""
+    from smile_spark.operators import graph as G
+
+    def lpa_build():
+        G.clear_lpa_cache()
+        return G._lpa_labels_cached(spark, sf_dir)
+
+    return {
+        "bfs": lambda: G.bfs(spark, sf_dir),
+        "sssp": lambda: G.sssp(spark, sf_dir),
+        "pagerank": lambda: G.pagerank(spark, sf_dir),
+        "personalized_pagerank": lambda: G.personalized_pagerank(
+            spark, sf_dir
+        ),
+        "kcore_peel": lambda: G.kcore_peel(spark, sf_dir),
+        "lpa_build": lpa_build,
+    }
+
+
+def test_graph_loops_need_no_control_actions(
+    spark, sf_dir, no_control_actions
+):
+    """Every fixed-round and halting loop takes its counts (PageRank's
+    node count, PPR's teleport-set size, BFS and k-core halting) from
+    the checkpoint jobs it already runs."""
+    for run in _loop_entries(spark, sf_dir).values():
+        run()
+
+
+def test_graph_loops_launch_no_more_jobs_than_before(spark, sf_dir):
+    entries = _loop_entries(spark, sf_dir)
+    for run in entries.values():
+        run()  # warm the tables' schema memo and the co-purchase memos
+    got = {name: _jobs_launched(spark, run)[1] for name, run in entries.items()}
+    over = {
+        name: (n, LOOP_JOBS_BEFORE_SUPERSTEPS[name])
+        for name, n in got.items()
+        if n > LOOP_JOBS_BEFORE_SUPERSTEPS[name]
+    }
+    assert not over, got
+
+
 def _copy_fixtures(sf_dir, dst, names=TABLE_NAMES):
     dst.mkdir(exist_ok=True)
     for name in names:

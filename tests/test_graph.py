@@ -96,6 +96,24 @@ def test_cc_raises_when_round_cap_ends_before_fixpoint(spark, distributed_cc):
         cc_labels(nodes, und, max_iter=2, n_edges=2 * 63)
 
 
+def test_cc_shuffled_path_converges_at_the_default_cap(spark, distributed_cc):
+    """An 80-node path whose ids are shuffled along the chain is not
+    O(log D) for the pointer-jumping loop: a replay of the loop needs
+    40 rounds on this one, more than a fixed cap of 30 allows.  The
+    default cap (node count + 1) cannot bind, so it converges."""
+    import random
+
+    from smile_spark.operators.graph import cc_labels
+
+    n = 80
+    ids = list(range(n))
+    random.Random(3).shuffle(ids)
+    nodes = spark.createDataFrame([(i,) for i in ids], "id bigint")
+    und = _edges_df(spark, list(zip(ids, ids[1:])))
+    labels = cc_labels(nodes, und, n_edges=2 * (n - 1))
+    assert {r.component for r in labels.collect()} == {0}
+
+
 def test_cc_driver_pass_runs_to_its_fixpoint(spark):
     """The driver-side pass has no round cap: a round budget the
     distributed loop cannot settle the 64-node path in still gives

@@ -413,11 +413,9 @@ def test_cc_driver_and_distributed_paths_match_union_find(
     """cc_labels' driver-side pass, its distributed loop (threshold -1)
     and a brute-force union-find give the same (id, component) row for
     every row of nodes, with the same schema; edges with a null
-    endpoint are ignored.  The loop's round cap is set so it cannot
-    bind (min-label propagation settles within diameter + 1 <= n
-    rounds): on a path with shuffled ids the loop needs up to ~n
-    rounds, more than the default 30, and this test checks answers,
-    not round counts."""
+    endpoint are ignored.  The loop runs at its default cap, which
+    cannot bind (min-label propagation settles within diameter + 1 <=
+    n rounds), even on a path with shuffled ids."""
     from smile_spark.operators.graph import cc_labels
 
     nodes, edges, null_ended = graph
@@ -433,9 +431,7 @@ def test_cc_driver_and_distributed_paths_match_union_find(
     e = spark.createDataFrame(und, "src bigint, dst bigint")
     got = {}
     for path in cc_paths():
-        out = cc_labels(
-            nodes_df, e, max_iter=len(nodes) + 1, n_edges=len(und)
-        )
+        out = cc_labels(nodes_df, e, n_edges=len(und))
         got[path] = (out.schema, sorted(tuple(r) for r in out.collect()))
     assert got["driver"] == got["distributed"]
     assert got["driver"][1] == want
